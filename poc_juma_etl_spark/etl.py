@@ -7,8 +7,8 @@ main.py:118-127) because each worker is a blocking pandas/HTTP loop. In
 Spark, *tasks* are the unit of parallelism, so per-table concurrency becomes
 driver-side threads submitting independent Spark jobs — the scheduler
 interleaves their stages across executors. The RAW→GOLD trigger DAG
-(main.py:26-30, firing at main.py:166-181) stays as plain driver logic,
-firing a Gold materialization as soon as its upstream RAW table lands.
+(main.py:26-30, firing at main.py:166-181) stays plain driver logic: a Gold
+build is submitted to the same pool as soon as its upstream RAW table lands.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from __future__ import annotations
 import datetime as dt
 import logging
 import time
-from concurrent.futures import ThreadPoolExecutor, as_completed
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -69,24 +69,21 @@ def run_table(
         return path
     # range_replace fact load
     if historical is None:
-        # bootstrap: replace the table's full date span in one atomic job
-        import pyspark.sql.functions as F
-
-        lo, hi = df.select(
-            F.min(F.to_date(spec.filter_field)), F.max(F.to_date(spec.filter_field))
-        ).first()
-        if lo is None:
-            if log:
-                log.info("load skipped: empty source")
-            return path
-        replace_range(spark, path, df, spec.filter_field, lo, hi, spec.partition_granularity)
+        # bootstrap: replace the table's full date span; the span comes out
+        # of replace_range's planning job
+        span = replace_range(
+            spark, path, df, spec.filter_field, None, None, spec.partition_granularity
+        )
         if log:
-            log.info("load done: range_replace [%s, %s] -> %s", lo, hi, path)
+            if span is None:
+                log.info("load skipped: empty source")
+            else:
+                log.info("load done: range_replace [%s, %s] -> %s", *span, path)
         return path
     ranges = (
         monthly_ranges(*historical) if spec.range_type == "monthly" else daily_ranges(*historical)
     )
-    # One atomic replacement across the whole historical window; the
+    # One replacement (one write job) across the whole historical window; the
     # generated ranges bound *connector* batches, not Spark jobs.
     replace_range(
         spark, path, df, spec.filter_field, ranges[0][0], ranges[-1][1],
@@ -157,35 +154,36 @@ def run_all(
                     time.sleep(retry_backoff_s * (2**attempt))
         raise last  # type: ignore[misc]
 
+    def build_gold(table: str, path: str, view: str) -> str:
+        # O3: register the RAW view, then build the dependent Gold table;
+        # RUNNING is marked here for the same reason as in run_one
+        if board:
+            board.mark(view, db.RUNNING)
+        read_table(spark, path).createOrReplaceTempView(table)
+        gold.define_gold_view(spark, view)
+        return gold.materialize(spark, view, warehouse_dir)
+
+    # Gold builds share the pool with the RAW loads: each is submitted the
+    # moment its RAW table lands, so it overlaps the loads still running
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = {}
+        pending = {}
         for n in names:
             if board:
                 board.mark(n, db.PENDING)
-            futures[pool.submit(run_one, n)] = n
-        for fut in as_completed(futures):
-            name = futures[fut]
-            try:
-                results[name] = fut.result()
-            except Exception:
-                if board:
-                    board.mark(name, db.FAILED)
-                raise
-            if board:
-                board.mark(name, db.DONE)
-            if materialize_gold and name in TRIGGER_MAP:
-                # O3: register RAW view, then fire the dependent Gold build
-                view = TRIGGER_MAP[name]
-                if board:
-                    board.mark(view, db.RUNNING)
+            pending[pool.submit(run_one, n)] = n
+        while pending:
+            done, _ = wait(pending, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = pending.pop(fut)
                 try:
-                    read_table(spark, results[name]).createOrReplaceTempView(name)
-                    gold.define_gold_view(spark, view)
-                    results[view] = gold.materialize(spark, view, warehouse_dir)
+                    results[name] = fut.result()
                 except Exception:
                     if board:
-                        board.mark(view, db.FAILED)
+                        board.mark(name, db.FAILED)
                     raise
                 if board:
-                    board.mark(view, db.DONE)
+                    board.mark(name, db.DONE)
+                if materialize_gold and name in TRIGGER_MAP:
+                    view = TRIGGER_MAP[name]
+                    pending[pool.submit(build_gold, name, results[name], view)] = view
     return results

@@ -5,21 +5,27 @@ The reference implements idempotent incremental loads as two *non-atomic*
 BigQuery jobs: ``DELETE FROM t WHERE DATE(LOWER(f)) BETWEEN a AND b`` then a
 ``WRITE_APPEND`` load of the re-extracted rows (reference utils.py:255-283,
 utils.py:391-398; "Idempotência" README.md:10). A crash between the two loses
-the range. Spark's dynamic partition overwrite replaces the touched
-partitions atomically in one job — same intent, strictly safer, and it
-scales: only the partitions intersecting the range are rewritten, never the
-whole table.
+the range. Spark's dynamic partition overwrite commits the new content of
+every partition it writes in one job — same intent, no window in which the
+range is gone.
 
 Tables written by this module are date-partitioned parquet directories
-(partition column ``p_date`` derived from the table's filter field), which is
-what makes range replacement a metadata-local operation at 100 TB. On a real
-cluster you'd put Delta/Iceberg underneath for snapshot isolation; the
-operator surface here stays identical.
+(partition column ``p_date`` derived from the table's filter field).
+Range replacement plans from partition metadata: the driver lists the
+table's ``p_date=`` directories with the Hadoop FileSystem API (no Spark
+job), keeps those inside the range, and reads retained rows from the at
+most two edge partitions a day range can cut — never from a partition the
+range does not touch. One planning job over the staged rows yields the
+partitions to write (and doubles as the empty-input guard); then the write
+job runs, and the in-range partitions the write did not replace are deleted.
+On a real cluster you'd put Delta/Iceberg underneath for snapshot
+isolation; the operator surface here stays identical.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from urllib.parse import unquote
 
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -46,21 +52,53 @@ def _with_partition(df: DataFrame, filter_field: str, granularity: str = "day") 
     return df.withColumn(PARTITION_COL, _partition_expr(filter_field, granularity))
 
 
-def _partition_of(day: str, granularity: str) -> dt.date:
-    """The partition value a given ISO day falls into."""
-    d = dt.date.fromisoformat(day)
-    return d if granularity == "day" else d.replace(day=1)
+def _partition_of(day: dt.date, granularity: str) -> dt.date:
+    """The partition value a given day falls into."""
+    return day if granularity == "day" else day.replace(day=1)
 
 
-def _delete_partitions(spark: SparkSession, path: str, parts: list) -> None:
+def partitions_in_range(
+    spark: SparkSession, path: str, column: str, lo: dt.date, hi: dt.date
+) -> dict[str, str]:
+    """``{partition value: directory}`` of the ``column=`` directories
+    directly under ``path`` whose date lies in ``[lo, hi]``.
+
+    Listed on the driver through the Hadoop FileSystem API — no Spark job,
+    and nothing below the table root is opened (local FS, HDFS and S3A
+    alike). Values are unescaped the way Spark escapes directory names, so
+    a timestamp partition stored as ``1995-01-01 00%3A00%3A00`` reads back
+    as ``1995-01-01 00:00:00``, the string Spark casts that value to; its
+    date is the leading ``YYYY-MM-DD``. A missing table lists as empty."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return {}
+    prefix = f"{column}="
+    out: dict[str, str] = {}
+    for status in fs.listStatus(root):
+        d = status.getPath().toString()
+        name = d.rsplit("/", 1)[1]
+        if not (status.isDirectory() and name.startswith(prefix)):
+            continue
+        value = unquote(name[len(prefix):])
+        try:
+            day = dt.date.fromisoformat(value[:10])
+        except ValueError:
+            continue  # the null partition (__HIVE_DEFAULT_PARTITION__)
+        if lo <= day <= hi:
+            out[value] = d
+    return out
+
+
+def delete_partitions(spark: SparkSession, dirs) -> None:
     """Remove partition directories via the Hadoop FileSystem API (works on
     local FS, HDFS, and S3A alike — same code path a cluster uses)."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    for p in parts:
-        ppath = jvm.org.apache.hadoop.fs.Path(f"{path}/{PARTITION_COL}={p}")
-        fs = ppath.getFileSystem(conf)
-        fs.delete(ppath, True)
+    for d in dirs:
+        ppath = jvm.org.apache.hadoop.fs.Path(d)
+        ppath.getFileSystem(conf).delete(ppath, True)
 
 
 def overwrite_table(
@@ -100,76 +138,116 @@ def append_table(
     w.parquet(path)
 
 
+def _retained_rows(
+    spark: SparkSession,
+    path: str,
+    touched: dict[str, str],
+    schema,
+    day,
+    start: dt.date,
+    end: dt.date,
+    granularity: str,
+) -> DataFrame | None:
+    """Rows of the touched partitions that fall outside ``[start, end]``,
+    localCheckpoint'ed (Spark refuses to overwrite a path it is still
+    reading from lineage). Only the partitions holding ``start`` and ``end``
+    can hold such rows — every partition between them lies wholly inside
+    the range — so only those (at most two) directories are read. They are
+    read with the staged rows' schema rather than one inferred from a
+    parquet footer, which would cost a Spark job; a column the old files
+    lack reads as null."""
+    if granularity == "day":
+        return None
+    edges = {str(_partition_of(d, granularity)) for d in (start, end)}
+    dirs = [d for v, d in touched.items() if v in edges]
+    if not dirs:
+        return None
+    old = spark.read.schema(schema).option("basePath", path).parquet(*dirs)
+    return old.filter(~day.between(F.lit(start), F.lit(end))).localCheckpoint()
+
+
 def replace_range(
     spark: SparkSession,
     path: str,
     new_rows: DataFrame,
     filter_field: str,
-    start: str | dt.date,
-    end: str | dt.date,
+    start: str | dt.date | None = None,
+    end: str | dt.date | None = None,
     granularity: str = "day",
-) -> None:
+) -> tuple[dt.date, dt.date] | None:
     """R1 — idempotent day-granular range replacement: after this call, the
     table's content for dates in ``[start, end]`` is exactly the in-range
     rows of ``new_rows`` (rows outside the range are ignored, mirroring the
-    reference where extraction and delete share the same range).
+    reference where extraction and delete share the same range). Returns
+    the replaced range, or None when there was nothing to write.
 
-    One atomic job: dynamic partition overwrite rewrites only the touched
-    partitions. Re-running with the same inputs is a no-op change
-    (reference's delete+insert idempotency, utils.py:391-398, without the
-    crash window between the two jobs).
+    Without ``start``/``end`` the range is the day span of ``new_rows``
+    (a bootstrap load), found by the same planning job.
+
+    Steps: list the in-range partitions on the driver; checkpoint the rows
+    of the range's edge partitions that fall outside it (month granularity
+    only); one planning job collects the partitions of the new and retained
+    rows; one dynamic-overwrite job writes them; the in-range partitions
+    the write did not cover are deleted. The write job is the atomic step:
+    each partition it writes is replaced whole at commit, so a crash never
+    leaves a half-written partition (the reference's delete+insert has a
+    window with the range gone, utils.py:391-398). The delete runs after
+    that commit; a crash between the two leaves stale in-range partitions
+    the write did not cover, and re-running the call removes them.
+    Re-running with the same inputs is a no-op change.
 
     With ``granularity="month"`` the day range need not align to partition
     boundaries: rows of the touched months *outside* the range are read
     back and re-staged alongside the new rows (retain ∪ new), so the
-    overwrite of those months is still exact. The retained rows are
-    localCheckpoint'ed first — Spark refuses to overwrite a path it is
-    concurrently reading from lineage."""
-    start_d = F.lit(str(start)).cast("date")
-    end_d = F.lit(str(end)).cast("date")
-    day_in_range = F.to_date(F.col(filter_field)).between(start_d, end_d)
-    staged = _with_partition(new_rows, filter_field, granularity).filter(day_in_range)
-    if staged.isEmpty():
-        # The reference skips the delete when extraction returns no rows
-        # (extract-before-delete ordering, utils.py:379-398): absence of new
-        # data must never destroy existing data.
-        return
-    # partitions the range *touches* in the existing table. Dynamic overwrite
-    # only rewrites partitions present in the staged data — a touched
-    # partition with no new (or retained) rows would keep stale in-range rows
-    # (caught by tests/test_property_range_replace.py), so those are deleted
-    # explicitly afterwards, mirroring the reference's DELETE of the full
-    # range (utils.py:266-269).
-    affected_existing: list = []
-    try:
-        existing = _with_partition(
-            spark.read.parquet(path).drop(PARTITION_COL), filter_field, granularity
-        )
-        part_start = _partition_of(str(start), granularity)
-        part_end = _partition_of(str(end), granularity)
-        affected = existing.filter(
-            F.col(PARTITION_COL).between(F.lit(part_start), F.lit(part_end))
-        )
-        affected_existing = [
-            r[0] for r in affected.select(PARTITION_COL).distinct().collect()
-        ]
-        if granularity != "day":
-            # sub-partition replacement: keep affected-partition rows that
-            # fall outside the day range
-            retained = affected.filter(~day_in_range).localCheckpoint()
-            staged = staged.unionByName(retained)
-    except AnalysisException:
-        pass  # first load: nothing to retain or clear
+    overwrite of those months is still exact."""
+    if (start is None) != (end is None):
+        raise ValueError("replace_range needs both start and end, or neither")
+    day = F.to_date(F.col(filter_field))
+    part = F.col(PARTITION_COL).cast("string").alias("p")
+    staged = _with_partition(new_rows, filter_field, granularity)
+    if start is None:
+        staged = staged.filter(day.isNotNull())
+        plan = staged.groupBy(part).agg(F.min(day).alias("lo"), F.max(day).alias("hi")).collect()
+        if not plan:
+            return None  # S6: empty source
+        # the edge partitions hold the first and last new day, so retained
+        # rows add no partition beyond the new ones
+        start, end = min(r.lo for r in plan), max(r.hi for r in plan)
+    else:
+        plan = None
+        start, end = dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
+        staged = staged.filter(day.between(F.lit(start), F.lit(end)))
+    touched = partitions_in_range(
+        spark, path, PARTITION_COL,
+        _partition_of(start, granularity), _partition_of(end, granularity),
+    )
+    retained = _retained_rows(spark, path, touched, staged.schema, day, start, end, granularity)
+    if plan is None:
+        parts = staged.select(part, F.lit(True).alias("new"))
+        if retained is not None:
+            parts = parts.unionByName(retained.select(part, F.lit(False).alias("new")))
+        plan = parts.distinct().collect()
+        if not any(r.new for r in plan):
+            # The reference skips the delete when extraction returns no rows
+            # (extract-before-delete ordering, utils.py:379-398): absence of
+            # new data must never destroy existing data.
+            return None
+    desired = {r.p for r in plan}
+    if retained is not None:
+        staged = staged.unionByName(retained)
     (
         staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(PARTITION_COL)
         .parquet(path)
     )
-    desired = {r[0] for r in staged.select(PARTITION_COL).distinct().collect()}
-    stale = [p for p in affected_existing if p not in desired]
-    if stale:
-        _delete_partitions(spark, path, stale)
+    # Dynamic overwrite only rewrites partitions present in the staged data —
+    # a touched partition with no new (or retained) rows would keep stale
+    # in-range rows (caught by tests/test_property_range_replace.py), so
+    # those are deleted explicitly, mirroring the reference's DELETE of the
+    # full range (utils.py:266-269).
+    delete_partitions(spark, [d for v, d in touched.items() if v not in desired])
+    return start, end
 
 
 def refresh_recent(

@@ -19,10 +19,13 @@ keeps each file's min/max ranges tight so selective queries skip row groups.
 
 from __future__ import annotations
 
+import datetime as dt
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.range_replace import delete_partitions, partitions_in_range
 
 
 @dataclass(frozen=True)
@@ -154,42 +157,31 @@ def refresh_incremental(
     the reference's full DROP+CTAS rebuild, materialize_gold.py:64-74).
 
     This is what makes the RAW→GOLD trigger affordable at 100 TB: a 7-day
-    refresh rewrites 7 partitions of the gold table, not 7 years. Requires
-    the spec's partition_field to be a DATE column (true of
-    vw_event_hourly; month-grained specs pass month-aligned ranges)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
+    refresh rewrites 7 partitions of the gold table, not 7 years. One
+    planning job collects the partitions the recomputation produces; the
+    gold table's old in-range partitions come from a driver-side directory
+    listing, so no job reads the gold table. Requires the spec's
+    partition_field to be a DATE column or a timestamp whose date decides
+    the range (month-grained specs pass month-aligned ranges)."""
     spec = GOLD_SPECS[view]
     out = f"{warehouse_dir}/{spec.table}"
     pf = spec.partition_field
-    in_range = F.col(pf).cast("date").between(F.lit(start), F.lit(end))
-    fresh = spark.table(view).filter(in_range)
-    if fresh.isEmpty():
+    fresh = spark.table(view).filter(
+        F.col(pf).cast("date").between(F.lit(start), F.lit(end))
+    )
+    # partition values as Spark renders them in directory names
+    desired = {
+        r.p for r in fresh.select(F.col(pf).cast("string").alias("p")).distinct().collect()
+    }
+    if not desired:
         # same conservative stance as R1's extract-before-delete guard: an
         # entirely-empty recomputation never deletes existing gold data (a
         # broken upstream view must not wipe the range); full rebuilds via
         # materialize() are the path for intentional deletions
         return out
-    # one metadata job collects both partition-value sets (old in-range
-    # partitions on disk + partitions the recomputation produces) instead of
-    # two separate collects — the union's sides run inside a single action
-    new_parts = fresh.select(F.col(pf).alias("p")).distinct().withColumn(
-        "is_old", F.lit(False)
+    affected = partitions_in_range(
+        spark, out, pf, dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
     )
-    both = new_parts
-    try:
-        both = new_parts.unionByName(
-            spark.read.parquet(out)
-            .filter(in_range)
-            .select(F.col(pf).alias("p"))
-            .distinct()
-            .withColumn("is_old", F.lit(True))
-        )
-    except AnalysisException:
-        pass  # first build — nothing on disk yet
-    part_rows = both.collect()
-    desired = {r.p for r in part_rows if not r.is_old}
-    affected = [r.p for r in part_rows if r.is_old]
     if spec.cluster_fields:
         fresh = fresh.sortWithinPartitions(*[F.col(c) for c in spec.cluster_fields])
     (
@@ -198,12 +190,5 @@ def refresh_incremental(
         .partitionBy(pf)
         .parquet(out)
     )
-    stale = [p for p in affected if p not in desired]
-    if stale:
-        # gold partitions use the spec's own column name (not p_date)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for p in stale:
-            ppath = jvm.org.apache.hadoop.fs.Path(f"{out}/{pf}={p}")
-            ppath.getFileSystem(conf).delete(ppath, True)
+    delete_partitions(spark, [d for v, d in affected.items() if v not in desired])
     return out

@@ -298,6 +298,58 @@ def test_replace_range_clears_days_without_new_rows(spark, tmp_path):
     assert {r.id for r in read_table(spark, p2).collect()} == {1000}
 
 
+@pytest.mark.parametrize(
+    "granularity, base_days, lo, hi, untouched",
+    [
+        ("day", [(1, 1), (1, 2), (1, 3), (1, 10)], "2024-01-02", "2024-01-03", "2024-01-10"),
+        ("month", [(1, 5), (1, 25), (2, 10), (3, 15)], "2024-01-20", "2024-02-05", "2024-03-01"),
+    ],
+)
+def test_replace_range_never_reads_untouched_partitions(
+    spark, tmp_path, granularity, base_days, lo, hi, untouched
+):
+    """Planning is metadata-only outside the range: a non-parquet file in an
+    untouched partition would fail any job that scanned it, and must come
+    out of the replacement byte-identical."""
+    p = str(tmp_path / "t")
+    base = [(i, TS(2024, m, d, 12), float(i)) for i, (m, d) in enumerate(base_days)]
+    overwrite_table(_mk_events(spark, base), p, "ts", granularity=granularity)
+    planted = tmp_path / "t" / f"p_date={untouched}" / "planted.txt"
+    planted.write_bytes(b"not parquet\n")
+    new = [(100, TS(2024, 1, 21, 9), 1.0), (101, TS(2024, 1, 2, 9), 2.0)]
+    span = replace_range(spark, p, _mk_events(spark, new), "ts", lo, hi, granularity)
+    assert span == (dt.date.fromisoformat(lo), dt.date.fromisoformat(hi))
+    assert planted.read_bytes() == b"not parquet\n"
+    planted.unlink()
+    lo_d, hi_d = span
+    kept = {i for i, (m, d) in enumerate(base_days) if not lo_d <= dt.date(2024, m, d) <= hi_d}
+    added = {i for i, t, _ in new if lo_d <= t.date() <= hi_d}
+    assert {r.id for r in read_table(spark, p).collect()} == kept | added
+
+
+def test_replace_range_bootstrap_span(spark, tmp_path):
+    """Without a range, replace_range replaces the day span of its input and
+    returns it; an empty input writes nothing."""
+    p = str(tmp_path / "t")
+    overwrite_table(
+        _mk_events(spark, [(1, TS(2024, 1, 3), 1.0), (2, TS(2024, 1, 20), 2.0),
+                           (3, TS(2024, 3, 1), 3.0)]),
+        p, "ts", granularity="month",
+    )
+    new = _mk_events(spark, [(10, TS(2024, 1, 10), 0.0), (11, TS(2024, 2, 5), 0.0),
+                             (12, None, 0.0)])
+    assert replace_range(spark, p, new, "ts", granularity="month") == (
+        dt.date(2024, 1, 10), dt.date(2024, 2, 5)
+    )
+    # Jan 3 lies before the span and is kept; Jan 20 lies inside it
+    assert {r.id for r in read_table(spark, p).collect()} == {1, 10, 11, 3}
+    empty = str(tmp_path / "e")
+    assert replace_range(spark, empty, _mk_events(spark, []), "ts") is None
+    assert not (tmp_path / "e").exists()
+    with pytest.raises(ValueError):
+        replace_range(spark, p, new, "ts", "2024-01-01", None)
+
+
 def test_gold_zorder_content_identical(spark, tmp_path):
     """Z-order is a layout choice: materialized content must be identical to
     the lexicographic clustering."""
@@ -407,3 +459,73 @@ def test_run_all_exhausted_retries_raise(spark, tmp_path, monkeypatch):
             retries=1,
             retry_backoff_s=0.01,
         )
+
+
+def _gold_files(root):
+    return {
+        str(f.relative_to(root)): f.read_bytes()
+        for f in sorted(root.rglob("*")) if f.is_file() and not f.name.startswith(".")
+    }
+
+
+def test_gold_refresh_deletes_vanished_month_partition(spark, tmp_path):
+    """Month-grained Gold: the table's partitions are timestamps stored as
+    escaped directory names. A partition inside the refreshed range that the
+    recomputation no longer produces is deleted; one outside it is kept; an
+    empty recomputation leaves the table untouched."""
+    from poc_juma_etl_spark.catalog import SCHEMAS
+    from poc_juma_etl_spark.plans import gold
+
+    def orders(rows):
+        rows = [(k, 1, "O", 1.0 * k, TS(1995, m, d), "1-URGENT") for k, m, d in rows]
+        spark.createDataFrame(rows, SCHEMAS["orders"]).createOrReplaceTempView("orders")
+        gold.define_gold_view(spark, "vw_order_revenue")
+
+    wh = tmp_path / "g"
+    orders([(1, 1, 5), (2, 2, 10), (3, 3, 15)])
+    gold.materialize(spark, "vw_order_revenue", str(wh))
+    table = wh / "t_order_revenue"
+    dirs = sorted(d.name for d in table.iterdir() if d.is_dir())
+    assert dirs[1] == "order_month=1995-02-01 00%3A00%3A00"
+    # February loses its only order; the refresh covers January-February
+    orders([(1, 1, 6), (3, 3, 15)])
+    gold.refresh_incremental(spark, "vw_order_revenue", str(wh), "1995-01-01", "1995-02-28")
+    assert sorted(d.name for d in table.iterdir() if d.is_dir()) == [dirs[0], dirs[2]]
+    got = spark.read.parquet(str(table))
+    full = spark.read.parquet(gold.materialize(spark, "vw_order_revenue", str(tmp_path / "full")))
+    assert got.exceptAll(full).isEmpty() and full.exceptAll(got).isEmpty()
+    # an empty recomputation of the range never deletes gold data
+    before = _gold_files(table)
+    orders([(3, 3, 20)])
+    gold.refresh_incremental(spark, "vw_order_revenue", str(wh), "1995-01-01", "1995-02-28")
+    assert _gold_files(table) == before
+
+
+def test_run_all_gold_failure_marks_view_failed(spark, tmp_path, monkeypatch):
+    """A Gold build runs on the pool: its view turns RUNNING inside the
+    worker, and a failing build marks it FAILED and re-raises."""
+    import threading
+
+    from poc_juma_etl_spark.dashboard import DONE, FAILED, RUNNING, StatusBoard
+    from poc_juma_etl_spark.etl import run_all
+    from poc_juma_etl_spark.plans import gold
+
+    running_on = []
+
+    class Board(StatusBoard):
+        def mark(self, name, state):
+            if name == "vw_event_hourly" and state == RUNNING:
+                running_on.append(threading.current_thread())
+            super().mark(name, state)
+
+    def boom(*a, **kw):
+        raise RuntimeError("gold build failed")
+
+    monkeypatch.setattr(gold, "materialize", boom)
+    board = Board(["events"], ["vw_event_hourly"])
+    with pytest.raises(RuntimeError, match="gold build failed"):
+        run_all(spark, SF_SMOKE, str(tmp_path / "wh"), tables=["events"], board=board)
+    raw, gold_states, _, _ = board.snapshot()
+    assert raw["events"] == DONE
+    assert gold_states["vw_event_hourly"] == FAILED
+    assert running_on and running_on[0] is not threading.main_thread()
