@@ -4,7 +4,7 @@ A from-scratch re-expression of the capabilities of the reference pipeline
 ``fe-malveira-87/poc-juma-etl`` (a BigQuery-delegating batch ETL, see
 SURVEY.md) as an idiomatic Spark engine:
 
-- ``session``    — SparkSession factory (AQE, dynamic partition overwrite, UTC)
+- ``session``    — SparkSession factory (AQE, UTC, Arrow)
 - ``catalog``    — explicit StructType schemas + parquet loaders for the star schema
 - ``registry``   — SERVICE_MAP-shaped table registry driving the ETL half
 - ``operators/`` — normalize, range-replace, dedup, similarity, text analysis

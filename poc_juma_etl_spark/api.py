@@ -22,7 +22,7 @@ from .session import get_spark, tune_session
 
 
 def session(**kwargs) -> SparkSession:
-    """An engine-tuned SparkSession (AQE, dynamic partition overwrite, UTC)."""
+    """An engine-tuned SparkSession (AQE, UTC, Arrow)."""
     return get_spark(**kwargs)
 
 

@@ -21,7 +21,6 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from .functions.ranges import daily_ranges, monthly_ranges
 from .logs import setup_service_logger
 from .operators.normalize import ingest_normalize
 from .operators.range_replace import overwrite_table, read_table, replace_range
@@ -51,16 +50,18 @@ def run_table(
     Dimensions (load_mode="overwrite"): full extract → normalize → S4
     overwrite — branch A (utils.py:347-357).
     Facts (load_mode="range_replace"): per-range extract-filter → R1
-    replacement — branch B (utils.py:360-404). With a file-backed source a
+    replacement — branch B (utils.py:360-404) — over ``historical`` or,
+    without it, the source's own day span. With a file-backed source a
     single replace_range over the whole window replaces the reference's
     range *loop*; the loop existed only to bound API payloads (its range
-    helpers remain available for connector-backed sources).
+    helpers remain available for connector-backed sources). A reversed
+    window raises ValueError.
     """
     log = setup_service_logger(name, log_dir) if log_dir else None
     if log:
         log.info("load start: mode=%s historical=%s", SERVICE_MAP[name].load_mode, historical)
     spec = SERVICE_MAP[name]
-    df = ingest_normalize(_extract(spark, sf_dir, spec), date_columns=[])
+    df = ingest_normalize(_extract(spark, sf_dir, spec))
     path = f"{warehouse_dir}/{name}"
     if spec.load_mode == "overwrite":
         overwrite_table(df, path, spec.filter_field, spec.partition_granularity)
@@ -68,31 +69,15 @@ def run_table(
             log.info("load done: overwrite -> %s", path)
         return path
     # range_replace fact load
-    if historical is None:
-        # bootstrap: replace the table's full date span; the span comes out
-        # of replace_range's planning job
-        span = replace_range(
-            spark, path, df, spec.filter_field, None, None, spec.partition_granularity
-        )
-        if log:
-            if span is None:
-                log.info("load skipped: empty source")
-            else:
-                log.info("load done: range_replace [%s, %s] -> %s", *span, path)
-        return path
-    ranges = (
-        monthly_ranges(*historical) if spec.range_type == "monthly" else daily_ranges(*historical)
-    )
-    # One replacement (one write job) across the whole historical window; the
-    # generated ranges bound *connector* batches, not Spark jobs.
-    replace_range(
-        spark, path, df, spec.filter_field, ranges[0][0], ranges[-1][1],
+    span = replace_range(
+        spark, path, df, spec.filter_field, *(historical or (None, None)),
         spec.partition_granularity,
     )
     if log:
-        log.info(
-            "load done: range_replace [%s, %s] -> %s", ranges[0][0], ranges[-1][1], path
-        )
+        if span is None:
+            log.info("load skipped: no source rows")
+        else:
+            log.info("load done: range_replace [%s, %s] -> %s", *span, path)
     return path
 
 

@@ -65,7 +65,7 @@ def merge_upsert(
     else:
         retained = target.join(updates.select(key).distinct(), key, "left_anti")
         merged = retained.unionByName(updates).localCheckpoint()
-    merged.write.mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
+    merged.write.mode("overwrite").parquet(path)
 
 
 SCD2_COLS = ("valid_from", "valid_to", "is_current")
@@ -105,7 +105,7 @@ def scd2_apply(
     merged = (
         untouched.unionByName(closed).unionByName(history).unionByName(opened)
     ).localCheckpoint()
-    merged.write.mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
+    merged.write.mode("overwrite").parquet(path)
 
 
 def merge_latest(
@@ -131,7 +131,7 @@ def merge_latest(
         .drop("_rn")
         .localCheckpoint()
     )
-    merged.write.mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
+    merged.write.mode("overwrite").parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Ingest normalization operators (reference parity: P1, P2, P4, S6).
+"""Ingest normalization operators (reference parity: P1, P2, P4).
 
 The reference's entire transform layer is two pandas lines: lowercase all
 column names (reference utils.py:307) and coerce a denylist of date columns
@@ -83,11 +83,6 @@ def normalize_dates(df: DataFrame, date_columns: list[str] | None = None) -> Dat
 def ingest_normalize(df: DataFrame, date_columns: list[str] | None = None) -> DataFrame:
     """The reference's full transform: P2 then P1 (utils.py:300-307)."""
     return lowercase_columns(normalize_dates(df, date_columns))
-
-
-def is_empty(df: DataFrame) -> bool:
-    """S6 — empty-input guard (reference utils.py:287-292)."""
-    return df.isEmpty()
 
 
 def string_date_between(col: Column | str, start: str, end: str) -> Column:

@@ -101,25 +101,22 @@ def delete_partitions(spark: SparkSession, dirs) -> None:
         ppath.getFileSystem(conf).delete(ppath, True)
 
 
+def _writer(df: DataFrame, filter_field: str | None, granularity: str):
+    """``df``'s writer, partitioned by date when the table has a filter field
+    so later incremental loads and date-pruned scans work."""
+    if not filter_field:
+        return df.write
+    return _with_partition(df, filter_field, granularity).write.partitionBy(PARTITION_COL)
+
+
 def overwrite_table(
     df: DataFrame, path: str, filter_field: str | None = None, granularity: str = "day"
 ) -> None:
     """S4 — full-replace load (reference WRITE_TRUNCATE, utils.py:309,
-    config.py:72-90). Partitioned by date when the table has a filter field
-    so later incremental loads and date-pruned scans work."""
+    config.py:72-90)."""
     if df.isEmpty():  # S6 guard (reference utils.py:287-292)
         return
-    # force static overwrite: the session default is dynamic (for R1), which
-    # would silently turn a full replace into a partial one
-    w = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
-    if filter_field:
-        w = (
-            _with_partition(df, filter_field, granularity)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(PARTITION_COL)
-        )
-    w.parquet(path)
+    _writer(df, filter_field, granularity).mode("overwrite").parquet(path)
 
 
 def append_table(
@@ -128,14 +125,7 @@ def append_table(
     """S5 — append load (reference WRITE_APPEND, utils.py:309-317)."""
     if df.isEmpty():
         return
-    w = df.write.mode("append")
-    if filter_field:
-        w = (
-            _with_partition(df, filter_field, granularity)
-            .write.mode("append")
-            .partitionBy(PARTITION_COL)
-        )
-    w.parquet(path)
+    _writer(df, filter_field, granularity).mode("append").parquet(path)
 
 
 def _retained_rows(
@@ -179,7 +169,8 @@ def replace_range(
     table's content for dates in ``[start, end]`` is exactly the in-range
     rows of ``new_rows`` (rows outside the range are ignored, mirroring the
     reference where extraction and delete share the same range). Returns
-    the replaced range, or None when there was nothing to write.
+    the replaced range, or None when there was nothing to write; a
+    reversed range (``start > end``) raises ValueError.
 
     Without ``start``/``end`` the range is the day span of ``new_rows``
     (a bootstrap load), found by the same planning job.
@@ -216,6 +207,8 @@ def replace_range(
     else:
         plan = None
         start, end = dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
+        if start > end:
+            raise ValueError(f"replace_range got a reversed range [{start}, {end}]")
         staged = staged.filter(day.between(F.lit(start), F.lit(end)))
     touched = partitions_in_range(
         spark, path, PARTITION_COL,
@@ -260,17 +253,15 @@ def refresh_recent(
     granularity: str = "day",
 ) -> tuple[dt.date, dt.date] | None:
     """O7 — recent-refresh window: re-replace the last ``days`` days from the
-    source (reference utils.py:406-451, constant config.py:19). Skipped when
-    days <= 0, like the reference (utils.py:410)."""
+    source (reference utils.py:406-451, constant config.py:19). Returns
+    ``replace_range``'s result: the window, or None when the source has no
+    rows in it. Skipped (None) when days <= 0, like the reference
+    (utils.py:410)."""
     if days <= 0:
         return None
     today = today or dt.date.today()
     start = today - dt.timedelta(days=days)
-    fresh = source_df.filter(
-        F.to_date(F.col(filter_field)).between(F.lit(str(start)), F.lit(str(today)))
-    )
-    replace_range(spark, path, fresh, filter_field, start, today, granularity)
-    return (start, today)
+    return replace_range(spark, path, source_df, filter_field, start, today, granularity)
 
 
 def read_table(
@@ -312,4 +303,4 @@ def delete_keys(spark: SparkSession, path: str, key: str, keys: DataFrame) -> No
     except AnalysisException:
         return  # never-written table (S6 empty-guard): nothing to delete
     retained = existing.join(F.broadcast(keyset), key, "left_anti").localCheckpoint()
-    retained.write.mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
+    retained.write.mode("overwrite").parquet(path)

@@ -11,7 +11,11 @@ materialize_gold.py:60). Our engine owns the execution:
                    parquet row-group min/max locality (data skipping); exact
                    BigQuery clustering ≈ Z-order needs Delta/Iceberg OPTIMIZE,
                    out of scope and not required for correctness
-- DROP + CTAS    → ``mode("overwrite")`` (atomic replace, allows spec changes)
+- DROP + CTAS    → ``mode("overwrite")`` under the session's static
+                   partition overwrite: the whole table is replaced, so a
+                   partition the view no longer produces is gone and spec
+                   changes are fine. Like the reference's DROP then CREATE,
+                   it is not atomic: a failed build leaves a table to rebuild
 
 At 100 TB the partition column must be low-cardinality-per-day and the sort
 keeps each file's min/max ranges tight so selective queries skip row groups.
@@ -114,8 +118,10 @@ def materialize(
     spark: SparkSession, view: str, warehouse_dir: str, zorder: bool = False
 ) -> str:
     """S7/S8 — materialize one Gold view to a partitioned, clustered parquet
-    table; returns the output path. Overwrite mode gives the reference's
-    drop-and-recreate semantics (spec changes between runs are fine).
+    table; returns the output path. A static overwrite gives the
+    reference's DROP+CTAS semantics: the table afterwards holds exactly the
+    view's rows and partitions, and spec changes between runs are fine. Not
+    atomic, like the reference: a failed build leaves the table to be rebuilt.
 
     ``zorder=True`` sorts within partitions by the interleaved key instead
     of lexicographically — better multi-column data skipping when queries

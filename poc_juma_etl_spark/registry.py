@@ -1,10 +1,11 @@
 """Table registry — the engine's logical catalog for the ETL half.
 
 Same shape as the reference's ``SERVICE_MAP`` (reference config.py:67-131):
-one entry per table with {source name, filter field, load mode, range type},
-plus the RAW→GOLD trigger map (reference main.py:26-30). The registry drives
-``etl.run_table`` dispatch (O8) exactly the way SERVICE_MAP drives
-``run_etl_service`` (reference utils.py:346-453).
+one entry per table with {source name, load mode, filter field, partition
+granularity}, plus the RAW→GOLD trigger map (reference main.py:26-30). The
+reference's range type only sized its extraction batches, so it has no field
+here. The registry drives ``etl.run_table`` dispatch (O8) exactly the way
+SERVICE_MAP drives ``run_etl_service`` (reference utils.py:346-453).
 
 Registered here are the engine's fixture-domain tables: dimensions load
 full-overwrite (the reference's "cadastral" WRITE_TRUNCATE tables,
@@ -23,8 +24,6 @@ class TableSpec:
     source: str  # source table/service name
     load_mode: str  # "overwrite" (S4) | "range_replace" (R1+S5)
     filter_field: str | None = None  # date column driving incremental loads
-    range_type: str | None = None  # "monthly" | "daily" | None (full load)
-    date_columns: tuple[str, ...] = ()  # P2 normalization targets
     # warehouse partition granularity: long-horizon facts partition by month
     # (a 7-year daily fact is ~2500 directories — file-listing death),
     # high-volume short-horizon streams by day
@@ -42,14 +41,14 @@ SERVICE_MAP: dict[str, TableSpec] = {
     "embeddings": TableSpec("embeddings", "embeddings", "overwrite"),
     # facts — idempotent range replacement on the date field
     "orders": TableSpec(
-        "orders", "orders", "range_replace", "o_orderdate", "monthly",
+        "orders", "orders", "range_replace", "o_orderdate",
         partition_granularity="month",
     ),
     "lineitem": TableSpec(
-        "lineitem", "lineitem", "range_replace", "l_shipdate", "monthly",
+        "lineitem", "lineitem", "range_replace", "l_shipdate",
         partition_granularity="month",
     ),
-    "events": TableSpec("events", "events", "range_replace", "ts", "daily"),
+    "events": TableSpec("events", "events", "range_replace", "ts"),
 }
 
 # RAW→GOLD dependency triggers (reference TRIGGER_MAP, main.py:26-30):

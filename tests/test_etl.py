@@ -209,6 +209,24 @@ def test_refresh_recent_window(spark, tmp_path):
     assert refresh_recent(spark, p, src, "ts", days=0) is None  # O7 skip switch
 
 
+def test_refresh_recent_empty_window_returns_none(spark, tmp_path):
+    """A window the source has no rows in writes nothing and says so."""
+    p = str(tmp_path / "t")
+    overwrite_table(_mk_events(spark, [(1, TS(2024, 1, 9), 1.0)]), p, "ts")
+    src = _mk_events(spark, [(2, TS(2023, 12, 1), 2.0)])
+    assert refresh_recent(spark, p, src, "ts", days=7, today=dt.date(2024, 1, 10)) is None
+    assert [r.id for r in read_table(spark, p).collect()] == [1]
+
+
+def test_replace_range_rejects_reversed_range(spark, tmp_path):
+    p = str(tmp_path / "t")
+    overwrite_table(_mk_events(spark, [(1, TS(2024, 1, 2), 1.0)]), p, "ts")
+    new = _mk_events(spark, [(2, TS(2024, 1, 2), 2.0)])
+    with pytest.raises(ValueError, match="reversed"):
+        replace_range(spark, p, new, "ts", "2024-01-03", "2024-01-01")
+    assert [r.id for r in read_table(spark, p).collect()] == [1]
+
+
 # ---------------------------------------------------------------- etl + gold
 
 
@@ -240,6 +258,57 @@ def test_run_all_end_to_end(spark, tmp_path):
     for view in TRIGGER_MAP.values():
         assert view in results
         assert spark.read.parquet(results[view]).count() > 0
+
+
+def test_run_table_historical_replaces_exact_window(spark, tmp_path):
+    """A historical load of a loaded fact table replaces exactly [a, b]: the
+    rows inside it come back from the source, the rows outside it (marked)
+    stay, including those sharing a month partition with the window. A
+    reversed window raises and leaves the table as it was."""
+    from poc_juma_etl_spark.etl import run_table
+
+    wh = str(tmp_path / "wh")
+    path = run_table(spark, SF_SMOKE, wh, "orders")
+    marked = read_table(spark, path).withColumn("o_totalprice", F.lit(-1.0)).localCheckpoint()
+    overwrite_table(marked, path, "o_orderdate", granularity="month")
+    a, b = dt.date(1995, 1, 15), dt.date(1995, 3, 10)
+    run_table(spark, SF_SMOKE, wh, "orders", historical=(a, b))
+    src = {r.o_orderkey: (r.o_orderdate.date(), r.o_totalprice) for r in
+           spark.read.parquet(f"{SF_SMOKE}/orders.parquet").collect()}
+    got = {r.o_orderkey: r.o_totalprice for r in read_table(spark, path).collect()}
+    assert got.keys() == src.keys()
+    assert any(day.month == 1 and day < a for day, _ in src.values())
+    for key, (day, price) in src.items():
+        assert got[key] == (price if a <= day <= b else -1.0), (key, day)
+    # a reversed window is refused before anything is written
+    before = _gold_files(tmp_path / "wh" / "orders")
+    with pytest.raises(ValueError, match="reversed"):
+        run_table(spark, SF_SMOKE, wh, "orders", historical=(b, a))
+    assert _gold_files(tmp_path / "wh" / "orders") == before
+
+
+def test_gold_rebuild_drops_vanished_partitions(spark, tmp_path):
+    """materialize is DROP+CTAS: rebuilding after an upstream day vanished
+    leaves exactly the view's partitions and rows."""
+    from poc_juma_etl_spark.plans import gold
+
+    def events(days):
+        rows = [(10 * d + h, TS(2024, 1, d, h), 1.0) for d in days for h in range(10)]
+        ev = _mk_events(spark, rows).toDF("event_id", "ts", "value")
+        ev.withColumn("event_type", F.lit("t")).createOrReplaceTempView("events")
+        gold.define_gold_view(spark, "vw_event_hourly")
+
+    wh = tmp_path / "g"
+    events([1, 2, 3])
+    out = gold.materialize(spark, "vw_event_hourly", str(wh))
+    events([1, 3])
+    gold.materialize(spark, "vw_event_hourly", str(wh))
+    parts = sorted(d.name for d in (wh / "t_event_hourly").iterdir() if d.is_dir())
+    assert parts == ["event_date=2024-01-01", "event_date=2024-01-03"]
+    view = spark.table("vw_event_hourly")
+    got = spark.read.parquet(out).select(*view.columns)
+    assert got.agg(F.sum("n_events")).first()[0] == 20
+    assert got.exceptAll(view).isEmpty() and view.exceptAll(got).isEmpty()
 
 
 def test_gold_partitioned_output(spark, tmp_path):
