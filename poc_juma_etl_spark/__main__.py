@@ -24,6 +24,8 @@ import time
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .catalog import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser(prog="poc_juma_etl_spark")
     g = ap.add_mutually_exclusive_group(required=True)
     g.add_argument("--table", help="run ETL for one registered table")
@@ -37,9 +39,7 @@ def main(argv: list[str] | None = None) -> int:
         help="run the corpus curation pipeline over the documents table",
     )
     ap.add_argument("--workers", type=int, default=os.cpu_count() or 4)
-    ap.add_argument(
-        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--warehouse", default=None, help="output dir (default: ./warehouse)")
     args = ap.parse_args(argv)
 

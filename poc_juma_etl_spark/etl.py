@@ -112,11 +112,11 @@ def run_all(
         if board:
             board.mark(n, db.RUNNING)
         # Bounded retry with exponential backoff. This is SAFE to do blindly
-        # because the write path is R1's atomic dynamic-partition overwrite:
-        # a failed attempt either never committed its partitions or replaced
-        # them whole, so re-running the same range is idempotent — retrying
-        # a non-idempotent writer here would be a correctness bug, not a
-        # robustness feature.
+        # because every writer is idempotent: it rewrites either the whole
+        # table (dimensions, static overwrite) or the whole range (facts,
+        # replace_range), so re-running an attempt writes the same result —
+        # retrying a non-idempotent writer here would be a correctness bug,
+        # not a robustness feature.
         last: Exception | None = None
         for attempt in range(retries + 1):
             try:

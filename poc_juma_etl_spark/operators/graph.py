@@ -334,7 +334,7 @@ def triangle_top(li: DataFrame, top: int = TRI_TOP) -> DataFrame:
     )
 
 
-# --- within-brand triangle census (round-12 build; registration queued) -----
+# --- within-brand triangle census ------------------------------------------
 #
 # Triangle counting is the third classic graph primitive (after components
 # and centrality) a warehouse is asked for — community density, spam-ring
@@ -355,10 +355,54 @@ def triangle_top(li: DataFrame, top: int = TRI_TOP) -> DataFrame:
 # the closing edge. Every join keys on (brand, node) or (brand, u, v);
 # nothing driver-side, no UDFs.
 
-TRI_TOP = 25  # one row per brand at every SF
+TRIANGLES_ORACLE = """
+    WITH lb AS MATERIALIZED (
+      SELECT l_orderkey, p_brand AS brand, l_partkey
+      FROM lineitem JOIN part ON l_partkey = p_partkey
+    ),
+    edges AS MATERIALIZED (
+      SELECT DISTINCT a.brand, a.l_partkey AS u, b.l_partkey AS v
+      FROM lb a JOIN lb b
+        ON a.l_orderkey = b.l_orderkey AND a.brand = b.brand
+       AND a.l_partkey < b.l_partkey
+    ),
+    deg AS MATERIALIZED (
+      SELECT brand, node, COUNT(*) AS d FROM (
+        SELECT brand, u AS node FROM edges
+        UNION ALL SELECT brand, v FROM edges
+      ) GROUP BY brand, node
+    ),
+    tri AS (
+      SELECT e1.brand, COUNT(*) AS n_triangles
+      FROM edges e1
+      JOIN edges e2 ON e2.brand = e1.brand AND e2.u = e1.u AND e2.v > e1.v
+      JOIN edges e3 ON e3.brand = e1.brand AND e3.u = e1.v AND e3.v = e2.v
+      GROUP BY e1.brand
+    )
+    SELECT d.brand,
+           CAST(COUNT(*) AS BIGINT) AS n_nodes,
+           CAST(MIN(ec.n_edges) AS BIGINT) AS n_edges,
+           CAST(SUM(d.d * (d.d - 1) // 2) AS BIGINT) AS n_wedges,
+           CAST(COALESCE(MIN(tri.n_triangles), 0) AS BIGINT) AS n_triangles,
+           CAST(COALESCE(MIN(tri.n_triangles), 0) * 3 AS BIGINT) AS closed_x3
+    FROM deg d
+    JOIN (SELECT brand, COUNT(*) AS n_edges FROM edges GROUP BY brand) ec
+      ON ec.brand = d.brand
+    LEFT JOIN tri ON tri.brand = d.brand
+    GROUP BY d.brand
+    ORDER BY d.brand
+    """
 
 
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register(
+    "q_graph_brand_triangle_census",
+    oracle=TRIANGLES_ORACLE,
+    doc="Per-brand triangle census over the within-brand co-purchase "
+    "graph: nodes, edges, wedges and triangles per brand, counted with "
+    "the degree-ordered forward algorithm keyed on (brand, node).",
+    tags=("graph", "triangles", "cooccurrence"),
+)
+def q_graph_brand_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle census over the within-brand co-purchase graph:
     (brand, n_nodes, n_edges, n_wedges, n_triangles, closed_x3) with
     closed_x3 = 3 * n_triangles (the closed-wedge numerator as an exact
@@ -459,42 +503,3 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("brand")
     )
-
-
-TRIANGLES_ORACLE = """
-    WITH lb AS MATERIALIZED (
-      SELECT l_orderkey, p_brand AS brand, l_partkey
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.brand, a.l_partkey AS u, b.l_partkey AS v
-      FROM lb a JOIN lb b
-        ON a.l_orderkey = b.l_orderkey AND a.brand = b.brand
-       AND a.l_partkey < b.l_partkey
-    ),
-    deg AS MATERIALIZED (
-      SELECT brand, node, COUNT(*) AS d FROM (
-        SELECT brand, u AS node FROM edges
-        UNION ALL SELECT brand, v FROM edges
-      ) GROUP BY brand, node
-    ),
-    tri AS (
-      SELECT e1.brand, COUNT(*) AS n_triangles
-      FROM edges e1
-      JOIN edges e2 ON e2.brand = e1.brand AND e2.u = e1.u AND e2.v > e1.v
-      JOIN edges e3 ON e3.brand = e1.brand AND e3.u = e1.v AND e3.v = e2.v
-      GROUP BY e1.brand
-    )
-    SELECT d.brand,
-           CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(MIN(ec.n_edges) AS BIGINT) AS n_edges,
-           CAST(SUM(d.d * (d.d - 1) // 2) AS BIGINT) AS n_wedges,
-           CAST(COALESCE(MIN(tri.n_triangles), 0) AS BIGINT) AS n_triangles,
-           CAST(COALESCE(MIN(tri.n_triangles), 0) * 3 AS BIGINT) AS closed_x3
-    FROM deg d
-    JOIN (SELECT brand, COUNT(*) AS n_edges FROM edges GROUP BY brand) ec
-      ON ec.brand = d.brand
-    LEFT JOIN tri ON tri.brand = d.brand
-    GROUP BY d.brand
-    ORDER BY d.brand
-    """

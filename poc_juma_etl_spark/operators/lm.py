@@ -35,12 +35,6 @@ has no text surface; this extends the engine's corpus-quality toolbox
 (SURVEY.md north-star extension families, next to q_text_unigram_logprob
 — which scores UNIGRAM log-mass with a rational, division-based score;
 this adds conditional-probability context sensitivity and an exact log).
-
-Registration is queued for round 12: the round-10 driver window was
-soaked before this operator existed, and round 11 keeps net-new
-registrations at zero so the evidence floor reaches r06 (COVERAGE.md
-rotation plan). tests/test_lm.py already runs the full Spark-vs-DuckDB
-parity the gate will run.
 """
 
 from __future__ import annotations
@@ -49,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.queries import scoped_cache
+from ..plans.queries import register, scoped_cache
 from .text import tokens
 
 # mean surprisal is reported in 1/1000ths (integer) so the output stays
@@ -183,7 +177,7 @@ BIGRAM_SURPRISAL_ORACLE = f"""
 
 # ---------------------------------------------------------------------------
 # group-disjoint train/val/test split (same module: both are corpus-prep
-# stages queued for the round-12 registration window)
+# stages)
 
 SPLIT_BUCKETS = 10  # hash(source) % 10 -> 0-7 train, 8 val, 9 test
 SPLIT_EDGES = (8, 9)  # train < 8 <= val < 9 <= test
@@ -306,7 +300,7 @@ def _register_lm_gates() -> None:
 _register_lm_gates()
 
 
-# --- multinomial naive Bayes language-ID (round-12 build; queued r14) -------
+# --- multinomial naive Bayes language-ID -----------------------------------
 #
 # The third member of the trainable-model family (fixed-point logreg GD,
 # model-based quality filter): a generatively-trained classifier whose
@@ -334,6 +328,56 @@ _register_lm_gates()
 NB_TEST_MOD = 5  # doc_id % 5 == 0 -> test split
 
 
+NB_LANGID_ORACLE = f"""
+    WITH tok AS MATERIALIZED (
+      SELECT doc_id, lang, t FROM (
+        SELECT doc_id, lang,
+               unnest(string_split_regex(trim(text), '\\s+')) AS t
+        FROM documents
+      ) WHERE length(t) > 0
+    ),
+    train AS (SELECT * FROM tok WHERE doc_id % {NB_TEST_MOD} != 0),
+    cls AS MATERIALIZED (SELECT lang, COUNT(*) AS ct FROM train GROUP BY lang),
+    vocab AS MATERIALIZED (SELECT COUNT(DISTINCT t) AS v FROM train),
+    ctk AS MATERIALIZED (
+      SELECT lang, t, COUNT(*) AS c FROM train GROUP BY lang, t
+    ),
+    test AS (
+      SELECT doc_id, lang AS true_lang, t
+      FROM tok WHERE doc_id % {NB_TEST_MOD} = 0
+    ),
+    scores AS (
+      SELECT te.doc_id, te.true_lang, cls.lang AS cand,
+             SUM(CAST(ln(CAST(COALESCE(ctk.c, 0) + 1 AS DOUBLE)
+                         / (cls.ct + vocab.v)) AS DECIMAL(25,6))) AS s,
+             COUNT(*) AS n_tok
+      FROM test te CROSS JOIN cls CROSS JOIN vocab
+      LEFT JOIN ctk ON ctk.lang = cls.lang AND ctk.t = te.t
+      GROUP BY 1, 2, 3
+    ),
+    pred AS (
+      SELECT doc_id, true_lang, cand, n_tok,
+             ROW_NUMBER() OVER (PARTITION BY doc_id
+                                ORDER BY s DESC, cand) AS rk
+      FROM scores
+    )
+    SELECT true_lang, cand AS pred_lang,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tok) AS BIGINT) AS n_tokens_sum
+    FROM pred WHERE rk = 1
+    GROUP BY true_lang, cand
+    ORDER BY true_lang, pred_lang
+    """
+
+
+@register(
+    "q_ml_naive_bayes_langid",
+    oracle=NB_LANGID_ORACLE,
+    doc="Multinomial naive Bayes language-ID trained on a doc_id split "
+    "of the corpus: confusion matrix over the held-out documents, "
+    "scores truncated to DECIMAL(25,6) per term so the argmax is exact.",
+    tags=("ml", "naive-bayes", "langid"),
+)
 def q_ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of a self-trained multinomial NB language classifier
     over the held-out split. Reference behavior: none (beyond-reference ML
@@ -385,45 +429,3 @@ def q_ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("true_lang", "pred_lang")
     )
-
-
-NB_LANGID_ORACLE = f"""
-    WITH tok AS MATERIALIZED (
-      SELECT doc_id, lang, t FROM (
-        SELECT doc_id, lang,
-               unnest(string_split_regex(trim(text), '\\s+')) AS t
-        FROM documents
-      ) WHERE length(t) > 0
-    ),
-    train AS (SELECT * FROM tok WHERE doc_id % {NB_TEST_MOD} != 0),
-    cls AS MATERIALIZED (SELECT lang, COUNT(*) AS ct FROM train GROUP BY lang),
-    vocab AS MATERIALIZED (SELECT COUNT(DISTINCT t) AS v FROM train),
-    ctk AS MATERIALIZED (
-      SELECT lang, t, COUNT(*) AS c FROM train GROUP BY lang, t
-    ),
-    test AS (
-      SELECT doc_id, lang AS true_lang, t
-      FROM tok WHERE doc_id % {NB_TEST_MOD} = 0
-    ),
-    scores AS (
-      SELECT te.doc_id, te.true_lang, cls.lang AS cand,
-             SUM(CAST(ln(CAST(COALESCE(ctk.c, 0) + 1 AS DOUBLE)
-                         / (cls.ct + vocab.v)) AS DECIMAL(25,6))) AS s,
-             COUNT(*) AS n_tok
-      FROM test te CROSS JOIN cls CROSS JOIN vocab
-      LEFT JOIN ctk ON ctk.lang = cls.lang AND ctk.t = te.t
-      GROUP BY 1, 2, 3
-    ),
-    pred AS (
-      SELECT doc_id, true_lang, cand, n_tok,
-             ROW_NUMBER() OVER (PARTITION BY doc_id
-                                ORDER BY s DESC, cand) AS rk
-      FROM scores
-    )
-    SELECT true_lang, cand AS pred_lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS n_tokens_sum
-    FROM pred WHERE rk = 1
-    GROUP BY true_lang, cand
-    ORDER BY true_lang, pred_lang
-    """

@@ -30,10 +30,6 @@ sort; parse parallelism = partition count.
 Reference behavior: the reference pipeline (fe-malveira-87/poc-juma-etl)
 ingests REST/JSON only; this extends the engine's media-format breadth
 (SURVEY.md north-star multimodal family, next to WAV/AVI/JPEG/PNG/WARC).
-
-Round-13 registration queue candidate (round 11 registers zero net-new
-and round 12 drains the existing seven-op queue); tests/test_mp3.py
-runs the full parity a future gate would run.
 """
 
 from __future__ import annotations
@@ -45,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..plans.queries import register
 
 # ISO/IEC 11172-3 tables, MPEG-1 Layer III. Index 0 is "free format" and
 # index 15 is reserved — both fail typed in the parser; the fixture only
@@ -190,6 +187,51 @@ def synth_mp3_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+# closed-form replay of the fixture formulas: per-frame bitrate index,
+# padding, and the integer frame-length / duration math
+def mp3_oracle_sql(doc_source: str = "documents") -> str:
+    return f"""
+    WITH d AS (
+      SELECT doc_id,
+             {FR_BASE} + doc_id % {FR_MOD} AS n_frames,
+             CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
+                             ELSE 32000 END AS sr
+      FROM {doc_source}
+    ),
+    fr AS (
+      SELECT doc_id, n_frames, sr, unnest(range(0, n_frames)) AS i FROM d
+    ),
+    per_frame AS (
+      SELECT doc_id, n_frames, sr,
+             list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
+                          1 + CAST((doc_id + i) % {BR_MOD} AS INTEGER)) AS br,
+             (doc_id + i) % {PAD_MOD} AS pad
+      FROM fr
+    )
+    SELECT doc_id,
+           CAST(MAX(n_frames) AS BIGINT) AS n_frames,
+           CAST(SUM(144000 * br // sr + pad) AS BIGINT) AS total_bytes,
+           CAST(SUM(br) AS BIGINT) AS bitrate_kbps_sum,
+           CAST(MAX(sr) AS BIGINT) AS sample_rate,
+           CAST(MAX(n_frames) * {SAMPLES_PER_FRAME} AS BIGINT) AS total_samples,
+           CAST(MAX(n_frames) * {SAMPLES_PER_FRAME} * 1000000 // MAX(sr)
+                AS BIGINT) AS duration_us,
+           COUNT(DISTINCT br) > 1 AS is_vbr
+    FROM per_frame GROUP BY doc_id ORDER BY doc_id
+    """
+
+
+MP3_ORACLE = mp3_oracle_sql()
+
+
+@register(
+    "q_multimodal_mp3_probe",
+    oracle=MP3_ORACLE,
+    doc="MPEG-1 Layer III frame-header walk: frame count, byte total, "
+    "bitrate sum, sample rate, duration and VBR flag per document, "
+    "parsed inside an Arrow batch.",
+    tags=("multimodal", "mp3", "audio"),
+)
 def q_multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
 
@@ -202,7 +244,18 @@ def q_multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_MP3_FILES = 200  # the N_BINFILES posture: bounded file count at every sf
 
+MP3_FILE_ORACLE = mp3_oracle_sql(
+    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_MP3_FILES}) docs"
+)
 
+
+@register(
+    "etl_mp3_file_probe_e2e",
+    oracle=MP3_FILE_ORACLE,
+    doc="One .mp3 file per document on disk read back through binaryFile "
+    "and probed with the same frame walk.",
+    tags=("multimodal", "mp3", "e2e"),
+)
 def etl_mp3_file_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end proof the frame walk applies verbatim to real FILES: one
     .mp3 per document written to disk, read back through Spark's
@@ -245,44 +298,3 @@ def etl_mp3_file_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(out.collect(), out.schema)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-# closed-form replay of the fixture formulas: per-frame bitrate index,
-# padding, and the integer frame-length / duration math
-def mp3_oracle_sql(doc_source: str = "documents") -> str:
-    return f"""
-    WITH d AS (
-      SELECT doc_id,
-             {FR_BASE} + doc_id % {FR_MOD} AS n_frames,
-             CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                             ELSE 32000 END AS sr
-      FROM {doc_source}
-    ),
-    fr AS (
-      SELECT doc_id, n_frames, sr, unnest(range(0, n_frames)) AS i FROM d
-    ),
-    per_frame AS (
-      SELECT doc_id, n_frames, sr,
-             list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-                          1 + CAST((doc_id + i) % {BR_MOD} AS INTEGER)) AS br,
-             (doc_id + i) % {PAD_MOD} AS pad
-      FROM fr
-    )
-    SELECT doc_id,
-           CAST(MAX(n_frames) AS BIGINT) AS n_frames,
-           CAST(SUM(144000 * br // sr + pad) AS BIGINT) AS total_bytes,
-           CAST(SUM(br) AS BIGINT) AS bitrate_kbps_sum,
-           CAST(MAX(sr) AS BIGINT) AS sample_rate,
-           CAST(MAX(n_frames) * {SAMPLES_PER_FRAME} AS BIGINT) AS total_samples,
-           CAST(MAX(n_frames) * {SAMPLES_PER_FRAME} * 1000000 // MAX(sr)
-                AS BIGINT) AS duration_us,
-           COUNT(DISTINCT br) > 1 AS is_vbr
-    FROM per_frame GROUP BY doc_id ORDER BY doc_id
-    """
-
-
-MP3_ORACLE = mp3_oracle_sql()
-
-MP3_FILE_ORACLE = mp3_oracle_sql(
-    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_MP3_FILES}) docs"
-)

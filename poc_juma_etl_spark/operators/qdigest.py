@@ -42,10 +42,6 @@ global sort, no window, no corpus-sized collect.
 Reference behavior: the reference pipeline (fe-malveira-87/poc-juma-etl)
 delegates this to BigQuery (APPROX_QUANTILES); this implements it
 natively and deterministically (SURVEY.md §2.5 sketch family).
-
-Registration queued for round 12 with the rest of the round-10 inventory
-(COVERAGE.md rotation plan); tests/test_qdigest.py runs the full parity
-the gate will run.
 """
 
 from __future__ import annotations

@@ -32,10 +32,6 @@ Reference behavior: the reference pipeline (fe-malveira-87/poc-juma-etl)
 ingests REST/JSON only; this extends the engine's source-format breadth
 (SURVEY.md north-star multimodal family, next to WARC / MP3 / binary
 media).
-
-Round-13 registration queue candidate (round 12 drains the existing
-seven-op queue first); tests/test_tar.py runs the full parity a future
-gate would run.
 """
 
 from __future__ import annotations
@@ -49,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..plans.queries import register
 from .text import SQL_MD5_LONG
 
 # fixture geometry: text body "sample {doc_id} segment {s} " repeated
@@ -212,6 +209,50 @@ def tar_ingest_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         yield pd.DataFrame(rows, columns=COLS)[COLS]
 
 
+# closed-form replay: rebuild each member body string and its byte length
+# from the fixture formulas (the text is ASCII, so characters == bytes)
+def tar_oracle_sql(doc_source: str = "documents") -> str:
+    return f"""
+    WITH d AS (
+      SELECT doc_id, {SEG_BASE} + doc_id % {SEG_MOD} AS n_seg FROM {doc_source}
+    ),
+    seg AS (
+      SELECT doc_id, n_seg, unnest(range(0, n_seg)) AS s FROM d
+    ),
+    seg_text AS (
+      SELECT doc_id, n_seg, s,
+             repeat('sample ' || doc_id || ' segment ' || s || ' ',
+                    {REP_BASE} + (doc_id + s) % {REP_MOD}) AS seg_body
+      FROM seg
+    ),
+    bodies AS (
+      SELECT doc_id,
+             string_agg(seg_body, chr(10) ORDER BY s) AS text_body,
+             '{{"doc_id": ' || MAX(doc_id) || ', "lang": "en", "split": '
+               || MAX(doc_id) % 10 || '}}' AS json_body
+      FROM seg_text GROUP BY doc_id
+    )
+    SELECT doc_id,
+           CAST(2 AS BIGINT) AS n_members,
+           CAST(length(text_body) AS BIGINT) AS text_bytes,
+           CAST(length(json_body) AS BIGINT) AS json_bytes,
+           CAST(length(text_body) + length(json_body) AS BIGINT)
+             AS total_stored,
+           {SQL_MD5_LONG.format(x="text_body")} AS text_hash
+    FROM bodies ORDER BY doc_id
+    """
+
+
+TAR_ORACLE = tar_oracle_sql()
+
+
+@register(
+    "q_multimodal_tar_ingest",
+    oracle=TAR_ORACLE,
+    doc="TAR / WebDataset sample ingestion: ustar member walk per "
+    "document, member byte counts and text body pinned by portable md5.",
+    tags=("multimodal", "tar", "source"),
+)
 def q_multimodal_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
 
@@ -227,7 +268,18 @@ def q_multimodal_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_TAR_DOCS = 240
 N_TAR_SHARDS = 16
 
+TAR_SHARD_ORACLE = tar_oracle_sql(
+    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_TAR_DOCS}) docs"
+)
 
+
+@register(
+    "etl_tar_shard_ingest_e2e",
+    oracle=TAR_SHARD_ORACLE,
+    doc="Multi-sample .tar shard files on disk (the WebDataset layout) "
+    "read back through binaryFile and split into per-document samples.",
+    tags=("multimodal", "tar", "e2e"),
+)
 def etl_tar_shard_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end over real shard FILES (the WebDataset layout): documents
     round-robin into multi-sample .tar shards on disk, a binaryFile scan
@@ -267,44 +319,3 @@ def etl_tar_shard_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(out.collect(), out.schema)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-# closed-form replay: rebuild each member body string and its byte length
-# from the fixture formulas (the text is ASCII, so characters == bytes)
-def tar_oracle_sql(doc_source: str = "documents") -> str:
-    return f"""
-    WITH d AS (
-      SELECT doc_id, {SEG_BASE} + doc_id % {SEG_MOD} AS n_seg FROM {doc_source}
-    ),
-    seg AS (
-      SELECT doc_id, n_seg, unnest(range(0, n_seg)) AS s FROM d
-    ),
-    seg_text AS (
-      SELECT doc_id, n_seg, s,
-             repeat('sample ' || doc_id || ' segment ' || s || ' ',
-                    {REP_BASE} + (doc_id + s) % {REP_MOD}) AS seg_body
-      FROM seg
-    ),
-    bodies AS (
-      SELECT doc_id,
-             string_agg(seg_body, chr(10) ORDER BY s) AS text_body,
-             '{{"doc_id": ' || MAX(doc_id) || ', "lang": "en", "split": '
-               || MAX(doc_id) % 10 || '}}' AS json_body
-      FROM seg_text GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST(2 AS BIGINT) AS n_members,
-           CAST(length(text_body) AS BIGINT) AS text_bytes,
-           CAST(length(json_body) AS BIGINT) AS json_bytes,
-           CAST(length(text_body) + length(json_body) AS BIGINT)
-             AS total_stored,
-           {SQL_MD5_LONG.format(x="text_body")} AS text_hash
-    FROM bodies ORDER BY doc_id
-    """
-
-
-TAR_ORACLE = tar_oracle_sql()
-
-TAR_SHARD_ORACLE = tar_oracle_sql(
-    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_TAR_DOCS}) docs"
-)

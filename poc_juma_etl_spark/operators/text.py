@@ -1499,7 +1499,7 @@ def q_text_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- corpus frequency spectrum / hapax profile (round-12 build; queued) -----
+# --- corpus frequency spectrum / hapax profile -----------------------------
 #
 # The Zipf-law diagnostic without the global rank sort: instead of ranking
 # the vocabulary (a vocabulary-wide total order — exactly the partition-less
@@ -1514,6 +1514,48 @@ def q_text_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the token key) then a ~40-row band rollup. At 100 TB: one vocab-sized
 # exchange, no sort, no window, no collect.
 
+ZIPF_PROFILE_ORACLE = """
+    WITH doc AS (
+      SELECT string_split_regex(trim(text), '\\s+') AS ts FROM documents
+    ),
+    uni AS (
+      SELECT 1 AS gram, t FROM (SELECT unnest(ts) AS t FROM doc)
+      WHERE length(t) > 0
+    ),
+    bi AS (
+      SELECT 2 AS gram,
+             unnest(list_transform(range(1, len(ts)),
+                                   i -> ts[i] || ' ' || ts[i+1])) AS t
+      FROM doc
+    ),
+    freq AS MATERIALIZED (
+      SELECT gram, t, COUNT(*) AS f
+      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
+      GROUP BY gram, t
+    ),
+    v AS MATERIALIZED (
+      SELECT gram, GREATEST(COUNT(*), 1) AS n FROM freq GROUP BY gram
+    )
+    SELECT freq.gram AS gram,
+           length(bin(f)) - 1 AS band,
+           CAST(COUNT(*) AS BIGINT) AS n_types,
+           CAST(SUM(f) AS BIGINT) AS total_occurrences,
+           CAST(MIN(f) AS BIGINT) AS min_freq,
+           CAST(MAX(f) AS BIGINT) AS max_freq,
+           CAST(COUNT(*) * 1000000 // MIN(v.n) AS BIGINT) AS types_ppm
+    FROM freq JOIN v ON v.gram = freq.gram
+    GROUP BY 1, 2 ORDER BY 1, 2
+    """
+
+
+@register(
+    "q_text_zipf_profile",
+    oracle=ZIPF_PROFILE_ORACLE,
+    doc="Corpus frequency spectrum: unigram and bigram types bucketed by "
+    "floor(log2(frequency)), with the hapax band and exact per-million "
+    "vocabulary shares.",
+    tags=("text", "stats", "zipf"),
+)
 def q_text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-spectrum profile of the corpus's unigram AND bigram
     vocabularies: per (gram, log2-frequency band) — n_types,
@@ -1561,37 +1603,3 @@ def q_text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("gram", "band")
     )
-
-
-ZIPF_PROFILE_ORACLE = """
-    WITH doc AS (
-      SELECT string_split_regex(trim(text), '\\s+') AS ts FROM documents
-    ),
-    uni AS (
-      SELECT 1 AS gram, t FROM (SELECT unnest(ts) AS t FROM doc)
-      WHERE length(t) > 0
-    ),
-    bi AS (
-      SELECT 2 AS gram,
-             unnest(list_transform(range(1, len(ts)),
-                                   i -> ts[i] || ' ' || ts[i+1])) AS t
-      FROM doc
-    ),
-    freq AS MATERIALIZED (
-      SELECT gram, t, COUNT(*) AS f
-      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-      GROUP BY gram, t
-    ),
-    v AS MATERIALIZED (
-      SELECT gram, GREATEST(COUNT(*), 1) AS n FROM freq GROUP BY gram
-    )
-    SELECT freq.gram AS gram,
-           length(bin(f)) - 1 AS band,
-           CAST(COUNT(*) AS BIGINT) AS n_types,
-           CAST(SUM(f) AS BIGINT) AS total_occurrences,
-           CAST(MIN(f) AS BIGINT) AS min_freq,
-           CAST(MAX(f) AS BIGINT) AS max_freq,
-           CAST(COUNT(*) * 1000000 // MIN(v.n) AS BIGINT) AS types_ppm
-    FROM freq JOIN v ON v.gram = freq.gram
-    GROUP BY 1, 2 ORDER BY 1, 2
-    """

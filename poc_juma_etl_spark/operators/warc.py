@@ -28,9 +28,6 @@ archive members, the Common Crawl access pattern.
 Reference behavior: the reference pipeline (fe-malveira-87/poc-juma-etl)
 ingests REST/JSON only; this extends the engine's source-format breadth
 (SURVEY.md §2.5) to the de-facto web-corpus container.
-
-Registration queued for round 12 with the rest of the round-10
-inventory; tests/test_warc.py runs the full parity the gate will run.
 """
 
 from __future__ import annotations

@@ -1,6 +1,4 @@
-"""Round-10 extension operators (registration queued for round 12 — the
-round-11 driver window must rotate the r05 evidence tail with zero
-net-new names; see COVERAGE.md).
+"""Round-10 extension operators.
 
 - **ORC sink+source round-trip** (``etl_orc_roundtrip_e2e``): the third
   interchange format after the CSV/JSON round-trips (plans/extra5.py) —

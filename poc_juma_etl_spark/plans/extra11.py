@@ -1,5 +1,4 @@
-"""Round-11 extension operators (registration queued for round 13 — round
-12 drains the seven-op round-10/11 queue first; see COVERAGE.md).
+"""Round-11 extension operators.
 
 - **gzip JSONL sink+source round-trip**
   (``etl_jsonl_gzip_roundtrip_e2e``): the format web-scale text corpora
@@ -34,11 +33,31 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.text import MOD_P, SQL_MD5_LONG, md5_long
+from .queries import register
 
 GZ_SHARDS = 8  # fixed shard count: scan parallelism == file count
 GZ_BUCKETS = 10
 
 
+JSONL_GZ_ORACLE = f"""
+    SELECT doc_id % {GZ_BUCKETS} AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM({SQL_MD5_LONG.format(x="text")} % {MOD_P}) AS BIGINT)
+             AS text_hash_sum,
+           CAST(SUM(length(text)) AS BIGINT) AS total_chars,
+           CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum
+    FROM documents GROUP BY 1 ORDER BY bucket
+    """
+
+
+@register(
+    "etl_jsonl_gzip_roundtrip_e2e",
+    oracle=JSONL_GZ_ORACLE,
+    doc="gzip JSONL sink+source round-trip of the document corpus: "
+    "scan file count audited against the shards written, text pinned "
+    "by per-bucket md5 sums.",
+    tags=("etl", "jsonl", "gzip", "source", "e2e"),
+)
 def etl_jsonl_gzip_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     empty_out = (
@@ -95,22 +114,30 @@ def etl_jsonl_gzip_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-JSONL_GZ_ORACLE = f"""
-    SELECT doc_id % {GZ_BUCKETS} AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM({SQL_MD5_LONG.format(x="text")} % {MOD_P}) AS BIGINT)
-             AS text_hash_sum,
-           CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-           CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum
-    FROM documents GROUP BY 1 ORDER BY bucket
-    """
-
-
 # --- XML sink+source round-trip (Spark 4 native XML) ------------------------
 
 XML_ROW_TAG = "part"
 
 
+XML_ROUNDTRIP_ORACLE = """
+    SELECT p_brand,
+           CAST(COUNT(*) AS BIGINT) AS n_parts,
+           CAST(CAST(SUM(CAST(p_retailprice AS DECIMAL(25,6))) AS STRING)
+                AS DOUBLE) AS total_price,
+           CAST(SUM(CAST(p_size AS BIGINT)) AS BIGINT) AS total_size,
+           MIN(p_name) AS first_name
+    FROM part GROUP BY p_brand ORDER BY p_brand
+    """
+
+
+@register(
+    "etl_xml_roundtrip_e2e",
+    oracle=XML_ROUNDTRIP_ORACLE,
+    doc="XML sink+source round-trip of part through Spark 4's native "
+    "XML source, read back with the original schema and rolled up "
+    "per brand.",
+    tags=("etl", "xml", "source", "e2e"),
+)
 def etl_xml_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML sink+source round-trip — the fourth text interchange format
     (after CSV/JSON/gzip-JSONL) using Spark 4's NATIVE XML source (no
@@ -152,14 +179,3 @@ def etl_xml_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
-
-
-XML_ROUNDTRIP_ORACLE = """
-    SELECT p_brand,
-           CAST(COUNT(*) AS BIGINT) AS n_parts,
-           CAST(CAST(SUM(CAST(p_retailprice AS DECIMAL(25,6))) AS STRING)
-                AS DOUBLE) AS total_price,
-           CAST(SUM(CAST(p_size AS BIGINT)) AS BIGINT) AS total_size,
-           MIN(p_name) AS first_name
-    FROM part GROUP BY p_brand ORDER BY p_brand
-    """

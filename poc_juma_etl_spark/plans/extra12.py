@@ -1,4 +1,4 @@
-"""Round-12 plan-level operators (registration queued for round 14).
+"""Round-12 plan-level operators.
 
 q_join_bloom_prefilter — the runtime-filter / bloom-semi-join shape made
 EXPLICIT and oracle-verified. Spark's own runtime row-level filtering
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.text import SQL_MD5_LONG, md5_long
+from .queries import register
 
 BLOOM_K = 7  # hash functions
 BLOOM_BITS_PER_KEY = 10
@@ -48,6 +49,76 @@ def _bloom_m(n_keys: int) -> int:
     return 1 << (want - 1).bit_length()
 
 
+def bloom_prefilter_oracle_sql() -> str:
+    """Replays the filter bit-for-bit: same build keys, same m sizing, same
+    double-hashed positions (one md5 per key; pos_i = (h1 + i*h2) % m),
+    same 32-bit words — candidacy is a pure function of the orderkey, so
+    the oracle scores it once per DISTINCT probe key and joins the verdict
+    back to the fact rows."""
+    lo, hi = BLOOM_QUARTER
+    h = SQL_MD5_LONG.format(x="CAST(k AS VARCHAR)")
+    return f"""
+    WITH build AS MATERIALIZED (
+      SELECT DISTINCT o_orderkey AS k FROM orders
+      WHERE o_orderdate >= DATE '{lo}' AND o_orderdate < DATE '{hi}'
+    ),
+    sz AS MATERIALIZED (
+      SELECT CAST(POWER(2, length(bin(GREATEST(32, {BLOOM_BITS_PER_KEY} *
+                    GREATEST(CAST(COUNT(*) AS BIGINT), 1)) - 1))) AS BIGINT) AS m
+      FROM build
+    ),
+    hs AS (SELECT unnest(range({BLOOM_K})) AS i),
+    words AS MATERIALIZED (
+      SELECT pos // 32 AS w,
+             bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
+      FROM (
+        SELECT (bh.h1 + hs.i * bh.h2) % sz.m AS pos
+        FROM (
+          SELECT ({h}) % {1 << 30} AS h1,
+                 (({h}) // {1 << 30}) | 1 AS h2
+          FROM build
+        ) bh CROSS JOIN sz CROSS JOIN hs
+      ) GROUP BY 1
+    ),
+    probe_keys AS MATERIALIZED (
+      SELECT pk.k, bool_and(
+               (COALESCE(words.bits, 0)
+                & (CAST(1 AS BIGINT) << CAST(t.pos % 32 AS INT))) > 0) AS cand
+      FROM (
+        SELECT k, ({h}) % {1 << 30} AS h1, (({h}) // {1 << 30}) | 1 AS h2
+        FROM (SELECT DISTINCT l_orderkey AS k FROM lineitem)
+      ) pk
+      CROSS JOIN sz CROSS JOIN hs
+      CROSS JOIN LATERAL (SELECT (pk.h1 + hs.i * pk.h2) % sz.m AS pos) t
+      LEFT JOIN words ON words.w = t.pos // 32
+      GROUP BY pk.k
+    ),
+    scored AS (
+      SELECT li.l_returnflag, p.cand, b.k IS NOT NULL AS hit
+      FROM lineitem li
+      JOIN probe_keys p ON p.k = li.l_orderkey
+      LEFT JOIN build b ON b.k = li.l_orderkey
+    )
+    SELECT l_returnflag,
+           CAST(COUNT(*) AS BIGINT) AS n_probed,
+           CAST(SUM(CASE WHEN cand THEN 1 ELSE 0 END) AS BIGINT) AS n_candidates,
+           CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
+           CAST(SUM(CASE WHEN cand AND NOT hit THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_false_pos,
+           CAST(SUM(CASE WHEN hit AND NOT cand THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_missed
+    FROM scored GROUP BY l_returnflag ORDER BY l_returnflag
+    """
+
+
+@register(
+    "q_join_bloom_prefilter",
+    oracle=bloom_prefilter_oracle_sql(),
+    doc="Explicit bloom-filter semi-join prefilter: one quarter's order "
+    "keys hashed into a portable bit array that probes lineitem in-row; "
+    "false positives and the zero-false-negative invariant are hashed.",
+    tags=("join", "bloom", "runtime-filter"),
+)
 def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered semi-join of lineitem against one quarter's order
     keys: per returnflag, (n_probed, n_candidates, n_matched, n_false_pos,
@@ -143,65 +214,3 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
-
-
-def bloom_prefilter_oracle_sql() -> str:
-    """Replays the filter bit-for-bit: same build keys, same m sizing, same
-    double-hashed positions (one md5 per key; pos_i = (h1 + i*h2) % m),
-    same 32-bit words — candidacy is a pure function of the orderkey, so
-    the oracle scores it once per DISTINCT probe key and joins the verdict
-    back to the fact rows."""
-    lo, hi = BLOOM_QUARTER
-    h = SQL_MD5_LONG.format(x="CAST(k AS VARCHAR)")
-    return f"""
-    WITH build AS MATERIALIZED (
-      SELECT DISTINCT o_orderkey AS k FROM orders
-      WHERE o_orderdate >= DATE '{lo}' AND o_orderdate < DATE '{hi}'
-    ),
-    sz AS MATERIALIZED (
-      SELECT CAST(POWER(2, length(bin(GREATEST(32, {BLOOM_BITS_PER_KEY} *
-                    GREATEST(CAST(COUNT(*) AS BIGINT), 1)) - 1))) AS BIGINT) AS m
-      FROM build
-    ),
-    hs AS (SELECT unnest(range({BLOOM_K})) AS i),
-    words AS MATERIALIZED (
-      SELECT pos // 32 AS w,
-             bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
-      FROM (
-        SELECT (bh.h1 + hs.i * bh.h2) % sz.m AS pos
-        FROM (
-          SELECT ({h}) % {1 << 30} AS h1,
-                 (({h}) // {1 << 30}) | 1 AS h2
-          FROM build
-        ) bh CROSS JOIN sz CROSS JOIN hs
-      ) GROUP BY 1
-    ),
-    probe_keys AS MATERIALIZED (
-      SELECT pk.k, bool_and(
-               (COALESCE(words.bits, 0)
-                & (CAST(1 AS BIGINT) << CAST(t.pos % 32 AS INT))) > 0) AS cand
-      FROM (
-        SELECT k, ({h}) % {1 << 30} AS h1, (({h}) // {1 << 30}) | 1 AS h2
-        FROM (SELECT DISTINCT l_orderkey AS k FROM lineitem)
-      ) pk
-      CROSS JOIN sz CROSS JOIN hs
-      CROSS JOIN LATERAL (SELECT (pk.h1 + hs.i * pk.h2) % sz.m AS pos) t
-      LEFT JOIN words ON words.w = t.pos // 32
-      GROUP BY pk.k
-    ),
-    scored AS (
-      SELECT li.l_returnflag, p.cand, b.k IS NOT NULL AS hit
-      FROM lineitem li
-      JOIN probe_keys p ON p.k = li.l_orderkey
-      LEFT JOIN build b ON b.k = li.l_orderkey
-    )
-    SELECT l_returnflag,
-           CAST(COUNT(*) AS BIGINT) AS n_probed,
-           CAST(SUM(CASE WHEN cand THEN 1 ELSE 0 END) AS BIGINT) AS n_candidates,
-           CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
-           CAST(SUM(CASE WHEN cand AND NOT hit THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_false_pos,
-           CAST(SUM(CASE WHEN hit AND NOT cand THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_missed
-    FROM scored GROUP BY l_returnflag ORDER BY l_returnflag
-    """

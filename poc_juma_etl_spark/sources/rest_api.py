@@ -30,25 +30,10 @@ Usage::
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
 
-try:  # Spark 4 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    HAVE_DATASOURCE_API = False
-
-    class DataSource:  # type: ignore[no-redef]
-        def __init__(self, options=None):
-            self.options = options or {}
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    @dataclass
-    class InputPartition:  # type: ignore[no-redef]
-        value: int
+from ..plans.queries import register
 
 
 # --------------------------------------------------------------------- S3
@@ -257,128 +242,115 @@ class HttpTransport:
         return pa.concat_tables(chunks)
 
 
-if HAVE_DATASOURCE_API:
+class PaginatedRestReader(DataSourceReader):
+    def __init__(self, schema, options):
+        self.schema_ = schema
+        self.options = options
 
-    class PaginatedRestReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.schema_ = schema
-            self.options = options
-
-        def _transport(self):
-            o = self.options
-            common = dict(
-                page_size=int(o.get("page_size", "1000")),
-                filter_field=o.get("filter_field"),
-                filter_start=o.get("filter_start"),
-                filter_end=o.get("filter_end"),
-            )
-            if o.get("transport", "fixture") == "http":
-                return HttpTransport(url=o["url"], **common)
-            return FixtureTransport(path=o["path"], **common)
-
-        def partitions(self):
-            # one partition per page → executors fetch pages concurrently
-            # (the reference's sequential page loop, distributed)
-            return [InputPartition(p) for p in range(self._transport().n_pages())]
-
-        def read(self, partition):
-            # Spark 4 readers may yield pyarrow RecordBatches directly —
-            # rows stay columnar end-to-end (no per-row Python tuples, the
-            # one thing that made this connector slower than a native scan)
-            table = self._transport().fetch_page(partition.value)
-            yield from table.to_batches()
-
-    class PaginatedRestDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "paginated_rest"
-
-        def schema(self):
-            import pyarrow.parquet as pq
-
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            path = self.options["path"]
-            # a parquet "table" may be a single file (the fixtures) or a
-            # Spark-written directory of part files — resolve to one footer
-            import os
-
-            if os.path.isdir(path):
-                import glob
-
-                parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-                if not parts:
-                    raise FileNotFoundError(f"no parquet part files under {path}")
-                path = parts[0]
-            schema = pq.read_schema(path)
-            # nanosecond timestamps are not Spark-readable; the transport
-            # casts to microseconds, declare accordingly
-            import pyarrow as pa
-
-            fields = [
-                pa.field(f.name, pa.timestamp("us"))
-                if pa.types.is_timestamp(f.type)
-                else f
-                for f in schema
-            ]
-            return from_arrow_schema(pa.schema(fields))
-
-        def reader(self, schema):
-            return PaginatedRestReader(schema, self.options)
-
-
-def register_source(spark) -> bool:
-    """Register the connector on a session; returns False when the Python
-    DataSource API is unavailable (pyspark < 4)."""
-    if not HAVE_DATASOURCE_API:
-        return False
-    spark.dataSource.register(PaginatedRestDataSource)
-    return True
-
-
-def _register_query() -> None:
-    from ..plans.queries import register
-
-    @register(
-        "etl_rest_source_scan",
-        oracle="""
-        SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-               user_id, event_type, value, props
-        FROM events
-        WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
-          AND ts <  TIMESTAMP '2024-01-11 00:00:00'
-        ORDER BY event_id
-        """,
-        doc="S1/S2/S3 connector parity: the paginated-REST Python DataSource "
-        "(one InputPartition per page, server-side date filter, token cache) "
-        "must return exactly the rows a direct relational scan returns.",
-        tags=("etl", "source", "connector"),
-    )
-    def etl_rest_source_scan(spark, sf_dir: str):
-        from ..catalog import table_path
-
-        if not register_source(spark):  # pragma: no cover - pyspark < 4
-            raise RuntimeError("Python DataSource API unavailable")
-        df = (
-            spark.read.format("paginated_rest")
-            .option("path", table_path(sf_dir, "events"))
-            .option("page_size", "500")
-            .option("filter_field", "ts")
-            .option("filter_start", "2024-01-01")
-            .option("filter_end", "2024-01-10")
-            .load()
+    def _transport(self):
+        o = self.options
+        common = dict(
+            page_size=int(o.get("page_size", "1000")),
+            filter_field=o.get("filter_field"),
+            filter_start=o.get("filter_start"),
+            filter_end=o.get("filter_end"),
         )
-        from ..plans.queries import ts_str
+        if o.get("transport", "fixture") == "http":
+            return HttpTransport(url=o["url"], **common)
+        return FixtureTransport(path=o["path"], **common)
 
-        return df.select(
-            "event_id",
-            ts_str("ts", "ts", frac=True),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        ).orderBy("event_id")
+    def partitions(self):
+        # one partition per page → executors fetch pages concurrently
+        # (the reference's sequential page loop, distributed)
+        return [InputPartition(p) for p in range(self._transport().n_pages())]
+
+    def read(self, partition):
+        # Spark 4 readers may yield pyarrow RecordBatches directly —
+        # rows stay columnar end-to-end (no per-row Python tuples, the
+        # one thing that made this connector slower than a native scan)
+        table = self._transport().fetch_page(partition.value)
+        yield from table.to_batches()
+
+class PaginatedRestDataSource(DataSource):
+    @classmethod
+    def name(cls):
+        return "paginated_rest"
+
+    def schema(self):
+        import pyarrow.parquet as pq
+
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        path = self.options["path"]
+        # a parquet "table" may be a single file (the fixtures) or a
+        # Spark-written directory of part files — resolve to one footer
+        import os
+
+        if os.path.isdir(path):
+            import glob
+
+            parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+            if not parts:
+                raise FileNotFoundError(f"no parquet part files under {path}")
+            path = parts[0]
+        schema = pq.read_schema(path)
+        # nanosecond timestamps are not Spark-readable; the transport
+        # casts to microseconds, declare accordingly
+        import pyarrow as pa
+
+        fields = [
+            pa.field(f.name, pa.timestamp("us"))
+            if pa.types.is_timestamp(f.type)
+            else f
+            for f in schema
+        ]
+        return from_arrow_schema(pa.schema(fields))
+
+    def reader(self, schema):
+        return PaginatedRestReader(schema, self.options)
 
 
-if HAVE_DATASOURCE_API:
-    _register_query()
+def register_source(spark) -> None:
+    """Register the connector on a session."""
+    spark.dataSource.register(PaginatedRestDataSource)
+
+
+@register(
+    "etl_rest_source_scan",
+    oracle="""
+    SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
+           user_id, event_type, value, props
+    FROM events
+    WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
+      AND ts <  TIMESTAMP '2024-01-11 00:00:00'
+    ORDER BY event_id
+    """,
+    doc="S1/S2/S3 connector parity: the paginated-REST Python DataSource "
+    "(one InputPartition per page, server-side date filter, token cache) "
+    "must return exactly the rows a direct relational scan returns.",
+    tags=("etl", "source", "connector"),
+)
+def etl_rest_source_scan(spark, sf_dir: str):
+    from ..catalog import table_path
+
+    register_source(spark)
+    df = (
+        spark.read.format("paginated_rest")
+        .option("path", table_path(sf_dir, "events"))
+        .option("page_size", "500")
+        .option("filter_field", "ts")
+        .option("filter_start", "2024-01-01")
+        .option("filter_end", "2024-01-10")
+        .load()
+    )
+    from ..plans.queries import ts_str
+
+    return df.select(
+        "event_id",
+        ts_str("ts", "ts", frac=True),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    ).orderBy("event_id")
+

@@ -38,28 +38,16 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
-try:  # Spark 4 Python DataSource API
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceWriter,
+    WriterCommitMessage,
+)
 
-    HAVE_WRITER_API = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    HAVE_WRITER_API = False
-
-    class DataSource:  # type: ignore[no-redef]
-        def __init__(self, options=None):
-            self.options = options or {}
-
-    class DataSourceWriter:  # type: ignore[no-redef]
-        pass
-
-    @dataclass
-    class WriterCommitMessage:  # type: ignore[no-redef]
-        pass
-
+from ..catalog import load_table
+from ..plans.queries import dec_to_double, register
 
 STAGING = "_staging"
 MANIFEST = "_SUCCESS"
@@ -191,62 +179,55 @@ def read_published(spark, dest: str):
     return spark.read.parquet(*paths), manifest
 
 
-if HAVE_WRITER_API:
-    from pyspark.sql import DataFrame, SparkSession
-    from pyspark.sql import functions as F
+@register(
+    "etl_python_sink_e2e",
+    oracle="""
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(user_id) AS BIGINT) AS user_id_sum,
+           CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS STRING) AS DOUBLE) AS total_value
+    FROM events GROUP BY event_type ORDER BY event_type
+    """,
+    doc="Custom Python DataSource SINK end to end: events write through "
+    "the batched-POST writer (per-task page batching, two-phase "
+    "commit: stage → finalize manifest), the consumer reads back ONLY "
+    "manifest-committed pages, and the per-type rollup hash-matches "
+    "the source table — proving no row was lost, duplicated, or "
+    "mangled crossing the custom sink. The protocol is the real "
+    "bulk-ingestion shape (staging session + finalize); a failed or "
+    "speculative task can never leak pages into the published set "
+    "because commit publishes only the messages Spark accepted "
+    "(abort/duplicate-staging semantics unit-pinned without Spark in "
+    "tests/test_round5_ops.py).",
+    tags=("etl", "sink", "datasource", "e2e"),
+)
+def etl_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
 
-    from ..catalog import load_table
-    from ..plans.queries import dec_to_double, register
-
-    @register(
-        "etl_python_sink_e2e",
-        oracle="""
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(user_id) AS BIGINT) AS user_id_sum,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS STRING) AS DOUBLE) AS total_value
-        FROM events GROUP BY event_type ORDER BY event_type
-        """,
-        doc="Custom Python DataSource SINK end to end: events write through "
-        "the batched-POST writer (per-task page batching, two-phase "
-        "commit: stage → finalize manifest), the consumer reads back ONLY "
-        "manifest-committed pages, and the per-type rollup hash-matches "
-        "the source table — proving no row was lost, duplicated, or "
-        "mangled crossing the custom sink. The protocol is the real "
-        "bulk-ingestion shape (staging session + finalize); a failed or "
-        "speculative task can never leak pages into the published set "
-        "because commit publishes only the messages Spark accepted "
-        "(abort/duplicate-staging semantics unit-pinned without Spark in "
-        "tests/test_round5_ops.py).",
-        tags=("etl", "sink", "datasource", "e2e"),
-    )
-    def etl_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
-        spark.dataSource.register(BatchPostDataSource)
-        dest = tempfile.mkdtemp(prefix="batched_post_")
-        try:
-            (
-                load_table(spark, sf_dir, "events")
-                .select("event_id", "event_type", "user_id", "value")
-                .write.format("batched_post")
-                .option("path", dest)
-                .option("page_size", "500")
-                .mode("append")
-                .save()
+    spark.dataSource.register(BatchPostDataSource)
+    dest = tempfile.mkdtemp(prefix="batched_post_")
+    try:
+        (
+            load_table(spark, sf_dir, "events")
+            .select("event_id", "event_type", "user_id", "value")
+            .write.format("batched_post")
+            .option("path", dest)
+            .option("page_size", "500")
+            .mode("append")
+            .save()
+        )
+        back, manifest = read_published(spark, dest)
+        out = (
+            back.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                F.sum("user_id").cast("bigint").alias("user_id_sum"),
+                dec_to_double(F.sum(F.col("value").cast("decimal(25,6)")))
+                .alias("total_value"),
             )
-            back, manifest = read_published(spark, dest)
-            out = (
-                back.groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                    F.sum("user_id").cast("bigint").alias("user_id_sum"),
-                    dec_to_double(F.sum(F.col("value").cast("decimal(25,6)")))
-                    .alias("total_value"),
-                )
-                .orderBy("event_type")
-            )
-            return spark.createDataFrame(out.collect(), out.schema)
-        finally:
-            shutil.rmtree(dest, ignore_errors=True)
+            .orderBy("event_type")
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(dest, ignore_errors=True)

@@ -20,21 +20,9 @@ the offset-dict contract and the replay path are identical.
 
 from __future__ import annotations
 
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
 from ..plans.queries import register
-
-try:  # pyspark >= 4
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    HAVE_STREAM_API = True
-except ImportError:  # pragma: no cover - pyspark < 4 fallback
-    HAVE_STREAM_API = False
-
-    class DataSource:  # type: ignore[no-redef]
-        def __init__(self, options):
-            self.options = options
-
-    class SimpleDataSourceStreamReader:  # type: ignore[no-redef]
-        pass
 
 
 STREAM_PAGE_SIZE = 400
@@ -107,11 +95,8 @@ class PaginatedRestStreamSource(DataSource):
         return RestStreamReader(self.options)
 
 
-def register_stream_source(spark) -> bool:
-    if not HAVE_STREAM_API:
-        return False
+def register_stream_source(spark) -> None:
     spark.dataSource.register(PaginatedRestStreamSource)
-    return True
 
 
 @register(
@@ -140,8 +125,7 @@ def q_stream_rest_source_scan(spark, sf_dir: str):
 
     from ..catalog import table_path
 
-    if not register_stream_source(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python streaming DataSource API unavailable")
+    register_stream_source(spark)
     stream = (
         spark.readStream.format("paginated_rest_stream")
         .option("path", table_path(sf_dir, "events"))
@@ -261,8 +245,7 @@ def q_stream_rest_restart_scan(spark, sf_dir: str):
     from ..catalog import table_path
     from .rest_api import FixtureTransport
 
-    if not register_stream_source(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python streaming DataSource API unavailable")
+    register_stream_source(spark)
     path = table_path(sf_dir, "events")
     # smaller pages than the plain scan so even the smallest fixture yields
     # enough micro-batches to interrupt between (sf0.001: 20 pages / ~7

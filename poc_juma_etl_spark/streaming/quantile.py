@@ -21,7 +21,7 @@ fold if epochs ever grow numerous.
 Scale: per-batch work is one aggregation of the micro-batch; state is
 bounded by epochs x domain regardless of stream length; the final digest
 build is the batch operator's (domain-bounded node tables, B small
-passes). Registration queued for round 12 with the batch q-digest.
+passes).
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
-"""Bloom-prefiltered semi-join (round-12 build; queued r14): oracle parity,
-the no-false-negative invariant, pruning effectiveness, sizing math, and
-empty guards."""
+"""Bloom-prefiltered semi-join: oracle parity, the no-false-negative
+invariant, pruning effectiveness, sizing math, and empty guards."""
 
 import pyspark.sql.functions as F
 

@@ -1,6 +1,6 @@
-"""gzip JSONL round-trip (plans/extra11.py, round-13 queue): full
-Spark-vs-DuckDB parity a future gate would run, the non-splittable
-shard-count audit, gzip-on-disk verification, and the empty guard."""
+"""gzip JSONL round-trip (plans/extra11.py): full Spark-vs-DuckDB parity,
+the non-splittable shard-count audit, gzip-on-disk verification, and the
+empty guard."""
 
 import glob
 

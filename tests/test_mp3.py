@@ -1,7 +1,6 @@
-"""MP3 frame-header walk (operators/mp3.py): full Spark-vs-DuckDB parity
-a future (round-13 queue) gate would run, parser structure pins against a
-pure-Python reference, the corrupt-stream fuzz contract, and the empty
-guard."""
+"""MP3 frame-header walk (operators/mp3.py): full Spark-vs-DuckDB parity,
+parser structure pins against a pure-Python reference, the corrupt-stream
+fuzz contract, and the empty guard."""
 
 import duckdb
 import pytest

@@ -1,6 +1,5 @@
-"""Multinomial naive Bayes language-ID (round-12 build; queued r14):
-planted-vocabulary separability, train/test split discipline, oracle
-parity, empty guard."""
+"""Multinomial naive Bayes language-ID: planted-vocabulary separability,
+train/test split discipline, oracle parity, empty guard."""
 
 from poc_juma_etl_spark.operators.lm import (
     NB_LANGID_ORACLE,

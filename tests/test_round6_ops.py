@@ -1,9 +1,8 @@
 """Round-6 regressions: the r05 ADVICE findings (fingerprint integer
 division, drift zero-guard, empty-sink read-back, sentinel tempdir
-cleanup, observed-metrics empty guard) plus window-rotation weighting."""
+cleanup, observed-metrics empty guard)."""
 
 import glob
-import json
 import os
 
 import pytest
@@ -104,13 +103,9 @@ def test_feature_drift_empty_window_yields_null(spark, duck, tmp_path):
 
 def test_sink_empty_commit_is_readable(spark, tmp_path):
     from poc_juma_etl_spark.sources.rest_sink import (
-        HAVE_WRITER_API,
+        BatchPostDataSource,
         read_published,
     )
-
-    if not HAVE_WRITER_API:
-        pytest.skip("pyspark < 4: no Python DataSource writer API")
-    from poc_juma_etl_spark.sources.rest_sink import BatchPostDataSource
 
     spark.dataSource.register(BatchPostDataSource)
     dest = str(tmp_path / "sink_empty")
@@ -165,84 +160,6 @@ def test_observed_metrics_empty_events(spark, tmp_path):
     assert row.n_rows == 0
     assert row.total_value is None  # SUM over zero rows is NULL, not a crash
     assert row.n_types == 0
-
-
-# ---------------------------------------------------------------------------
-# Window rotation: rows-only driver samples are weak evidence (0.25) so a
-# query oracled after a no_oracle sample re-enters the 50-slot window.
-
-
-def test_rows_only_evidence_is_weaker_than_hash_green(tmp_path, monkeypatch):
-    import poc_juma_etl_spark as p
-
-    fake = {
-        "q_hash_green": {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "spark_rows": 1,
-            "oracle_rows": 1,
-            "err": None,
-        },
-        "q_rows_only": {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": 7,
-            "oracle_rows": None,
-            "err": "no_oracle",
-        },
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(fake))
-    monkeypatch.setattr(
-        "pathlib.Path.glob",
-        lambda self, pat: iter([tmp_path / "CORRECTNESS_r99.json"])
-        if pat == "CORRECTNESS_r*.json"
-        else iter([]),
-    )
-    # the evidence scan is compute-once per process (ADVICE r7): flush it so
-    # the monkeypatched glob is seen, and flush again afterwards so the fake
-    # round file never leaks into other tests' rotation math
-    p._verified_counts.cache_clear()
-    try:
-        counts = p._verified_counts()
-        assert counts["q_hash_green"] == 1.0
-        assert counts["q_rows_only"] == 0.25
-    finally:
-        p._verified_counts.cache_clear()
-        p._latest_sample_rounds.cache_clear()
-
-
-def test_rotation_orders_by_evidence_then_staleness():
-    """The rotation INVARIANT (not any round's concrete membership — the r06
-    version of this test asserted specific names in the window and
-    self-invalidated the moment the driver's next evidence file landed):
-
-    the registry order must be non-decreasing in ``rotation_key`` (the
-    single source of truth for window allocation — never-hash-green names
-    lead by evidence weakness, hash-green names rotate oldest-sample-first;
-    see ``poc_juma_etl_spark.rotation_key``). Asserting the shared function
-    rather than a re-derived formula keeps this test from drifting out of
-    sync with the ordering the way the r06 and r08 versions did.
-    """
-    import poc_juma_etl_spark as p
-
-    verified = p._verified_counts()
-    latest = p._latest_sample_rounds()
-    green = p._latest_green_rounds()
-    names = list(p.all_queries())
-
-    def score(n):
-        return p.rotation_key(n, verified, latest, green)
-
-    for a, b in zip(names, names[1:]):
-        assert score(a) <= score(b), f"{a} ({score(a)}) after {b} ({score(b)})"
-
-    # never-sampled names (if any exist) must occupy the head of the order
-    never = {n for n in names if n not in verified and n not in latest}
-    if never:
-        head = set(names[: len(never)])
-        assert never <= head, f"never-sampled not leading: {never - head}"
 
 
 # ---------------------------------------------------------------------------

@@ -125,7 +125,7 @@ def test_stream_restart_exactly_once(spark, tmp_path):
     from poc_juma_etl_spark.sources.rest_api import FixtureTransport
     from poc_juma_etl_spark.sources.rest_stream import register_stream_source
 
-    assert register_stream_source(spark)
+    register_stream_source(spark)
     path = table_path(SF, "events")
     page_size = 50
     transport = FixtureTransport(path, page_size)

@@ -66,8 +66,7 @@ BUDGETS = {
     "q_multimodal_audio_features": 35_000,
     "q_multimodal_video_frames": 45_000,
     # round-12 registrations (measured 2026-08, round 11, same rig, via
-    # .collect() — the queue-probe rule below; these stay collect-metered
-    # after the flip, see COLLECT_METERED): bigram surprisal 52.5 KB
+    # .collect(), see COLLECT_METERED): bigram surprisal 52.5 KB
     # (recut type-level plan); group split 1.6 KB; ORC round-trip 1.4 KB;
     # q-digest 105 KB / streaming q-digest 338 KB (re-baselined after the
     # round-12 driver-build recut removed the 20 level-pass exchanges —
@@ -82,12 +81,35 @@ BUDGETS = {
     "q_stream_quantile_digest": 700_000,
     "q_multimodal_warc_ingest": 40_000,
     "etl_warc_file_ingest_e2e": 20_000,
+    # measured 2026-08 (round 11), same rig, via .collect(): mp3 25.7 KB /
+    # mp3 file e2e 11.4 KB, tar 20.8 KB / tar shard e2e 10.4 KB — stat rows
+    # only, payload bytes never enter an Exchange
+    "q_multimodal_mp3_probe": 55_000,
+    "etl_mp3_file_probe_e2e": 25_000,
+    "q_multimodal_tar_ingest": 45_000,
+    "etl_tar_shard_ingest_e2e": 25_000,
+    # gzip JSONL round-trip: the repartition(8) staging shuffle of the
+    # document corpus + the bucket rollup; measured 101.6 KB
+    "etl_jsonl_gzip_roundtrip_e2e": 220_000,
+    # XML round-trip: one brand rollup exchange; measured 3.1 KB
+    "etl_xml_roundtrip_e2e": 8_000,
+    # measured 2026-08 (round 12), same rig, via .collect(): triangle
+    # census 1.45 MB (edge distinct + degree/orientation joins — scales
+    # with the co-occurrence edge list); naive Bayes 23.6 KB (model
+    # aggregations + token-key scoring joins); bloom prefilter 19.9 KB
+    # (build distinct + verification join; the filter itself never enters
+    # an Exchange — it ships as a literal); zipf/hapax spectrum 32.6 KB
+    # (uni+bigram type frequency exchange)
+    "q_graph_brand_triangle_census": 3_000_000,
+    "q_ml_naive_bayes_langid": 60_000,
+    "q_join_bloom_prefilter": 45_000,
+    "q_text_zipf_profile": 70_000,
 }
 
-# Names whose ceilings were calibrated under .collect() (queue-probe rule:
-# .count() lets Catalyst prune scoring/final-join work — the bigram gate
-# metered 59 bytes under count vs 52 KB under collect). Metering them under
-# count after registration would make the ceiling vacuous.
+# Names whose ceilings were calibrated under .collect(): .count() lets
+# Catalyst prune scoring/final-join work (the bigram gate metered 59 bytes
+# under count vs 52 KB under collect), so metering them under count would
+# make the ceiling vacuous.
 COLLECT_METERED = {
     "q_text_bigram_surprisal",
     "q_sample_group_split",
@@ -96,6 +118,16 @@ COLLECT_METERED = {
     "q_stream_quantile_digest",
     "q_multimodal_warc_ingest",
     "etl_warc_file_ingest_e2e",
+    "q_multimodal_mp3_probe",
+    "etl_mp3_file_probe_e2e",
+    "q_multimodal_tar_ingest",
+    "etl_tar_shard_ingest_e2e",
+    "etl_jsonl_gzip_roundtrip_e2e",
+    "etl_xml_roundtrip_e2e",
+    "q_graph_brand_triangle_census",
+    "q_ml_naive_bayes_langid",
+    "q_join_bloom_prefilter",
+    "q_text_zipf_profile",
 }
 
 
@@ -143,82 +175,3 @@ def test_shuffle_write_within_budget(spark, name):
         f" unchanged plan shape? See SCALING.md 'Shuffle byte budgets'."
     )
     assert used > 0, f"{name} reported zero shuffle bytes — meter broken?"
-
-
-# --- round-13 registration queue (not yet in all_queries()) -----------------
-# Budgets land BEFORE registration (r10 verdict #2) so the r13 drain is a
-# one-commit registry edit with the volume guard already armed. Measured
-# 2026-08 (round 11), same rig, via .collect() — the queue-probe rule:
-# .count() lets Catalyst prune the scoring/final-join work entirely.
-QUEUE_BUDGETS = {
-    # round-13 candidates (measured 2026-08, round 11, same rig/protocol):
-    # mp3 25.7 KB / mp3 file e2e 11.4 KB, tar 20.8 KB / tar shard e2e
-    # 10.4 KB — stat rows only, payload bytes never enter an Exchange
-    "q_multimodal_mp3_probe": 55_000,
-    "etl_mp3_file_probe_e2e": 25_000,
-    "q_multimodal_tar_ingest": 45_000,
-    "etl_tar_shard_ingest_e2e": 25_000,
-    # gzip JSONL round-trip: the repartition(8) staging shuffle of the
-    # document corpus + the bucket rollup; measured 101.6 KB
-    "etl_jsonl_gzip_roundtrip_e2e": 220_000,
-    # XML round-trip: one brand rollup exchange; measured 3.1 KB
-    "etl_xml_roundtrip_e2e": 8_000,
-    # round-14 candidates (measured 2026-08, round 12, same rig/protocol):
-    # triangle census 1.45 MB (edge distinct + degree/orientation joins —
-    # scales with the co-occurrence edge list); naive Bayes 23.6 KB (model
-    # aggregations + token-key scoring joins); bloom prefilter 19.9 KB
-    # (build distinct + verification join; the filter itself never enters
-    # an Exchange — it ships as a literal)
-    "q_graph_triangles": 3_000_000,
-    "q_ml_naive_bayes_langid": 60_000,
-    "q_join_bloom_prefilter": 45_000,
-    # zipf/hapax spectrum 32.6 KB (uni+bigram type frequency exchange)
-    "q_text_zipf_profile": 70_000,
-}
-
-
-def _queue_fn(name):
-    from poc_juma_etl_spark.operators.graph import q_graph_triangles
-    from poc_juma_etl_spark.operators.lm import q_ml_naive_bayes_langid
-    from poc_juma_etl_spark.operators.text import q_text_zipf_profile
-    from poc_juma_etl_spark.operators.mp3 import (
-        etl_mp3_file_probe_e2e,
-        q_multimodal_mp3_probe,
-    )
-    from poc_juma_etl_spark.operators.tar import (
-        etl_tar_shard_ingest_e2e,
-        q_multimodal_tar_ingest,
-    )
-    from poc_juma_etl_spark.plans.extra11 import (
-        etl_jsonl_gzip_roundtrip_e2e,
-        etl_xml_roundtrip_e2e,
-    )
-    from poc_juma_etl_spark.plans.extra12 import q_join_bloom_prefilter
-
-    return {
-        "q_graph_triangles": q_graph_triangles,
-        "q_text_zipf_profile": q_text_zipf_profile,
-        "q_ml_naive_bayes_langid": q_ml_naive_bayes_langid,
-        "q_join_bloom_prefilter": q_join_bloom_prefilter,
-        "q_multimodal_mp3_probe": q_multimodal_mp3_probe,
-        "etl_mp3_file_probe_e2e": etl_mp3_file_probe_e2e,
-        "q_multimodal_tar_ingest": q_multimodal_tar_ingest,
-        "etl_tar_shard_ingest_e2e": etl_tar_shard_ingest_e2e,
-        "etl_jsonl_gzip_roundtrip_e2e": etl_jsonl_gzip_roundtrip_e2e,
-        "etl_xml_roundtrip_e2e": etl_xml_roundtrip_e2e,
-    }[name]
-
-
-@pytest.mark.parametrize("name", sorted(QUEUE_BUDGETS), ids=str)
-def test_queue_shuffle_write_within_budget(spark, name):
-    fn = _queue_fn(name)
-    try:
-        used = shuffle_bytes_of(spark, lambda: fn(spark, SF_ORACLE).collect())
-    finally:
-        release_caches()
-    assert used <= QUEUE_BUDGETS[name], (
-        f"{name} shuffled {used:,} bytes at sf0.01 — over the"
-        f" {QUEUE_BUDGETS[name]:,} ceiling (2x the round-11 baseline)."
-        f" A volume regression with an unchanged plan shape?"
-        f" See SCALING.md 'Shuffle byte budgets'."
-    )

@@ -82,7 +82,7 @@ def test_http_transport_protocol():
 
 
 def test_rest_source_distributed_scan(spark):
-    assert rest_api.register_source(spark)
+    rest_api.register_source(spark)
     df = (
         spark.read.format("paginated_rest")
         .option("path", f"{SF_SMOKE}/events.parquet")

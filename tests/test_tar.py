@@ -1,7 +1,7 @@
 """TAR / WebDataset ingestion (operators/tar.py): full Spark-vs-DuckDB
-parity a future (round-13 queue) gate would run, independent-parser
-structure pins against the stdlib writer, the corrupt-stream fuzz
-contract, the multi-sample shard file e2e, and the empty guards."""
+parity, independent-parser structure pins against the stdlib writer, the
+corrupt-stream fuzz contract, the multi-sample shard file e2e, and the
+empty guards."""
 
 import duckdb
 import pytest

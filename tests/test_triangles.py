@@ -1,12 +1,15 @@
 """Within-brand triangle census: degree-ordered forward-algorithm count vs
 a brute-force reference on synthetic graphs, plus the sf-fixture oracle
-parity and the empty guard (round-12 build; registration queued for r14)."""
+parity and the empty guard."""
 
 from itertools import combinations
 
 import pytest
 
-from poc_juma_etl_spark.operators.graph import TRIANGLES_ORACLE, q_graph_triangles
+from poc_juma_etl_spark.operators.graph import (
+    TRIANGLES_ORACLE,
+    q_graph_brand_triangle_census,
+)
 
 from .conftest import SF_ORACLE
 
@@ -83,7 +86,7 @@ def _orders_for_edges(brand_edges):
 def test_triangle_census_vs_bruteforce(spark, tmp_path, edges):
     rows = _orders_for_edges({"Brand#1": edges})
     _write_fixture(spark, tmp_path, rows, {p: "Brand#1" for _, p in rows})
-    got = q_graph_triangles(spark, str(tmp_path)).collect()
+    got = q_graph_brand_triangle_census(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     n, e, w, t = _census(edges)
@@ -102,17 +105,33 @@ def test_triangle_census_brand_isolation(spark, tmp_path):
     rows += [(9999, 2), (9999, 11)]
     brand = {p: ("A" if p < 10 else "B") for _, p in rows}
     _write_fixture(spark, tmp_path, rows, brand)
-    got = {r.brand: r for r in q_graph_triangles(spark, str(tmp_path)).collect()}
+    got = {
+        r.brand: r
+        for r in q_graph_brand_triangle_census(spark, str(tmp_path)).collect()
+    }
     assert got["A"].n_triangles == 1 and got["B"].n_triangles == 0
     assert got["B"].n_wedges == 1
 
 
 def test_triangle_census_oracle_parity(spark, duck):
-    got = [tuple(r) for r in q_graph_triangles(spark, SF_ORACLE).collect()]
+    got = [
+        tuple(r) for r in q_graph_brand_triangle_census(spark, SF_ORACLE).collect()
+    ]
     exp = [tuple(r) for r in duck.execute(TRIANGLES_ORACLE).fetchall()]
     assert got == exp and len(got) > 0
 
 
 def test_triangle_census_empty_input(spark, tmp_path):
     _write_fixture(spark, tmp_path, [], {})
-    assert q_graph_triangles(spark, str(tmp_path)).collect() == []
+    assert q_graph_brand_triangle_census(spark, str(tmp_path)).collect() == []
+
+
+def test_graph_triangles_attribute_is_top10_query(spark):
+    """The module's ``q_graph_triangles`` is the registered top-10 query,
+    not the per-brand census."""
+    from poc_juma_etl_spark import all_queries
+    from poc_juma_etl_spark.operators import graph
+
+    df = graph.q_graph_triangles(spark, SF_ORACLE)
+    assert tuple(df.columns) == ("node", "n_triangles", "total_triangles")
+    assert graph.q_graph_triangles is all_queries()["q_graph_triangles"].fn

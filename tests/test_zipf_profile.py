@@ -1,6 +1,5 @@
-"""Corpus frequency-spectrum (Zipf/hapax) profile (round-12 build; queued
-r14): hand-computed spectrum pins, band arithmetic, oracle parity, empty
-guard."""
+"""Corpus frequency-spectrum (Zipf/hapax) profile: hand-computed spectrum
+pins, band arithmetic, oracle parity, empty guard."""
 
 import pyspark.sql.functions as F
 
