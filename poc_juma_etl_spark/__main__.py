@@ -61,10 +61,9 @@ def main(argv: list[str] | None = None) -> int:
             from .oracle import run_gate
 
             reports = run_gate(spark, args.sf_dir)
-            bad = [n for n, r in reports.items() if r.get("match") is False]
             for n, r in reports.items():
-                print({True: "OK  ", False: "FAIL", None: "rows"}[r.get("match")], n)
-            return 1 if bad else 0
+                print("OK  " if r["match"] else "FAIL", n)
+            return 0 if all(r["match"] for r in reports.values()) else 1
         if args.table:
             name = args.table.lower()
             if name not in SERVICE_MAP:

@@ -89,7 +89,6 @@ def vector_norms(df: DataFrame) -> DataFrame:
     "per-label rollup. Quantization makes the Python-kernel output "
     "bit-exact against the SQL oracle — the gate proves the Arrow escape "
     "hatch computes exactly what the declarative engine would.",
-    tags=("arrow", "vectors", "udf"),
 )
 def q_arrow_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..plans.queries import register
 from .multimodal import WAV_MIX, encode_wav_pcm16, wav_sample_sql
 
 FRAME = 32  # samples per analysis frame (hop == frame: non-overlapping)
@@ -119,18 +120,6 @@ def feature_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOTE (round-12, measured and REJECTED): spread() here A/B'd 0.80x
-    # (tools/ab_r12.py, values identical) — the PCM16 feature walk is
-    # cheap enough that 32-way task fan-out overhead exceeds the
-    # single-core kernel time, unlike the PNG/AVI decode gates where the
-    # same guard won 1.6-3.0x. Kernel weight decides; re-measure if the
-    # feature set ever grows a real DSP stage.
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(synth_wav_kernel, schema="doc_id long, payload binary")
-    return media.mapInPandas(feature_kernel, schema=OUT_SCHEMA).orderBy("doc_id")
-
-
 # Closed-form replay of generator + framing: sample(i) and sample(i+1) both
 # come straight from the formula (no window function needed), a pair counts
 # toward zcr only when i+1 sits in the same full frame.
@@ -167,27 +156,28 @@ AUDIO_ORACLE = f"""
     """
 
 
-def _register_audio_gate() -> None:
-    """Round-10 driver-gate registration (deferred to module end: the
-    oracle literal is defined below the query function)."""
-    from ..plans.queries import register
-
-    register(
-        "q_multimodal_audio_features",
-        oracle=AUDIO_ORACLE,
-        doc="Audio frame-feature extraction over a REAL RIFF parse — the "
-        "feature-extract stage after WAV decode: a spec-valid PCM16 WAV "
-        "is synthesized per document, a second kernel that knows nothing "
-        "of the generator parses the container (stdlib wave + struct) "
-        "and computes 32-sample framed energy / zero-crossings / peak in "
-        "vectorized int64 numpy, rolled up per document. Integer-exact "
-        "end to end, so the DuckDB oracle replays the closed-form sample "
-        "definition and hash-matches value for value — a flipped bit in "
-        "the encoder, the RIFF parse, or the framing hash-fails. Scale "
-        "shape: two Arrow-batched narrow maps, decode parallelism = "
-        "partition count, no shuffle before the final ORDER BY.",
-        tags=("multimodal", "pandas-udf", "audio", "features"),
-    )(q_multimodal_audio_features)
-
-
-_register_audio_gate()
+@register(
+    "q_multimodal_audio_features",
+    oracle=AUDIO_ORACLE,
+    doc="Audio frame-feature extraction over a REAL RIFF parse — the "
+    "feature-extract stage after WAV decode: a spec-valid PCM16 WAV "
+    "is synthesized per document, a second kernel that knows nothing "
+    "of the generator parses the container (stdlib wave + struct) "
+    "and computes 32-sample framed energy / zero-crossings / peak in "
+    "vectorized int64 numpy, rolled up per document. Integer-exact "
+    "end to end, so the DuckDB oracle replays the closed-form sample "
+    "definition and hash-matches value for value — a flipped bit in "
+    "the encoder, the RIFF parse, or the framing hash-fails. Scale "
+    "shape: two Arrow-batched narrow maps, decode parallelism = "
+    "partition count, no shuffle before the final ORDER BY.",
+)
+def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # NOTE (round-12, measured and REJECTED): spread() here A/B'd 0.80x
+    # (tools/ab_r12.py, values identical) — the PCM16 feature walk is
+    # cheap enough that 32-way task fan-out overhead exceeds the
+    # single-core kernel time, unlike the PNG/AVI decode gates where the
+    # same guard won 1.6-3.0x. Kernel weight decides; re-measure if the
+    # feature set ever grows a real DSP stage.
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    media = d.mapInPandas(synth_wav_kernel, schema="doc_id long, payload binary")
+    return media.mapInPandas(feature_kernel, schema=OUT_SCHEMA).orderBy("doc_id")

@@ -69,7 +69,6 @@ MIN_PAIR_SUPPORT = 50
     f"combinable aggregations, pairs with support ≥ {MIN_PAIR_SUPPORT} "
     "scored lift = N·cnt(ab)/(cnt(a)·cnt(b)) with int-exact operands. "
     "Item counts ride broadcasts onto the pair table.",
-    tags=("basket", "association", "cooccurrence"),
 )
 def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

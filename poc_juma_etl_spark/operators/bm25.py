@@ -74,7 +74,6 @@ TOP_N = 25
     "(doc, term), so the decimal dance is unnecessary: each addend is "
     "computed identically in both engines; the per-doc sum of term scores "
     "goes through a DECIMAL(25,9) cast so addition order cannot matter.",
-    tags=("text", "bm25", "search"),
 )
 def q_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -164,7 +163,6 @@ def q_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded in both engines, so identical inputs give identical "
     "outputs). The norm table is a per-doc aggregate — at 100 TB it "
     "persists beside the index, not recomputed per query.",
-    tags=("text", "tfidf", "search"),
 )
 def q_text_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -343,7 +341,6 @@ def _rrf_sql() -> str:
     "broadcast pass; per-query rank windows partition on query_id. BM25 "
     "per-doc sums ride the DECIMAL(25,9) string-hop (bm25 precedent), so "
     "candidate order — hence every rank — is bit-identical cross-engine.",
-    tags=("text", "vectors", "retrieval", "rrf", "hybrid"),
 )
 def q_hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

@@ -321,7 +321,6 @@ def _oracle_encoded_counts(n_merges: int = N_MERGES) -> str:
     "in-row, repeat. The oracle replays the rounds with positional window "
     "functions and gaps-and-islands parity — a different algorithm "
     "reaching the same merge table.",
-    tags=("text", "bpe", "tokenizer", "iterative"),
 )
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the per-round fold is CPU-heavy per row; a small single-file
@@ -343,7 +342,6 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embarrassingly parallel at any corpus size: the merge table is "
     "driver-small, the folds never shuffle, and only the per-doc counts "
     "aggregate. Oracle replays the identical chain with window functions.",
-    tags=("text", "bpe", "tokenizer"),
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))

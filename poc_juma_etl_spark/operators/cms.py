@@ -74,7 +74,6 @@ def _bucket(d_col, t_col) -> F.Column:
     "vs collision overcount. Deterministic hashing makes the whole sketch "
     "bit-identical across engines, so unlike HLL this sketch operator is "
     "value-hash-gated, not rows-only.",
-    tags=("sketch", "cms", "heavy-hitters"),
 )
 def q_sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread

@@ -343,7 +343,6 @@ ETL_COMPACT_FRAG = 6  # fragmentation factor: small files per date partition
     "plan is a manifest-sized window and the rewrite shuffles each "
     "partition once — the Delta OPTIMIZE / Iceberg rewrite_data_files "
     "maintenance loop the gold layer (S7) needs between refreshes.",
-    tags=("etl", "compaction", "layout"),
 )
 def etl_compact_plan_exec_e2e(spark: SparkSession, sf_dir: str):
     import shutil

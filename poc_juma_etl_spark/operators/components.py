@@ -167,7 +167,6 @@ def jaccard_edges(d: DataFrame) -> DataFrame:
     "(two shuffles per round, O(diameter) rounds, no driver-side graph). "
     "Oracle computes the same fixpoint by a different algorithm entirely — "
     "a recursive-CTE transitive closure.",
-    tags=("dedup", "graph", "components"),
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
@@ -269,7 +268,6 @@ SQL_PIPELINE_RANKED = f"""
     "This is what a curation run actually executes at 100 TB: every stage "
     "shuffles on doc-scale keys, nothing driver-side. Oracle recomputes the "
     "whole pipeline with a recursive-CTE closure instead of propagation.",
-    tags=("dedup", "pipeline", "components", "quality"),
 )
 def q_dedup_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipeline_keep_ranked(spark, sf_dir).select(

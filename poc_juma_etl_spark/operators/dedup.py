@@ -88,7 +88,6 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     doc="Exact dedup on a whitespace-normalized content hash: groupBy the "
     "60-bit key, keep min doc_id. One shuffle on the hash — the linear-scale "
     "baseline every fuzzy method falls back on.",
-    tags=("dedup", "exact"),
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -325,7 +324,6 @@ def ngram_jaccard_pairs_collapsed(
     f"frequency ≤ {NGRAM_DF_CUTOFF}; stop-shingles would make the join "
     "quadratic on their key at corpus scale). Integer counts ⇒ exact "
     "double ratios.",
-    tags=("dedup", "jaccard"),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs_collapsed(load_table(spark, sf_dir, "documents"))
@@ -368,7 +366,6 @@ CONTAIN_THRESHOLD = 0.25
     "shingles, df-capped, never n²); each unordered candidate then fans "
     "to its two directions and divides by the CONTAINED side's size — "
     f"threshold {CONTAIN_THRESHOLD}. Integer counts ⇒ exact ratios.",
-    tags=("dedup", "containment", "jaccard"),
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-7 dup-collapse (SCALING.md, same shape as
@@ -502,7 +499,6 @@ _SQL_BASE_HASH = f"({SQL_MD5_LONG.format(x='shingle')} % {MOD_P})"
     f"mod P over shingle hashes, {MH_BANDS} bands × {MH_ROWS} rows, "
     "band-bucket join for candidates, exact-Jaccard verification ≥ 0.10. "
     "The sub-quadratic scale path: only band collisions are compared.",
-    tags=("dedup", "minhash", "lsh"),
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): a small documents.parquet scans as ONE split, serializing the
@@ -703,7 +699,6 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{SIM_BLOCK_BITS} bits — any pair within radius {SIM_RADIUS} shares an "
     "exact block, and 2^12 bucket values per block bound join skew), oracle "
     "brute-forces; the exact hamming filter makes both sets identical.",
-    tags=("dedup", "simhash"),
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
@@ -733,7 +728,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at every scale: on the sf1 soak fixture (where replication makes every "
     "doc a 10-way exact duplicate and pair rows square past the driver's "
     "maxResultSize) this is the full-row-hashable form of the family.",
-    tags=("dedup", "simhash", "grouped"),
 )
 def q_dedup_simhash_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-7 dup-collapse at FINGERPRINT level (SCALING.md): dist-0 docs
@@ -918,7 +912,6 @@ def sql_cosine_expr(a: str, b: str) -> str:
     "small (plan-asserted post-execution) and falls back to a shingle-"
     "keyed shuffle join past the threshold; the corpus is scanned once "
     "and shuffled only by doc_id for the count — the exact-dedup shape.",
-    tags=("text", "dedup", "decontamination"),
 )
 def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1000,7 +993,6 @@ def _cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucketing, so the gate checks the whole candidate+verify pipeline. "
     "This is the 100 TB plan itself, not a demo slice of it: each vector is "
     "quantized, normed, and hashed once; the join shuffles on bucket id.",
-    tags=("dedup", "embedding"),
 )
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cosine_pairs(spark, sf_dir).drop("qdot").orderBy("vec_a", "vec_b")
@@ -1030,7 +1022,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commute exactly). Output stays ≤ n_vectors rows at every scale, so "
     "the standard full-row hash gate covers this family on the sf1 soak "
     "fixture where raw pair rows blow the driver's maxResultSize.",
-    tags=("dedup", "embedding", "grouped"),
 )
 def q_dedup_embedding_cosine_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _cosine_pairs(spark, sf_dir)
@@ -1093,7 +1084,6 @@ from .text import SQL_WINNOW_FP, winnow_fingerprints  # noqa: E402
     "sensitivity, which is exactly what makes local fingerprinting the "
     "scale choice for detecting long copied passages (vs MinHash's "
     "whole-document similarity).",
-    tags=("dedup", "winnowing", "fingerprint"),
 )
 def q_dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-7 dup-collapse (SCALING.md): identical texts have identical
@@ -1205,7 +1195,6 @@ PASSAGE_TOKENS = 20  # exact-dedup chunk width (tokens)
     "exact dedup (q_dedup_exact) cannot see. One shuffle on the passage "
     "hash — the same linear scale shape as exact dedup, at ~n_tokens/"
     f"{PASSAGE_TOKENS} keys.",
-    tags=("dedup", "passage", "exact"),
 )
 def q_dedup_passage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1277,7 +1266,6 @@ INC_DROP_FRAC = 0.5  # drop an incoming doc when >= 50% of its passages are know
     "probes join the SMALL batch side against the big index on hash keys; "
     "at 100 TB the index is a materialized table and only the batch "
     "rescans — O(batch), not O(corpus), per ingest.",
-    tags=("dedup", "incremental", "passage"),
 )
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1397,7 +1385,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single int-to-double divisions (cross-engine portable); the only "
     "additional cost over the LSH query is one signature self-join on the "
     "bounded candidate set.",
-    tags=("dedup", "minhash", "calibration", "tuning"),
 )
 def q_dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))

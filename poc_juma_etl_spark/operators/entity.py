@@ -124,7 +124,6 @@ def er_match_edges(p: DataFrame, lev_max: int = ER_LEV_MAX) -> DataFrame:
     "as canonical, MAX price as the surviving value, member count. "
     "Singletons survive as their own entity. Oracle reaches the same "
     "fixpoint via recursive-CTE transitive closure.",
-    tags=("entity", "dedup", "graph", "mdm"),
 )
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand", "p_retailprice")

@@ -89,7 +89,6 @@ def _oracle_sql() -> str:
     "is no dangling-mass term. The oracle replays the identical "
     "iteration chain as SQL CTEs; 2^40 quantization makes the float "
     "iteration bit-reproducible across engines.",
-    tags=("graph", "pagerank", "iterative"),
 )
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -265,7 +264,6 @@ TRI_TOP = 10
     "(never a lineitem self-join). Triangle counts are orientation-"
     "invariant, so the oracle's simpler key-ordered closure reaches the "
     "identical totals.",
-    tags=("graph", "triangles", "cooccurrence"),
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -400,7 +398,6 @@ TRIANGLES_ORACLE = """
     doc="Per-brand triangle census over the within-brand co-purchase "
     "graph: nodes, edges, wedges and triangles per brand, counted with "
     "the degree-ordered forward algorithm keyed on (brand, node).",
-    tags=("graph", "triangles", "cooccurrence"),
 )
 def q_graph_brand_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle census over the within-brand co-purchase graph:

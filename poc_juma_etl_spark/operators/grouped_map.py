@@ -50,7 +50,6 @@ def _rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
     "computed by a pandas kernel must hash-match PERCENT_RANK() — gates the "
     "grouped-map surface's *semantics*, not just its plumbing. (value, "
     "event_id) ordering keeps ranks unique and both engines deterministic.",
-    tags=("udf", "grouped-map", "pandas"),
 )
 def q_grouped_map_pct_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 30).select(

@@ -13,9 +13,10 @@ Spark-first shape:
 - the driver holds only the k centroids, never the corpus.
 
 Deterministic: init = the k lowest-vec_id vectors; ties in assignment break
-to the lower cluster id. Iterative algorithms are exactly the case the
-driver contract exempts from SQL oracles (rows-only check); determinism and
-convergence are pinned by tests/test_kmeans.py instead.
+to the lower cluster id. Every query this module registers is
+oracle-gated (the Lloyd trainer through its integer-exact twin,
+q_kmeans_lloyd_exact); tests/test_kmeans.py pins determinism and
+convergence of the float ``kmeans_fit`` path.
 """
 
 from __future__ import annotations
@@ -257,7 +258,6 @@ SQL_SEED_NV_CTE = """
     "(exact in both engines; 64·(2^24)² < 2^63, no overflow) and the full "
     "(vec_id, cell, sq_dist) map hash-matches the DuckDB oracle. One narrow "
     "codegen map over a centroid literal at any corpus size — no shuffle.",
-    tags=("similarity", "ann", "ivf", "kmeans"),
 )
 def q_ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import SPARK_QVEC
@@ -321,7 +321,6 @@ def q_ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Scale shape: assignment is one narrow codegen map, the probe table is "
     "queries×nprobe rows broadcast into the candidate equi-join — corpus "
     f"scanned per query ≈ N·{NPROBE}/{K}, never all-pairs.",
-    tags=("similarity", "ann", "ivf", "kmeans"),
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -474,7 +473,6 @@ def _lloyd_oracle() -> str:
     "on (cell, dim) with map-side partials, K×dim rows collected — the "
     "same shape as the production float trainer (kmeans_fit), which "
     "remains the at-scale path; this is its verifiable integer twin.",
-    tags=("kmeans", "iterative", "clustering"),
 )
 def q_kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.queries import scoped_cache

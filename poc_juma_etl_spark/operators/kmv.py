@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..plans.queries import register
 
 K = 256
 HBITS = 44
@@ -88,100 +89,6 @@ def _estimate(sketch: list[int]) -> int:
     if len(sketch) < K:
         return len(sketch)
     return (K - 1) * MAXH // sketch[K - 1]
-
-
-def q_sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ska = _sketch(spark, sf_dir, PRED_A)
-    skb = _sketch(spark, sf_dir, PRED_B)
-    return setops_result(spark, sf_dir, ska, skb)
-
-
-def _register_kmv_gate() -> None:
-    """Deferred registration (KMV_ORACLE is defined at the bottom of the
-    module; the gate registers once both halves exist)."""
-    from ..plans.queries import register
-
-    register(
-        "q_sketch_kmv_setops",
-        oracle=KMV_ORACLE,
-        doc="KMV/theta bottom-k distinct sketch with UNION, INTERSECTION "
-        "and DIFFERENCE estimates — the set algebra HLL cannot do "
-        "(Beyer et al. SIGMOD'07 / theta-sketch inclusion-exclusion on "
-        "the union's theta). Hash is a portable 44-bit md5 slice, so "
-        "every estimate is deterministic and the DuckDB oracle "
-        "value-hash-matches ALL estimates plus exact ground truth — not "
-        "an error-bound verdict. Scale shape: each sketch is one "
-        "hash-partitioned DISTINCT + TakeOrderedAndProject bottom-k "
-        "(per-partition k-merge, driver sees k rows); set algebra runs "
-        "on two k-sized lists driver-side. Streaming twin: "
-        "q_stream_kmv_sketch maintains the same sketches per micro-batch.",
-        tags=("sketch", "distinct", "setops", "kmv"),
-    )(q_sketch_kmv_setops)
-
-
-def setops_result(
-    spark: SparkSession, sf_dir: str, ska: list[int], skb: list[int]
-) -> DataFrame:
-    """Estimates + exact ground truth from two per-segment sketches (shared
-    with the streaming twin, streaming/sketch.py, whose gate is exactly
-    this output computed from incrementally-maintained sketches)."""
-    # union sketch: bottom-k of the merged distinct hash sets (the KMV
-    # merge is a k-merge of sorted lists — done here on two k-sized lists)
-    sku = sorted(set(ska) | set(skb))[:K]
-    est_a, est_b, est_u = _estimate(ska), _estimate(skb), _estimate(sku)
-
-    if len(sku) < K:  # both sides exact -> sketch set algebra is exact
-        est_i = len(set(ska) & set(skb))
-        est_d = len(set(ska) - set(skb))
-    else:
-        theta_u = sku[K - 1]
-        n_i = len({h for h in set(ska) & set(skb) if h < theta_u})
-        n_d = len({h for h in set(ska) - set(skb) if h < theta_u})
-        est_i = n_i * MAXH // theta_u
-        est_d = n_d * MAXH // theta_u
-
-    # exact ground truth in ONE pass (round-12, measured): the old shape
-    # ran a triple count_distinct (an Expand ×3 of the scan) plus a SECOND
-    # scan+shuffle for the intersection count. Collapsing the custkey
-    # domain first makes u/a/b/i plain conditional sums over one
-    # map-side-combined groupBy — same values by construction (max-flags
-    # per custkey ≡ distinct membership), half the scans, no Expand
-    # (guide §2.3 "aggregate before you shuffle").
-    o = load_table(spark, sf_dir, "orders").selectExpr(
-        "o_custkey",
-        f"CASE WHEN {PRED_A} THEN 1 ELSE 0 END AS in_a",
-        f"CASE WHEN {PRED_B} THEN 1 ELSE 0 END AS in_b",
-    )
-    per = (
-        o.filter("in_a = 1 OR in_b = 1")
-        .groupBy("o_custkey")
-        .agg(F.max("in_a").alias("a"), F.max("in_b").alias("b"))
-    )
-    ex = per.agg(
-        F.coalesce(F.sum("a"), F.lit(0)).alias("a"),
-        F.coalesce(F.sum("b"), F.lit(0)).alias("b"),
-        F.count(F.lit(1)).alias("u"),
-        F.coalesce(F.sum(F.col("a") * F.col("b")), F.lit(0)).alias("i"),
-    ).collect()[0]
-    ex_i = int(ex.i)
-
-    rows = [
-        ("est_a", est_a),
-        ("est_a_minus_b", est_d),
-        ("est_b", est_b),
-        ("est_intersect", est_i),
-        ("est_union", est_u),
-        ("exact_a", int(ex.a)),
-        ("exact_a_minus_b", int(ex.a) - int(ex_i)),
-        ("exact_b", int(ex.b)),
-        ("exact_intersect", int(ex_i)),
-        ("exact_union", int(ex.u)),
-        ("sketch_k", K),
-        ("theta_union", sku[K - 1] if len(sku) >= K else MAXH),
-    ]
-    return spark.createDataFrame(rows, "measure string, value bigint").orderBy(
-        "measure"
-    )
 
 
 KMV_ORACLE = f"""
@@ -250,4 +157,87 @@ KMV_ORACLE = f"""
     """
 
 
-_register_kmv_gate()
+@register(
+    "q_sketch_kmv_setops",
+    oracle=KMV_ORACLE,
+    doc="KMV/theta bottom-k distinct sketch with UNION, INTERSECTION "
+    "and DIFFERENCE estimates — the set algebra HLL cannot do "
+    "(Beyer et al. SIGMOD'07 / theta-sketch inclusion-exclusion on "
+    "the union's theta). Hash is a portable 44-bit md5 slice, so "
+    "every estimate is deterministic and the DuckDB oracle "
+    "value-hash-matches ALL estimates plus exact ground truth — not "
+    "an error-bound verdict. Scale shape: each sketch is one "
+    "hash-partitioned DISTINCT + TakeOrderedAndProject bottom-k "
+    "(per-partition k-merge, driver sees k rows); set algebra runs "
+    "on two k-sized lists driver-side. Streaming twin: "
+    "q_stream_kmv_sketch maintains the same sketches per micro-batch.",
+)
+def q_sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ska = _sketch(spark, sf_dir, PRED_A)
+    skb = _sketch(spark, sf_dir, PRED_B)
+    return setops_result(spark, sf_dir, ska, skb)
+
+
+def setops_result(
+    spark: SparkSession, sf_dir: str, ska: list[int], skb: list[int]
+) -> DataFrame:
+    """Estimates + exact ground truth from two per-segment sketches (shared
+    with the streaming twin, streaming/sketch.py, whose gate is exactly
+    this output computed from incrementally-maintained sketches)."""
+    # union sketch: bottom-k of the merged distinct hash sets (the KMV
+    # merge is a k-merge of sorted lists — done here on two k-sized lists)
+    sku = sorted(set(ska) | set(skb))[:K]
+    est_a, est_b, est_u = _estimate(ska), _estimate(skb), _estimate(sku)
+
+    if len(sku) < K:  # both sides exact -> sketch set algebra is exact
+        est_i = len(set(ska) & set(skb))
+        est_d = len(set(ska) - set(skb))
+    else:
+        theta_u = sku[K - 1]
+        n_i = len({h for h in set(ska) & set(skb) if h < theta_u})
+        n_d = len({h for h in set(ska) - set(skb) if h < theta_u})
+        est_i = n_i * MAXH // theta_u
+        est_d = n_d * MAXH // theta_u
+
+    # exact ground truth in ONE pass (round-12, measured): the old shape
+    # ran a triple count_distinct (an Expand ×3 of the scan) plus a SECOND
+    # scan+shuffle for the intersection count. Collapsing the custkey
+    # domain first makes u/a/b/i plain conditional sums over one
+    # map-side-combined groupBy — same values by construction (max-flags
+    # per custkey ≡ distinct membership), half the scans, no Expand
+    # (guide §2.3 "aggregate before you shuffle").
+    o = load_table(spark, sf_dir, "orders").selectExpr(
+        "o_custkey",
+        f"CASE WHEN {PRED_A} THEN 1 ELSE 0 END AS in_a",
+        f"CASE WHEN {PRED_B} THEN 1 ELSE 0 END AS in_b",
+    )
+    per = (
+        o.filter("in_a = 1 OR in_b = 1")
+        .groupBy("o_custkey")
+        .agg(F.max("in_a").alias("a"), F.max("in_b").alias("b"))
+    )
+    ex = per.agg(
+        F.coalesce(F.sum("a"), F.lit(0)).alias("a"),
+        F.coalesce(F.sum("b"), F.lit(0)).alias("b"),
+        F.count(F.lit(1)).alias("u"),
+        F.coalesce(F.sum(F.col("a") * F.col("b")), F.lit(0)).alias("i"),
+    ).collect()[0]
+    ex_i = int(ex.i)
+
+    rows = [
+        ("est_a", est_a),
+        ("est_a_minus_b", est_d),
+        ("est_b", est_b),
+        ("est_intersect", est_i),
+        ("est_union", est_u),
+        ("exact_a", int(ex.a)),
+        ("exact_a_minus_b", int(ex.a) - int(ex_i)),
+        ("exact_b", int(ex.b)),
+        ("exact_intersect", int(ex_i)),
+        ("exact_union", int(ex.u)),
+        ("sketch_k", K),
+        ("theta_union", sku[K - 1] if len(sku) >= K else MAXH),
+    ]
+    return spark.createDataFrame(rows, "measure string, value bigint").orderBy(
+        "measure"
+    )

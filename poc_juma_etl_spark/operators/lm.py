@@ -73,6 +73,49 @@ def _bigram_pairs(df: DataFrame) -> DataFrame:
     return df.select("doc_id", F.explode(pairs).alias("bigram"))
 
 
+BIGRAM_SURPRISAL_ORACLE = f"""
+    WITH tok AS (
+      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM documents
+    ),
+    bg AS (
+      SELECT doc_id,
+             unnest(list_transform(range(1, len(ts)),
+               i -> struct_pack(w1 := ts[i], bigram := ts[i] || ' ' || ts[i+1]))) AS p
+      FROM tok
+    ),
+    pairs AS (SELECT doc_id, p.w1 AS w1, p.bigram AS bigram FROM bg),
+    lm_bg AS MATERIALIZED (
+      SELECT bigram, COUNT(*) AS c12 FROM pairs GROUP BY bigram),
+    lm_ctx AS MATERIALIZED (
+      SELECT w1, COUNT(*) AS c1 FROM pairs GROUP BY w1),
+    scored AS (
+      SELECT doc_id,
+             COUNT(*) AS n_bigrams,
+             SUM(length(bin(c1 // c12)) - 1) AS total_surprisal,
+             MAX(length(bin(c1 // c12)) - 1) AS max_surprisal
+      FROM pairs JOIN lm_bg USING (bigram) JOIN lm_ctx USING (w1)
+      GROUP BY doc_id
+    )
+    SELECT d.doc_id,
+           CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+           CAST(COALESCE(s.total_surprisal, 0) AS BIGINT) AS total_surprisal,
+           CAST(COALESCE(s.max_surprisal, 0) AS BIGINT) AS max_surprisal,
+           CAST(CASE WHEN COALESCE(s.n_bigrams, 0) = 0 THEN 0 ELSE
+             (s.total_surprisal * {MEAN_SCALE}) // s.n_bigrams END AS BIGINT)
+             AS mean_surprisal_x1000
+    FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
+    ORDER BY d.doc_id
+    """
+
+
+@register(
+    "q_text_bigram_surprisal",
+    oracle=BIGRAM_SURPRISAL_ORACLE,
+    doc="Bigram-LM surprisal scoring (the CCNet perplexity-filter "
+    "stage, self-trained on the corpus): exact integer floor-log2 "
+    "surprisal per bigram type, type-level scoring join, n_bigrams "
+    "in-row.",
+)
 def q_text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-11 recut (r10 verdict #4 cost audit): the score s depends only
     on the bigram TYPE, so scoring moved from the occurrence stream to the
@@ -140,41 +183,6 @@ def q_text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BIGRAM_SURPRISAL_ORACLE = f"""
-    WITH tok AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(ts)),
-               i -> struct_pack(w1 := ts[i], bigram := ts[i] || ' ' || ts[i+1]))) AS p
-      FROM tok
-    ),
-    pairs AS (SELECT doc_id, p.w1 AS w1, p.bigram AS bigram FROM bg),
-    lm_bg AS MATERIALIZED (
-      SELECT bigram, COUNT(*) AS c12 FROM pairs GROUP BY bigram),
-    lm_ctx AS MATERIALIZED (
-      SELECT w1, COUNT(*) AS c1 FROM pairs GROUP BY w1),
-    scored AS (
-      SELECT doc_id,
-             COUNT(*) AS n_bigrams,
-             SUM(length(bin(c1 // c12)) - 1) AS total_surprisal,
-             MAX(length(bin(c1 // c12)) - 1) AS max_surprisal
-      FROM pairs JOIN lm_bg USING (bigram) JOIN lm_ctx USING (w1)
-      GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CAST(COALESCE(s.total_surprisal, 0) AS BIGINT) AS total_surprisal,
-           CAST(COALESCE(s.max_surprisal, 0) AS BIGINT) AS max_surprisal,
-           CAST(CASE WHEN COALESCE(s.n_bigrams, 0) = 0 THEN 0 ELSE
-             (s.total_surprisal * {MEAN_SCALE}) // s.n_bigrams END AS BIGINT)
-             AS mean_surprisal_x1000
-    FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
-    ORDER BY d.doc_id
-    """
-
-
 # ---------------------------------------------------------------------------
 # group-disjoint train/val/test split (same module: both are corpus-prep
 # stages)
@@ -183,6 +191,47 @@ SPLIT_BUCKETS = 10  # hash(source) % 10 -> 0-7 train, 8 val, 9 test
 SPLIT_EDGES = (8, 9)  # train < 8 <= val < 9 <= test
 
 
+def _split_sql_expr() -> str:
+    from .text import SQL_MD5_LONG
+
+    h = SQL_MD5_LONG.format(x="source")
+    return (
+        f"CASE WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_EDGES[0]} THEN 'train' "
+        f"WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_EDGES[1]} THEN 'val' "
+        "ELSE 'test' END"
+    )
+
+
+def group_split_oracle_sql() -> str:
+    return f"""
+    WITH assigned AS (
+      SELECT source, {_split_sql_expr()} AS split,
+             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok
+      FROM documents
+    ),
+    per_group AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+             MIN(split) AS split_min, MAX(split) AS split_max
+      FROM assigned GROUP BY source
+    )
+    SELECT split_min AS split,
+           CAST(COUNT(*) AS BIGINT) AS n_groups,
+           CAST(SUM(n_docs) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+           CAST(SUM(CASE WHEN split_min != split_max THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_leaked_groups
+    FROM per_group GROUP BY split_min ORDER BY split
+    """
+
+
+@register(
+    "q_sample_group_split",
+    oracle=group_split_oracle_sql(),
+    doc="Group-disjoint train/val/test split with leakage audit: "
+    "hash(source) buckets so every group's documents land in one "
+    "split; n_leaked_groups pinned to 0.",
+)
 def q_sample_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-disjoint corpus split: every document whose ``source`` hashes
     to the same bucket lands in the same split, so near-duplicates and
@@ -238,66 +287,6 @@ def q_sample_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split")
     )
-
-
-def _split_sql_expr() -> str:
-    from .text import SQL_MD5_LONG
-
-    h = SQL_MD5_LONG.format(x="source")
-    return (
-        f"CASE WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_EDGES[0]} THEN 'train' "
-        f"WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_EDGES[1]} THEN 'val' "
-        "ELSE 'test' END"
-    )
-
-
-def group_split_oracle_sql() -> str:
-    return f"""
-    WITH assigned AS (
-      SELECT source, {_split_sql_expr()} AS split,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok
-      FROM documents
-    ),
-    per_group AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-             MIN(split) AS split_min, MAX(split) AS split_max
-      FROM assigned GROUP BY source
-    )
-    SELECT split_min AS split,
-           CAST(COUNT(*) AS BIGINT) AS n_groups,
-           CAST(SUM(n_docs) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN split_min != split_max THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_leaked_groups
-    FROM per_group GROUP BY split_min ORDER BY split
-    """
-
-
-def _register_lm_gates() -> None:
-    """Round-12 drain: registry entries for both corpus-prep stages."""
-    from ..plans.queries import register
-
-    register(
-        "q_text_bigram_surprisal",
-        oracle=BIGRAM_SURPRISAL_ORACLE,
-        doc="Bigram-LM surprisal scoring (the CCNet perplexity-filter "
-        "stage, self-trained on the corpus): exact integer floor-log2 "
-        "surprisal per bigram type, type-level scoring join, n_bigrams "
-        "in-row.",
-        tags=("text", "lm", "quality"),
-    )(q_text_bigram_surprisal)
-    register(
-        "q_sample_group_split",
-        oracle=group_split_oracle_sql(),
-        doc="Group-disjoint train/val/test split with leakage audit: "
-        "hash(source) buckets so every group's documents land in one "
-        "split; n_leaked_groups pinned to 0.",
-        tags=("sampling", "split", "decontamination"),
-    )(q_sample_group_split)
-
-
-_register_lm_gates()
 
 
 # --- multinomial naive Bayes language-ID -----------------------------------
@@ -376,7 +365,6 @@ NB_LANGID_ORACLE = f"""
     doc="Multinomial naive Bayes language-ID trained on a doc_id split "
     "of the corpus: confusion matrix over the held-out documents, "
     "scores truncated to DECIMAL(25,6) per term so the argmax is exact.",
-    tags=("ml", "naive-bayes", "langid"),
 )
 def q_ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of a self-trained multinomial NB language classifier

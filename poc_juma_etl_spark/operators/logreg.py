@@ -264,7 +264,6 @@ from ..plans.queries import register  # noqa: E402  (after the helpers it wraps)
     "approximate convergence. Scale shape: K passes over a 4-int "
     "projection, no shuffle wider than the aggregation partial-merge, "
     "driver state = the weight vector.",
-    tags=("ml", "training", "fixed-point", "gradient-descent"),
 )
 def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return logreg_gd(spark, sf_dir)

@@ -231,7 +231,6 @@ def cdc_apply(
     "outer key join. The base side is never sorted or windowed, so the "
     "fold is a single join at any snapshot size — the log-consumer "
     "pattern next to merge_upsert/scd2.",
-    tags=("etl", "cdc", "merge"),
 )
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table

@@ -230,7 +230,6 @@ MP3_ORACLE = mp3_oracle_sql()
     doc="MPEG-1 Layer III frame-header walk: frame count, byte total, "
     "bitrate sum, sample rate, duration and VBR flag per document, "
     "parsed inside an Arrow batch.",
-    tags=("multimodal", "mp3", "audio"),
 )
 def q_multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -254,7 +253,6 @@ MP3_FILE_ORACLE = mp3_oracle_sql(
     oracle=MP3_FILE_ORACLE,
     doc="One .mp3 file per document on disk read back through binaryFile "
     "and probed with the same frame walk.",
-    tags=("multimodal", "mp3", "e2e"),
 )
 def etl_mp3_file_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end proof the frame walk applies verbatim to real FILES: one

@@ -181,7 +181,6 @@ def media_features(df: DataFrame) -> DataFrame:
     "payload makes the stub's byte checksum a SQL codepoint sum, so this "
     "Python-kernel pipeline is value-hash-gated like the frame sampler "
     "(the float feature stripes stay pinned by tests/test_m4_operators.py).",
-    tags=("multimodal", "pandas-udf"),
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -271,7 +270,6 @@ def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "shuffle, decode parallelism = partition count. The ASCII fixture "
     "payload lets DuckDB replicate the byte slicing in SQL, so this "
     "Python-kernel operator is value-hash-gated, not rows-only.",
-    tags=("multimodal", "pandas-udf", "frames"),
 )
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -332,7 +330,6 @@ def resize_items(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "kernel). Embarrassingly parallel, no shuffle; the ASCII fixture "
     "payload lets DuckDB replicate the subsample in SQL, so the resize "
     "kernel is value-hash-gated rather than rows-only.",
-    tags=("multimodal", "pandas-udf", "resize"),
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -2042,7 +2039,6 @@ def jpeg_roundtrip_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     "installed, takes over via the same decode_real dispatch (the "
     "stats are identical either way). Scale shape: one narrow Arrow map, "
     "decode parallelism = partition count, like the PNG/WAV gate.",
-    tags=("multimodal", "pandas-udf", "decode", "jpeg"),
 )
 def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -2140,7 +2136,6 @@ def jpeg420_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "just the entropy decode. Scale shape: one narrow Arrow map over "
     "doc_id, decode parallelism = partition count, zero shuffles before "
     "the final sort.",
-    tags=("multimodal", "pandas-udf", "decode", "jpeg"),
 )
 def q_multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -2272,7 +2267,6 @@ def decode_media(df: DataFrame) -> DataFrame:
     "hash-fails. Both kernels are narrow maps: decode parallelism is "
     "partition count, the 100 TB shape. Pillow, when installed, replaces "
     "the stdlib PNG path and adds JPEG (decode_real).",
-    tags=("multimodal", "pandas-udf", "decode"),
 )
 def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -2333,7 +2327,6 @@ N_BINFILES = 200
     "into an Arrow-batched decode map — with the whole path gated, not "
     "just the kernel. Scan parallelism = file splits; the decode map is "
     "narrow.",
-    tags=("etl", "multimodal", "source", "binaryfile"),
 )
 def etl_binaryfile_decode_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -2495,7 +2488,6 @@ def image_ahash(df: DataFrame) -> DataFrame:
     "unfilter, blocking, or the comparison hash-fails. Hash emitted as a "
     "64-char bit string: portable across engines (no signed bit-63 "
     "trap), SQL-joinable, and Hamming-comparable via per-char ops.",
-    tags=("multimodal", "dedup", "phash", "pandas-udf"),
 )
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -2638,7 +2630,6 @@ def jpeg_prog_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "never silently degrade to the baseline path. Scale shape: one "
     "narrow Arrow map over doc_id, decode parallelism = partition "
     "count, zero shuffles before the final sort.",
-    tags=("multimodal", "pandas-udf", "decode", "jpeg", "progressive"),
 )
 def q_multimodal_jpeg_prog_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread

@@ -111,7 +111,6 @@ def string_date_between(col: Column | str, start: str, end: str) -> Column:
     "(reference utils.py:300-307). dtmovimento round-trips a real timestamp "
     "through string parse+format; dtcadastro coerces an unparseable string "
     "to null, matching pd.to_datetime(errors='coerce').",
-    tags=("etl", "normalize"),
 )
 def etl_normalize(spark, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
@@ -142,7 +141,6 @@ def etl_normalize(spark, sf_dir: str) -> DataFrame:
     doc="P4/S2 parity: the reference's day-granular string-date BETWEEN "
     "predicate (DELETE at utils.py:266-269; source pushdown payload at "
     "utils.py:177-183) as a Catalyst filter.",
-    tags=("etl", "filter"),
 )
 def etl_filter_range(spark, sf_dir: str) -> DataFrame:
     from ..catalog import load_table

@@ -203,7 +203,6 @@ from ..plans.queries import register  # noqa: E402  (after the helpers it wraps)
     "step trace (energy, max-gradient, all 64 components per step). "
     "Directional correctness vs a float eigensolver is pinned in "
     "tests/test_pca.py (|cos| > 0.99 on a planted-spike fixture).",
-    tags=("ml", "pca", "fixed-point", "vectors"),
 )
 def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pca_power_iteration(spark, sf_dir)

@@ -158,29 +158,6 @@ def pq_encode(
     return df.withColumn(out_col, codes)
 
 
-def pq_query_luts(
-    df: DataFrame, centroids: Centroids, vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """Add ``luts`` = array<array<double>>: LUT[m][k] = ||q_m − c_{m,k}||²,
-    computed in Catalyst from the centroid literal."""
-    m = len(centroids)
-    lits = _cent_lit(centroids)
-    v = F.col(vec_col).cast("array<double>")
-
-    def _lut_for(sv):
-        # single-parameter lambda on purpose: a second parameter would make
-        # PySpark pass the array index instead of closing over ``sv``
-        return lambda c: _sq_dist(sv, c)
-
-    luts = F.array(
-        *[
-            F.transform(F.element_at(lits, mi + 1), _lut_for(sv))
-            for mi, sv in enumerate(_subvectors(v, dim, m))
-        ]
-    )
-    return df.withColumn("luts", luts)
-
-
 @register(
     "q_ann_pq_adc",
     oracle=f"""
@@ -238,7 +215,6 @@ def pq_query_luts(
     "int64 components, exact in both engines, so the top-k hash-matches the "
     "DuckDB oracle. Corpus side is one codegen encode map + a broadcast of "
     "the 10-query LUT table — no shuffle grows with corpus size.",
-    tags=("similarity", "ann", "pq"),
 )
 def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -447,7 +423,6 @@ def _pq_lloyd_oracle() -> str:
     "(m,code,pos)-keyed shuffle with map-side partials; only M×K×(D/M) "
     "integers ever reach the driver. The float-centroid trainer (pq_fit) "
     "remains the production path, pinned by tests/test_pq.py.",
-    tags=("similarity", "ann", "pq", "kmeans", "iterative"),
 )
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -694,7 +669,6 @@ NPROBE = 2
     "shuffles on corpus size; the probe table is queries×nprobe rows and "
     "rides a broadcast into the candidate join. Deterministic seeded "
     "codebooks keep the whole index int-exact and SQL-oracled.",
-    tags=("similarity", "ann", "ivf", "pq"),
 )
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -883,7 +857,6 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroid from an array-of-arrays literal in-row; nothing per-vector "
     "reaches the driver. All residual arithmetic is int64-exact, so the "
     "full composed index hash-matches the oracle.",
-    tags=("similarity", "ann", "ivf", "pq", "residual"),
 )
 def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W

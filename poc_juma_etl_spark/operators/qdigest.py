@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..plans.queries import register
 
 B = 20  # domain bits: values in [0, 2^20); o_totalprice dollars < ~600k
 K = 1024  # compression factor: sigma = n DIV K, rank error <= B*n/K (~2% of n)
@@ -106,64 +107,6 @@ def qdigest_quantiles(
                 break
         out.append((p, est))
     return out
-
-
-def q_sketch_quantile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders").selectExpr(f"{VALUE_EXPR} AS v")
-    # leaf histogram: ONE aggregation over the fact table; everything after
-    # operates on (at most) domain-sized node tables
-    leaves = o.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    return digest_result(spark, leaves)
-
-
-def digest_result(spark: SparkSession, leaves: DataFrame) -> DataFrame:
-    """The digest build + quantile query over a (v, cnt) leaf histogram —
-    shared by the batch gate above and the streaming twin
-    (streaming/quantile.py), whose gate is exactly this output computed
-    from an incrementally-maintained histogram.
-
-    The tree covers EXACTLY [0, 2^B): an out-of-domain value would land
-    its leaf id outside every level pass (silently dropped mass) or, if
-    negative, collide with internal-node ids — so the domain is enforced
-    here at ingestion and violations fail loudly.
-
-    Build placement (round-12 recut, measured): the histogram is DOMAIN-
-    bounded — at most 2^B = 1M (v, cnt) rows, ~16 MB — so after the one
-    distributed aggregation the build runs driver-side via qdigest_build,
-    the same bounded-collect posture the quantile query below has always
-    used (and KMV's k-row set algebra). The previous level-synchronous
-    Spark loop computed the identical digest (it is a pure function of
-    the histogram, pinned in tests) but paid 20 scheduled jobs + 20
-    lineage checkpoints of fixed overhead, making the query ~sf-invariant
-    slow; the interleaved A/B measured the driver build at 4.7x (sf0.1)
-    to 6.2x (sf1) with values identical (tools/ab_qdigest_driverbuild.py).
-    Mergeability at 1000 executors is unchanged: partitions sketch
-    independently and merge by histogram/node-list concatenation + one
-    rebuild (tests pin the merge property)."""
-    rows = leaves.select("v", "cnt").collect()  # <= 2^B rows by contract
-    null_mass = sum(int(r.cnt) for r in rows if r.v is None)
-    if null_mass:
-        raise ValueError(
-            f"q-digest domain violation: {null_mass} rows carry a "
-            "NULL value — filter or impute before sketching"
-        )
-    hist = [(int(r.v), int(r.cnt)) for r in rows]
-    n = sum(c for _, c in hist)
-    if hist:
-        lo = min(v for v, _ in hist)
-        hi = max(v for v, _ in hist)
-        if lo < 0 or hi >= (1 << B):
-            raise ValueError(
-                f"q-digest domain violation: values must lie in [0, {1 << B}) "
-                f"but the histogram spans [{lo}, {hi}]"
-            )
-    sigma = n // K
-    digest = qdigest_build(hist, n)
-    rows_out = [
-        (p, est, n, len(digest), sigma)
-        for p, est in qdigest_quantiles(digest, n)
-    ]
-    return spark.createDataFrame(rows_out, OUT_COLS).orderBy("pct")
 
 
 def qdigest_oracle_sql() -> str:
@@ -226,17 +169,66 @@ def qdigest_oracle_sql() -> str:
     )
 
 
-def _register_qdigest_gate() -> None:
-    from ..plans.queries import register
+@register(
+    "q_sketch_quantile_digest",
+    oracle=qdigest_oracle_sql(),
+    doc="Deterministic mergeable q-digest quantile sketch: digest "
+    "CONTENTS replay bit-for-bit in DuckDB's unrolled CTE chain; "
+    "typed domain guard on [0, 2^20).",
+)
+def q_sketch_quantile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders").selectExpr(f"{VALUE_EXPR} AS v")
+    # leaf histogram: ONE aggregation over the fact table; everything after
+    # operates on (at most) domain-sized node tables
+    leaves = o.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
+    return digest_result(spark, leaves)
 
-    register(
-        "q_sketch_quantile_digest",
-        oracle=qdigest_oracle_sql(),
-        doc="Deterministic mergeable q-digest quantile sketch: digest "
-        "CONTENTS replay bit-for-bit in DuckDB's unrolled CTE chain; "
-        "typed domain guard on [0, 2^20).",
-        tags=("sketch", "quantile"),
-    )(q_sketch_quantile_digest)
 
+def digest_result(spark: SparkSession, leaves: DataFrame) -> DataFrame:
+    """The digest build + quantile query over a (v, cnt) leaf histogram —
+    shared by the batch gate above and the streaming twin
+    (streaming/quantile.py), whose gate is exactly this output computed
+    from an incrementally-maintained histogram.
 
-_register_qdigest_gate()
+    The tree covers EXACTLY [0, 2^B): an out-of-domain value would land
+    its leaf id outside every level pass (silently dropped mass) or, if
+    negative, collide with internal-node ids — so the domain is enforced
+    here at ingestion and violations fail loudly.
+
+    Build placement (round-12 recut, measured): the histogram is DOMAIN-
+    bounded — at most 2^B = 1M (v, cnt) rows, ~16 MB — so after the one
+    distributed aggregation the build runs driver-side via qdigest_build,
+    the same bounded-collect posture the quantile query below has always
+    used (and KMV's k-row set algebra). The previous level-synchronous
+    Spark loop computed the identical digest (it is a pure function of
+    the histogram, pinned in tests) but paid 20 scheduled jobs + 20
+    lineage checkpoints of fixed overhead, making the query ~sf-invariant
+    slow; the interleaved A/B measured the driver build at 4.7x (sf0.1)
+    to 6.2x (sf1) with values identical (tools/ab_qdigest_driverbuild.py).
+    Mergeability at 1000 executors is unchanged: partitions sketch
+    independently and merge by histogram/node-list concatenation + one
+    rebuild (tests pin the merge property)."""
+    rows = leaves.select("v", "cnt").collect()  # <= 2^B rows by contract
+    null_mass = sum(int(r.cnt) for r in rows if r.v is None)
+    if null_mass:
+        raise ValueError(
+            f"q-digest domain violation: {null_mass} rows carry a "
+            "NULL value — filter or impute before sketching"
+        )
+    hist = [(int(r.v), int(r.cnt)) for r in rows]
+    n = sum(c for _, c in hist)
+    if hist:
+        lo = min(v for v, _ in hist)
+        hi = max(v for v, _ in hist)
+        if lo < 0 or hi >= (1 << B):
+            raise ValueError(
+                f"q-digest domain violation: values must lie in [0, {1 << B}) "
+                f"but the histogram spans [{lo}, {hi}]"
+            )
+    sigma = n // K
+    digest = qdigest_build(hist, n)
+    rows_out = [
+        (p, est, n, len(digest), sigma)
+        for p, est in qdigest_quantiles(digest, n)
+    ]
+    return spark.createDataFrame(rows_out, OUT_COLS).orderBy("pct")

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..plans.queries import register
 from .logreg import LR_DEN, WS, _p_expr, _update
 
 STEPS = 6
@@ -110,29 +111,6 @@ def _projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train, score, filter, report: per-language document counts, kept
-    counts at p >= 1/2, agreement with the weak rule, and the exact integer
-    score mass — the whole pipeline hash-comparable across engines."""
-    weights = train_quality_weights(spark, sf_dir)
-    feats = _projection(spark, sf_dir)
-    p = _p_expr(weights, "DIV", qf_features("DIV"))
-    return (
-        feats.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.expr(
-                f"SUM(CASE WHEN ({p}) >= {WS // 2} THEN 1 ELSE 0 END)"
-            ).cast("long").alias("n_kept"),
-            F.expr(
-                f"SUM(CASE WHEN (({p}) >= {WS // 2}) = (y = 1) THEN 1 ELSE 0 END)"
-            ).cast("long").alias("n_agree"),
-            F.expr(f"SUM({p})").cast("long").alias("sum_score"),
-        )
-        .orderBy("lang")
-    )
-
-
 def _qf_feats_cte() -> str:
     """The documents-table feature projection as the training chain's
     ``feats`` CTE (keeps ``lang`` for the per-language rollup)."""
@@ -174,43 +152,52 @@ def quality_filter_oracle_sql(steps: int = STEPS) -> str:
     )
 
 
+@register(
+    "q_quality_filter",
+    oracle=quality_filter_oracle_sql(),
+    doc="Model-based corpus quality filtering end to end (the "
+    "CCNet / fastText-filter pipeline shape): TRAIN a fixed-point "
+    "logistic-regression classifier on weak rule labels over the "
+    "documents table (6 full-batch GD steps, each one column-pruned "
+    "scan + one map-side-combined aggregation, weights driver-side "
+    "as literals), SCORE the corpus with the learned weights in one "
+    "in-row expression, FILTER at p >= 1/2, and report per-language "
+    "admission statistics. Integer fixed-point throughout, so the "
+    "DuckDB oracle replays training AND scoring as an unrolled CTE "
+    "chain — full value-hash equality. The en*length interaction "
+    "feature lets squared-loss GD learn the conjunction rule "
+    "(without it training parks on the majority plateau — module "
+    "docstring). Scale: K+1 passes over a 3-column projection, no "
+    "shuffle beyond the per-language aggregation.",
+)
+def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train, score, filter, report: per-language document counts, kept
+    counts at p >= 1/2, agreement with the weak rule, and the exact integer
+    score mass — the whole pipeline hash-comparable across engines."""
+    weights = train_quality_weights(spark, sf_dir)
+    feats = _projection(spark, sf_dir)
+    p = _p_expr(weights, "DIV", qf_features("DIV"))
+    return (
+        feats.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.expr(
+                f"SUM(CASE WHEN ({p}) >= {WS // 2} THEN 1 ELSE 0 END)"
+            ).cast("long").alias("n_kept"),
+            F.expr(
+                f"SUM(CASE WHEN (({p}) >= {WS // 2}) = (y = 1) THEN 1 ELSE 0 END)"
+            ).cast("long").alias("n_agree"),
+            F.expr(f"SUM({p})").cast("long").alias("sum_score"),
+        )
+        .orderBy("lang")
+    )
+
+
 # ---------------------------------------------------------------------------
 # PR-curve / threshold-sweep variant (round-9 verdict #8: pin the score
 # CALIBRATION shape, not just the fixed-threshold admission)
 
 N_BINS = 8  # score bins: LEAST(p DIV (WS/8), 7) — p spans [0, WS]
-
-
-def q_quality_filter_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-score-bin admission sweep with the trained weights: for every
-    bin, the document and positive-label counts, plus the cumulative
-    admitted/true-positive counts if the threshold were set at that bin's
-    lower edge (descending cumulative = the precision/recall curve's
-    integer numerators). The per-bin aggregation is one scan; the
-    cumulative runs driver-side over <= N_BINS rows (the bounded-collect
-    idiom — a windowless plan, since a global window would serialize the
-    corpus through one task and the registry-wide plan sweep bans it)."""
-    weights = train_quality_weights(spark, sf_dir)
-    feats = _projection(spark, sf_dir)
-    p = _p_expr(weights, "DIV", qf_features("DIV"))
-    per_bin = (
-        feats.selectExpr(f"LEAST(({p}) DIV {WS // N_BINS}, {N_BINS - 1}) AS bin", "y")
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("y").cast("long").alias("n_pos"),
-        )
-        .collect()
-    )
-    stats = sorted(((int(r.bin), int(r.n_docs), int(r.n_pos)) for r in per_bin),
-                   reverse=True)
-    rows, adm, tp = [], 0, 0
-    for b, nd, np_ in stats:
-        adm += nd
-        tp += np_
-        rows.append((b, nd, np_, adm, tp))
-    schema = "bin long, n_docs long, n_pos long, n_admitted long, n_tp long"
-    return spark.createDataFrame(rows, schema).orderBy("bin")
 
 
 def quality_filter_pr_oracle_sql(steps: int = STEPS) -> str:
@@ -243,41 +230,45 @@ def quality_filter_pr_oracle_sql(steps: int = STEPS) -> str:
     )
 
 
-def _register_quality_gates() -> None:
-    from ..plans.queries import register
-
-    register(
-        "q_quality_filter",
-        oracle=quality_filter_oracle_sql(),
-        doc="Model-based corpus quality filtering end to end (the "
-        "CCNet / fastText-filter pipeline shape): TRAIN a fixed-point "
-        "logistic-regression classifier on weak rule labels over the "
-        "documents table (6 full-batch GD steps, each one column-pruned "
-        "scan + one map-side-combined aggregation, weights driver-side "
-        "as literals), SCORE the corpus with the learned weights in one "
-        "in-row expression, FILTER at p >= 1/2, and report per-language "
-        "admission statistics. Integer fixed-point throughout, so the "
-        "DuckDB oracle replays training AND scoring as an unrolled CTE "
-        "chain — full value-hash equality. The en*length interaction "
-        "feature lets squared-loss GD learn the conjunction rule "
-        "(without it training parks on the majority plateau — module "
-        "docstring). Scale: K+1 passes over a 3-column projection, no "
-        "shuffle beyond the per-language aggregation.",
-        tags=("ml", "quality", "filter", "training"),
-    )(q_quality_filter)
-    register(
-        "q_quality_filter_pr_curve",
-        oracle=quality_filter_pr_oracle_sql(),
-        doc="Threshold sweep over the trained quality filter's score "
-        "bins: per-bin doc/positive counts plus descending-cumulative "
-        "admitted/true-positive counts — the integer numerators of the "
-        "precision/recall curve at every candidate threshold, pinning "
-        "the score CALIBRATION shape, not just one operating point. "
-        "Same training chain as q_quality_filter; the sweep adds one "
-        "groupBy over 8 bins and a driver-side cumulative over <= 8 "
-        "rows (bounded collect — no global window).",
-        tags=("ml", "quality", "filter", "eval"),
-    )(q_quality_filter_pr_curve)
-
-
-_register_quality_gates()
+@register(
+    "q_quality_filter_pr_curve",
+    oracle=quality_filter_pr_oracle_sql(),
+    doc="Threshold sweep over the trained quality filter's score "
+    "bins: per-bin doc/positive counts plus descending-cumulative "
+    "admitted/true-positive counts — the integer numerators of the "
+    "precision/recall curve at every candidate threshold, pinning "
+    "the score CALIBRATION shape, not just one operating point. "
+    "Same training chain as q_quality_filter; the sweep adds one "
+    "groupBy over 8 bins and a driver-side cumulative over <= 8 "
+    "rows (bounded collect — no global window).",
+)
+def q_quality_filter_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-score-bin admission sweep with the trained weights: for every
+    bin, the document and positive-label counts, plus the cumulative
+    admitted/true-positive counts if the threshold were set at that bin's
+    lower edge (descending cumulative = the precision/recall curve's
+    integer numerators). The per-bin aggregation is one scan; the
+    cumulative runs driver-side over <= N_BINS rows (the bounded-collect
+    idiom — a windowless plan, since a global window would serialize the
+    corpus through one task and the registry-wide plan sweep bans it)."""
+    weights = train_quality_weights(spark, sf_dir)
+    feats = _projection(spark, sf_dir)
+    p = _p_expr(weights, "DIV", qf_features("DIV"))
+    per_bin = (
+        feats.selectExpr(f"LEAST(({p}) DIV {WS // N_BINS}, {N_BINS - 1}) AS bin", "y")
+        .groupBy("bin")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("y").cast("long").alias("n_pos"),
+        )
+        .collect()
+    )
+    stats = sorted(((int(r.bin), int(r.n_docs), int(r.n_pos)) for r in per_bin),
+                   reverse=True)
+    rows, adm, tp = [], 0, 0
+    for b, nd, np_ in stats:
+        adm += nd
+        tp += np_
+        rows.append((b, nd, np_, adm, tp))
+    schema = "bin long, n_docs long, n_pos long, n_admitted long, n_tp long"
+    return spark.createDataFrame(rows, schema).orderBy("bin")

@@ -43,7 +43,6 @@ def sample_bucket(key: Column) -> Column:
     "of 1000. Identical membership in every engine/run/partitioning, and a "
     "5% sample (buckets < 50) is a strict subset — the reproducible-subset "
     "contract LLM data pipelines need.",
-    tags=("sampling",),
 )
 def q_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -72,7 +71,6 @@ def q_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Stratified deterministic sampling: 30% for labels 0-4, 10% for "
     "labels 5-9 — per-stratum rates are just per-stratum bucket thresholds "
     "over the same stable hash (up-/down-sampling classes reproducibly).",
-    tags=("sampling", "stratified"),
 )
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -104,7 +102,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is integer-exact — hash_bucket * cnt < 10000 * min_cnt — so membership "
     "is reproducible bit-for-bit in any engine. One tiny per-lang count "
     "aggregate broadcast back over the corpus; no sort, no collect.",
-    tags=("sampling", "balance", "lang"),
 )
 def q_sample_language_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -138,7 +135,6 @@ def q_sample_language_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     "correctly-rounded, so membership is still bit-reproducible across "
     "engines. Same shape as the balanced sampler: tiny per-lang counts "
     "broadcast over one corpus scan.",
-    tags=("sampling", "temperature", "lang"),
 )
 def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -186,7 +182,6 @@ SPLIT_VAL_PCT = 90
     "hash as the sampling family: reproducible across engines, runs and "
     "cluster sizes, and rows never move between splits when the corpus "
     "grows. Pure map + one aggregate — linear at any scale.",
-    tags=("sampling", "split", "leakage"),
 )
 def q_sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import tokens
@@ -243,7 +238,6 @@ K_PER_CLASS = 20  # balanced-subset size per language
     "few-shot-pool construction primitive; rate-based stratified sampling "
     "in this module scales proportionally instead). One shuffle on the "
     "class key; per-class ranking never sees another class's rows.",
-    tags=("sampling", "balanced", "split"),
 )
 def q_sample_k_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
@@ -310,7 +304,6 @@ MIX_W_BUCKETS = 4
     "membership is bit-identical across engines. Scale shape: one window "
     "cumsum per source plus two 1-row broadcast aggregates — no shuffle "
     "grows beyond the corpus token-count scan.",
-    tags=("sampling", "mixture"),
 )
 def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
@@ -382,7 +375,6 @@ TOKEN_BUDGET = 12_000
     "per-partition TOTALS (one row per partition) reach the driver to "
     "become broadcast offsets — never a single-partition global window, "
     "which would serialize the whole corpus through one task.",
-    tags=("sampling", "curation", "budget"),
 )
 def q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import tokens
@@ -465,7 +457,6 @@ def budget_select(spark: SparkSession, scored: DataFrame, budget: int) -> DataFr
     "quality-weighted mixture pattern for training-data curation. "
     "expected_k (sum of thresholds, in 1/1000 units) doubles as the "
     "analytic check that realized counts track assigned weights.",
-    tags=("sampling", "weighted"),
 )
 def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -511,7 +502,6 @@ SHUFFLE_SHARDS = 8
     "with per-shard local order — the keys, not the sort, are the "
     "contract). At 100 TB: same expression, epochs as a literal array, "
     "shard count = reader parallelism.",
-    tags=("sampling", "shuffle", "training-data"),
 )
 def q_sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -70,7 +70,6 @@ N_QUERIES = 10  # demo query set: vec_id < 10
     "set against every vector, exact quantized cosine, window top-k with "
     "deterministic tie-break. One corpus scan per query batch — the ANN "
     "correctness baseline.",
-    tags=("similarity", "ann", "topk"),
 )
 def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _quantized(spread(load_table(spark, sf_dir, "embeddings")), "v")
@@ -124,7 +123,6 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from the query's bucket (equi-join on bucket id — sub-linear scored "
     "pairs), then exact quantized cosine re-ranks. The 100 TB path: the "
     "bucket join shuffles ~1/2^planes of the pairs brute-force would.",
-    tags=("similarity", "ann", "lsh"),
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _quantized(spread(load_table(spark, sf_dir, "embeddings")), "v")
@@ -187,7 +185,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "force while recall rises sharply. Only the tiny query side fans out "
     f"{SRP_PLANES + 1}x; the corpus is hashed once — the property that "
     "matters when the corpus is the 100 TB side.",
-    tags=("similarity", "ann", "lsh", "multiprobe"),
 )
 def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _quantized(spread(load_table(spark, sf_dir, "embeddings")), "v")
@@ -247,7 +244,6 @@ RANGE_N_QUERIES = 50
     "the top-k queries (dedup wants 'all near-dups', not 'best 5'). Same "
     "sub-linear candidate shape as q_ann_lsh_topk; no window at all, since "
     "range search needs no ranking — just the threshold filter.",
-    tags=("similarity", "ann", "range-search"),
 )
 def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _quantized(spread(load_table(spark, sf_dir, "embeddings")), "v")

@@ -251,7 +251,6 @@ TAR_ORACLE = tar_oracle_sql()
     oracle=TAR_ORACLE,
     doc="TAR / WebDataset sample ingestion: ustar member walk per "
     "document, member byte counts and text body pinned by portable md5.",
-    tags=("multimodal", "tar", "source"),
 )
 def q_multimodal_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -278,7 +277,6 @@ TAR_SHARD_ORACLE = tar_oracle_sql(
     oracle=TAR_SHARD_ORACLE,
     doc="Multi-sample .tar shard files on disk (the WebDataset layout) "
     "read back through binaryFile and split into per-document samples.",
-    tags=("multimodal", "tar", "e2e"),
 )
 def etl_tar_shard_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end over real shard FILES (the WebDataset layout): documents

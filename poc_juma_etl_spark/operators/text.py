@@ -71,7 +71,6 @@ SQL_MD5_LONG = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
     """,
     doc="Token counting: whitespace tokens, vocabulary size, char totals, "
     "type-token ratio. Array ops stay in-row — zero shuffle at any scale.",
-    tags=("text", "tokens"),
 )
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -116,7 +115,6 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Quality scoring: stopword ratio, lexical diversity, length gate, "
     "combined into a fixed-weight score (the C4/Gopher-style rule family). "
     "Fixed double op order keeps both engines bitwise-equal.",
-    tags=("text", "quality"),
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -169,7 +167,6 @@ def _lang_score_sql(lang: str) -> str:
     doc="Language ID: marker-lexicon hit counts per language, argmax with a "
     "fixed tie-break order (en>es>fr>de>zh). The scoring plumbing of a "
     "fastText-style classifier with the model swapped for a lexicon.",
-    tags=("text", "langid"),
 )
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -215,7 +212,6 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Document fingerprinting: exact content md5 + a 1-permutation "
     "MinHash over 3-token shingles (the rolling-window fingerprint family; "
     "full k-permutation signatures in operators/dedup.py).",
-    tags=("text", "fingerprint"),
 )
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -305,7 +301,6 @@ def _spark_pii_text() -> Column:
     "token key, so a 100 TB corpus never broadcasts its vocabulary. Log "
     "values are decimal-summed per doc, making the float aggregation "
     "order-independent across engines.",
-    tags=("text", "quality", "lm"),
 )
 def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -361,7 +356,6 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single-sequence spill at each shard boundary is the standard "
     "approximation). Deterministic: offsets are integer sums ordered by "
     "the unique doc_id.",
-    tags=("text", "packing"),
 )
 def q_text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -405,7 +399,6 @@ def q_text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "regexp_count/regexp_replace — JVM-side, zero shuffle, linear at 100 TB. "
     "PII is seeded deterministically from doc_id (the corpus has none), "
     "identically in both engines, so the gate checks the scrub itself.",
-    tags=("text", "pii", "cleaning"),
 )
 def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -457,7 +450,6 @@ def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minimum stopword hits, lexical-diversity floor — each a per-row "
     "Catalyst expression, combined into a keep flag. No shuffle; the "
     "document-filter stage of a 100 TB curation run.",
-    tags=("text", "quality", "gopher"),
 )
 def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -530,7 +522,6 @@ def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Per-doc mode needs a count-per-term: explode -> two-level groupBy keyed "
     "on (doc_id, term) -> max. Shuffles partition by doc_id+term, so a 100 TB "
     "corpus spreads evenly; no driver-side state.",
-    tags=("text", "repetition", "quality"),
 )
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -605,7 +596,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sketch, same call site) — the band values shift by the sketch error, "
     "the plan shape is identical. The 2-value band broadcasts back over "
     "the corpus — one pass, no sort of the big side.",
-    tags=("text", "filter", "percentile"),
 )
 def q_text_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -644,7 +634,6 @@ def q_text_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bigram key with map-side partial counts, then a global top-k that "
     "compiles to TakeOrderedAndProject (never a full sort). Deterministic "
     "tie-break on the bigram itself.",
-    tags=("text", "ngrams", "stats"),
 )
 def q_text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -757,7 +746,6 @@ def winnow_fingerprints(d: DataFrame) -> DataFrame:
     "document-local, so the whole build runs IN-ROW (rolling min via "
     "zipped shifted slices) — a shuffle-free map at any scale; the only "
     "exchange is the small-file spread() guard.",
-    tags=("text", "fingerprint", "winnowing"),
 )
 def q_text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -806,7 +794,6 @@ VOCAB_SIZE = 100  # top-V tokens by corpus frequency
     "never a full sort) and broadcasts back over the corpus, so the big "
     "side streams through one shuffle on the token key and one map-side "
     "join at any scale.",
-    tags=("text", "vocab", "tokens"),
 )
 def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -874,7 +861,6 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "values are decimal-summed per doc: aggregation order cannot change "
     "the result, and sub-1e-6 libm ulp differences between engines round "
     "away.",
-    tags=("text", "quality", "lm"),
 )
 def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shape note (measured 12.8s → ~1s at sf0.1): the naive plan joins the
@@ -971,7 +957,6 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the composite key; each entropy term is a deterministic double op "
     "and terms are decimal-summed, so aggregation order cannot move the "
     "result. Self-contained per doc — no corpus table, linear at 100 TB.",
-    tags=("text", "quality", "entropy"),
 )
 def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1041,7 +1026,6 @@ def _spark_bpe_text() -> Column:
     "tokenizer-cost estimator run before committing a corpus to training. "
     "Punctuation and contractions are seeded deterministically (the "
     "fixture is plain words). Pure regexp_count, JVM-side, zero shuffle.",
-    tags=("text", "tokens", "bpe"),
 )
 def q_text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1090,7 +1074,6 @@ def q_text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(sort_array over (doc_id, text) structs ⇔ string_agg ORDER BY), so "
     "both engines build byte-identical sequences. One shuffle on the "
     "shard key — the final tokenize-and-pack write of a 100 TB corpus.",
-    tags=("text", "packing"),
 )
 def q_text_concat_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
@@ -1182,7 +1165,6 @@ def _spark_html_text() -> Column:
     "deterministically (the corpus is plain text) so the gate checks the "
     "strip itself. Pure chained regexp_replace in the regex subset Java "
     "and RE2 evaluate identically — JVM-side, zero shuffle, linear.",
-    tags=("text", "cleaning", "html"),
 )
 def q_text_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1244,7 +1226,6 @@ CHUNK_STRIDE = 48  # 16-token overlap between consecutive chunks
     "size, chunk identity pinned by the md5 of the joined window so the "
     "oracle verifies exact token boundaries, not just counts. Chunks then "
     "feed the embedding/ANN operators the same way documents do.",
-    tags=("text", "chunking", "rag"),
 )
 def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
@@ -1316,7 +1297,6 @@ BOILERPLATE_PREFIX_TOKENS = 8
     "100 TB the bp side stays domain-sized (repeated templates per source), "
     "so AQE broadcasts it; per-source doc counts ride the same aggregate — "
     "no window over the corpus, no second scan.",
-    tags=("text", "cleanup", "dedup"),
 )
 def q_text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1427,7 +1407,6 @@ DECONTAM_BENCH_SOURCE = "src0"  # stand-in eval set: one source's documents
     "the join carries NO forced broadcast hint — AQE picks broadcast vs "
     "shuffle-hash by measured size. The double explode runs over MATCHED "
     "positions only, which contamination keeps rare by definition.",
-    tags=("text", "decontamination", "training-data"),
 )
 def q_text_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1554,7 +1533,6 @@ ZIPF_PROFILE_ORACLE = """
     doc="Corpus frequency spectrum: unigram and bigram types bucketed by "
     "floor(log2(frequency)), with the hapax band and exact per-million "
     "vocabulary shares.",
-    tags=("text", "stats", "zipf"),
 )
 def q_text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-spectrum profile of the corpus's unigram AND bigram

@@ -45,7 +45,6 @@ class NgramUDTF:
     doc="Python UDTF (table function): one document row fans out to "
     "positioned 3-gram rows from arbitrary Python; the oracle is the "
     "pure-SQL shingle construction — UDTF semantics, not plumbing.",
-    tags=("udtf", "text"),
 )
 def q_udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").filter(

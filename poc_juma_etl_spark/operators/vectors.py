@@ -147,7 +147,6 @@ def _seed_cell_expr(vecs: DataFrame) -> str:
     "matrix at web scale (cells there come from trained k-means, here from "
     "the fixed seeds so the oracle can replay routing). Output is the full "
     "(vec_id, cell, kept) verdict map.",
-    tags=("similarity", "dedup", "semantic", "vectors"),
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -207,7 +206,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partial sums. (Exactness note: integer sums stay double-exact below "
     "2^53 ≈ 2^29 vectors per label; beyond that switch the final cast to "
     "DECIMAL like dsum.)",
-    tags=("vectors", "pooling", "centroid"),
 )
 def q_embedding_pool_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -265,7 +263,6 @@ def q_embedding_pool_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     "once at the end — bit-identical cross-engine with no per-row decimal "
     "rounding. Swapping in learned (trained) bounds changes only the stats "
     "CTE.",
-    tags=("vectors", "quantization", "compression"),
 )
 def q_vector_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -337,7 +334,6 @@ REPR_TOP = 3
     "bit-identical cross-engine. Scale: centroids are labels×dim rows "
     "broadcast back over the corpus; scoring is one narrow map; per-label "
     "top-k is a bounded window.",
-    tags=("vectors", "centroid", "curation", "topk"),
 )
 def q_class_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -426,7 +422,6 @@ N_ANCHORS = 50
     "one map-only corpus scan, two windowed top-1s over anchors×corpus "
     "scores, anchor-count-sized join after. Quantized-integer cosine ⇒ "
     "bit-identical cross-engine; ties break to the lower candidate id.",
-    tags=("vectors", "similarity", "triplet", "curation"),
 )
 def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -526,7 +521,6 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast onto the 2080-row triangle). int64 headroom: |x| <= 2^22 "
     "caps Σ x_i·x_j at 2^44·N — exact to N ~ 2^19 vectors; beyond that "
     "the sums switch to DECIMAL(38,0) partials (the decimal-cast rule).",
-    tags=("vectors", "gram", "pca", "stats"),
 )
 def q_embedding_gram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(load_table(spark, sf_dir, "embeddings"))

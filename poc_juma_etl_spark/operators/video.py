@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..plans.queries import register
 
 SAMPLE_EVERY = 2  # keep frames 0, 2, 4, ... (the frame-sample stride)
 
@@ -96,27 +97,6 @@ def _frames_bytes(doc_id: int, n: int, w: int, h: int) -> list[bytes]:
     frames[..., 2 : 3 * w : 3] = r
     flipped = frames[:, ::-1]  # bottom-up
     return [fr.tobytes() for fr in flipped]
-
-
-def _frame_bytes(doc_id: int, f: int, w: int, h: int) -> bytes:
-    """One frame (property sweeps / units); the encoder batches per clip."""
-    # frame index enters the formulas linearly, so frame f of an n-frame
-    # clip equals frame 0 of a clip whose constants absorb f — simplest
-    # exact form: slice the batched producer
-    import numpy as np
-
-    fx = np.arange(1)[:, None, None] + f
-    y = np.arange(h)[None, :, None]
-    x = np.arange(w)[None, None, :]
-    b = (3 * x + 7 * y + 11 * fx + doc_id) % 256
-    g = (5 * x + y + 2 * fx + 3 * doc_id) % 256
-    r = (x + 4 * y + 9 * fx + 7 * doc_id) % 256
-    stride_pad = (-3 * w) % 4
-    frame = np.zeros((1, h, 3 * w + stride_pad), dtype=np.uint8)
-    frame[..., 0 : 3 * w : 3] = b
-    frame[..., 1 : 3 * w : 3] = g
-    frame[..., 2 : 3 * w : 3] = r
-    return frame[0, ::-1].tobytes()
 
 
 def _chunk(fourcc: bytes, payload: bytes) -> bytes:
@@ -351,17 +331,6 @@ def frame_sample_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         yield pd.DataFrame(rows)
 
 
-def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import spread
-
-    # spread() (round-12, measured): one-partition fixture scan would run
-    # the AVI synth + frame-walk kernels on one core; no-op at scale
-    # (catalog.spread docstring)
-    d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
-    media = d.mapInPandas(synth_avi_kernel, schema="doc_id long, payload binary")
-    return media.mapInPandas(frame_sample_kernel, schema=OUT_SCHEMA).orderBy("doc_id")
-
-
 VIDEO_ORACLE = f"""
     WITH p AS (
       SELECT doc_id,
@@ -401,28 +370,28 @@ VIDEO_ORACLE = f"""
     """
 
 
-def _register_video_gate() -> None:
-    """Round-10 driver-gate registration (deferred to module end: the
-    oracle literal is defined below the query function)."""
-    from ..plans.queries import register
+@register(
+    "q_multimodal_video_frames",
+    oracle=VIDEO_ORACLE,
+    doc="VIDEO container decode + frame sampling over a REAL AVI "
+    "parser: a spec-valid uncompressed-DIB AVI (RIFF hdrl/movi/idx1) "
+    "is synthesized per document; an INDEPENDENT chunk-walk decoder "
+    "parses headers, enforces the 24bpp/BI_RGB contract, strips row "
+    "padding, flips bottom-up rows, cross-checks idx1 when present, "
+    "then every 2nd frame is sampled and reduced to integer features "
+    "— including a row-weighted sum that is deliberately "
+    "orientation-sensitive, so a missed bottom-up flip hash-fails. "
+    "The DuckDB oracle replays the closed-form frame content; a "
+    "flipped bit anywhere in encode, walk, stride strip, flip, or "
+    "sampling hash-fails. Scale shape: two Arrow-batched narrow "
+    "maps, decode parallelism = partition count.",
+)
+def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..catalog import spread
 
-    register(
-        "q_multimodal_video_frames",
-        oracle=VIDEO_ORACLE,
-        doc="VIDEO container decode + frame sampling over a REAL AVI "
-        "parser: a spec-valid uncompressed-DIB AVI (RIFF hdrl/movi/idx1) "
-        "is synthesized per document; an INDEPENDENT chunk-walk decoder "
-        "parses headers, enforces the 24bpp/BI_RGB contract, strips row "
-        "padding, flips bottom-up rows, cross-checks idx1 when present, "
-        "then every 2nd frame is sampled and reduced to integer features "
-        "— including a row-weighted sum that is deliberately "
-        "orientation-sensitive, so a missed bottom-up flip hash-fails. "
-        "The DuckDB oracle replays the closed-form frame content; a "
-        "flipped bit anywhere in encode, walk, stride strip, flip, or "
-        "sampling hash-fails. Scale shape: two Arrow-batched narrow "
-        "maps, decode parallelism = partition count.",
-        tags=("multimodal", "pandas-udf", "video", "decode"),
-    )(q_multimodal_video_frames)
-
-
-_register_video_gate()
+    # spread() (round-12, measured): one-partition fixture scan would run
+    # the AVI synth + frame-walk kernels on one core; no-op at scale
+    # (catalog.spread docstring)
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    media = d.mapInPandas(synth_avi_kernel, schema="doc_id long, payload binary")
+    return media.mapInPandas(frame_sample_kernel, schema=OUT_SCHEMA).orderBy("doc_id")

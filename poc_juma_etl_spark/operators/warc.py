@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..plans.queries import register
 from .text import SQL_MD5_LONG
 
 # fixture geometry: 1 warcinfo + (1 + doc_id % 3) response records; body
@@ -187,6 +188,52 @@ def warc_ingest_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         yield pd.DataFrame(rows)
 
 
+# closed-form replay: reconstruct each response body string and the HTTP +
+# WARC length accounting from the fixture formulas
+def warc_oracle_sql(doc_source: str = "documents") -> str:
+    return f"""
+    WITH d AS (
+      SELECT doc_id, {R_BASE} + doc_id % {R_MOD} AS n_resp FROM {doc_source}
+    ),
+    r AS (SELECT doc_id, n_resp, unnest(range(0, n_resp)) AS rr FROM d),
+    bodies AS (
+      SELECT doc_id, n_resp, rr,
+             repeat('page ' || doc_id || '-' || rr || ' ',
+                    {REP_BASE} + (doc_id + rr) % {REP_MOD}) AS body
+      FROM r
+    ),
+    per_resp AS (
+      SELECT doc_id, n_resp,
+             -- the record's Content-Length is the full HTTP message:
+             -- status line (17) + Content-Type header (26) +
+             -- 'Content-Length: ' (16) + digits + CRLF (2) + CRLF (2) + body
+             17 + 26 + 16 + length(CAST(length(body) AS VARCHAR)) + 2 + 2
+               + length(body) AS http_len,
+             {SQL_MD5_LONG.format(x="body")} AS bh
+      FROM bodies
+    )
+    SELECT doc_id,
+           CAST(MAX(n_resp) + 1 AS BIGINT) AS n_records,
+           CAST(MAX(n_resp) AS BIGINT) AS n_responses,
+           -- + the warcinfo record: 'software: poc-juma-etl-spark
+           -- fixture ' (37) + doc_id digits + CRLF (2)
+           CAST(SUM(http_len)
+                + 39 + length(CAST(MAX(doc_id) AS VARCHAR)) AS BIGINT)
+             AS total_content_length,
+           CAST(SUM(bh) AS BIGINT) AS body_hash_sum
+    FROM per_resp GROUP BY doc_id ORDER BY doc_id
+    """
+
+
+WARC_ORACLE = warc_oracle_sql()
+
+
+@register(
+    "q_multimodal_warc_ingest",
+    oracle=WARC_ORACLE,
+    doc="WARC/1.0 ingestion: independent record walk + nested "
+    "HTTP/1.1 parse; body content pinned by portable md5.",
+)
 def q_multimodal_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
 
@@ -253,6 +300,17 @@ def warc_file_ingest_kernel(
         yield pd.DataFrame(rows, columns=cols)
 
 
+WARC_FILE_ORACLE = warc_oracle_sql(
+    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_WARC_DOCS}) docs"
+)
+
+
+@register(
+    "etl_warc_file_ingest_e2e",
+    oracle=WARC_FILE_ORACLE,
+    doc="Multi-record .warc shard files on disk read back through "
+    "binaryFile; records attributed to documents via WARC-Record-ID.",
+)
 def etl_warc_file_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end proof that the parser plumbing applies verbatim to real
     archive FILES (the module docstring's claim): write multi-record
@@ -298,69 +356,3 @@ def etl_warc_file_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(out.collect(), out.schema)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-# closed-form replay: reconstruct each response body string and the HTTP +
-# WARC length accounting from the fixture formulas
-def warc_oracle_sql(doc_source: str = "documents") -> str:
-    return f"""
-    WITH d AS (
-      SELECT doc_id, {R_BASE} + doc_id % {R_MOD} AS n_resp FROM {doc_source}
-    ),
-    r AS (SELECT doc_id, n_resp, unnest(range(0, n_resp)) AS rr FROM d),
-    bodies AS (
-      SELECT doc_id, n_resp, rr,
-             repeat('page ' || doc_id || '-' || rr || ' ',
-                    {REP_BASE} + (doc_id + rr) % {REP_MOD}) AS body
-      FROM r
-    ),
-    per_resp AS (
-      SELECT doc_id, n_resp,
-             -- the record's Content-Length is the full HTTP message:
-             -- status line (17) + Content-Type header (26) +
-             -- 'Content-Length: ' (16) + digits + CRLF (2) + CRLF (2) + body
-             17 + 26 + 16 + length(CAST(length(body) AS VARCHAR)) + 2 + 2
-               + length(body) AS http_len,
-             {SQL_MD5_LONG.format(x="body")} AS bh
-      FROM bodies
-    )
-    SELECT doc_id,
-           CAST(MAX(n_resp) + 1 AS BIGINT) AS n_records,
-           CAST(MAX(n_resp) AS BIGINT) AS n_responses,
-           -- + the warcinfo record: 'software: poc-juma-etl-spark
-           -- fixture ' (37) + doc_id digits + CRLF (2)
-           CAST(SUM(http_len)
-                + 39 + length(CAST(MAX(doc_id) AS VARCHAR)) AS BIGINT)
-             AS total_content_length,
-           CAST(SUM(bh) AS BIGINT) AS body_hash_sum
-    FROM per_resp GROUP BY doc_id ORDER BY doc_id
-    """
-
-
-WARC_ORACLE = warc_oracle_sql()
-
-WARC_FILE_ORACLE = warc_oracle_sql(
-    f"(SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_WARC_DOCS}) docs"
-)
-
-
-def _register_warc_gates() -> None:
-    from ..plans.queries import register
-
-    register(
-        "q_multimodal_warc_ingest",
-        oracle=WARC_ORACLE,
-        doc="WARC/1.0 ingestion: independent record walk + nested "
-        "HTTP/1.1 parse; body content pinned by portable md5.",
-        tags=("multimodal", "warc", "source"),
-    )(q_multimodal_warc_ingest)
-    register(
-        "etl_warc_file_ingest_e2e",
-        oracle=WARC_FILE_ORACLE,
-        doc="Multi-record .warc shard files on disk read back through "
-        "binaryFile; records attributed to documents via WARC-Record-ID.",
-        tags=("multimodal", "warc", "e2e"),
-    )(etl_warc_file_ingest_e2e)
-
-
-_register_warc_gates()

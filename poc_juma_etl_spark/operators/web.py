@@ -83,7 +83,6 @@ _SQL_CANONICAL = (
     "trailing slash) then groupBy the canonical form keeping min doc_id — "
     "the first pass of a CommonCrawl-style pipeline. One shuffle on a short "
     "key; linear at 100 TB like exact content dedup.",
-    tags=("dedup", "url", "web"),
 )
 def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -115,7 +114,6 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mixture-weight input of corpus curation. Aggregation shuffles on the "
     "domain key; heavy-hitter domains are exactly what AQE skew handling "
     "is enabled for.",
-    tags=("text", "web", "stats"),
 )
 def q_text_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -157,7 +155,6 @@ _SQL_BLOCKLIST = ", ".join(f"'{d}'" for d in BLOCKLIST)
     "curated blocklist (spam/adult/boilerplate domains in a real pipeline) "
     "— a broadcast anti-join against the (tiny) blocklist, so the corpus "
     "is one scan with no shuffle of the big side.",
-    tags=("text", "web", "filter"),
 )
 def q_text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

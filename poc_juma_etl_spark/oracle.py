@@ -132,7 +132,7 @@ def compare(spark_df, oracle_pdf: pd.DataFrame) -> dict[str, Any]:
 
 
 def run_gate(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, dict]:
-    """Run every registered query with an oracle and compare. Returns
+    """Run every registered query against its oracle and compare. Returns
     {name: report}."""
     from . import all_queries
     from .plans.queries import release_caches
@@ -143,12 +143,8 @@ def run_gate(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, di
     for name, spec in specs.items():
         if names and name not in names:
             continue
-        if spec.oracle is None:
-            df = spec.fn(spark, sf_dir)
-            results[name] = {"match": None, "rows_only": df.count()}
-        else:
-            oracle_pdf = con.execute(spec.oracle).fetchdf()
-            results[name] = compare(spec.fn(spark, sf_dir), oracle_pdf)
+        oracle_pdf = con.execute(spec.oracle).fetchdf()
+        results[name] = compare(spec.fn(spark, sf_dir), oracle_pdf)
         # drop this query's scoped caches before the next one: 160 queries
         # in one session would otherwise pile cached blocks in executor
         # storage for the whole gate run
@@ -171,9 +167,9 @@ if __name__ == "__main__":
         sys.exit(f"unknown queries: {bad}; known: {sorted(known)}")
     spark = get_spark("oracle-gate")
     reports = run_gate(spark, sf_dir, only)
-    ok = all(r.get("match") in (True, None) for r in reports.values())
+    ok = all(r["match"] for r in reports.values())
     for name, r in reports.items():
-        status = {True: "OK  ", False: "FAIL", None: "rows"}[r.get("match")]
+        status = "OK  " if r["match"] else "FAIL"
         print(f"{status} {name}: {json.dumps({k: v for k, v in r.items() if k != 'first_diffs'}, default=str)}")
         if r.get("first_diffs"):
             for x, y in r["first_diffs"]:

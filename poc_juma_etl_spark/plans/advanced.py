@@ -43,7 +43,6 @@ from .queries import dec_to_double, dsum, register
     "per-row lookups; DuckDB's native ASOF JOIN is the oracle. Ties on "
     "(custkey, orderdate) pre-deduped to max orderkey so both engines are "
     "deterministic.",
-    tags=("join", "asof"),
 )
 def q_asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -106,7 +105,6 @@ RANGE_GAP_S = 300  # pair events within 5 minutes
     "same-second pairs — invisible at sparse sf0.01, caught by the sf0.1 "
     "soak (770 vs 771 rows). No distinct needed: a pair matches exactly "
     "one of the two exploded bucket slots.",
-    tags=("join", "range"),
 )
 def q_range_join_close_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
@@ -162,7 +160,6 @@ def q_range_join_close_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form); decimal partials make the merge order-insensitive. The manual "
     "form of what AQE skew handling automates, kept explicit because "
     "deliberate salting also works for aggregations, not just joins.",
-    tags=("aggregation", "skew"),
 )
 def q_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -198,7 +195,6 @@ def q_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is the pure-SQL equivalent, so this gates UDF correctness, not "
     "just plumbing. The hot path stays JVM-side elsewhere; this exists to "
     "prove the escape hatch is sound.",
-    tags=("udf", "text"),
 )
 def q_pandas_udf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -234,7 +230,6 @@ def q_pandas_udf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB quantile_cont — verified bitwise-identical interpolation. At "
     "scale the approx_percentile sketch replaces this (same API shape, "
     "mergeable, no sort); exact form kept as the oracle-able baseline.",
-    tags=("aggregation", "percentile"),
 )
 def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -264,7 +259,6 @@ def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Correlated scalar subquery: customers above their nation's average "
     "balance. Catalyst decorrelates to an aggregate + join — same SQL text "
     "runs on both engines.",
-    tags=("subquery",),
 )
 def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ["customer"])
@@ -299,7 +293,6 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Recursive CTE (Spark 4): generate a month spine and left-join order "
     "counts — months with zero orders still appear (the gap-filling calendar "
     "pattern).",
-    tags=("recursive-cte",),
 )
 def q_recursive_cte_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ["orders"])
@@ -355,7 +348,6 @@ NEAREST_TOL_S = 6 * 3600  # attribution window: ±6 hours
     "candidates. The oracle brute-forces candidates (superset, invisible "
     "past the exact tolerance filter + argmin). Deterministic tie-break: "
     "smaller gap, then purchase_id.",
-    tags=("join", "asof", "attribution"),
 )
 def q_asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     tol_us = NEAREST_TOL_S * 1_000_000

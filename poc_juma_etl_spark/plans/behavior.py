@@ -62,7 +62,6 @@ FUNNEL_STEPS = ("view", "click", "purchase")
     "final step table is three scalar counts. Conversion ratios via a "
     "shifted self-join of the 3-row summary (the oracle uses LAG — same "
     "values).",
-    tags=("events", "funnel", "behavior"),
 )
 def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -125,7 +124,6 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "user-key join and a cell count. Offsets are integer day arithmetic; "
     "no window functions, no per-user sequences, so the matrix scales "
     "with distinct users, not events.",
-    tags=("events", "retention", "behavior"),
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -199,7 +197,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interpolated percentiles are what DuckDB's quantile_cont replays. "
     "tests/test_m4_operators.py bounds the sketch path's segment drift "
     "against the exact path.",
-    tags=("events", "rfm", "behavior", "percentile"),
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact=True: oracle parity only — production callers take the default
@@ -301,7 +298,6 @@ def rfm_segments(ev: DataFrame, exact: bool = False) -> DataFrame:
     "after X'. One shuffle on the user key for the sequence window, one "
     "tiny K×K aggregate after; per-user history is never collected. "
     "Probabilities are single integer divisions — exact in both engines.",
-    tags=("events", "markov", "behavior"),
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -347,7 +343,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a second shuffle counts distinct users per target — work is "
     "O(actives x 7), never a self-join of the raw event stream. The "
     "oracle states the same thing as a range join.",
-    tags=("events", "behavior", "window-agg"),
 )
 def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -417,7 +412,6 @@ ATTR_WINDOW_S = 7 * 86400  # attribution lookback
     "per user — no self-join of the event stream, state bounded by the "
     "frame, parallel across users at any event volume. Value totals are "
     "decimal-summed for order independence.",
-    tags=("events", "attribution", "behavior", "window"),
 )
 def q_event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W

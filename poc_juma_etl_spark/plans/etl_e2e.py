@@ -41,7 +41,6 @@ from .queries import dec_to_double, dsum, register
     "The oracle computes the must-be state directly — untouched days keep "
     "original values, replaced days have doubled values (reference "
     "delete+insert semantics, utils.py:255-283, 391-398).",
-    tags=("etl", "range-replace", "e2e"),
 )
 def etl_range_replace_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.range_replace import overwrite_table, read_table, replace_range
@@ -80,7 +79,6 @@ def etl_range_replace_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(every 10th customer's balance doubled) via the anti-join+union MERGE "
     "emulation, read back. The oracle computes the must-be final state "
     "directly; the upsert is applied twice (idempotency gated).",
-    tags=("etl", "merge", "e2e"),
 )
 def etl_merge_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import merge_upsert
@@ -119,7 +117,6 @@ def etl_merge_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "back. The oracle recomputes the view directly — materialization must "
     "be lossless, including the partition column surviving the directory "
     "round-trip.",
-    tags=("etl", "gold", "e2e"),
 )
 def etl_gold_materialize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import gold
@@ -173,7 +170,6 @@ def etl_gold_materialize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle performs. Touched months overwrite via the same dynamic "
     "partition overwrite as R1 (reference utils.py:255-283 semantics "
     "lifted from delete-range+insert to aggregate state).",
-    tags=("etl", "incremental", "e2e"),
 )
 def etl_incremental_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = "1996-06-01"
@@ -236,7 +232,6 @@ def etl_incremental_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "file-count mechanics are additionally unit-tested in "
     "tests/test_compact.py). At 100 TB the file count, not the byte "
     "count, is what kills listing and task-scheduling time.",
-    tags=("etl", "compaction", "e2e"),
 )
 def etl_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.compact import compact_table, table_file_stats
@@ -283,7 +278,6 @@ def etl_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle computes the must-be state directly from the source. The keyed "
     "twin of the reference's range delete (utils.py:255-283) — the delete "
     "predicate is a key set instead of a date range.",
-    tags=("etl", "erasure", "e2e"),
 )
 def etl_user_erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.range_replace import delete_keys, overwrite_table, read_table
@@ -328,7 +322,6 @@ def etl_user_erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BigQuery's schema relaxation; here the engine owns it). The oracle "
     "computes the must-be state: even keys are v1 (null segment), odd "
     "keys are v2.",
-    tags=("etl", "schema-evolution", "e2e"),
 )
 def etl_schema_evolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")

@@ -29,7 +29,6 @@ from .queries import dec_to_double, dsum, register, ts_str
     doc="Tumbling 1-hour event-time window per event type — the batch form "
     "of the streaming windowed aggregation (streaming/events.py runs the "
     "same plan incrementally with a watermark).",
-    tags=("events", "window-agg"),
 )
 def q_event_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -55,7 +54,6 @@ def q_event_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Daily active users + conditional counts (FILTER ⇔ count of "
     "when-expression).",
-    tags=("events", "aggregation"),
 )
 def q_event_daily_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -83,7 +81,6 @@ def q_event_daily_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Semi-structured extraction: parse the JSON props column "
     "(get_json_object ⇔ json_extract_string) and aggregate a numeric "
     "property. Integer sums are exact — no decimal dance needed.",
-    tags=("events", "json"),
 )
 def q_event_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -125,7 +122,6 @@ def q_event_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     "windows overlap, i.e. a gap >= 30 min starts a new session; the oracle "
     "reproduces that with lag-gap-cumsum over µs-truncated timestamps (same "
     "logic the manual q_sessionize uses, here vs the native operator).",
-    tags=("events", "sessionize", "window-agg"),
 )
 def q_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 50)
@@ -185,7 +181,6 @@ def _spark_json_doc() -> F.Column:
     "flat) so both engines parse identical bytes; integer sums keep the "
     "aggregate exact. All extraction is JVM-side Catalyst — no Python in "
     "the row path, linear at any scale.",
-    tags=("events", "json", "functions"),
 )
 def q_json_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -226,7 +221,6 @@ def q_json_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partial-merge discipline. At 100 TB this is the difference between "
     "re-scanning the fact table per granularity and maintaining each "
     "coarser rollup from the finer one (24x less input per level).",
-    tags=("events", "rollup", "cascade"),
 )
 def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -276,7 +270,6 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded by per-user history, never collected. At 100 TB the same "
     "shape runs windowed (sessionized) so no single user's string grows "
     "unbounded.",
-    tags=("events", "sequence", "regex", "funnel"),
 )
 def q_event_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -331,7 +324,6 @@ def q_event_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "struct ordering key (no window over the fact table — one hash "
     "aggregate); high/low are plain min/max. The oracle reaches the same "
     "bars through window row-numbers, a different algorithm.",
-    tags=("events", "ohlc", "timeseries"),
 )
 def q_event_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -375,7 +367,6 @@ def q_event_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders per priority; at 100 TB swap approx_percentile exactly as "
     "rfm_segments does). Interpolated exact percentiles match DuckDB's "
     "quantile_cont bitwise.",
-    tags=("olap", "percentile", "grouped"),
 )
 def q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -422,7 +413,6 @@ def q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "double products is not cross-engine portable; integer scaling is), "
     "with exactly two float ops at the end. One shuffle on user_id for "
     "the LEAD window; per-user history stays in its partition.",
-    tags=("events", "timeseries", "twap", "window"),
 )
 def q_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -483,7 +473,6 @@ def q_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column-prunes. The oracle navigates the same JSON with DuckDB's "
     "json_extract_string — VARIANT is an encoding, not a semantics "
     "change, so results hash-match.",
-    tags=("events", "json", "variant"),
 )
 def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -519,7 +508,6 @@ def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the side-channel metrics equal the ground truth. (COUNT DISTINCT is "
     "not observable — observe() allows only commutative aggregates — so "
     "that one column comes from the same single pass's groupBy.)",
-    tags=("dq", "observation", "metrics"),
 )
 def q_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Observation
@@ -609,7 +597,6 @@ HISTORY_MAX_EVENTS = 50
     "is user-partitioned (bounded per-user state) and the truncation caps "
     "the in-row string, so no user's sequence grows unbounded — at 100 TB "
     "the same plan runs with the cap as the context-length budget.",
-    tags=("events", "sequence", "training-data"),
 )
 def q_event_user_history_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .queries import dsum
+from .queries import dsum, register
 
 ORC_FLAG_PRED = "l_shipdate >= DATE '1996-01-01'"
 
@@ -62,6 +62,13 @@ def orc_read_back(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     )
 
 
+@register(
+    "etl_orc_roundtrip_e2e",
+    oracle=ORC_ROUNDTRIP_ORACLE,
+    doc="ORC sink+source round-trip: first columnar interchange "
+    "format; filter pushdown + column pruning pinned on the "
+    "read-back scan.",
+)
 def etl_orc_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="orc_rt_")
     try:
@@ -84,19 +91,3 @@ def etl_orc_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
-
-
-def _register_extra10_gates() -> None:
-    from .queries import register
-
-    register(
-        "etl_orc_roundtrip_e2e",
-        oracle=ORC_ROUNDTRIP_ORACLE,
-        doc="ORC sink+source round-trip: first columnar interchange "
-        "format; filter pushdown + column pruning pinned on the "
-        "read-back scan.",
-        tags=("etl", "orc", "source", "e2e"),
-    )(etl_orc_roundtrip_e2e)
-
-
-_register_extra10_gates()

@@ -56,7 +56,6 @@ JSONL_GZ_ORACLE = f"""
     doc="gzip JSONL sink+source round-trip of the document corpus: "
     "scan file count audited against the shards written, text pinned "
     "by per-bucket md5 sums.",
-    tags=("etl", "jsonl", "gzip", "source", "e2e"),
 )
 def etl_jsonl_gzip_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -136,7 +135,6 @@ XML_ROUNDTRIP_ORACLE = """
     doc="XML sink+source round-trip of part through Spark 4's native "
     "XML source, read back with the original schema and rolled up "
     "per brand.",
-    tags=("etl", "xml", "source", "e2e"),
 )
 def etl_xml_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML sink+source round-trip — the fourth text interchange format

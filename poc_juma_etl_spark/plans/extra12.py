@@ -117,7 +117,6 @@ def bloom_prefilter_oracle_sql() -> str:
     doc="Explicit bloom-filter semi-join prefilter: one quarter's order "
     "keys hashed into a portable bit array that probes lineitem in-row; "
     "false positives and the zero-false-negative invariant are hashed.",
-    tags=("join", "bloom", "runtime-filter"),
 )
 def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered semi-join of lineitem against one quarter's order

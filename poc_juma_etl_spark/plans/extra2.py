@@ -33,7 +33,6 @@ LEV_MAX = 4
     "replacing the brand block with a cheap fingerprint (length band × "
     "phonetic code), since within-block cost is quadratic and the fixed "
     "brand cardinality stops bounding it (the r6 sf1 soak's slowest cell).",
-    tags=("dedup", "levenshtein"),
 )
 def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The candidate scan uses the THRESHOLDED levenshtein (Spark 3.5+):
@@ -102,7 +101,6 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form emits ~10^8 name-pair rows on the replicated sf1 fixture, past "
     "any driver/oracle materialization budget; same recipe as the simhash "
     "and cosine grouped twins).",
-    tags=("dedup", "levenshtein", "grouped"),
 )
 def q_dedup_levenshtein_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-7 dup-collapse (SCALING.md): the DP probe runs once per DISTINCT
@@ -193,7 +191,6 @@ def q_dedup_levenshtein_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="LATERAL correlated subquery: each customer's two most expensive "
     "orders. Same SQL runs on both engines; Catalyst rewrites it to the "
     "window top-k shape rather than per-row subquery execution.",
-    tags=("lateral", "topk", "subquery"),
 )
 def q_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ["customer", "orders"])
@@ -226,7 +223,6 @@ def q_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Regex surface: capture-group extraction + full-match validation "
     "over the JSON props strings (regexp_extract group semantics pinned to "
     "group 1 in both engines).",
-    tags=("functions", "regex"),
 )
 def q_regexp_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
@@ -256,7 +252,6 @@ def q_regexp_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="first_value/last_value/nth_value: a customer's first, last, and "
     "second orders attached to every row (full-partition frames where the "
     "value depends on unseen rows).",
-    tags=("window",),
 )
 def q_window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 50)

@@ -67,7 +67,6 @@ GAP_MIN_VALUE = 190  # sparsity filter: keeps ~20-25 of 30 days per series
     "huge series the same plan applies over range-bucketed sub-windows. "
     "Interpolation arithmetic order is pinned so both engines agree "
     "bitwise.",
-    tags=("timeseries", "gapfill", "window"),
 )
 def q_gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("value") > GAP_MIN_VALUE)
@@ -131,7 +130,6 @@ def _sql_profile(col: str, minmax_expr: str | None = None) -> str:
     "table. Each column is one aggregate pass; Spark executes the union as "
     "parallel scans sharing the cached input. Distinct counts are exact "
     "(the approx twin is q_approx_sketches).",
-    tags=("profiling", "metadata"),
 )
 def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -179,7 +177,6 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     "slice/contains/element access over the token array — the Catalyst "
     "HOF dialect (lambda expressions compiled JVM-side, zero Python) gated "
     "against DuckDB's list_* twins. Per-row only: no shuffle at any scale.",
-    tags=("functions", "arrays"),
 )
 def q_array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -221,7 +218,6 @@ def q_array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-row Catalyst expressions gated against DuckDB's identical-"
     "semantics twins (instr==strpos 1-based-0-missing, split_part "
     "1-based).",
-    tags=("functions", "strings"),
 )
 def q_string_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
@@ -264,7 +260,6 @@ def q_string_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "strings/ints per the cross-engine dtype rules. Pins the dialect "
     "mapping: Spark dayofweek == DuckDB dow+1, Spark add_months clamps "
     "exactly like DuckDB's +INTERVAL MONTH.",
-    tags=("functions", "datetime"),
 )
 def q_datetime_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -310,7 +305,6 @@ def q_datetime_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "access returns a 1-element list, unwrapped with [1]). Maps are never "
     "emitted directly (entry order is engine-defined); only derived "
     "scalars cross the gate. Per-row only, no shuffle.",
-    tags=("functions", "maps"),
 )
 def q_map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")

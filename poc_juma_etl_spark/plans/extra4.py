@@ -60,7 +60,6 @@ from .queries import dec_to_double, dsum, register
     "one job with no driver-side iteration and scales with the fact table. "
     "Mirrors the load-contract the reference trusts implicitly "
     "(utils.py:255-283, materialize_gold.py:42-79).",
-    tags=("dq", "audit", "anti-join"),
 )
 def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -120,7 +119,6 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark and ANSI SQL. All expressions are Catalyst column ops inside one "
     "map-side-partial hash aggregate; floats are decimal-summed so the "
     "group totals are order-independent across engines.",
-    tags=("functions", "conditional", "scalar"),
 )
 def q_null_conditional_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -174,7 +172,6 @@ def q_null_conditional_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sums. Bit twiddling is how an engine packs flags, shards keys and "
     "buckets hashes (the engine's own SimHash/SRP operators depend on "
     "these being exact); everything runs in whole-stage codegen.",
-    tags=("functions", "bitwise", "scalar"),
 )
 def q_bitwise_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -218,7 +215,6 @@ def q_bitwise_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "together, no join-back), then field access to unpack. One hash "
     "aggregate; ties impossible because o_orderkey is unique, so the "
     "result is deterministic in both engines.",
-    tags=("functions", "struct", "argmax"),
 )
 def q_struct_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -272,7 +268,6 @@ RANGE_CUST_MOD = 100  # keep the gate output bounded: ~1% of customers
     "exec with a sliding aggregate buffer, never re-scanning the frame per "
     "row. Peer-tied sums are decimal-exact, so tie order between engines "
     "cannot change the output.",
-    tags=("window", "range-frame", "timeseries"),
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
@@ -329,7 +324,6 @@ HIST_BUCKETS = 16
     "histogram: pass one reduces to 2 scalars, pass two is map-side "
     "partial — no sort, no per-bucket scan, identical at sf0.001 and "
     "100 TB.",
-    tags=("histogram", "aggregation", "broadcast"),
 )
 def q_histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
@@ -391,7 +385,6 @@ Z_THRESH = 2.5
     "decimal→double conversion itself rounds differently across engines "
     "(the inverse of the README's double→decimal pitfall — both "
     "directions are unsafe past 2^53).",
-    tags=("stats", "outliers", "dq"),
 )
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -458,7 +451,6 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical IEEE arithmetic and the final statistic is decimal-summed. "
     "The correlation-screening primitive of feature/bias audits at corpus "
     "scale.",
-    tags=("stats", "chi2", "dq"),
 )
 def q_chi_square_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -528,7 +520,6 @@ MAD_THRESH = 3.5  # Iglewicz-Hoaglin robust z cutoff
     "match DuckDB's quantile_cont bitwise; at 100 TB swap "
     "approx_percentile into the same two call sites (partial-mergeable "
     "sketch, identical plan shape).",
-    tags=("stats", "outliers", "robust"),
 )
 def q_event_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -593,7 +584,6 @@ RECON_TOL = 0.01  # header-vs-detail reconciliation tolerance (1%)
     "amplifies. (The synthetic fixtures deliberately do NOT maintain the "
     "invariant — the audit's job is to report that, and both engines "
     "must agree on the exact discrepancy profile.)",
-    tags=("dq", "reconciliation", "audit"),
 )
 def q_dq_reconcile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -667,7 +657,6 @@ def q_dq_reconcile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the one division then runs on bit-identical operands in both engines. "
     "Two map-side-combinable aggregations, no window, no driver math: the "
     "same plan fits millions of series at 100 TB.",
-    tags=("stats", "regression", "forecast"),
 )
 def q_trend_fit_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -749,7 +738,6 @@ def q_trend_fit_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "One shuffle on the key — the operator a warehouse runs to validate "
     "every incremental load, and the join shape Delta/Iceberg CDF "
     "materializes natively.",
-    tags=("etl", "diff", "audit", "cdc"),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(

@@ -55,7 +55,6 @@ _CUT_QS = ", ".join(str(i / N_BUCKETS) for i in range(1, N_BUCKETS))
     "bucketing downstream, measured 5x cheaper already at sf0.1). Bucket "
     "populations verify the equi-depth property end to end, including "
     "boundary ties.",
-    tags=("olap", "histogram", "percentile"),
 )
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_totalprice")
@@ -98,7 +97,6 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on (doc_id, token) with map-side combine, then a doc-local rollup; "
     "per-doc vocabularies never materialize as arrays. TTR is a single "
     "integer-to-double division — exact cross-engine.",
-    tags=("text", "quality", "diversity"),
 )
 def q_text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -156,7 +154,6 @@ def _orders_rollup(df: DataFrame) -> DataFrame:
     "precision, timestamp format, quoting — breaks the hash. Scan "
     "parallelism survives the trip: CSV splits by file, and the write "
     "preserves the upstream partition count.",
-    tags=("etl", "csv", "source", "e2e"),
 )
 def etl_csv_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -186,7 +183,6 @@ def etl_csv_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "binding), aggregate per market segment against a parquet-side oracle. "
     "Doubles survive via shortest-roundtrip encoding; the explicit schema "
     "skips the inference pass a 100 TB JSON lake cannot afford.",
-    tags=("etl", "json", "source", "e2e"),
 )
 def etl_json_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -278,7 +274,6 @@ _SQL_BLOOM_H = (
     "runtime-filter idiom: the probe side sheds non-candidates before the "
     "shuffle; the reported bloom-pass vs true-match gap IS the measured "
     "false-positive rate. The oracle rebuilds the identical filter in SQL.",
-    tags=("joins", "bloom", "runtime-filter"),
 )
 def q_bloom_filter_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import md5_long
@@ -365,7 +360,6 @@ def q_bloom_filter_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approx_percentile is the drop-in at 100 TB (mergeable sketch, "
     "identical CASE downstream). The feature-cleaning primitive for "
     "robust aggregates and ML feature tables.",
-    tags=("olap", "winsorize", "percentile", "quality"),
 )
 def q_winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
@@ -422,7 +416,6 @@ def q_winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle keyed on o_orderkey for the per-order max, then a tiny "
     "priority aggregate — integer day arithmetic end to end. The "
     "operational-metrics shape every warehouse dashboard runs nightly.",
-    tags=("olap", "latency", "sla"),
 )
 def q_order_fulfilment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
@@ -479,7 +472,6 @@ def q_order_fulfilment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "general scale-safe idiom for sequential deltas over any calendar "
     "dimension. Growth is one subtraction + one division over "
     "bit-identical inputs.",
-    tags=("olap", "timeseries", "growth"),
 )
 def q_revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")

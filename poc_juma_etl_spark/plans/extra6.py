@@ -127,7 +127,6 @@ def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whole build is one shuffle on custkey regardless of history depth — "
     "the standard CDC-to-warehouse compaction. Deterministic run "
     "boundaries: the ordering key (o_orderdate, o_orderkey) is unique.",
-    tags=("etl", "scd2", "window"),
 )
 def q_scd2_dimension_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd2_dimension(spark, sf_dir).select(
@@ -178,7 +177,6 @@ def q_scd2_dimension_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "caught by this oracle before it shipped). Ties at same-day version "
     "flips break to the later version: version rows sort before the key "
     "row on their date, ascending, so the carry picks the last.",
-    tags=("etl", "scd2", "asof", "join"),
 )
 def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import spread
@@ -273,7 +271,6 @@ SCD2_SPLIT = "2001-01-01"  # fixture orders span 1995-01-01 .. 2001-08-01
     "hash-checked. Work is proportional to the delta (affected customers "
     "× their open+new changes), not history size: the at-scale nightly "
     "merge shape.",
-    tags=("etl", "scd2", "incremental", "cdc"),
 )
 def q_scd2_incremental_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
@@ -417,7 +414,6 @@ def _build_recall_oracle() -> str:
     "brute-force side is one corpus scan per query batch — the same "
     "price the baseline operator already pays; everything downstream is "
     "k-row arithmetic.",
-    tags=("similarity", "ann", "evaluation"),
 )
 def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import TOP_K, q_ann_ivf_topk
@@ -522,7 +518,6 @@ DRIFT_BUCKETS = 10
     "pass covering both windows (per-window totals fall out of the tiny "
     "types×buckets count table, since clamping buckets every row) — the "
     "monitoring-job shape at any scale.",
-    tags=("dq", "drift", "monitoring"),
 )
 def q_feature_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
@@ -650,7 +645,6 @@ def _fp_sql(table: str, cols: list[str]) -> str:
     "string form (the decimal-cast exactness rule, applied to hashing). "
     "The fingerprint hash-matching DuckDB here IS the demo: two engines, "
     "same bytes, same fingerprint.",
-    tags=("dq", "fingerprint", "ops"),
 )
 def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     outs = []

@@ -73,7 +73,6 @@ N_SHARDS = 64
     "so the plan is identical at 50k documents or 50 billion. The division "
     "is a single int-to-double op on exact bigints — IEEE-identical across "
     "engines (the repo's float-portability rule).",
-    tags=("export", "sharding", "ops"),
 )
 def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -143,7 +142,6 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stop-shingles add rows to a single grouped key, never d² candidates. "
     "The ratio is one int/int double division on exact counts — "
     "IEEE-identical across engines.",
-    tags=("text", "novelty", "curation"),
 )
 def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -218,7 +216,6 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "size; every shuffle hashes on the shingle or the ~|sources|² pair "
     "key. No document pair join anywhere. Ratios are single int-to-double "
     "divisions on exact counts (IEEE-identical across engines).",
-    tags=("dedup", "governance", "contamination"),
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

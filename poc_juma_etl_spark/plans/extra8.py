@@ -102,7 +102,6 @@ DPP_YEAR = 1996
     "lineitem self-join. The oracle reaches the same distances via a "
     "depth-bounded recursive-CTE walk with MIN(depth) per node — a "
     "different algorithm arriving at the same fixpoint.",
-    tags=("graph", "bfs", "iterative"),
 )
 def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import scoped_cache
@@ -252,7 +251,6 @@ def bfs_hops(
     "files whole. Output is bounded by months x priorities regardless of "
     "row count. Integer sizes make Spark and DuckDB agree bit-for-bit "
     "(`div` / `//` exact integer division — never float floor).",
-    tags=("layout", "compaction", "window"),
 )
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -309,7 +307,6 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "`dynamicpruning` expression in the fact scan is plan-asserted in "
     "tests/test_round6b_ops.py; the oracle recomputes the aggregate from "
     "the raw table (pruning must never change the answer).",
-    tags=("etl", "dpp", "partitioning"),
 )
 def etl_dpp_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(

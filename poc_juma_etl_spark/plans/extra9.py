@@ -110,7 +110,6 @@ PMI_TOP = 30
     "back by hash (posting-list size, never n²); island windows partition "
     "per doc_id over dup positions only — at 100 TB every stage is "
     "linear in shingle volume, the same envelope as exact dedup.",
-    tags=("text", "dedup", "spans"),
 )
 def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-7 dup-collapse (SCALING.md): shingle positions, the dup set,
@@ -251,7 +250,6 @@ def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unigram and bigram counts are map-side-combinable dictionary "
     "aggregates; the two count joins are vocabulary-sized, never corpus-"
     "sized; top-30 is a TakeOrdered, no global sort.",
-    tags=("text", "pmi", "collocations"),
 )
 def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -336,7 +334,6 @@ def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(token-budget exemplar). Quantities are integral by TPC-H "
     "construction and summed as exact BIGINTs; the median value itself "
     "is selected, not computed, so no float arithmetic exists anywhere.",
-    tags=("stats", "median", "window"),
 )
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (round-12, measured and REJECTED): recutting the cumulative
@@ -422,7 +419,6 @@ ZM_FILES = 64
     "rank over the k-row result is a broadcast self-join count, so not "
     "even a bounded input smuggles a partition-less windowspec into the "
     "registry (the plan sweep bans the construct outright).",
-    tags=("dq", "skew", "ops"),
 )
 def q_skew_key_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -486,7 +482,6 @@ def q_skew_key_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sees it. Shape: one groupBy to the type domain, a 1-row broadcast, "
     "map-side arithmetic; the same query over a partitioned warehouse "
     "table prunes to the newest partitions only.",
-    tags=("dq", "freshness", "ops"),
 )
 def q_dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -566,7 +561,6 @@ def q_dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     "simulation costs two dictionary-sized shuffles regardless of table "
     "size. Companion to etl_dpp_prune_e2e (real partition pruning) and "
     "q_compaction_plan (real layout planning).",
-    tags=("ops", "layout", "zonemap", "skipping"),
 )
 def q_zonemap_skip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
@@ -702,7 +696,6 @@ def _langid_pred_sql() -> str:
     "in a curation pipeline needs before it gates data; at 100 TB the "
     "whole audit reduces to three class-domain-sized count aggregates "
     "over one prediction scan.",
-    tags=("eval", "langid", "confusion"),
 )
 def q_eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import q_text_langid
@@ -797,7 +790,6 @@ def _ri_sql(name: str, ct: str, ck: str, pt: str, pk: str) -> str:
     "otherwise; the eight checks are independent Spark jobs over "
     "column-pruned scans (key columns only reach the parquet reader), "
     "so wall-clock is the widest single child scan.",
-    tags=("dq", "integrity", "ops"),
 )
 def q_dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12 recut (guide §2.3 "aggregate before you shuffle"): each
@@ -877,7 +869,6 @@ PATH_TOP = 20
     "state), trigram counts are map-side combinable, top-k is a "
     "TakeOrdered — no global sort, no pair joins, linear at any event "
     "volume.",
-    tags=("events", "paths", "behavior"),
 )
 def q_event_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -983,7 +974,6 @@ def _kcore_sql() -> str:
     "removes nothing (remaining rounds are no-ops by definition). The "
     "dense-core mining primitive for community seeds and spam-cluster "
     "detection.",
-    tags=("graph", "kcore", "iterative"),
 )
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -1208,7 +1198,6 @@ def _export_manifest_sql() -> str:
     "semantics cannot drift between the stage gates and this composition. "
     "Scale shape is inherited stage-wise: shingle-hash shuffles, label "
     "propagation, the no-global-window prefix sum, one manifest groupBy.",
-    tags=("export", "pipeline", "manifest", "composition"),
 )
 def q_corpus_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import pipeline_keep_ranked
@@ -1264,7 +1253,6 @@ def q_corpus_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dependent). At scale the audit is one aggregate over footer-pruned "
     "staged files vs one over the source — two cheap scans buying "
     "atomic-visibility semantics on a plain object store.",
-    tags=("etl", "wap", "publish", "dq"),
 )
 def etl_wap_publish_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -1360,7 +1348,6 @@ def etl_wap_publish_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "total, obvious against its hourly index). Shape: one (type, hour) "
     "groupBy — 24×|types| rows — plus a type-domain broadcast; trivially "
     "partition-prunable when events is date-partitioned.",
-    tags=("events", "seasonality", "timeseries"),
 )
 def q_event_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import dec_to_double

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .queries import register
 
 SPLIT = "1996-06-01"  # orders on/after this date arrive as the fact delta
 UPD_PRED = "c_custkey % 10 = 3"  # these customers' segment changes
@@ -53,6 +54,34 @@ def _join_view(orders: DataFrame, cust: DataFrame) -> DataFrame:
     )
 
 
+IVM_JOIN_ORACLE = f"""
+    WITH cust_new AS (
+      SELECT c_custkey,
+             CASE WHEN {UPD_PRED} THEN '{NEW_SEGMENT}' ELSE c_mktsegment END
+               AS c_mktsegment
+      FROM customer
+    )
+    SELECT o.o_orderkey, o.o_custkey, cn.c_mktsegment AS mktsegment
+    FROM orders o JOIN cust_new cn ON cn.c_custkey = o.o_custkey
+    ORDER BY o.o_orderkey
+    """
+
+
+@register(
+    "etl_incremental_join_e2e",
+    oracle=IVM_JOIN_ORACLE,
+    doc="Incremental JOIN-view maintenance end to end: a materialized "
+    "orders-customer join view is kept current under BOTH change "
+    "kinds — dimension-attribute updates repaired FROM THE VIEW "
+    "ITSELF (broadcast anti/semi split by changed key + re-join of "
+    "only the touched rows; the fact table is never rescanned — the "
+    "Gupta-Mumick delta rule), and fact-delta inserts appended via a "
+    "delta-sized join against the broadcast dimension. The DuckDB "
+    "oracle performs the full recompute the maintained view must be "
+    "indistinguishable from — row-for-row hash equality. At 100 TB: "
+    "view bucketed by join key makes the changed-key split "
+    "partition-pruned; the base join runs exactly once at creation.",
+)
 def etl_incremental_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c_old = load_table(spark, sf_dir, "customer")
@@ -98,40 +127,3 @@ def etl_incremental_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
-
-
-IVM_JOIN_ORACLE = f"""
-    WITH cust_new AS (
-      SELECT c_custkey,
-             CASE WHEN {UPD_PRED} THEN '{NEW_SEGMENT}' ELSE c_mktsegment END
-               AS c_mktsegment
-      FROM customer
-    )
-    SELECT o.o_orderkey, o.o_custkey, cn.c_mktsegment AS mktsegment
-    FROM orders o JOIN cust_new cn ON cn.c_custkey = o.o_custkey
-    ORDER BY o.o_orderkey
-    """
-
-
-def _register_ivm_gate() -> None:
-    from .queries import register
-
-    register(
-        "etl_incremental_join_e2e",
-        oracle=IVM_JOIN_ORACLE,
-        doc="Incremental JOIN-view maintenance end to end: a materialized "
-        "orders-customer join view is kept current under BOTH change "
-        "kinds — dimension-attribute updates repaired FROM THE VIEW "
-        "ITSELF (broadcast anti/semi split by changed key + re-join of "
-        "only the touched rows; the fact table is never rescanned — the "
-        "Gupta-Mumick delta rule), and fact-delta inserts appended via a "
-        "delta-sized join against the broadcast dimension. The DuckDB "
-        "oracle performs the full recompute the maintained view must be "
-        "indistinguishable from — row-for-row hash equality. At 100 TB: "
-        "view bucketed by join key makes the changed-key split "
-        "partition-pruned; the base join runs exactly once at creation.",
-        tags=("etl", "ivm", "join", "incremental"),
-    )(etl_incremental_join_e2e)
-
-
-_register_ivm_gate()

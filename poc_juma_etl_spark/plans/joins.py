@@ -39,7 +39,6 @@ from .queries import dec_to_double, dsum, register, ts_str
     doc="TPC-H Q3-style shipping priority: 3-way join (broadcast dim ⋈ "
     "shuffled facts), filtered on both fact sides, grouped, deterministic "
     "top-10 (revenue is an exact decimal sum, ties broken by orderkey).",
-    tags=("join", "topk"),
 )
 def q3_top_unshipped_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -81,7 +80,6 @@ def q3_top_unshipped_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q5-style local-supplier revenue: 6-way star join. All four "
     "dimension sides broadcast; only orders⋈lineitem shuffles.",
-    tags=("join",),
 )
 def q5_region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
@@ -121,7 +119,6 @@ def q5_region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Broadcast equi-join: the canonical fact⋈small-dim pattern. The dim "
     "ships to every executor once; the 100 TB fact side never shuffles.",
-    tags=("join", "broadcast"),
 )
 def q_broadcast_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -145,7 +142,6 @@ def q_broadcast_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Left-semi join (EXISTS): customers with at least one open order. "
     "Only the key column of orders crosses the wire.",
-    tags=("join", "semi"),
 )
 def q_semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -166,7 +162,6 @@ def q_semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.c_custkey
     """,
     doc="Left-anti join (NOT EXISTS): customers with no orders at all.",
-    tags=("join", "anti"),
 )
 def q_anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -191,7 +186,6 @@ def q_anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFram
     """,
     doc="Left-outer join + aggregate: per-customer order counts including "
     "zero-order customers (COUNT of a null-extended column skips nulls).",
-    tags=("join", "outer"),
 )
 def q_outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -235,7 +229,6 @@ N_SALTS = 8  # fan-out factor for the salted-join skew mitigation
     "rows spread over 8 tasks instead of one. The salt never reaches the "
     "output — the oracle is the plain unsalted join. shuffle_hash-hinted "
     "so the demo actually shuffles (a broadcast would bypass the salt).",
-    tags=("join", "skew", "salting"),
 )
 def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -306,7 +299,6 @@ BIN_D = 7
     "greatest(start_a, start_b) — exactly-once counting with no distinct. "
     "The oracle runs DuckDB's native inequality join instead; identical "
     "counts prove the binning is complete and non-duplicating.",
-    tags=("joins", "interval", "range-join"),
 )
 def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -376,7 +368,6 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "match), only non-null rows shuffle, and the two legs union. The "
     "oracle runs the naive LEFT JOIN — identical totals prove the routing "
     "loses and invents nothing.",
-    tags=("joins", "outer", "skew", "null-keys"),
 )
 def q_outer_join_null_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(

@@ -101,7 +101,6 @@ FH_BUCKETS = 64
     "int64s, which Spark and DuckDB round identically. Slices with a "
     "degenerate class (no positives or no negatives) yield NULL, not a "
     "fabricated 0.5.",
-    tags=("eval", "auc", "ranking"),
 )
 def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -172,7 +171,6 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the category, the tiny per-category aggregate broadcast back "
     "over the rows, a 1-row scalar broadcast for the prior — per-row "
     "work thereafter, no window anywhere.",
-    tags=("features", "encoding", "leakage"),
 )
 def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -233,7 +231,6 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Mergeable counts: hashing a 100 TB corpus is map-side arithmetic "
     "plus one groupBy on the bucket id; n_features per bucket is the "
     "collision audit.",
-    tags=("features", "hashing", "sketch"),
 )
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -311,7 +308,6 @@ CAL_BINS = 10
     "Spark and DuckDB round identically. The 100 TB shape: one scalar "
     "broadcast, map-side binning, a {CAL_BINS}-row groupBy — mergeable "
     "partials, no window, no sort until the 10-row output.",
-    tags=("eval", "calibration", "brier"),
 )
 def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -31,8 +31,9 @@ Oracle-parity rules (see tests/test_oracle_parity.py):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,24 +49,22 @@ from ..session import tune_session
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
+    oracle: str  # DuckDB SQL the driver's gate hash-compares the result against
     doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
 def register(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
+    name: str, oracle: str, doc: str = ""
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune_session(spark)
             return fn(spark, sf_dir)
 
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
         prior = QUERIES.get(name)
         # fail loudly on a name collision from a DIFFERENT function: a
         # second registration would silently shadow the first in every
@@ -74,8 +73,6 @@ def register(
         # the same function are fine — identity is module + qualname, not
         # bare __name__ (two modules can coincidentally name a function
         # the same way).
-        wrapped.__module__ = fn.__module__
-        wrapped.__qualname__ = fn.__qualname__
         if prior is not None and (
             prior.fn.__module__,
             prior.fn.__qualname__,
@@ -85,7 +82,7 @@ def register(
                 f"{prior.fn.__module__}.{prior.fn.__qualname__}; "
                 "pick a distinct name"
             )
-        QUERIES[name] = QuerySpec(name=name, fn=wrapped, oracle=oracle, doc=doc, tags=tags)
+        QUERIES[name] = QuerySpec(name=name, fn=wrapped, oracle=oracle, doc=doc)
         return wrapped
 
     return deco
@@ -230,7 +227,6 @@ SQL_TS_STR_FRAC = "strftime({expr}, '%Y-%m-%d %H:%M:%S.%f') AS {alias}"
     doc="TPC-H Q1-style pricing summary: scan→filter→agg→sort. The flagship "
     "query (SURVEY.md §7.2 M0). Replaces the analytical aggregation layer the "
     "reference delegated to BigQuery.",
-    tags=("aggregation", "flagship"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")

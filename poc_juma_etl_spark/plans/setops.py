@@ -21,7 +21,6 @@ from .queries import davg, dsum, register, ts_str
     ORDER BY c_custkey
     """,
     doc="UNION (distinct): segment customers ∪ high-balance customers.",
-    tags=("setop",),
 )
 def q_union_buyers_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -39,7 +38,6 @@ def q_union_buyers_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
     doc="INTERSECT: customers with both finished and open orders.",
-    tags=("setop",),
 )
 def q_intersect_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -58,7 +56,6 @@ def q_intersect_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="EXCEPT: registered customers who never ordered (set-op twin of the "
     "anti join).",
-    tags=("setop",),
 )
 def q_except_lost_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
@@ -79,7 +76,6 @@ def q_except_lost_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Distinct aggregate alongside plain aggregates (expand + two-phase "
     "agg in Spark).",
-    tags=("aggregation",),
 )
 def q_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -106,7 +102,6 @@ def q_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ROLLUP grouping sets: per-(flag,status), per-flag subtotals, grand "
     "total.",
-    tags=("aggregation", "rollup"),
 )
 def q_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -129,7 +124,6 @@ def q_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
     """,
     doc="CUBE grouping sets over order status × priority.",
-    tags=("aggregation", "cube"),
 )
 def q_cube_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -156,7 +150,6 @@ def q_cube_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Pivot: order counts per priority with one column per status "
     "(Spark .pivot with an explicit value list ⇒ no extra discovery pass).",
-    tags=("aggregation", "pivot"),
 )
 def q_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -181,7 +174,6 @@ def q_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Explicit GROUPING SETS (neither rollup nor cube): per-segment, "
     "per-nation, and grand-total rows from one pass.",
-    tags=("aggregation", "grouping-sets"),
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import register_views
@@ -212,7 +204,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="LATERAL VIEW posexplode: tokens with their positions (the "
     "generator-function surface; DuckDB twin is zipped parallel unnests).",
-    tags=("explode", "generator"),
 )
 def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import tokens
@@ -238,7 +229,6 @@ def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Unpivot (wide→long): part measures melted to (key, measure, value) "
     "rows via stack() — the inverse of .pivot(), an in-row expansion with "
     "no shuffle.",
-    tags=("pivot", "unpivot"),
 )
 def q_unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
@@ -267,7 +257,6 @@ def q_unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="The full ranking family — rank, dense_rank, ntile, cume_dist — over "
     "one window; unique ORDER BY keeps every function deterministic.",
-    tags=("window", "rank"),
 )
 def q_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -297,7 +286,6 @@ def q_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Global top-K: Spark's TakeOrderedAndProject — per-partition top-15 "
     "then a 15-row driver merge, no full sort at any scale.",
-    tags=("topk", "sort"),
 )
 def q_global_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -328,7 +316,6 @@ def q_global_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Scalar function surface: string (upper/substring/length/concat), "
     "math (abs/floor/sqrt — deterministic IEEE, no rounding ambiguity), "
     "conditional (CASE/coalesce/nullif). All JVM-side codegen, no UDFs.",
-    tags=("functions",),
 )
 def q_scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")

@@ -58,7 +58,6 @@ def _between(col: str, lo: str, hi: str):
     "joins. The canonical predicate-pushdown query: all three filters reach "
     "the parquet reader, and the aggregate is a single map-side-combined "
     "scalar. The linear-scaling floor every engine is judged against.",
-    tags=("aggregation", "tpch"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -95,7 +94,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "star join where every dimension side (orders aside) is broadcast; the "
     "disjunctive nation-pair predicate is applied post-join on broadcast "
     "columns, so the only shuffle is the final 3-key aggregation.",
-    tags=("join", "tpch"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -156,7 +154,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q8: national market share — NATION_2's fraction of PROMO-part "
     "revenue sold into ASIA per year. Seven-way join, all six non-fact "
     "sides broadcast; conditional/total decimal sums divided in DOUBLE.",
-    tags=("join", "tpch"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -219,7 +216,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "textbook query; the plan shape — LIKE-filtered part dimension "
     "broadcast into the fact, profit expression, two-key aggregate — is "
     "identical).",
-    tags=("join", "tpch"),
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -272,7 +268,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape under test — per-group MIN correlated against the outer row — "
     "is expressed in Spark as a groupBy-min re-join, which Catalyst also "
     "produces when decorrelating the SQL form.",
-    tags=("join", "subquery", "tpch"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -323,7 +318,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "uncorrelated scalar subquery). partsupp-less adaptation: value is "
     "realized lineitem revenue instead of availqty*supplycost. The scalar "
     "total is a 1-row broadcast cross-join in the Spark plan.",
-    tags=("aggregation", "subquery", "tpch"),
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -366,7 +360,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "survive as count 0), then a re-aggregation of the counts. The second "
     "aggregate's key space is tiny (≤ max orders per customer), so the "
     "second shuffle is negligible at any scale.",
-    tags=("join", "aggregation", "tpch"),
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -408,7 +401,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "revenue equals the global MAX (uncorrelated scalar subquery). The max "
     "is a 1-row broadcast; both engines compare bit-identical "
     "decimal-summed doubles, so the equality is portable.",
-    tags=("aggregation", "subquery", "tpch"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -449,7 +441,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "complaints' is proxied by negative account balance. The NOT IN is a "
     "broadcast null-aware anti-join (the subquery side is 6 rows); "
     "COUNT(DISTINCT) shuffles once on the 3-part group key.",
-    tags=("join", "anti", "tpch"),
 )
 def q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -491,7 +482,6 @@ def q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-part aggregate re-joined to the fact). The per-part average uses "
     "the decimal-sum/count pattern on both engines so the 0.2*avg "
     "threshold compares bit-identical doubles.",
-    tags=("join", "subquery", "tpch"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -536,7 +526,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "realized shipped quantity over the HAVING threshold. Spark plan: "
     "broadcast semi-join on the red-part keys, one aggregation on "
     "suppkey, then a semi-join back to supplier.",
-    tags=("join", "semi", "tpch"),
 )
 def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -588,7 +577,6 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "joins keyed on l_orderkey with the suppkey inequality as a residual "
     "filter — three shuffles on the same key, which AQE collapses via "
     "exchange reuse.",
-    tags=("join", "semi", "anti", "tpch"),
 )
 def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -650,7 +638,6 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     "1999' because every fixture customer has old orders. Scalar AVG via "
     "the decimal pattern; NOT EXISTS as a shuffled anti-join against the "
     "date-pruned orders scan.",
-    tags=("aggregation", "anti", "subquery", "tpch"),
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")

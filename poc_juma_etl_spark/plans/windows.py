@@ -36,7 +36,6 @@ from .queries import dec_to_double, register, ts_str
     doc="Top-K per group: row_number over (brand, revenue desc). The "
     "distributed top-K idiom — no driver-side sort, one shuffle on the "
     "partition key.",
-    tags=("window", "topk"),
 )
 def q_window_topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import dsum
@@ -72,7 +71,6 @@ def q_window_topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Running total per customer: cumulative frame ordered by a unique "
     "key; decimal sum keeps Spark's incremental evaluation and DuckDB's "
     "segment tree bitwise-equal.",
-    tags=("window",),
 )
 def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 100)
@@ -105,7 +103,6 @@ def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="lag/lead: per-user event deltas. Per-row double subtraction is "
     "deterministic, no decimal needed.",
-    tags=("window", "events"),
 )
 def q_window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 50)
@@ -129,7 +126,6 @@ def q_window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, event_id
     """,
     doc="Moving average over a 4-row sliding frame per user.",
-    tags=("window", "events"),
 )
 def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 50)
@@ -169,7 +165,6 @@ def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization: lag-gap > 30 min starts a new session; cumulative "
     "sum of the flag numbers the sessions (the batch form of "
     "session_window; streaming variant in streaming/events.py).",
-    tags=("window", "sessionize", "events"),
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 50)

@@ -328,7 +328,6 @@ def register_source(spark) -> None:
     doc="S1/S2/S3 connector parity: the paginated-REST Python DataSource "
     "(one InputPartition per page, server-side date filter, token cache) "
     "must return exactly the rows a direct relational scan returns.",
-    tags=("etl", "source", "connector"),
 )
 def etl_rest_source_scan(spark, sf_dir: str):
     from ..catalog import table_path

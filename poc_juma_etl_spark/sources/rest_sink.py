@@ -199,7 +199,6 @@ def read_published(spark, dest: str):
     "because commit publishes only the messages Spark accepted "
     "(abort/duplicate-staging semantics unit-pinned without Spark in "
     "tests/test_round5_ops.py).",
-    tags=("etl", "sink", "datasource", "e2e"),
 )
 def etl_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

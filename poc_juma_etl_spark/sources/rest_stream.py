@@ -118,7 +118,6 @@ def register_stream_source(spark) -> None:
     "relational scan of the same table yields (counts, id checksums, id "
     "bounds per type) — connector parity for the streaming path, like "
     "etl_rest_source_scan proves for the batch path.",
-    tags=("etl", "source", "streaming", "connector"),
 )
 def q_stream_rest_source_scan(spark, sf_dir: str):
     from pyspark.sql import functions as F
@@ -234,7 +233,6 @@ def drain_until_page(q, min_page: int, poll_s: float = 0.1, max_polls: int = 600
     "is the no-duplicates proof the hash can't fake). At 100 TB this is "
     "the recovery drill for any incremental ingest: offsets in the "
     "checkpoint, sink dedup via the sink's own commit log.",
-    tags=("etl", "source", "streaming", "connector", "recovery"),
 )
 def q_stream_rest_restart_scan(spark, sf_dir: str):
     import shutil

@@ -86,7 +86,6 @@ def stream_enriched_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state, no watermark), rolled up per tier. The oracle computes the "
     "tier inline from the same derivation the dimension encodes, so the "
     "gate proves the broadcast join enriched every event exactly once.",
-    tags=("streaming", "join", "enrich"),
 )
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_enriched_tier_counts(spark, sf_dir).orderBy("tier")

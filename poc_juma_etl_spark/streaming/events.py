@@ -86,7 +86,6 @@ def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Structured Streaming twin of q_event_tumbling_hour: identical "
     "windows computed incrementally (watermark + availableNow) and oracled "
     "against the batch SQL — streaming must converge to the batch answer.",
-    tags=("streaming", "events"),
 )
 def q_stream_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_tumbling_hour(spark, sf_dir)
@@ -108,7 +107,6 @@ def q_stream_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the 2h watermark horizon — bounded state at any scale, unlike an "
     "unbounded dropDuplicates. Converges to the batch aggregate over the "
     "duplicate-free table; doubled counts would flag instantly.",
-    tags=("streaming", "dedup", "events"),
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def src() -> DataFrame:
@@ -151,7 +149,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "express. Watermark bounds state to the 2h lateness horizon; the "
     "oracle assigns each event its two window starts arithmetically and "
     "must agree with the incremental execution exactly.",
-    tags=("streaming", "window", "events"),
 )
 def q_stream_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table(spark, sf_dir, "events")
@@ -201,7 +198,6 @@ def q_stream_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "express. Oracled against the batch lag-gap-cumsum sessionization "
     "(same SQL as q_session_window_builtin): incremental merge must "
     "converge to the batch answer exactly.",
-    tags=("streaming", "sessionize", "events"),
 )
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table(spark, sf_dir, "events").filter(F.col("user_id") <= 50)

@@ -272,7 +272,6 @@ def stream_close_event_pairs_outer(
     "whole-second gap sum): bounded-state incremental execution with "
     "watermark-driven null emission must converge to exactly the batch "
     "outer join.",
-    tags=("streaming", "join", "events", "outer"),
 )
 def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = stream_close_event_pairs_outer(spark, sf_dir)
@@ -312,7 +311,6 @@ def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "twin q_range_join_close_events pins the bucketed O(events·density) "
     "candidate plan; this entry pins the streaming execution of the same "
     "semantics.",
-    tags=("streaming", "join", "events"),
 )
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = stream_close_event_pairs(spark, sf_dir)

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.qdigest import VALUE_EXPR, digest_result
+from ..operators.qdigest import VALUE_EXPR, digest_result, qdigest_oracle_sql
+from ..plans.queries import register
 
 
 def merge_quantile_state(state_dir: str, df: DataFrame, epoch_id: int) -> None:
@@ -110,26 +111,16 @@ def stream_quantile_state(
     return hist
 
 
+@register(
+    "q_stream_quantile_digest",
+    oracle=qdigest_oracle_sql(),
+    doc="Streaming q-digest maintenance: epoch-keyed histogram log "
+    "(exact under at-least-once), fold + the shared digest build; "
+    "gate is batch equality on the batch operator's own oracle.",
+)
 def q_stream_quantile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same output contract as operators/qdigest.q_sketch_quantile_digest
     (and the same DuckDB oracle — batch equality IS the gate), with the
     histogram coming from the incremental stream instead of one batch
     pass."""
     return digest_result(spark, stream_quantile_state(spark, sf_dir))
-
-
-def _register_stream_quantile_gate() -> None:
-    from ..operators.qdigest import qdigest_oracle_sql
-    from ..plans.queries import register
-
-    register(
-        "q_stream_quantile_digest",
-        oracle=qdigest_oracle_sql(),
-        doc="Streaming q-digest maintenance: epoch-keyed histogram log "
-        "(exact under at-least-once), fold + the shared digest build; "
-        "gate is batch equality on the batch operator's own oracle.",
-        tags=("streaming", "sketch", "quantile"),
-    )(q_stream_quantile_digest)
-
-
-_register_stream_quantile_gate()

@@ -100,7 +100,6 @@ def stream_events_to_warehouse(
     "latest-event-per-user directly from the batch source. The streaming "
     "twin of the reference's idempotent re-load intent (utils.py:391-398) "
     "for keyed rather than range data.",
-    tags=("streaming", "cdc", "merge", "e2e"),
 )
 def q_stream_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

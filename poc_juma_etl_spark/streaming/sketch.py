@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.kmv import K, PRED_A, PRED_B, SPARK_H44, setops_result
+from ..operators.kmv import K, KMV_ORACLE, PRED_A, PRED_B, SPARK_H44, setops_result
+from ..plans.queries import register
 
 
 def _batch_bottomk(df: DataFrame) -> DataFrame:
@@ -149,37 +150,24 @@ def stream_kmv_state(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+@register(
+    "q_stream_kmv_sketch",
+    oracle=KMV_ORACLE,
+    doc="Streaming KMV sketch maintenance: the orders table arrives "
+    "as a file stream (maxFilesPerTrigger=1, availableNow) and "
+    "foreachBatch merges each micro-batch's per-segment bottom-k "
+    "hashes into a bounded 2k-row state table (atomic directory "
+    "swap, crash-safe); the final sketches feed the same set-algebra "
+    "estimates as the batch twin q_sketch_kmv_setops, and the gate "
+    "is batch equality — the stream must land value-for-value on "
+    "the one-pass batch SQL's output (micro-batch slicing invariance "
+    "is separately property-tested). State is bounded at 2k rows "
+    "regardless of stream length — the 100 TB shape for distinct "
+    "counting over unbounded arrivals.",
+)
 def q_stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same output contract as operators/kmv.q_sketch_kmv_setops (and the
     same DuckDB oracle — batch-equality IS the gate), with the sketches
     coming from the incremental stream instead of one batch pass."""
     sk = stream_kmv_state(spark, sf_dir)
     return setops_result(spark, sf_dir, sk["a"], sk["b"])
-
-
-def _register_stream_kmv_gate() -> None:
-    """Round-10 registration: batch-equality IS the gate — the stream
-    maintains the same bottom-k sketches the one-pass batch SQL computes,
-    so the oracle is exactly operators/kmv.KMV_ORACLE."""
-    from ..operators.kmv import KMV_ORACLE
-    from ..plans.queries import register
-
-    register(
-        "q_stream_kmv_sketch",
-        oracle=KMV_ORACLE,
-        doc="Streaming KMV sketch maintenance: the orders table arrives "
-        "as a file stream (maxFilesPerTrigger=1, availableNow) and "
-        "foreachBatch merges each micro-batch's per-segment bottom-k "
-        "hashes into a bounded 2k-row state table (atomic directory "
-        "swap, crash-safe); the final sketches feed the same set-algebra "
-        "estimates as the batch twin q_sketch_kmv_setops, and the gate "
-        "is batch equality — the stream must land value-for-value on "
-        "the one-pass batch SQL's output (micro-batch slicing invariance "
-        "is separately property-tested). State is bounded at 2k rows "
-        "regardless of stream length — the 100 TB shape for distinct "
-        "counting over unbounded arrivals.",
-        tags=("streaming", "sketch", "kmv", "stateful"),
-    )(q_stream_kmv_sketch)
-
-
-_register_stream_kmv_gate()

@@ -104,7 +104,6 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cents) — exact regardless of float addition order across state "
     "updates; the float total is covered separately by "
     "tests/test_stateful_streaming.py with a tolerance.",
-    tags=("streaming", "stateful", "events"),
 )
 def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = streaming_user_totals(spark, sf_dir)

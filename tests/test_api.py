@@ -37,8 +37,8 @@ def test_list_queries_docs():
     assert all(doc for doc in qs.values()), "every query must carry a description"
 
 
-# oracle-paired queries that register from operators.mp3/tar,
-# plans.extra11/12 and the text, lm and graph modules
+# queries that once registered through a queue or a deferred helper and now
+# register with @register(...) in their own modules
 DRAINED = (
     "q_text_zipf_profile",
     "q_ml_naive_bayes_langid",
@@ -50,6 +50,20 @@ DRAINED = (
     "etl_jsonl_gzip_roundtrip_e2e",
     "etl_xml_roundtrip_e2e",
     "q_graph_brand_triangle_census",
+    "q_multimodal_audio_features",
+    "q_multimodal_video_frames",
+    "q_text_bigram_surprisal",
+    "q_sample_group_split",
+    "q_sketch_quantile_digest",
+    "q_sketch_kmv_setops",
+    "q_quality_filter",
+    "q_quality_filter_pr_curve",
+    "q_multimodal_warc_ingest",
+    "etl_warc_file_ingest_e2e",
+    "etl_orc_roundtrip_e2e",
+    "etl_incremental_join_e2e",
+    "q_stream_quantile_digest",
+    "q_stream_kmv_sketch",
 )
 
 
@@ -74,4 +88,36 @@ def test_drained_queries_registered_with_oracle():
     from poc_juma_etl_spark import all_queries
 
     specs = all_queries()
-    assert [n for n in DRAINED if n not in specs or specs[n].oracle is None] == []
+    assert [n for n in DRAINED if n not in specs] == []
+
+
+def test_all_queries_imports_every_registering_module():
+    """A module left out of all_queries()' import list would silently
+    shrink the registry: every package module that uses @register(...)
+    must be imported by it. Runs in a fresh interpreter, where no other
+    test has imported a module already."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import poc_juma_etl_spark
+
+    root = Path(poc_juma_etl_spark.__file__).parent
+    registering = {
+        ".".join((root.name, *p.relative_to(root).with_suffix("").parts))
+        for p in root.rglob("*.py")
+        if "@register(" in p.read_text()
+    }
+    loaded = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, poc_juma_etl_spark as p; p.all_queries(); "
+            "print(*sys.modules, sep='\\n')",
+        ],
+        cwd=root.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert sorted(registering - set(loaded)) == []

@@ -1,4 +1,4 @@
-"""Full-surface schema contract: for EVERY oracled query, the Spark plan's
+"""Full-surface schema contract: for EVERY registered query, the Spark plan's
 output column names must equal the DuckDB oracle's — checked via schema
 derivation only (Spark analysis + DuckDB DESCRIBE), no execution, so the
 whole 150-query surface verifies in seconds.
@@ -28,23 +28,12 @@ SPECS = all_queries()
 # plan-time-pure queries: building the DataFrame runs no job
 PURE = sorted(
     n
-    for n, s in SPECS.items()
-    if s.oracle is not None
-    and n.startswith("q")
-    and "e2e" not in n
-    and not n.startswith("q_stream_")
-)
-
-# oracled queries excluded from the two-sided check (side-effectful plans)
-SIDE_EFFECT = sorted(n for n, s in SPECS.items() if s.oracle is not None and n not in PURE)
-
-# every plan-time-pure query, oracled or rows-only — all face a driver
-# canonicalizer that cannot hash non-scalar cells
-PURE_ANY = sorted(
-    n
-    for n, s in SPECS.items()
+    for n in SPECS
     if n.startswith("q") and "e2e" not in n and not n.startswith("q_stream_")
 )
+
+# queries excluded from the two-sided check (side-effectful plans)
+SIDE_EFFECT = sorted(n for n in SPECS if n not in PURE)
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +68,7 @@ def test_side_effect_oracles_describe(con, name):
     assert len(cols) == len(set(cols)), name
 
 
-@pytest.mark.parametrize("name", PURE_ANY, ids=str)
+@pytest.mark.parametrize("name", PURE, ids=str)
 def test_scalar_output_columns_only(spark, name):
     """No registered query may emit array/map/struct output columns: the
     driver's pandas canonicalizer crashes sorting ndarray cells (r4's

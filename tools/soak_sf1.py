@@ -93,73 +93,69 @@ def main() -> None:
         spec = specs[name]
         t0 = time.perf_counter()
         try:
-            if spec.oracle is None:
-                n = spec.fn(spark, sf_dir).count()
-                r: dict = {"match": None, "rows_only": n}
-            else:
-                oracle_sql = spec.oracle
-                if name == "q_dedup_components":
-                    # Guard the splice: the cached-prelude derivation below is
-                    # only equivalent to the query's own registered oracle if
-                    # that oracle still computes the SAME closure (edges CTE,
-                    # thresholds) as SQL_PIPELINE_RANKED. If the registered
-                    # oracle drifts (e.g. JACCARD_T changes in one place), the
-                    # substitution must fail loudly, not mask it.
-                    core = SQL_PIPELINE_RANKED[
-                        SQL_PIPELINE_RANKED.index("sh AS") :
-                        SQL_PIPELINE_RANKED.index("reach(node, r) AS")
-                    ]
-                    reach = SQL_PIPELINE_RANKED[
-                        SQL_PIPELINE_RANKED.index("reach(node, r) AS") :
-                        SQL_PIPELINE_RANKED.index("membership")
-                    ].strip().rstrip(",")
-                    assert core in spec.oracle and reach in spec.oracle, (
-                        "q_dedup_components' registered oracle no longer embeds "
-                        "SQL_PIPELINE_RANKED's shingle->edges->reach closure "
-                        "verbatim (a constant like JACCARD_T drifted?) — the "
-                        "cached-prelude substitution is not equivalence-"
-                        "preserving; update COMPONENTS_FROM_CACHE or drop the "
-                        "splice."
+            oracle_sql = spec.oracle
+            if name == "q_dedup_components":
+                # Guard the splice: the cached-prelude derivation below is
+                # only equivalent to the query's own registered oracle if
+                # that oracle still computes the SAME closure (edges CTE,
+                # thresholds) as SQL_PIPELINE_RANKED. If the registered
+                # oracle drifts (e.g. JACCARD_T changes in one place), the
+                # substitution must fail loudly, not mask it.
+                core = SQL_PIPELINE_RANKED[
+                    SQL_PIPELINE_RANKED.index("sh AS") :
+                    SQL_PIPELINE_RANKED.index("reach(node, r) AS")
+                ]
+                reach = SQL_PIPELINE_RANKED[
+                    SQL_PIPELINE_RANKED.index("reach(node, r) AS") :
+                    SQL_PIPELINE_RANKED.index("membership")
+                ].strip().rstrip(",")
+                assert core in spec.oracle and reach in spec.oracle, (
+                    "q_dedup_components' registered oracle no longer embeds "
+                    "SQL_PIPELINE_RANKED's shingle->edges->reach closure "
+                    "verbatim (a constant like JACCARD_T drifted?) — the "
+                    "cached-prelude substitution is not equivalence-"
+                    "preserving; update COMPONENTS_FROM_CACHE or drop the "
+                    "splice."
+                )
+                oracle_sql = SQL_PIPELINE_RANKED + COMPONENTS_FROM_CACHE
+            if SQL_PIPELINE_RANKED in oracle_sql:
+                # the shared curation-pipeline prelude (recursive-CTE
+                # closure over the shingle self-join) costs ~20 min at
+                # sf1 PER QUERY on the DuckDB side; materialize it once
+                # per sweep and splice the cached tables in (same CTE
+                # interface: tok + ranked)
+                if not pipeline_cached:
+                    t_cache = time.perf_counter()
+                    con.execute(
+                        "CREATE TEMP TABLE pipeline_tok AS "
+                        + SQL_PIPELINE_RANKED
+                        + " SELECT doc_id, ts FROM tok"
                     )
-                    oracle_sql = SQL_PIPELINE_RANKED + COMPONENTS_FROM_CACHE
-                if SQL_PIPELINE_RANKED in oracle_sql:
-                    # the shared curation-pipeline prelude (recursive-CTE
-                    # closure over the shingle self-join) costs ~20 min at
-                    # sf1 PER QUERY on the DuckDB side; materialize it once
-                    # per sweep and splice the cached tables in (same CTE
-                    # interface: tok + ranked)
-                    if not pipeline_cached:
-                        t_cache = time.perf_counter()
-                        con.execute(
-                            "CREATE TEMP TABLE pipeline_tok AS "
-                            + SQL_PIPELINE_RANKED
-                            + " SELECT doc_id, ts FROM tok"
-                        )
-                        con.execute(
-                            "CREATE TEMP TABLE pipeline_ranked AS "
-                            + SQL_PIPELINE_RANKED
-                            + " SELECT * FROM ranked"
-                        )
-                        pipeline_cached = True
-                        print(
-                            f"CACHED pipeline prelude in {time.perf_counter() - t_cache:.1f}s",
-                            flush=True,
-                        )
-                    oracle_sql = oracle_sql.replace(
-                        SQL_PIPELINE_RANKED, CACHED_PRELUDE
+                    con.execute(
+                        "CREATE TEMP TABLE pipeline_ranked AS "
+                        + SQL_PIPELINE_RANKED
+                        + " SELECT * FROM ranked"
                     )
-                oracle_pdf = con.execute(oracle_sql).fetchdf()
-                r = compare(spec.fn(spark, sf_dir), oracle_pdf)
+                    pipeline_cached = True
+                    print(
+                        f"CACHED pipeline prelude in {time.perf_counter() - t_cache:.1f}s",
+                        flush=True,
+                    )
+                oracle_sql = oracle_sql.replace(
+                    SQL_PIPELINE_RANKED, CACHED_PRELUDE
+                )
+            oracle_pdf = con.execute(oracle_sql).fetchdf()
+            r = compare(spec.fn(spark, sf_dir), oracle_pdf)
         except Exception as exc:  # keep sweeping; record the failure
             r = {"match": False, "error": f"{type(exc).__name__}: {exc}"}
             traceback.print_exc()
         release_caches()
         dt = time.perf_counter() - t0
-        status = {True: "OK  ", False: "FAIL", None: "rows"}[r.get("match")]
-        if r.get("match") is False:
-            n_fail += 1
-        else:
+        status = "OK  " if r["match"] else "FAIL"
+        if r["match"]:
             n_ok += 1
+        else:
+            n_fail += 1
         print(
             f"{status} [{i + 1}/{len(names)}] {name} ({dt:.1f}s): "
             + json.dumps({k: v for k, v in r.items() if k != "first_diffs"},
