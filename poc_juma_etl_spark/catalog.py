@@ -7,6 +7,15 @@ an explicit ``StructType`` per registered table and validates reads against it.
 
 Tables are the driver's TPC-H-ish fixtures (TESTDATA.md) plus the
 LLM-pipeline extension tables ``documents`` / ``embeddings``.
+
+Reads pin the file's physical schema instead of re-inferring it: Spark's
+parquet inference costs one footer-reading job per ``spark.read.parquet``,
+paid on every query that loads the table. :func:`physical_schema` infers
+once per file version, keyed by the data files' (path, length, mtime)
+listing plus the two session confs that change parquet inference. A
+rewritten file or a flipped conf is a new key, so a stale schema is never
+served; the name-based drift check in :func:`load_table` still runs on
+every call, cache hit or not.
 """
 
 from __future__ import annotations
@@ -125,6 +134,52 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Session confs whose value changes the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (path, inference conf values) -> (data-file fingerprint, inferred schema).
+# Process-wide: the schema depends only on the files and those confs, never
+# on the session. One entry per path; a rewrite replaces it. No lock:
+# concurrent misses each infer and store a correct entry.
+_PHYSICAL: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """``(path, length, mtime)`` of every file under ``path`` (a file or a
+    directory, listed recursively), through the Hadoop FileSystem API — no
+    Spark job. ``None`` when the path does not exist."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+    files = fs.listFiles(root, True)
+    out = []
+    while files.hasNext():
+        st = files.next()
+        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def physical_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Spark's own inferred schema of the parquet at ``path``, inferred once
+    per file version and session inference confs (module docstring). A
+    missing path is not cached: inference raises Spark's usual error."""
+    fp = _fingerprint(spark, path)
+    if fp is None:
+        return spark.read.parquet(path).schema
+    key = (path, *(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _PHYSICAL.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _PHYSICAL[key] = (fp, schema)
+    return schema
+
+
 def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
     """Normalize timestamp columns to session-TZ TIMESTAMP regardless of how
     the file stores them. Generations of the testdata have used
@@ -151,12 +206,17 @@ def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one registered table. Parquet supplies the physical schema
-    (pushdown + pruning intact); we assert it matches the declared catalog
-    schema by field name so drift fails fast instead of mid-query."""
+    """Read one registered table with its cached physical schema
+    (:func:`physical_schema`: inferred once per file version and inference
+    confs, so a warm call runs no Spark job; pushdown + pruning intact).
+    Every call, cache hit or not, asserts the schema matches the declared
+    catalog schema by field name so drift fails fast instead of mid-query."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    df = normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)), name)
+    path = table_path(sf_dir, name)
+    df = normalize_timestamps(
+        spark.read.schema(physical_schema(spark, path)).parquet(path), name
+    )
     declared = [f.name for f in SCHEMAS[name].fields]
     if [c.lower() for c in df.columns] != declared:
         raise ValueError(
@@ -166,16 +226,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Streaming twin of :func:`load_table`. The read schema comes from the
-    fixture's own parquet footer (driver-side footer inspection via a batch
-    reader — no job runs), NOT a hardcoded DDL string, so a testdata
-    regeneration that flips the ``ts`` physical type (TIMESTAMP(NANOS) ↔
-    timestamp[us]/NTZ) is absorbed by the same
+    """Streaming twin of :func:`load_table`. The read schema is the
+    fixture's own parquet footer schema (:func:`physical_schema`: one
+    inference job per file version, none when cached), NOT a hardcoded DDL
+    string, so a testdata regeneration that flips the ``ts`` physical type
+    (TIMESTAMP(NANOS) ↔ timestamp[us]/NTZ) is absorbed by the same
     :func:`normalize_timestamps` path batch reads use instead of failing
     every streaming query at scan."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    physical = spark.read.parquet(table_path(sf_dir, name)).schema
+    physical = physical_schema(spark, table_path(sf_dir, name))
     stream = (
         spark.readStream.schema(physical)
         # the file stream source wants a directory: stream the sf dir with a

@@ -173,7 +173,7 @@ AUDIO_ORACLE = f"""
 )
 def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (round-12, measured and REJECTED): spread() here A/B'd 0.80x
-    # (tools/ab_r12.py, values identical) — the PCM16 feature walk is
+    # with values identical — the PCM16 feature walk is
     # cheap enough that 32-way task fan-out overhead exceeds the
     # single-core kernel time, unlike the PNG/AVI decode gates where the
     # same guard won 1.6-3.0x. Kernel weight decides; re-measure if the

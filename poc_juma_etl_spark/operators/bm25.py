@@ -350,8 +350,8 @@ def q_hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # NOTE (round-12, measured and REJECTED): tok feeds four subtrees
     # (doclen stats, query-doc terms, postings, tf) and re-tokenizes per
-    # consumer; a scoped_cache A/B'd 0.97x (tools/ab_r12.py, values
-    # identical) — all consumers execute inside ONE action, so the
+    # consumer; a scoped_cache A/B'd 0.97x with values identical — all
+    # consumers execute inside ONE action, so the
     # duplicate tokenize passes run concurrently on idle cores while the
     # cache fill adds serialized write overhead. Same finding as the
     # pagerank edge build and source-overlap shingle domain this round.

@@ -95,7 +95,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # NOTE (round-12, measured and REJECTED): de-duplicating this subtree —
     # the union below evaluates the join+distinct once per edge direction —
-    # was A/B'd two ways (tools/ab_r12.py, values identical): scoped_cache
+    # was A/B'd two ways (values identical): scoped_cache
     # 0.71x (both union branches materialize inside pagerank_top's ONE
     # checkpoint job and race the cache fill), eager truncate_lineage(cp)
     # 1.04x wash (the serial materialization job costs what the concurrent

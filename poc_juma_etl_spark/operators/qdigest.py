@@ -204,7 +204,7 @@ def digest_result(spark: SparkSession, leaves: DataFrame) -> DataFrame:
     the histogram, pinned in tests) but paid 20 scheduled jobs + 20
     lineage checkpoints of fixed overhead, making the query ~sf-invariant
     slow; the interleaved A/B measured the driver build at 4.7x (sf0.1)
-    to 6.2x (sf1) with values identical (tools/ab_qdigest_driverbuild.py).
+    to 6.2x (sf1) with values identical.
     Mergeability at 1000 executors is unchanged: partitions sketch
     independently and merge by histogram/node-list concatenation + one
     rebuild (tests pin the merge property)."""

@@ -204,7 +204,7 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last(priority, ignorenulls) gives every fact row of a day the same
     # carried version — so the distinct key set, its shuffle, the fact
     # cache, and the two-sided re-attach sort-merge join all disappear.
-    # Plan: 20 Exchanges → 6 (plans/r13), the fact table crosses exactly one
+    # Plan: 20 Exchanges → 6, the fact table crosses exactly one
     # Exchange (the custkey carry window) and is scanned once. Semantics are
     # the r8 soak fix's, unchanged: no rn=1 per-fact window anywhere (the
     # carry never dedupes, so the non-unique fact key is still safe), and

@@ -223,7 +223,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (round-12, measured and REJECTED): ds feeds two consumers (per-
     # source totals, the pair explode) and is evaluated twice — both a
     # scoped_cache (0.82x) and an eager truncate_lineage (0.78x) LOST to
-    # the duplicate evaluation (tools/ab_r12.py, values identical): one
+    # the duplicate evaluation (values identical): one
     # action runs both subtrees concurrently on idle cores, while
     # materializing the distinct shingle domain serializes its write onto
     # the critical path. Same finding as pagerank's edge build this round.

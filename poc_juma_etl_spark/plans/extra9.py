@@ -153,7 +153,7 @@ def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejection held (idle cores make duplicate evaluation ~free), here the
     # duplicated subtree is the posexplode+md5 shingle generation itself and
     # the cache wins at BOTH core counts: 1.66x at local[32], 1.41x at
-    # local[8] (tools/ab_r12.py, values identical, 477 rows).
+    # local[8] in an interleaved A/B, values identical (477 rows).
     sh = scoped_cache(sh)
     dup = sh.groupBy("h").agg(F.sum("gsz").alias("c")).filter(F.col("c") >= 2)
     hits = sh.join(dup.select("h"), "h").select("doc_id", "pos")
@@ -340,8 +340,8 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window onto the range-partitioned global-prefix-sum idiom
     # (budget_select: repartitionByRange(grp, val) + cached pid layout +
     # per-partition totals collect + broadcast offsets + min_by final
-    # aggregate) A/B'd at 0.60x (best 5.12s vs 3.06s, values identical,
-    # tools/ab_r12.py) — the recut's fixed jobs (range sampling, cache
+    # aggregate) A/B'd at 0.60x (best 5.12s vs 3.06s, values identical)
+    # — the recut's fixed jobs (range sampling, cache
     # fill, offsets collect) cost more at bench SFs than the 3-task
     # window they replace. The grp-partitioned window stays; it IS the
     # known parallelism ceiling here (3 l_returnflag groups), but its
@@ -995,7 +995,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row count (every edge endpoint, as before). Earlier measured
     # rejections stand unchanged and still apply to this shape: the BFS
     # half-size-cache idiom (r11, 0.43x at sf1) and the degree-upper-bound
-    # prefilter (r12, 0.82-0.83x both shapes, tools/ab_kcore_prefilter.py).
+    # prefilter (r12, 0.82-0.83x on both graph shapes).
     per_basket = baskets.select(
         F.explode(
             F.expr("transform(parts, x -> struct(x AS u, filter(parts, y -> y != x) AS vs))")

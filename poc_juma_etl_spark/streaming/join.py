@@ -124,11 +124,12 @@ def _sentinel_events_dir(
     import shutil
     import tempfile
 
-    from ..catalog import table_path
+    from ..catalog import physical_schema, table_path
 
     d = tempfile.mkdtemp(prefix="stream_outer_")
     src = table_path(sf_dir, "events")
-    events = spark.read.parquet(src)
+    # raw physical encoding on purpose: the streams normalize the staged copy
+    events = spark.read.schema(physical_schema(spark, src)).parquet(src)
     # one aggregation returns both (a separate count() would be a second
     # full read, paid on every drain of both streaming gates — r9 review)
     stats = events.agg(
