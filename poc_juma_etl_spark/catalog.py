@@ -12,10 +12,11 @@ Reads pin the file's physical schema instead of re-inferring it: Spark's
 parquet inference costs one footer-reading job per ``spark.read.parquet``,
 paid on every query that loads the table. :func:`physical_schema` infers
 once per file version, keyed by the data files' (path, length, mtime)
-listing plus the two session confs that change parquet inference. A
-rewritten file or a flipped conf is a new key, so a stale schema is never
-served; the name-based drift check in :func:`load_table` still runs on
-every call, cache hit or not.
+listing from :func:`storage.list_files` (no Spark job) plus the two
+session confs that change parquet inference. A rewritten file or a
+flipped conf is a new key, so a stale schema is never served; the
+name-based drift check in :func:`load_table` still runs on every call,
+cache hit or not.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import storage
 
 # -- explicit schemas -------------------------------------------------------
 # Matches the parquet footers under /root/testdata/sf*/ exactly (verified via
@@ -147,28 +150,11 @@ _INFERENCE_CONFS = (
 _PHYSICAL: dict[tuple, tuple[tuple, T.StructType]] = {}
 
 
-def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
-    """``(path, length, mtime)`` of every file under ``path`` (a file or a
-    directory, listed recursively), through the Hadoop FileSystem API — no
-    Spark job. ``None`` when the path does not exist."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return None
-    files = fs.listFiles(root, True)
-    out = []
-    while files.hasNext():
-        st = files.next()
-        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
-    return tuple(sorted(out))
-
-
 def physical_schema(spark: SparkSession, path: str) -> T.StructType:
     """Spark's own inferred schema of the parquet at ``path``, inferred once
     per file version and session inference confs (module docstring). A
     missing path is not cached: inference raises Spark's usual error."""
-    fp = _fingerprint(spark, path)
+    fp = storage.list_files(spark, path)
     if fp is None:
         return spark.read.parquet(path).schema
     key = (path, *(spark.conf.get(k) for k in _INFERENCE_CONFS))

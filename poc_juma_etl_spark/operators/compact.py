@@ -10,66 +10,31 @@ Implementation (one code path, plan-driven): window over ``_metadata`` file
 stats → start-offset output groups (oversized partitions SPLIT into
 ~target-sized groups; tiny neighbours pack) → one shuffle keyed on
 (partition_dir, group) → rewrite to a staging path → atomic directory swap
-with crash recovery. The staging+swap avoids the read-overwrite conflict
-and leaves the table readable until the swap."""
+with crash recovery (``storage.swap_in``/``storage.recover``). The
+staging+swap avoids the read-overwrite conflict and leaves the table
+readable until the swap. File counts come from ``storage.list_files``, a
+driver-side listing with no Spark job."""
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .. import storage
 from ..plans.queries import register
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) for a parquet table directory.
-
-    Local paths walk the directory in-process: the Hadoop ``listFiles``
-    remote iterator costs ~3 py4j round-trips PER FILE (hasNext/next/
-    getPath/getLen), which round-12 profiling measured at ~1 s for a
-    180-file table — pure driver-side RPC chatter (guide §5: the driver
-    should do almost no data work, and listing IS driver work, so make
-    it one process instead of two). Non-local URIs keep the Hadoop
-    filesystem path unchanged.
-
-    The in-process walk is gated on the path actually resolving to the
-    LOCAL filesystem (ADVICE r12): a scheme-less path resolves via
-    ``fs.defaultFS``, so on an HDFS-defaulted deployment it must keep the
-    Hadoop listing — os.path.isdir on the driver's disk would read a real
-    remote table as "never written" and silently no-op the compaction.
-    ``followlinks=True`` matches Hadoop RawLocalFileSystem.listFiles,
-    which traverses symlinked partition directories."""
-    import os
-
-    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-    if "://" not in path and not path.startswith("file:") and default_fs.startswith(
-        "file:"
-    ):
-        if not os.path.isdir(path):  # never-written table (S6 empty-guard)
-            return 0, 0
-        n, total = 0, 0
-        for root, _dirs, files in os.walk(path, followlinks=True):
-            for name in files:
-                if name.endswith(".parquet") and not name.startswith("_"):
-                    n += 1
-                    total += os.path.getsize(os.path.join(root, name))
-        return n, total
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    n, total = 0, 0
-    if not fs.exists(p):  # never-written table (S6 empty-guard upstream)
-        return 0, 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
+    """(n_data_files, total_bytes) for a parquet table directory: the
+    ``.parquet`` files of :func:`storage.list_files` whose name does not
+    start with ``_``. A never-written table (S6 empty-guard) is (0, 0)."""
+    sizes = []
+    for f, n, _ in storage.list_files(spark, path) or ():
+        name = f.rsplit("/", 1)[-1]
         if name.endswith(".parquet") and not name.startswith("_"):
-            n += 1
-            total += f.getLen()
-    return n, total
+            sizes.append(n)
+    return len(sizes), sum(sizes)
 
 
 def compact_table(
@@ -89,68 +54,13 @@ def compact_table(
     return stats["files_before"], stats["files_after"]
 
 
-def _swap_into(spark: SparkSession, staging: str, path: str) -> None:
-    """Atomic-ish directory swap (shared by compact_table/compact_execute):
-    rename old out of the way, staging in, drop old. A crash between the
-    two renames leaves the table MISSING at ``path`` with the original
-    intact at ``path__compact_old`` — :func:`recover_table` heals that
-    state; callers run it before planning a new compaction.
-
-    Hadoop ``FileSystem.rename`` reports most failures by returning FALSE
-    (dest-exists races, missing source), not by raising — every return is
-    checked, and a failed swap-in rolls the original straight back instead
-    of falling through to the delete that would destroy the only copy."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    st = jvm.org.apache.hadoop.fs.Path(staging)
-    old = jvm.org.apache.hadoop.fs.Path(f"{path}__compact_old")
-    fs.delete(old, True)
-    if not fs.rename(p, old):
-        raise IOError(f"compaction swap: could not move {path} aside")
-    if not fs.rename(st, p):
-        # roll the original back before anything else touches the dir; the
-        # table must never be left missing when we can restore it
-        restored = fs.rename(old, p)
-        raise IOError(
-            f"compaction swap: could not move staging into {path}"
-            + ("" if restored else f" AND rollback failed — original at {old}")
-        )
-    fs.delete(old, True)
-
-
 def recover_table(spark: SparkSession, path: str) -> str:
-    """Heal a table directory after a compaction crash. Three states:
-
-    - table present, leftovers absent → "clean" (no-op);
-    - table MISSING but ``path__compact_old`` present → the crash hit
-      between _swap_into's two renames: roll the original back → "restored";
-    - table present AND stale ``__compact_old`` / ``__compact_staging``
-      alongside (crash before the swap finished deleting, or before the
-      swap began) → the live table wins; drop the leftovers → "cleaned".
-
-    Idempotent; compact_table/compact_execute call it first so a retried
+    """Heal a table directory after a compaction crash
+    (:func:`storage.recover` with the ``__compact_old`` and
+    ``__compact_staging`` leftovers): returns "clean", "restored" or
+    "cleaned". compact_table/compact_execute call it first so a retried
     maintenance job never plans against a half-swapped directory."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    old = jvm.org.apache.hadoop.fs.Path(f"{path}__compact_old")
-    staging = jvm.org.apache.hadoop.fs.Path(f"{path}__compact_staging")
-    if not fs.exists(p):
-        if fs.exists(old):
-            if not fs.rename(old, p):  # rename failures return False, not raise
-                raise IOError(f"recover: could not restore {path} from {old}")
-            fs.delete(staging, True)
-            return "restored"
-        return "clean"  # never-written table; nothing to heal
-    cleaned = False
-    for leftover in (old, staging):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
-            cleaned = True
-    return "cleaned" if cleaned else "clean"
+    return storage.recover(spark, path, f"{path}__compact_old", f"{path}__compact_staging")
 
 
 def plan_output_groups(meta, target_bytes: int):
@@ -299,7 +209,7 @@ def compact_execute(
     finally:
         if plan is not None:
             plan.unpersist()
-    _swap_into(spark, staging, path)
+    storage.swap_in(spark, staging, path, f"{path}__compact_old")
     after, _ = table_file_stats(spark, path)
     return {
         "files_before": before,

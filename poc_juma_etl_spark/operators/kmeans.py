@@ -105,37 +105,6 @@ def _assign(
     return fn(vec_df, centroids, vec_col)
 
 
-def _probe_cells_pandas(
-    q_df: DataFrame, centroids: list[tuple[int, list[float]]], vec_col: str, nprobe: int
-) -> DataFrame:
-    """Large-k twin of the literal probe selection in q_ann_ivf_topk: the
-    nprobe nearest cells per query via the broadcast centroid matrix and a
-    vectorized argpartition — the query-side plan stays k-independent.
-    Returns the input plus an ``array<int>`` column ``probe_cells``."""
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    cids = np.asarray([cid for cid, _ in centroids], dtype=np.int64)
-    b = q_df.sparkSession.sparkContext.broadcast((mat, cids))
-
-    @pandas_udf("array<int>")
-    def nearest_cells(v: pd.Series) -> pd.Series:
-        m, ids = b.value
-        m_sq = (m * m).sum(axis=1)
-        out = []
-        for arr in v:
-            x = np.asarray(arr, dtype=np.float64)
-            d = (x * x).sum() - 2.0 * (m @ x) + m_sq
-            # argpartition then a stable sort of just the nprobe winners —
-            # ties resolve to lower cid like the literal array_sort path
-            top = np.argpartition(d, min(nprobe, len(ids)) - 1)[:nprobe]
-            top = top[np.lexsort((ids[top], d[top]))]
-            out.append(ids[top].astype("int32"))
-        return pd.Series(out)
-
-    return q_df.withColumn("probe_cells", nearest_cells(F.col(vec_col)))
-
-
 def kmeans_fit(
     df: DataFrame, vec_col: str = "embedding", k: int = K, iters: int = ITERS
 ) -> list[tuple[int, list[float]]]:

@@ -12,10 +12,10 @@ range is gone.
 Tables written by this module are date-partitioned parquet directories
 (partition column ``p_date`` derived from the table's filter field).
 Range replacement plans from partition metadata: the driver lists the
-table's ``p_date=`` directories with the Hadoop FileSystem API (no Spark
-job), keeps those inside the range, and reads retained rows from the at
-most two edge partitions a day range can cut — never from a partition the
-range does not touch. One planning job over the staged rows yields the
+table's ``p_date=`` directories through ``storage`` (no Spark job),
+keeps those inside the range, and reads retained rows from the at most two
+edge partitions a day range can cut — never from a partition the range
+does not touch. One planning job over the staged rows yields the
 partitions to write (and doubles as the empty-input guard); then the write
 job runs, and the in-range partitions the write did not replace are deleted.
 On a real cluster you'd put Delta/Iceberg underneath for snapshot
@@ -30,6 +30,8 @@ from urllib.parse import unquote
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import storage
 
 PARTITION_COL = "p_date"
 
@@ -63,23 +65,16 @@ def partitions_in_range(
     """``{partition value: directory}`` of the ``column=`` directories
     directly under ``path`` whose date lies in ``[lo, hi]``.
 
-    Listed on the driver through the Hadoop FileSystem API — no Spark job,
-    and nothing below the table root is opened (local FS, HDFS and S3A
-    alike). Values are unescaped the way Spark escapes directory names, so
-    a timestamp partition stored as ``1995-01-01 00%3A00%3A00`` reads back
-    as ``1995-01-01 00:00:00``, the string Spark casts that value to; its
-    date is the leading ``YYYY-MM-DD``. A missing table lists as empty."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return {}
+    Listed on the driver by :func:`storage.list_dirs` — no Spark job, and
+    nothing below the table root is opened. Values are unescaped the way
+    Spark escapes directory names, so a timestamp partition stored as
+    ``1995-01-01 00%3A00%3A00`` reads back as ``1995-01-01 00:00:00``, the
+    string Spark casts that value to; its date is the leading
+    ``YYYY-MM-DD``. A missing table lists as empty."""
     prefix = f"{column}="
     out: dict[str, str] = {}
-    for status in fs.listStatus(root):
-        d = status.getPath().toString()
-        name = d.rsplit("/", 1)[1]
-        if not (status.isDirectory() and name.startswith(prefix)):
+    for name, d in storage.list_dirs(spark, path).items():
+        if not name.startswith(prefix):
             continue
         value = unquote(name[len(prefix):])
         try:
@@ -89,16 +84,6 @@ def partitions_in_range(
         if lo <= day <= hi:
             out[value] = d
     return out
-
-
-def delete_partitions(spark: SparkSession, dirs) -> None:
-    """Remove partition directories via the Hadoop FileSystem API (works on
-    local FS, HDFS, and S3A alike — same code path a cluster uses)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for d in dirs:
-        ppath = jvm.org.apache.hadoop.fs.Path(d)
-        ppath.getFileSystem(conf).delete(ppath, True)
 
 
 def _writer(df: DataFrame, filter_field: str | None, granularity: str):
@@ -139,13 +124,14 @@ def _retained_rows(
     granularity: str,
 ) -> DataFrame | None:
     """Rows of the touched partitions that fall outside ``[start, end]``,
-    localCheckpoint'ed (Spark refuses to overwrite a path it is still
-    reading from lineage). Only the partitions holding ``start`` and ``end``
-    can hold such rows — every partition between them lies wholly inside
-    the range — so only those (at most two) directories are read. They are
-    read with the staged rows' schema rather than one inferred from a
-    parquet footer, which would cost a Spark job; a column the old files
-    lack reads as null."""
+    as a lazy read. Only the partitions holding ``start`` and ``end`` can
+    hold such rows — every partition between them lies wholly inside the
+    range — so only those (at most two) directories are read. The write
+    that replaces them may read them too: a dynamic overwrite writes to a
+    staging directory and moves partitions in only when the job commits,
+    after every task has read its input. They are read with the staged
+    rows' schema rather than one inferred from a parquet footer, which
+    would cost a Spark job; a column the old files lack reads as null."""
     if granularity == "day":
         return None
     edges = {str(_partition_of(d, granularity)) for d in (start, end)}
@@ -153,7 +139,7 @@ def _retained_rows(
     if not dirs:
         return None
     old = spark.read.schema(schema).option("basePath", path).parquet(*dirs)
-    return old.filter(~day.between(F.lit(start), F.lit(end))).localCheckpoint()
+    return old.filter(~day.between(F.lit(start), F.lit(end)))
 
 
 def replace_range(
@@ -175,13 +161,13 @@ def replace_range(
     Without ``start``/``end`` the range is the day span of ``new_rows``
     (a bootstrap load), found by the same planning job.
 
-    Steps: list the in-range partitions on the driver; checkpoint the rows
-    of the range's edge partitions that fall outside it (month granularity
-    only); one planning job collects the partitions of the new and retained
-    rows; one dynamic-overwrite job writes them; the in-range partitions
-    the write did not cover are deleted. The write job is the atomic step:
-    each partition it writes is replaced whole at commit, so a crash never
-    leaves a half-written partition (the reference's delete+insert has a
+    Steps: list the in-range partitions on the driver; one planning job
+    collects the partitions of the new rows and of the rows of the range's
+    edge partitions that fall outside it (month granularity only); one
+    dynamic-overwrite job writes both; the in-range partitions the write did
+    not cover are deleted. The write job is the atomic step: each partition
+    it writes is replaced whole at commit, so a crash never leaves a
+    half-written partition (the reference's delete+insert has a
     window with the range gone, utils.py:391-398). The delete runs after
     that commit; a crash between the two leaves stale in-range partitions
     the write did not cover, and re-running the call removes them.
@@ -239,7 +225,7 @@ def replace_range(
     # in-range rows (caught by tests/test_property_range_replace.py), so
     # those are deleted explicitly, mirroring the reference's DELETE of the
     # full range (utils.py:266-269).
-    delete_partitions(spark, [d for v, d in touched.items() if v not in desired])
+    storage.delete(spark, [d for v, d in touched.items() if v not in desired])
     return start, end
 
 

@@ -29,7 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.range_replace import delete_partitions, partitions_in_range
+from .. import storage
+from ..operators.range_replace import partitions_in_range
 
 
 @dataclass(frozen=True)
@@ -196,5 +197,5 @@ def refresh_incremental(
         .partitionBy(pf)
         .parquet(out)
     )
-    delete_partitions(spark, [d for v, d in affected.items() if v not in desired])
+    storage.delete(spark, [d for v, d in affected.items() if v not in desired])
     return out

@@ -1,0 +1,159 @@
+"""Driver-side file operations on table paths: listing, deletes and the
+atomic directory swap with crash recovery. Spark reads and writes the
+data; every list, delete and rename around it goes through this module.
+
+Listing runs in-process when the path resolves to the driver's own disk:
+the Hadoop remote iterator costs py4j round trips per file
+(``hasNext``/``next``/``getPath``/``getLen``), ~7 ms to fingerprint one
+file and ~0.6 s to list an 83-directory table, against milliseconds
+through ``os``. The gate: no scheme, no ``file:`` prefix, and a ``file:``
+``fs.defaultFS`` — on an HDFS-defaulted deployment a scheme-less path names
+a remote table that the driver's disk would report as missing. Every other
+path lists through Hadoop (local FS, HDFS and S3A alike). Both ways give
+the same files, lengths and millisecond mtimes: symlinked directories are
+followed, as ``RawLocalFileSystem`` does, and checksum files (``.*.crc``,
+hidden by Hadoop's local FS) are left out.
+
+Deletes and renames always go through Hadoop: a handful of calls per write,
+and ``FileSystem.rename`` is the primitive every store implements.
+"""
+
+from __future__ import annotations
+
+import os
+
+from pyspark.sql import SparkSession
+
+
+def _is_local(spark: SparkSession, path: str) -> bool:
+    if "://" in path or path.startswith("file:"):
+        return False
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    return default_fs.startswith("file:")
+
+
+def _is_checksum(name: str) -> bool:
+    return name.startswith(".") and name.endswith(".crc")
+
+
+def _fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def list_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted ``(path, length, mtime_ms)`` of every file under ``path``,
+    listed recursively; a file path lists itself. ``None`` when ``path``
+    does not exist. No Spark job runs."""
+    out = []
+    if _is_local(spark, path):
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns // 1_000_000),)
+        if not os.path.isdir(path):
+            return None
+        for root, _dirs, files in os.walk(path, followlinks=True):
+            for name in files:
+                if not _is_checksum(name):
+                    f = os.path.join(root, name)
+                    st = os.stat(f)
+                    out.append((f, st.st_size, st.st_mtime_ns // 1_000_000))
+        return tuple(sorted(out))
+    fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        return None
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        f = st.getPath().toString()
+        if not _is_checksum(f.rsplit("/", 1)[-1]):
+            out.append((f, st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def list_dirs(spark: SparkSession, path: str) -> dict[str, str]:
+    """``{name: path}`` of the directories directly under ``path``; ``{}``
+    when ``path`` does not exist. Nothing below them is opened."""
+    if _is_local(spark, path):
+        try:
+            with os.scandir(path) as entries:
+                return {e.name: os.path.join(path, e.name) for e in entries if e.is_dir()}
+        except (FileNotFoundError, NotADirectoryError):
+            return {}
+    fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        return {}
+    out = {}
+    for status in fs.listStatus(root):
+        if status.isDirectory():
+            d = status.getPath().toString()
+            out[d.rsplit("/", 1)[1]] = d
+    return out
+
+
+def delete(spark: SparkSession, paths) -> None:
+    """Recursively delete each of ``paths``; a missing one is skipped."""
+    conf = spark._jsc.hadoopConfiguration()
+    for d in paths:
+        p = spark._jvm.org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(conf).delete(p, True)
+
+
+def swap_in(spark: SparkSession, staging: str, path: str, aside: str) -> None:
+    """Replace the directory at ``path`` with ``staging``: move ``path`` to
+    ``aside``, move ``staging`` in, drop ``aside``. A missing ``path`` is a
+    plain rename of ``staging`` into place.
+
+    A crash between the two renames leaves ``path`` missing with the
+    original intact at ``aside``; :func:`recover` heals that state, and
+    callers run it before they stage the next swap. Hadoop
+    ``FileSystem.rename`` reports most failures by returning false (the
+    destination exists, the source is missing), not by raising, so every
+    return is checked, and a failed move-in rolls the original back rather
+    than fall through to the delete that would destroy the only copy."""
+    fs, p = _fs(spark, path)
+    st = spark._jvm.org.apache.hadoop.fs.Path(staging)
+    old = spark._jvm.org.apache.hadoop.fs.Path(aside)
+    fs.delete(old, True)
+    had_table = fs.exists(p)
+    if had_table and not fs.rename(p, old):
+        raise IOError(f"swap: could not move {path} aside")
+    if not fs.rename(st, p):
+        # the table must never be left missing when it can be restored
+        restored = not had_table or fs.rename(old, p)
+        raise IOError(
+            f"swap: could not move {staging} into {path}"
+            + ("" if restored else f" AND rollback failed — original at {aside}")
+        )
+    fs.delete(old, True)
+
+
+def recover(spark: SparkSession, path: str, aside: str, staging: str) -> str:
+    """Heal ``path`` after a crash inside :func:`swap_in`. Three states:
+
+    - ``path`` present, leftovers absent → ``"clean"`` (no-op);
+    - ``path`` missing but ``aside`` present → the crash hit between the
+      two renames: move the original back, drop ``staging`` →
+      ``"restored"``;
+    - ``path`` present with a stale ``aside`` or ``staging`` next to it
+      (a crash before the swap began or before it dropped ``aside``) → the
+      live directory wins; drop the leftovers → ``"cleaned"``.
+
+    A never-written ``path`` with no ``aside`` is ``"clean"``. Idempotent."""
+    fs, p = _fs(spark, path)
+    old = spark._jvm.org.apache.hadoop.fs.Path(aside)
+    st = spark._jvm.org.apache.hadoop.fs.Path(staging)
+    if not fs.exists(p):
+        if fs.exists(old):
+            if not fs.rename(old, p):  # rename failures return false, not raise
+                raise IOError(f"recover: could not restore {path} from {aside}")
+            fs.delete(st, True)
+            return "restored"
+        return "clean"
+    cleaned = False
+    for leftover in (old, st):
+        if fs.exists(leftover):
+            fs.delete(leftover, True)
+            cleaned = True
+    return "cleaned" if cleaned else "clean"

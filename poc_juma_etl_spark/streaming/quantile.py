@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from ..catalog import load_table
 from ..operators.qdigest import VALUE_EXPR, digest_result, qdigest_oracle_sql
 from ..plans.queries import register
@@ -46,13 +47,9 @@ def merge_quantile_state(state_dir: str, df: DataFrame, epoch_id: int) -> None:
 
 def read_quantile_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Fold the epoch log into the current corpus histogram."""
-    import os
-
-    epochs = (
-        [f"{state_dir}/{d}" for d in os.listdir(state_dir) if d.startswith("e")]
-        if os.path.isdir(state_dir)
-        else []
-    )
+    epochs = [
+        d for name, d in storage.list_dirs(spark, state_dir).items() if name.startswith("e")
+    ]
     if not epochs:
         return spark.createDataFrame([], "v bigint, cnt bigint")
     return (

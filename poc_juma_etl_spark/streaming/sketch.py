@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from ..catalog import load_table
 from ..operators.kmv import K, KMV_ORACLE, PRED_A, PRED_B, SPARK_H44, setops_result
 from ..plans.queries import register
@@ -53,22 +54,6 @@ def _batch_bottomk(df: DataFrame) -> DataFrame:
     return out
 
 
-def _heal_state(state: str) -> None:
-    """Recover from a crash inside the rename window of a previous merge
-    (the compact.recover_table idiom): a missing live dir with a
-    ``__old`` survivor is rolled back; stale ``__new``/``__old`` leftovers
-    next to a live dir are dropped."""
-    import os
-    import shutil
-
-    old, new = f"{state}__old", f"{state}__new"
-    if not os.path.isdir(state) and os.path.isdir(old):
-        os.rename(old, state)
-    for leftover in (old, new):
-        if os.path.isdir(leftover):
-            shutil.rmtree(leftover)
-
-
 def merge_sketch_state(spark: SparkSession, state: str, df: DataFrame) -> None:
     """One KMV merge step: shrink ``df`` to per-segment bottom-k, union the
     state table (if any), keep the k smallest distinct hashes per segment,
@@ -79,14 +64,13 @@ def merge_sketch_state(spark: SparkSession, state: str, df: DataFrame) -> None:
     batch twice is a no-op (bottom-k of a set union is insensitive to
     re-unioning a subset), which is what makes the stream exact under the
     at-least-once re-delivery a checkpoint restart can produce."""
-    import os
-    import shutil
-
     from pyspark.sql.window import Window
 
-    _heal_state(state)
+    old, new = f"{state}__old", f"{state}__new"
+    # a crash inside a previous merge's rename window is rolled back first
+    storage.recover(spark, state, old, new)
     fresh = _batch_bottomk(df)
-    if os.path.isdir(state):  # no state table before the first batch
+    if storage.list_files(spark, state) is not None:  # none before the first batch
         merged_src = fresh.unionByName(spark.read.parquet(state))
     else:
         merged_src = fresh
@@ -97,18 +81,12 @@ def merge_sketch_state(spark: SparkSession, state: str, df: DataFrame) -> None:
         .where(F.col("rk") <= K)
         .drop("rk")
     )
-    old, new = f"{state}__old", f"{state}__new"
     merged.write.mode("overwrite").parquet(new)
-    if os.path.isdir(state):
-        os.rename(state, old)
-    os.rename(new, state)
-    shutil.rmtree(old, ignore_errors=True)
+    storage.swap_in(spark, new, state, old)
 
 
 def read_sketch_state(spark: SparkSession, state: str) -> dict[str, list[int]]:
-    import os
-
-    if not os.path.isdir(state):  # zero micro-batches ever fired
+    if storage.list_files(spark, state) is None:  # zero micro-batches ever fired
         return {"a": [], "b": []}
     rows = spark.read.parquet(state).orderBy("label", "h").collect()
     sketches: dict[str, list[int]] = {"a": [], "b": []}

@@ -350,6 +350,27 @@ def test_replace_range_month_granularity_subrange(spark, tmp_path):
     assert {r.id for r in read_table(spark, p).collect()} == {1, 20, 3, 4}
 
 
+def test_replace_range_month_edges_run_no_checkpoint_job(spark, tmp_path):
+    """A 7-day window straddling a month boundary keeps the edge months'
+    out-of-range rows in three Spark jobs at most: the planning job (a map
+    stage and a result stage under AQE) and the write. The write reads the
+    retained rows of the partitions it replaces, with no checkpoint job."""
+    from .test_catalog import _digest, _jobs_launched
+
+    p = str(tmp_path / "t")
+    base = [(1, TS(2024, 1, 5), 1.0), (2, TS(2024, 1, 29), 2.0), (3, TS(2024, 2, 2), 3.0),
+            (4, TS(2024, 2, 20), 4.0), (5, TS(2024, 3, 1), 5.0)]
+    overwrite_table(_mk_events(spark, base), p, "ts", granularity="month")
+    new = [(10, TS(2024, 1, 28), 10.0), (11, TS(2024, 2, 3), 11.0)]
+    span, jobs = _jobs_launched(spark, lambda: replace_range(
+        spark, p, _mk_events(spark, new), "ts", "2024-01-28", "2024-02-03", granularity="month"
+    ))
+    assert span == (dt.date(2024, 1, 28), dt.date(2024, 2, 3))
+    assert jobs <= 3
+    want = _mk_events(spark, [base[0], base[3], base[4], *new])
+    assert _digest(read_table(spark, p).select("id", "ts", "v")) == _digest(want)
+
+
 def test_replace_range_clears_days_without_new_rows(spark, tmp_path):
     """Hypothesis-found regression: a day inside the range with existing
     rows but NO new rows must end up empty (the reference's DELETE covers

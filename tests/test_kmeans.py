@@ -25,27 +25,6 @@ def test_assign_pandas_matches_literal(spark):
     assert lit == pdu
 
 
-def test_probe_cells_pandas_matches_model(spark):
-    """Large-k probe selection must pick the same nprobe nearest cells as a
-    plain-Python distance model (ties to lower cid)."""
-    from pyspark.sql import functions as F
-
-    from poc_juma_etl_spark.operators.kmeans import _probe_cells_pandas, kmeans_fit
-
-    e = load_table(spark, SF_ORACLE, "embeddings")
-    centroids = kmeans_fit(e, iters=1)
-    vecs = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v")).limit(20)
-    got = {
-        r.vec_id: list(r.probe_cells)
-        for r in _probe_cells_pandas(vecs, centroids, "v", 2).collect()
-    }
-    for r in vecs.collect():
-        dists = sorted(
-            (sum((x - c) ** 2 for x, c in zip(r.v, cvec)), cid) for cid, cvec in centroids
-        )
-        assert got[r.vec_id] == [cid for _, cid in dists[:2]], r.vec_id
-
-
 def test_kmeans_deterministic(spark):
     e = load_table(spark, SF_ORACLE, "embeddings")
     c1 = kmeans_fit(e, iters=2)
