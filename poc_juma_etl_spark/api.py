@@ -35,7 +35,10 @@ def run_sql(spark: SparkSession, query: str, sf_dir: str = DEFAULT_SF_DIR) -> Da
 
 
 def run_query(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Run one named query from the engine registry."""
+    """Run one named query from the engine registry. The result is lazy
+    and may read caches and scratch files the query left in the calling
+    thread's scope: materialize it, then call
+    ``plans.queries.release_caches()`` to free them."""
     from . import all_queries
 
     specs = all_queries()

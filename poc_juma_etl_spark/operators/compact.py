@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .. import storage
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -255,9 +255,6 @@ ETL_COMPACT_FRAG = 6  # fragmentation factor: small files per date partition
     "maintenance loop the gold layer (S7) needs between refreshes.",
 )
 def etl_compact_plan_exec_e2e(spark: SparkSession, sf_dir: str):
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
@@ -287,44 +284,38 @@ def etl_compact_plan_exec_e2e(spark: SparkSession, sf_dir: str):
             )
             .orderBy("event_type")
         )
-    root = tempfile.mkdtemp(prefix="compact_e2e_")
-    tbl = f"{root}/events_tbl"
-    try:
-        ev.repartition(ETL_COMPACT_FRAG).write.partitionBy("event_date").parquet(tbl)
+    tbl = f"{scoped_dir('compact_e2e_')}/events_tbl"
+    ev.repartition(ETL_COMPACT_FRAG).write.partitionBy("event_date").parquet(tbl)
 
-        def checksum(df):
-            return df.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("event_id").alias("ck"),
-                F.countDistinct("event_date").alias("days"),
-            ).collect()[0]
+    def checksum(df):
+        return df.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("event_id").alias("ck"),
+            F.countDistinct("event_date").alias("days"),
+        ).collect()[0]
 
-        pre = checksum(spark.read.parquet(tbl))
-        stats = compact_execute(spark, tbl, partition_cols=["event_date"])
-        compacted = spark.read.parquet(tbl)
-        post = checksum(compacted)
-        content_match = tuple(pre) == tuple(post)
-        # strict reduction on any real fixture; a degenerate one (every date
-        # dir already holds a single file, so before == n_groups) has
-        # legitimately nothing to reduce and must not fail the gate
-        files_reduced = (
-            stats["files_after"] < stats["files_before"]
-            or stats["files_before"] == stats["n_groups"]
+    pre = checksum(spark.read.parquet(tbl))
+    stats = compact_execute(spark, tbl, partition_cols=["event_date"])
+    compacted = spark.read.parquet(tbl)
+    post = checksum(compacted)
+    content_match = tuple(pre) == tuple(post)
+    # strict reduction on any real fixture; a degenerate one (every date
+    # dir already holds a single file, so before == n_groups) has
+    # legitimately nothing to reduce and must not fail the gate
+    files_reduced = (
+        stats["files_after"] < stats["files_before"]
+        or stats["files_before"] == stats["n_groups"]
+    )
+    packed_to_plan = stats["files_after"] == stats["n_groups"]
+    return (
+        per_type(compacted)
+        .select(
+            "event_type",
+            "n_events",
+            "id_checksum",
+            F.lit(files_reduced).alias("files_reduced"),
+            F.lit(packed_to_plan).alias("packed_to_plan"),
+            F.lit(content_match).alias("content_match"),
         )
-        packed_to_plan = stats["files_after"] == stats["n_groups"]
-        out = (
-            per_type(compacted)
-            .select(
-                "event_type",
-                "n_events",
-                "id_checksum",
-                F.lit(files_reduced).alias("files_reduced"),
-                F.lit(packed_to_plan).alias("packed_to_plan"),
-                F.lit(content_match).alias("content_match"),
-            )
-            .orderBy("event_type")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        .orderBy("event_type")
+    )

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 # ISO/IEC 11172-3 tables, MPEG-1 Layer III. Index 0 is "free format" and
 # index 15 is reserved — both fail typed in the parser; the fixture only
@@ -259,9 +259,6 @@ def etl_mp3_file_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     .mp3 per document written to disk, read back through Spark's
     binaryFile source (doc_id from the filename, the
     etl_binaryfile_decode_e2e idiom), probed inside an Arrow batch."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     ids = [
@@ -274,25 +271,18 @@ def etl_mp3_file_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     if not ids:
         return spark.createDataFrame([], OUT_SCHEMA)
-    d = tempfile.mkdtemp(prefix="mp3files_")
-    try:
-        for did in ids:
-            with open(f"{d}/doc_{did:06d}.mp3", "wb") as fh:
-                fh.write(encode_mp3(did))
-        scanned = (
-            spark.read.format("binaryFile")
-            .load(f"{d}/*.mp3")
-            .select(
-                F.regexp_extract(F.col("path"), r"doc_(\d+)\.mp3", 1)
-                .cast("long")
-                .alias("doc_id"),
-                F.col("content").alias("payload"),
-            )
+    d = scoped_dir("mp3files_")
+    for did in ids:
+        with open(f"{d}/doc_{did:06d}.mp3", "wb") as fh:
+            fh.write(encode_mp3(did))
+    scanned = (
+        spark.read.format("binaryFile")
+        .load(f"{d}/*.mp3")
+        .select(
+            F.regexp_extract(F.col("path"), r"doc_(\d+)\.mp3", 1)
+            .cast("long")
+            .alias("doc_id"),
+            F.col("content").alias("payload"),
         )
-        out = scanned.mapInPandas(mp3_probe_kernel, schema=OUT_SCHEMA).orderBy(
-            "doc_id"
-        )
-        # materialize before the temp files vanish
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    )
+    return scanned.mapInPandas(mp3_probe_kernel, schema=OUT_SCHEMA).orderBy("doc_id")

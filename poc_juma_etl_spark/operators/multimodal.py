@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 FEATURE_DIM = 4
 
@@ -2329,40 +2329,32 @@ N_BINFILES = 200
     "narrow.",
 )
 def etl_binaryfile_decode_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="binfiles_")
-    try:
-        for doc_id in range(N_BINFILES):
-            with open(f"{d}/doc_{doc_id:05d}.bin", "wb") as fh:
-                fh.write(synth_media(doc_id))
-        scanned = (
-            spark.read.format("binaryFile")
-            .load(d)
-            .select(
-                F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
-                .cast("long")
-                .alias("doc_id"),
-                F.col("content").alias("payload"),
-            )
+    d = scoped_dir("binfiles_")
+    for doc_id in range(N_BINFILES):
+        with open(f"{d}/doc_{doc_id:05d}.bin", "wb") as fh:
+            fh.write(synth_media(doc_id))
+    scanned = (
+        spark.read.format("binaryFile")
+        .load(d)
+        .select(
+            F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
+            .cast("long")
+            .alias("doc_id"),
+            F.col("content").alias("payload"),
         )
-        out = (
-            decode_media(scanned)
-            .groupBy("media_kind")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_items"),
-                F.sum("n_units").cast("bigint").alias("n_units_total"),
-                F.sum(F.coalesce("pixel_sum", "sample_sq_sum"))
-                .cast("bigint")
-                .alias("content_sum"),
-            )
-            .orderBy("media_kind")
+    )
+    return (
+        decode_media(scanned)
+        .groupBy("media_kind")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_items"),
+            F.sum("n_units").cast("bigint").alias("n_units_total"),
+            F.sum(F.coalesce("pixel_sum", "sample_sq_sum"))
+            .cast("bigint")
+            .alias("content_sum"),
         )
-        # materialize before the temp files vanish
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        .orderBy("media_kind")
+    )
 
 
 # --- perceptual-hash image dedup --------------------------------------------

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 from .text import SQL_MD5_LONG
 
 # fixture geometry: text body "sample {doc_id} segment {s} " repeated
@@ -282,9 +282,6 @@ def etl_tar_shard_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end over real shard FILES (the WebDataset layout): documents
     round-robin into multi-sample .tar shards on disk, a binaryFile scan
     reads them back, each shard parses inside an Arrow batch."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     ids = [
@@ -300,20 +297,13 @@ def etl_tar_shard_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards: dict[int, list[int]] = {}
     for did in ids:
         shards.setdefault(did % N_TAR_SHARDS, []).append(did)
-    d = tempfile.mkdtemp(prefix="tarshards_")
-    try:
-        for k, docs in shards.items():
-            with open(f"{d}/shard_{k:03d}.tar", "wb") as fh:
-                fh.write(encode_tar_shard(sorted(docs)))
-        scanned = (
-            spark.read.format("binaryFile")
-            .load(f"{d}/*.tar")
-            .select(F.col("content").alias("payload"))
-        )
-        out = scanned.mapInPandas(tar_ingest_kernel, schema=OUT_SCHEMA).orderBy(
-            "doc_id"
-        )
-        # materialize before the temp files vanish
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = scoped_dir("tarshards_")
+    for k, docs in shards.items():
+        with open(f"{d}/shard_{k:03d}.tar", "wb") as fh:
+            fh.write(encode_tar_shard(sorted(docs)))
+    scanned = (
+        spark.read.format("binaryFile")
+        .load(f"{d}/*.tar")
+        .select(F.col("content").alias("payload"))
+    )
+    return scanned.mapInPandas(tar_ingest_kernel, schema=OUT_SCHEMA).orderBy("doc_id")

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 from .text import SQL_MD5_LONG
 
 # fixture geometry: 1 warcinfo + (1 + doc_id % 3) response records; body
@@ -322,9 +322,6 @@ def etl_warc_file_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one file per task out of the binaryFile scan, the
     per-archive streaming walk, zero shuffles before the final bounded
     sort; at 100 TB each executor parses its own crawl shards."""
-    import shutil
-    import tempfile
-
     ids = [
         int(r.doc_id)
         for r in load_table(spark, sf_dir, "documents")
@@ -338,21 +335,16 @@ def etl_warc_file_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards: dict[int, list[int]] = {}
     for did in ids:
         shards.setdefault(did % N_WARC_SHARDS, []).append(did)
-    d = tempfile.mkdtemp(prefix="warcfiles_")
-    try:
-        for k, docs in shards.items():
-            with open(f"{d}/shard_{k:03d}.warc", "wb") as fh:
-                for did in sorted(docs):
-                    fh.write(encode_warc(did))
-        scanned = (
-            spark.read.format("binaryFile")
-            .load(f"{d}/*.warc")
-            .select(F.col("content").alias("payload"))
-        )
-        out = scanned.mapInPandas(
-            warc_file_ingest_kernel, schema=OUT_SCHEMA
-        ).orderBy("doc_id")
-        # materialize before the temp files vanish
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = scoped_dir("warcfiles_")
+    for k, docs in shards.items():
+        with open(f"{d}/shard_{k:03d}.warc", "wb") as fh:
+            for did in sorted(docs):
+                fh.write(encode_warc(did))
+    scanned = (
+        spark.read.format("binaryFile")
+        .load(f"{d}/*.warc")
+        .select(F.col("content").alias("payload"))
+    )
+    return scanned.mapInPandas(
+        warc_file_ingest_kernel, schema=OUT_SCHEMA
+    ).orderBy("doc_id")

@@ -11,15 +11,12 @@ of only unit tests.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
-from .queries import dec_to_double, dsum, register
+from .queries import dec_to_double, dsum, register, scoped_dir
 
 
 @register(
@@ -46,24 +43,18 @@ def etl_range_replace_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.range_replace import overwrite_table, read_table, replace_range
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="rr_e2e_")
-    path = f"{tmp}/events_wh"
-    try:
-        overwrite_table(ev, path, "ts")
-        corrected = ev.withColumn("value", F.col("value") * 2)
-        replace_range(spark, path, corrected, "ts", "2024-01-10", "2024-01-14")
-        # replay the same replacement — R1 idempotency means no change
-        replace_range(spark, path, corrected, "ts", "2024-01-10", "2024-01-14")
-        out = (
-            read_table(spark, path, like=ev)
-            .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-            .orderBy("day")
-        )
-        out = out.localCheckpoint()  # materialize before the scratch dir dies
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    path = f"{scoped_dir('rr_e2e_')}/events_wh"
+    overwrite_table(ev, path, "ts")
+    corrected = ev.withColumn("value", F.col("value") * 2)
+    replace_range(spark, path, corrected, "ts", "2024-01-10", "2024-01-14")
+    # replay the same replacement — R1 idempotency means no change
+    replace_range(spark, path, corrected, "ts", "2024-01-10", "2024-01-14")
+    return (
+        read_table(spark, path, like=ev)
+        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
+        .orderBy("day")
+    )
 
 
 @register(
@@ -84,19 +75,14 @@ def etl_merge_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import merge_upsert
 
     c = load_table(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="merge_e2e_")
-    path = f"{tmp}/customer"
-    try:
-        c.write.parquet(path)
-        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "c_acctbal", F.col("c_acctbal") * 2
-        )
-        merge_upsert(spark, path, updates, "c_custkey")
-        merge_upsert(spark, path, updates, "c_custkey")  # idempotent re-apply
-        out = spark.read.parquet(path).orderBy("c_custkey").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    path = f"{scoped_dir('merge_e2e_')}/customer"
+    c.write.parquet(path)
+    updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
+        "c_acctbal", F.col("c_acctbal") * 2
+    )
+    merge_upsert(spark, path, updates, "c_custkey")
+    merge_upsert(spark, path, updates, "c_custkey")  # idempotent re-apply
+    return spark.read.parquet(path).orderBy("c_custkey")
 
 
 @register(
@@ -123,30 +109,24 @@ def etl_gold_materialize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, ["events"])
     gold.define_gold_view(spark, "vw_event_hourly")
-    tmp = tempfile.mkdtemp(prefix="gold_e2e_")
+    out_path = gold.materialize(spark, "vw_event_hourly", scoped_dir("gold_e2e_"))
     try:
-        out_path = gold.materialize(spark, "vw_event_hourly", tmp)
-        try:
-            gold_df = spark.read.parquet(out_path)
-        except AnalysisException:
-            # empty view: the partitioned write leaves no schema-bearing
-            # footer on disk — the materialization is exactly empty
-            gold_df = spark.createDataFrame([], spark.table("vw_event_hourly").schema)
-        out = (
-            gold_df
-            .select(
-                F.date_format("event_hour", "yyyy-MM-dd HH:mm:ss").alias("event_hour"),
-                F.date_format("event_date", "yyyy-MM-dd").alias("event_date"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-            .orderBy("event_hour", "event_type")
+        gold_df = spark.read.parquet(out_path)
+    except AnalysisException:
+        # empty view: the partitioned write leaves no schema-bearing
+        # footer on disk — the materialization is exactly empty
+        gold_df = spark.createDataFrame([], spark.table("vw_event_hourly").schema)
+    return (
+        gold_df
+        .select(
+            F.date_format("event_hour", "yyyy-MM-dd HH:mm:ss").alias("event_hour"),
+            F.date_format("event_date", "yyyy-MM-dd").alias("event_date"),
+            "event_type",
+            "n_events",
+            "sum_value",
         )
-        out = out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("event_hour", "event_type")
+    )
 
 
 @register(
@@ -183,34 +163,29 @@ def etl_incremental_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("sum_price"),
         )
 
-    tmp = tempfile.mkdtemp(prefix="inc_agg_")
+    tmp = scoped_dir("inc_agg_")
     path = f"{tmp}/monthly_rollup"
-    try:
-        partial(o.filter(F.col("o_orderdate") < split)).write.mode("overwrite").parquet(path)
-        delta = partial(o.filter(F.col("o_orderdate") >= split))
-        refreshed = (
-            spark.read.parquet(path)
-            .unionByName(delta)
-            .groupBy("order_month")
-            .agg(
-                F.sum("n_orders").cast("bigint").alias("n_orders"),
-                F.sum("sum_price").cast("decimal(25,6)").alias("sum_price"),
-            )
+    partial(o.filter(F.col("o_orderdate") < split)).write.mode("overwrite").parquet(path)
+    delta = partial(o.filter(F.col("o_orderdate") >= split))
+    refreshed = (
+        spark.read.parquet(path)
+        .unionByName(delta)
+        .groupBy("order_month")
+        .agg(
+            F.sum("n_orders").cast("bigint").alias("n_orders"),
+            F.sum("sum_price").cast("decimal(25,6)").alias("sum_price"),
         )
-        refreshed.write.mode("overwrite").parquet(f"{tmp}/monthly_rollup_v2")
-        out = (
-            spark.read.parquet(f"{tmp}/monthly_rollup_v2")
-            .select(
-                "order_month",
-                "n_orders",
-                dec_to_double(F.col("sum_price")).alias("total_price"),
-            )
-            .orderBy("order_month")
+    )
+    refreshed.write.mode("overwrite").parquet(f"{tmp}/monthly_rollup_v2")
+    return (
+        spark.read.parquet(f"{tmp}/monthly_rollup_v2")
+        .select(
+            "order_month",
+            "n_orders",
+            dec_to_double(F.col("sum_price")).alias("total_price"),
         )
-        out = out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("order_month")
+    )
 
 
 @register(
@@ -234,29 +209,22 @@ def etl_incremental_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count, is what kills listing and task-scheduling time.",
 )
 def etl_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.compact import compact_table, table_file_stats
+    from ..operators.compact import compact_table
     from ..operators.range_replace import overwrite_table, read_table
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="compact_e2e_")
-    path = f"{tmp}/events_wh"
-    try:
-        # fragment: 4 small files per date partition
-        overwrite_table(ev.repartition(4), path, "ts")
-        before, _ = table_file_stats(spark, path)
-        b, a = compact_table(spark, path)
-        if not (a < b or b <= 1):
-            raise AssertionError(f"compaction did not reduce files: {b} -> {a}")
-        out = (
-            read_table(spark, path, like=ev)
-            .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-            .orderBy("day")
-        )
-        out = out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    path = f"{scoped_dir('compact_e2e_')}/events_wh"
+    # fragment: 4 small files per date partition
+    overwrite_table(ev.repartition(4), path, "ts")
+    b, a = compact_table(spark, path)
+    if not (a < b or b <= 1):
+        raise AssertionError(f"compaction did not reduce files: {b} -> {a}")
+    return (
+        read_table(spark, path, like=ev)
+        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
+        .orderBy("day")
+    )
 
 
 @register(
@@ -283,27 +251,21 @@ def etl_user_erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.range_replace import delete_keys, overwrite_table, read_table
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="erasure_e2e_")
-    path = f"{tmp}/events_wh"
-    try:
-        overwrite_table(ev, path, "ts")
-        erase = ev.filter(F.col("user_id") % 37 == 0).select("user_id")
-        delete_keys(spark, path, "user_id", erase)
-        delete_keys(spark, path, "user_id", erase)  # idempotent re-run
-        out = (
-            read_table(spark, path, like=ev)
-            .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("user_id").alias("n_users"),
-                dsum("value", "total_value"),
-            )
-            .orderBy("day")
+    path = f"{scoped_dir('erasure_e2e_')}/events_wh"
+    overwrite_table(ev, path, "ts")
+    erase = ev.filter(F.col("user_id") % 37 == 0).select("user_id")
+    delete_keys(spark, path, "user_id", erase)
+    delete_keys(spark, path, "user_id", erase)  # idempotent re-run
+    return (
+        read_table(spark, path, like=ev)
+        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            dsum("value", "total_value"),
         )
-        out = out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("day")
+    )
 
 
 @register(
@@ -325,22 +287,16 @@ def etl_user_erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def etl_schema_evolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    path = f"{tmp}/customers_wh"
-    try:
-        v1 = c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name", "c_acctbal")
-        v1.write.parquet(path)
-        v2 = c.filter(F.col("c_custkey") % 2 == 1).select(
-            "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
-        )
-        v2.write.mode("append").parquet(path)
-        out = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(path)
-            .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-            .orderBy("c_custkey")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    path = f"{scoped_dir('schema_evo_')}/customers_wh"
+    v1 = c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name", "c_acctbal")
+    v1.write.parquet(path)
+    v2 = c.filter(F.col("c_custkey") % 2 == 1).select(
+        "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
+    )
+    v2.write.mode("append").parquet(path)
+    return (
+        spark.read.option("mergeSchema", "true")
+        .parquet(path)
+        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
+        .orderBy("c_custkey")
+    )

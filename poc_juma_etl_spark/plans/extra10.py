@@ -18,14 +18,11 @@ breadth extends SURVEY.md §2.5's source/sink axis.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .queries import dsum, register
+from .queries import dsum, register, scoped_dir
 
 ORC_FLAG_PRED = "l_shipdate >= DATE '1996-01-01'"
 
@@ -70,24 +67,18 @@ def orc_read_back(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     "read-back scan.",
 )
 def etl_orc_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
-        back = orc_read_back(spark, sf_dir, tmp)
-        out = (
-            back.groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_items"),
-                dsum("l_extendedprice", "total_price"),
-                F.sum(F.col("l_quantity").cast("bigint"))
-                .cast("bigint")
-                .alias("total_qty"),
-                F.date_format(F.min("l_shipdate"), "yyyy-MM-dd").alias(
-                    "first_ship"
-                ),
-            )
-            .orderBy("l_returnflag", "l_linestatus")
-            .localCheckpoint()
+    back = orc_read_back(spark, sf_dir, scoped_dir("orc_rt_"))
+    return (
+        back.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_items"),
+            dsum("l_extendedprice", "total_price"),
+            F.sum(F.col("l_quantity").cast("bigint"))
+            .cast("bigint")
+            .alias("total_qty"),
+            F.date_format(F.min("l_shipdate"), "yyyy-MM-dd").alias(
+                "first_ship"
+            ),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("l_returnflag", "l_linestatus")
+    )

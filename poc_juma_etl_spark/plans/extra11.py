@@ -25,15 +25,13 @@ reads REST/JSON only; interchange-format breadth extends SURVEY.md
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.text import MOD_P, SQL_MD5_LONG, md5_long
-from .queries import register
+from .queries import register, scoped_dir
 
 GZ_SHARDS = 8  # fixed shard count: scan parallelism == file count
 GZ_BUCKETS = 10
@@ -65,52 +63,46 @@ def etl_jsonl_gzip_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if d.isEmpty():
         return spark.createDataFrame([], empty_out)
-    tmp = tempfile.mkdtemp(prefix="jsonlgz_rt_")
-    try:
-        path = f"{tmp}/docs_jsonl_gz"
-        # fixed shard count (the corpus-export layout); gzip makes each
-        # shard one whole scan task downstream
-        d.repartition(GZ_SHARDS).write.mode("overwrite").option(
-            "compression", "gzip"
-        ).json(path)
-        back = spark.read.schema(d.schema).json(path)
-        # non-splittable audit: the scan must see exactly the shard files
-        # the write produced — a missed or extra member fails fast here
-        # (and would shift the sums below anyway)
-        # (input_file_name is non-deterministic, so Spark 4 rejects it
-        # inside an aggregate — project it to a column first)
-        # a fixture with fewer docs than shards leaves some round-robin
-        # partitions empty, and empty partitions write no part file — so
-        # the expectation is the file count the WRITE actually produced,
-        # not the shard constant (ADVICE r11)
-        n_written = sum(
-            1
-            for f in os.listdir(path)
-            if f.startswith("part-") and not f.endswith(".crc")
+    path = f"{scoped_dir('jsonlgz_rt_')}/docs_jsonl_gz"
+    # fixed shard count (the corpus-export layout); gzip makes each
+    # shard one whole scan task downstream
+    d.repartition(GZ_SHARDS).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).json(path)
+    back = spark.read.schema(d.schema).json(path)
+    # non-splittable audit: the scan must see exactly the shard files
+    # the write produced — a missed or extra member fails fast here
+    # (and would shift the sums below anyway)
+    # (input_file_name is non-deterministic, so Spark 4 rejects it
+    # inside an aggregate — project it to a column first)
+    # a fixture with fewer docs than shards leaves some round-robin
+    # partitions empty, and empty partitions write no part file — so
+    # the expectation is the file count the WRITE actually produced,
+    # not the shard constant (ADVICE r11)
+    n_written = sum(
+        1
+        for f in os.listdir(path)
+        if f.startswith("part-") and not f.endswith(".crc")
+    )
+    n_files = back.select(F.input_file_name().alias("f")).distinct().count()
+    if n_files != n_written:
+        raise ValueError(
+            f"gzip JSONL scan saw {n_files} files, wrote {n_written}"
         )
-        n_files = back.select(F.input_file_name().alias("f")).distinct().count()
-        if n_files != n_written:
-            raise ValueError(
-                f"gzip JSONL scan saw {n_files} files, wrote {n_written}"
-            )
-        out = (
-            back.groupBy((F.col("doc_id") % GZ_BUCKETS).alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                # 60-bit hashes summed over a corpus overflow a long; the house
-                # MOD_P reduction keeps the sum exact AND portable
-                F.sum(md5_long(F.col("text")) % MOD_P)
-                .cast("bigint")
-                .alias("text_hash_sum"),
-                F.sum(F.length("text")).cast("bigint").alias("total_chars"),
-                F.sum("n_chars").cast("bigint").alias("n_chars_sum"),
-            )
-            .orderBy("bucket")
-            .localCheckpoint()
+    return (
+        back.groupBy((F.col("doc_id") % GZ_BUCKETS).alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            # 60-bit hashes summed over a corpus overflow a long; the house
+            # MOD_P reduction keeps the sum exact AND portable
+            F.sum(md5_long(F.col("text")) % MOD_P)
+            .cast("bigint")
+            .alias("text_hash_sum"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+            F.sum("n_chars").cast("bigint").alias("n_chars_sum"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("bucket")
+    )
 
 
 # --- XML sink+source round-trip (Spark 4 native XML) ------------------------
@@ -149,31 +141,25 @@ def etl_xml_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import dsum
 
     p = load_table(spark, sf_dir, "part")
-    tmp = tempfile.mkdtemp(prefix="xml_rt_")
-    try:
-        path = f"{tmp}/part_xml"
-        p.write.mode("overwrite").format("xml").option(
-            "rowTag", XML_ROW_TAG
-        ).save(path)
-        back = (
-            spark.read.schema(p.schema)
-            .format("xml")
-            .option("rowTag", XML_ROW_TAG)
-            .load(path)
+    path = f"{scoped_dir('xml_rt_')}/part_xml"
+    p.write.mode("overwrite").format("xml").option(
+        "rowTag", XML_ROW_TAG
+    ).save(path)
+    back = (
+        spark.read.schema(p.schema)
+        .format("xml")
+        .option("rowTag", XML_ROW_TAG)
+        .load(path)
+    )
+    return (
+        back.groupBy("p_brand")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_parts"),
+            dsum("p_retailprice", "total_price"),
+            F.sum(F.col("p_size").cast("bigint"))
+            .cast("bigint")
+            .alias("total_size"),
+            F.min("p_name").alias("first_name"),
         )
-        out = (
-            back.groupBy("p_brand")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-                dsum("p_retailprice", "total_price"),
-                F.sum(F.col("p_size").cast("bigint"))
-                .cast("bigint")
-                .alias("total_size"),
-                F.min("p_name").alias("first_name"),
-            )
-            .orderBy("p_brand")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("p_brand")
+    )

@@ -12,15 +12,12 @@ doubles) breaks the hash.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.text import SQL_MD5_LONG, tokens
-from .queries import dsum, register
+from .queries import dsum, register, scoped_dir
 
 N_BUCKETS = 10
 _CUT_QS = ", ".join(str(i / N_BUCKETS) for i in range(1, N_BUCKETS))
@@ -157,15 +154,10 @@ def _orders_rollup(df: DataFrame) -> DataFrame:
 )
 def etl_csv_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="csv_rt_")
-    try:
-        path = f"{tmp}/orders_csv"
-        o.write.mode("overwrite").option("header", True).csv(path)
-        back = spark.read.schema(o.schema).option("header", True).csv(path)
-        out = _orders_rollup(back).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    path = f"{scoped_dir('csv_rt_')}/orders_csv"
+    o.write.mode("overwrite").option("header", True).csv(path)
+    back = spark.read.schema(o.schema).option("header", True).csv(path)
+    return _orders_rollup(back)
 
 
 @register(
@@ -186,24 +178,18 @@ def etl_csv_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def etl_json_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="json_rt_")
-    try:
-        path = f"{tmp}/customer_json"
-        c.write.mode("overwrite").json(path)
-        back = spark.read.schema(c.schema).json(path)
-        out = (
-            back.groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-                dsum("c_acctbal", "total_balance"),
-                F.min("c_name").alias("first_name"),
-            )
-            .orderBy("c_mktsegment")
-            .localCheckpoint()
+    path = f"{scoped_dir('json_rt_')}/customer_json"
+    c.write.mode("overwrite").json(path)
+    back = spark.read.schema(c.schema).json(path)
+    return (
+        back.groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
+            dsum("c_acctbal", "total_balance"),
+            F.min("c_name").alias("first_name"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        .orderBy("c_mktsegment")
+    )
 
 
 # ---------------------------------------------------------------------------

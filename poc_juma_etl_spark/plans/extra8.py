@@ -44,16 +44,13 @@ along SURVEY.md §2.5's extension axis.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..checkpoint import truncate_lineage
-from .queries import register
+from .queries import register, scoped_dir
 
 BFS_SEEDS = 3
 BFS_MAX_HOPS = 4
@@ -323,16 +320,11 @@ def etl_dpp_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("order_month")
         )
-    tmp = tempfile.mkdtemp(prefix="dpp_fact_")
-    try:
-        o.select("o_orderkey", "o_orderdate", "order_month").write.partitionBy(
-            "order_month"
-        ).mode("overwrite").parquet(tmp)
-        fact = spark.read.parquet(tmp)
-        out = dpp_month_rollup(fact, o, year=DPP_YEAR).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    tmp = scoped_dir("dpp_fact_")
+    o.select("o_orderkey", "o_orderdate", "order_month").write.partitionBy(
+        "order_month"
+    ).mode("overwrite").parquet(tmp)
+    return dpp_month_rollup(spark.read.parquet(tmp), o, year=DPP_YEAR)
 
 
 def dpp_month_rollup(fact: DataFrame, source: DataFrame, year: int) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..checkpoint import truncate_lineage
 from ..operators.text import SQL_MD5_LONG, md5_long, tokens
-from .queries import register, scoped_cache
+from .queries import register, scoped_cache, scoped_dir
 
 SPAN_K = 8  # duplicated-run granularity: report runs of >= 8 shared tokens
 PMI_SCALE = 1 << 14
@@ -1255,9 +1255,6 @@ def q_corpus_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "atomic-visibility semantics on a plain object store.",
 )
 def etl_wap_publish_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("event_date"),
         "event_type",
@@ -1275,50 +1272,44 @@ def etl_wap_publish_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(True).alias("audit_pass"),
             F.lit(True).alias("published"),
         ).orderBy("event_type")
-    stage = tempfile.mkdtemp(prefix="wap_stage_")
-    publish = tempfile.mkdtemp(prefix="wap_publish_")
-    try:
-        gold.write.mode("overwrite").parquet(stage)
-        staged = spark.read.parquet(stage)
-        # audit: exact-integer reconciliation of the STAGED bytes vs source
-        a = staged.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n_events").alias("n"),
-            F.sum("id_checksum").alias("ck"),
-        ).collect()[0]
-        b = ev.agg(
-            F.countDistinct("event_date", "event_type").alias("rows"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("event_id").alias("ck"),
-        ).collect()[0]
-        audit_pass = (a["rows"], a["n"], a["ck"]) == (b["rows"], b["n"], b["ck"])
-        published = False
-        if audit_pass:
-            staged.write.mode("overwrite").parquet(publish)
-            published = True
-        consumer = spark.read.parquet(publish) if published else staged.limit(0)
-        out = (
-            consumer.groupBy("event_type")
-            .agg(
-                F.countDistinct("event_date").cast("bigint").alias("n_days"),
-                F.sum("n_events").cast("bigint").alias("n_events"),
-                F.sum("id_checksum").cast("bigint").alias("id_checksum"),
-            )
-            .select(
-                "event_type",
-                "n_days",
-                "n_events",
-                "id_checksum",
-                F.lit(audit_pass).alias("audit_pass"),
-                F.lit(published).alias("published"),
-            )
-            .orderBy("event_type")
-            .localCheckpoint()
+    stage = scoped_dir("wap_stage_")
+    publish = scoped_dir("wap_publish_")
+    gold.write.mode("overwrite").parquet(stage)
+    staged = spark.read.parquet(stage)
+    # audit: exact-integer reconciliation of the STAGED bytes vs source
+    a = staged.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("n_events").alias("n"),
+        F.sum("id_checksum").alias("ck"),
+    ).collect()[0]
+    b = ev.agg(
+        F.countDistinct("event_date", "event_type").alias("rows"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("event_id").alias("ck"),
+    ).collect()[0]
+    audit_pass = (a["rows"], a["n"], a["ck"]) == (b["rows"], b["n"], b["ck"])
+    published = False
+    if audit_pass:
+        staged.write.mode("overwrite").parquet(publish)
+        published = True
+    consumer = spark.read.parquet(publish) if published else staged.limit(0)
+    return (
+        consumer.groupBy("event_type")
+        .agg(
+            F.countDistinct("event_date").cast("bigint").alias("n_days"),
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.sum("id_checksum").cast("bigint").alias("id_checksum"),
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(publish, ignore_errors=True)
-    return out
+        .select(
+            "event_type",
+            "n_days",
+            "n_events",
+            "id_checksum",
+            F.lit(audit_pass).alias("audit_pass"),
+            F.lit(published).alias("published"),
+        )
+        .orderBy("event_type")
+    )
 
 
 @register(

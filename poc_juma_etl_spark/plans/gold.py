@@ -95,49 +95,18 @@ def define_gold_views(spark: SparkSession) -> None:
         define_gold_view(spark, view)
 
 
-ZORDER_BITS = 8
-
-
-def zorder_key(cols: list[str], bits: int = ZORDER_BITS):
-    """Bit-interleaved sort key over N columns (poor-man's Z-order).
-
-    Each column hashes to ``bits`` bits (xxhash64 — layout-only, never
-    compared across engines) and the bits are interleaved so sorting by the
-    key clusters rows that are close in *every* dimension, tightening
-    parquet row-group min/max ranges for multi-column filters — the effect
-    BigQuery's CLUSTER BY / Delta OPTIMIZE ZORDER provide natively."""
-    hashed = [F.abs(F.xxhash64(F.col(c))) % (1 << bits) for c in cols]
-    key = F.lit(0).cast("bigint")
-    for bit in range(bits):
-        for i, h in enumerate(hashed):
-            pos = bit * len(hashed) + i
-            key = key + F.shiftleft(F.shiftright(h, bit).bitwiseAND(1).cast("bigint"), pos)
-    return key
-
-
-def materialize(
-    spark: SparkSession, view: str, warehouse_dir: str, zorder: bool = False
-) -> str:
+def materialize(spark: SparkSession, view: str, warehouse_dir: str) -> str:
     """S7/S8 — materialize one Gold view to a partitioned, clustered parquet
     table; returns the output path. A static overwrite gives the
     reference's DROP+CTAS semantics: the table afterwards holds exactly the
     view's rows and partitions, and spec changes between runs are fine. Not
-    atomic, like the reference: a failed build leaves the table to be rebuilt.
-
-    ``zorder=True`` sorts within partitions by the interleaved key instead
-    of lexicographically — better multi-column data skipping when queries
-    filter on any subset of the cluster fields rather than a prefix."""
+    atomic, like the reference: a failed build leaves the table to be rebuilt."""
     spec = GOLD_SPECS[view]
     df: DataFrame = spark.table(view)
     out = f"{warehouse_dir}/{spec.table}"
     writer = df
     if spec.cluster_fields:
-        sort_key = (
-            [zorder_key(list(spec.cluster_fields))]
-            if zorder and len(spec.cluster_fields) > 1
-            else [F.col(c) for c in spec.cluster_fields]
-        )
-        writer = df.sortWithinPartitions(*sort_key)
+        writer = df.sortWithinPartitions(*spec.cluster_fields)
     (
         writer.write.mode("overwrite")
         .partitionBy(spec.partition_field)

@@ -32,14 +32,11 @@ Spark-vs-DuckDB parity the gate runs.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .queries import register
+from .queries import register, scoped_dir
 
 SPLIT = "1996-06-01"  # orders on/after this date arrive as the fact delta
 UPD_PRED = "c_custkey % 10 = 3"  # these customers' segment changes
@@ -92,38 +89,30 @@ def etl_incremental_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    tmp = tempfile.mkdtemp(prefix="ivm_join_")
-    try:
-        # t0: materialize the base view from the historical fact slice
-        base = _join_view(o.filter(F.col("o_orderdate") < SPLIT), c_old)
-        base.write.parquet(f"{tmp}/view_v1")
+    tmp = scoped_dir("ivm_join_")
+    # t0: materialize the base view from the historical fact slice
+    base = _join_view(o.filter(F.col("o_orderdate") < SPLIT), c_old)
+    base.write.parquet(f"{tmp}/view_v1")
 
-        j = spark.read.parquet(f"{tmp}/view_v1")
-        changed = c_new.filter(UPD_PRED).select("c_custkey", "c_mktsegment")
+    j = spark.read.parquet(f"{tmp}/view_v1")
+    changed = c_new.filter(UPD_PRED).select("c_custkey", "c_mktsegment")
 
-        # dim-update repair: FROM THE VIEW, no fact rescan
-        untouched = j.join(
-            F.broadcast(changed.select("c_custkey")),
-            j.o_custkey == F.col("c_custkey"),
-            "left_anti",
-        )
-        repaired = (
-            j.join(F.broadcast(changed), j.o_custkey == changed.c_custkey)
-            .select("o_orderkey", "o_custkey", F.col("c_mktsegment").alias("mktsegment"))
-        )
+    # dim-update repair: FROM THE VIEW, no fact rescan
+    untouched = j.join(
+        F.broadcast(changed.select("c_custkey")),
+        j.o_custkey == F.col("c_custkey"),
+        "left_anti",
+    )
+    repaired = (
+        j.join(F.broadcast(changed), j.o_custkey == changed.c_custkey)
+        .select("o_orderkey", "o_custkey", F.col("c_mktsegment").alias("mktsegment"))
+    )
 
-        # fact-delta append: delta join against the broadcast updated dim
-        delta = _join_view(
-            o.filter(F.col("o_orderdate") >= SPLIT), F.broadcast(c_new)
-        )
+    # fact-delta append: delta join against the broadcast updated dim
+    delta = _join_view(
+        o.filter(F.col("o_orderdate") >= SPLIT), F.broadcast(c_new)
+    )
 
-        v2 = untouched.unionByName(repaired).unionByName(delta)
-        v2.write.parquet(f"{tmp}/view_v2")
-        out = (
-            spark.read.parquet(f"{tmp}/view_v2")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before the scratch dir dies
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    v2 = untouched.unionByName(repaired).unionByName(delta)
+    v2.write.parquet(f"{tmp}/view_v2")
+    return spark.read.parquet(f"{tmp}/view_v2").orderBy("o_orderkey")

@@ -31,7 +31,11 @@ Oracle-parity rules (see tests/test_oracle_parity.py):
 
 from __future__ import annotations
 
+import atexit
 import functools
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -89,43 +93,76 @@ def register(
 
 
 # ---------------------------------------------------------------------------
-# oracle-parity helpers
+# query scope: the caches and scratch dirs a query holds until its release
 
 
-_SCOPED_CACHES: list[DataFrame] = []
+class _QueryScope(threading.local):
+    """The calling thread's scoped caches and scratch dirs: each thread that
+    runs queries (a harness loop, one serving client) sees only its own."""
+
+    def __init__(self) -> None:
+        self.caches: list[DataFrame] = []
+        self.dirs: list[str] = []
+
+
+_SCOPE = _QueryScope()
+_ROOT_LOCK = threading.Lock()
+_scratch_root: str | None = None
 
 
 def scoped_cache(df: DataFrame) -> DataFrame:
     """``cache()`` with release tracking. Query functions cache reused
     intermediates (shingle sets, token explodes); a long-lived session
     driving the whole registry (oracle gate, bench) would accumulate those
-    blocks in executor storage across 160 queries. Harnesses call
-    :func:`release_caches` once a query's result is materialized; inside a
-    single query the cache behaves exactly like ``.cache()``."""
+    blocks in executor storage across hundreds of queries. The cache lives
+    until the calling thread runs :func:`release_caches`, which harnesses
+    do once a query's result is materialized; inside a single query it
+    behaves exactly like ``.cache()``."""
     out = df.cache()
-    _SCOPED_CACHES.append(out)
+    _SCOPE.caches.append(out)
     return out
 
 
+def scoped_dir(prefix: str) -> str:
+    """A fresh scratch directory for one query's files (round-trip copies,
+    staged streams, write-then-read tables). It lives until the calling
+    thread runs :func:`release_caches`, so a query returns the lazy frame
+    that reads it — no copy has to outlive the directory. Every scoped dir
+    sits under one per-process root, removed at interpreter exit for
+    callers that never release (``api.run_query`` users, pytest)."""
+    global _scratch_root
+    with _ROOT_LOCK:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="spark_graft_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+    _SCOPE.dirs.append(d)
+    return d
+
+
 def release_caches() -> None:
-    """Unpersist every scoped cache registered since the last call, then
+    """End the calling thread's query scope: unpersist its scoped caches
+    and delete its scoped dirs — another thread's stay untouched — then
     nudge the JVM GC so the ContextCleaner reclaims DEAD localCheckpoint
-    blocks too. Iterative queries (BFS, k-core, PageRank, components) cut
-    lineage with ``localCheckpoint``; those RDD blocks are freed only when
-    the JVM garbage-collects the dead Dataset — which a long-lived harness
-    session (oracle gate: 260 queries, bench: 97) may not do for many
-    queries, so dead blocks accumulate in executor storage and evict /
-    spill LIVE blocks. Measured round 10: a second same-session BFS run
-    degraded 56s -> 85s at sf1, and a kcore sf1 run following an sf10 run
-    read 160s vs 52s fresh — pure dead-block pressure. One System.gc()
-    per query (~100 ms) keeps the session's storage footprint equal to
-    the RUNNING query's, which is what every timing in BENCHNOTES should
-    be measuring."""
-    while _SCOPED_CACHES:
+    blocks too. Call it only after the query's result is materialized: the
+    result may read the scoped dirs. Iterative queries (BFS, k-core,
+    PageRank, components) cut lineage with ``localCheckpoint``; those RDD
+    blocks are freed only when the JVM garbage-collects the dead Dataset —
+    which a long-lived harness session (oracle gate: 260 queries, bench:
+    97) may not do for many queries, so dead blocks accumulate in executor
+    storage and evict / spill LIVE blocks. Measured round 10: a second
+    same-session BFS run degraded 56s -> 85s at sf1, and a kcore sf1 run
+    following an sf10 run read 160s vs 52s fresh — pure dead-block
+    pressure. One System.gc() per query (~100 ms) keeps the session's
+    storage footprint equal to the RUNNING query's, which is what every
+    timing in BENCHNOTES should be measuring."""
+    while _SCOPE.caches:
         try:
-            _SCOPED_CACHES.pop().unpersist()
+            _SCOPE.caches.pop().unpersist()
         except Exception:
             pass  # session already stopped / block already evicted
+    while _SCOPE.dirs:
+        shutil.rmtree(_SCOPE.dirs.pop(), ignore_errors=True)
     try:
         from pyspark.sql import SparkSession
 
@@ -137,6 +174,10 @@ def release_caches() -> None:
             spark._jvm.System.gc()
     except Exception:
         pass  # no JVM (session stopped) — nothing to reclaim
+
+
+# ---------------------------------------------------------------------------
+# oracle-parity helpers
 
 
 def dec_to_double(s: Column) -> Column:

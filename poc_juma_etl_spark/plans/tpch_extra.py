@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .queries import dec_to_double, dsum, register, ts_str
+from .queries import dec_to_double, dsum, register, scoped_dir, ts_str
 
 
 @register(
@@ -269,61 +269,53 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parquet-bound.",
 )
 def etl_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _sh
-    import tempfile as _tf
-
     ev = load_table(spark, sf_dir, "events")
-    tmp = _tf.mkdtemp(prefix="fmt_rt_")
-    try:
-        ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-        ev.write.option("timestampFormat", ts_fmt).mode("overwrite").json(f"{tmp}/ev_json")
-        ev.write.mode("overwrite").orc(f"{tmp}/ev_orc")
-        ev.write.option("timestampFormat", ts_fmt).option("header", "true").mode(
-            "overwrite"
-        ).csv(f"{tmp}/ev_csv")
-        back_json = (
-            spark.read.schema(ev.schema)
-            .option("timestampFormat", ts_fmt)
-            .json(f"{tmp}/ev_json")
+    tmp = scoped_dir("fmt_rt_")
+    ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+    ev.write.option("timestampFormat", ts_fmt).mode("overwrite").json(f"{tmp}/ev_json")
+    ev.write.mode("overwrite").orc(f"{tmp}/ev_orc")
+    ev.write.option("timestampFormat", ts_fmt).option("header", "true").mode(
+        "overwrite"
+    ).csv(f"{tmp}/ev_csv")
+    back_json = (
+        spark.read.schema(ev.schema)
+        .option("timestampFormat", ts_fmt)
+        .json(f"{tmp}/ev_json")
+    )
+    back_orc = spark.read.orc(f"{tmp}/ev_orc")
+    back_csv = (
+        spark.read.schema(ev.schema)
+        .option("timestampFormat", ts_fmt)
+        .option("header", "true")
+        .csv(f"{tmp}/ev_csv")
+    )
+    agg = lambda df: (  # noqa: E731
+        df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(25,6)")).alias("tv"),
+            F.countDistinct("user_id").alias("n_users"),
         )
-        back_orc = spark.read.orc(f"{tmp}/ev_orc")
-        back_csv = (
-            spark.read.schema(ev.schema)
-            .option("timestampFormat", ts_fmt)
-            .option("header", "true")
-            .csv(f"{tmp}/ev_csv")
+    )
+    j, oc, cv = agg(back_json).alias("j"), agg(back_orc).alias("o"), agg(back_csv).alias("c")
+    # verify-join: every per-type aggregate must agree across formats
+    both = (
+        j.join(oc, "event_type")
+        .join(cv, "event_type")
+        .filter(
+            (F.col("j.n_events") == F.col("o.n_events"))
+            & (F.col("j.tv") == F.col("o.tv"))
+            & (F.col("j.n_users") == F.col("o.n_users"))
+            & (F.col("c.n_events") == F.col("o.n_events"))
+            & (F.col("c.tv") == F.col("o.tv"))
+            & (F.col("c.n_users") == F.col("o.n_users"))
         )
-        agg = lambda df: (  # noqa: E731
-            df.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(25,6)")).alias("tv"),
-                F.countDistinct("user_id").alias("n_users"),
-            )
-        )
-        j, oc, cv = agg(back_json).alias("j"), agg(back_orc).alias("o"), agg(back_csv).alias("c")
-        # verify-join: every per-type aggregate must agree across formats
-        both = (
-            j.join(oc, "event_type")
-            .join(cv, "event_type")
-            .filter(
-                (F.col("j.n_events") == F.col("o.n_events"))
-                & (F.col("j.tv") == F.col("o.tv"))
-                & (F.col("j.n_users") == F.col("o.n_users"))
-                & (F.col("c.n_events") == F.col("o.n_events"))
-                & (F.col("c.tv") == F.col("o.tv"))
-                & (F.col("c.n_users") == F.col("o.n_users"))
-            )
-        )
-        out = both.select(
-            "event_type",
-            F.col("j.n_events").alias("n_events"),
-            F.col("j.tv").cast("double").alias("total_value"),
-            F.col("j.n_users").alias("n_users"),
-        ).orderBy("event_type")
-        out = out.localCheckpoint()
-    finally:
-        _sh.rmtree(tmp, ignore_errors=True)
-    return out
+    )
+    return both.select(
+        "event_type",
+        F.col("j.n_events").alias("n_events"),
+        F.col("j.tv").cast("double").alias("total_value"),
+        F.col("j.n_users").alias("n_users"),
+    ).orderBy("event_type")
 
 
 HLL_RSD = 0.02

@@ -47,7 +47,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..catalog import load_table
-from ..plans.queries import dec_to_double, register
+from ..plans.queries import dec_to_double, register, scoped_dir
 
 STAGING = "_staging"
 MANIFEST = "_SUCCESS"
@@ -201,32 +201,25 @@ def read_published(spark, dest: str):
     "tests/test_round5_ops.py).",
 )
 def etl_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     spark.dataSource.register(BatchPostDataSource)
-    dest = tempfile.mkdtemp(prefix="batched_post_")
-    try:
-        (
-            load_table(spark, sf_dir, "events")
-            .select("event_id", "event_type", "user_id", "value")
-            .write.format("batched_post")
-            .option("path", dest)
-            .option("page_size", "500")
-            .mode("append")
-            .save()
+    dest = scoped_dir("batched_post_")
+    (
+        load_table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "user_id", "value")
+        .write.format("batched_post")
+        .option("path", dest)
+        .option("page_size", "500")
+        .mode("append")
+        .save()
+    )
+    back, manifest = read_published(spark, dest)
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum("user_id").cast("bigint").alias("user_id_sum"),
+            dec_to_double(F.sum(F.col("value").cast("decimal(25,6)")))
+            .alias("total_value"),
         )
-        back, manifest = read_published(spark, dest)
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                F.sum("user_id").cast("bigint").alias("user_id_sum"),
-                dec_to_double(F.sum(F.col("value").cast("decimal(25,6)")))
-                .alias("total_value"),
-            )
-            .orderBy("event_type")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(dest, ignore_errors=True)
+        .orderBy("event_type")
+    )

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 
 STREAM_PAGE_SIZE = 400
@@ -235,9 +235,6 @@ def drain_until_page(q, min_page: int, poll_s: float = 0.1, max_polls: int = 600
     "checkpoint, sink dedup via the sink's own commit log.",
 )
 def q_stream_rest_restart_scan(spark, sf_dir: str):
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..catalog import table_path
@@ -260,7 +257,7 @@ def q_stream_rest_restart_scan(spark, sf_dir: str):
     # guard was unreachable)
     if transport.total_rows() == 0:
         return empty
-    scratch = tempfile.mkdtemp(prefix="rest_restart_")
+    scratch = scoped_dir("rest_restart_")
     out, ckpt = f"{scratch}/out", f"{scratch}/ckpt"
 
     def start():
@@ -277,35 +274,31 @@ def q_stream_rest_restart_scan(spark, sf_dir: str):
             .start()
         )
 
-    try:
-        # phase 1: drain to ~1/3 of the cursor range, then stop. (If the
-        # fixture drains in one batch the restart is a no-op and the
-        # exactly-once claim holds trivially; the unit test asserts the
-        # interruption is real at its page size.)
-        q1 = start()
-        drain_until_page(q1, max(1, n_pages // 3))
-        q1.stop()
-        q1.awaitTermination()
-        # phase 2: fresh query, same checkpoint — resume and finish
-        q2 = start()
-        drain_until_page(q2, n_pages)
-        q2.stop()
-        q2.awaitTermination()
-        from pathlib import Path
+    # phase 1: drain to ~1/3 of the cursor range, then stop. (If the
+    # fixture drains in one batch the restart is a no-op and the
+    # exactly-once claim holds trivially; the unit test asserts the
+    # interruption is real at its page size.)
+    q1 = start()
+    drain_until_page(q1, max(1, n_pages // 3))
+    q1.stop()
+    q1.awaitTermination()
+    # phase 2: fresh query, same checkpoint — resume and finish
+    q2 = start()
+    drain_until_page(q2, n_pages)
+    q2.stop()
+    q2.awaitTermination()
+    from pathlib import Path
 
-        meta = Path(out) / "_spark_metadata"
-        if not (meta.exists() and any(meta.iterdir())):  # no batch committed
-            return empty
-        return (
-            spark.read.parquet(out)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                F.sum("event_id").cast("bigint").alias("id_checksum"),
-                F.countDistinct("event_id").cast("bigint").alias("n_distinct_ids"),
-            )
-            .orderBy("event_type")
-            .localCheckpoint()  # materialize before the scratch dir dies
+    meta = Path(out) / "_spark_metadata"
+    if not (meta.exists() and any(meta.iterdir())):  # no batch committed
+        return empty
+    return (
+        spark.read.parquet(out)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum("event_id").cast("bigint").alias("id_checksum"),
+            F.countDistinct("event_id").cast("bigint").alias("n_distinct_ids"),
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        .orderBy("event_type")
+    )

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from .. import storage
 from ..catalog import load_table
 from ..operators.qdigest import VALUE_EXPR, digest_result, qdigest_oracle_sql
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 
 def merge_quantile_state(state_dir: str, df: DataFrame, epoch_id: int) -> None:
@@ -64,9 +64,6 @@ def stream_quantile_state(
 ) -> DataFrame:
     """Drain the staged orders stream, maintaining the epoch histogram log;
     returns the folded (v, cnt) histogram."""
-    import shutil
-    import tempfile
-
     # round-11 staging recut (r10 verdict #7): project to the ONE column
     # the digest reads BEFORE the staging copy (a write boundary defeats
     # scan-level column pruning — staging all 9 order columns shipped ~10x
@@ -77,35 +74,30 @@ def stream_quantile_state(
     # Tiny single-split fixtures still repartition so the multi-epoch fold
     # stays exercised at every SF.
     ev = load_table(spark, sf_dir, "orders").select("o_totalprice")
-    tmp = tempfile.mkdtemp(prefix="stream_qdigest_")
+    tmp = scoped_dir("stream_qdigest_")
     src, state, ckpt = f"{tmp}/src", f"{tmp}/state", f"{tmp}/ckpt"
-    try:
-        parts = ev.rdd.getNumPartitions()
-        if parts >= n_batches:
-            ev.write.parquet(src)
-            files_per_trigger = -(-parts // n_batches)  # ceil
-        else:
-            ev.repartition(n_batches).write.parquet(src)
-            files_per_trigger = 1
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", str(files_per_trigger))
-            .parquet(src)
+    parts = ev.rdd.getNumPartitions()
+    if parts >= n_batches:
+        ev.write.parquet(src)
+        files_per_trigger = -(-parts // n_batches)  # ceil
+    else:
+        ev.repartition(n_batches).write.parquet(src)
+        files_per_trigger = 1
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(src)
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, epoch_id: merge_quantile_state(state, df, epoch_id)
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, epoch_id: merge_quantile_state(state, df, epoch_id)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # materialize the fold before the scratch dir dies
-        hist = read_quantile_state(spark, state).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return hist
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return read_quantile_state(spark, state)
 
 
 @register(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import stream_table
 from ..operators.range_replace import PARTITION_COL
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir, ts_str
 
 EPOCH_COL = "_epoch"
 
@@ -102,41 +102,32 @@ def stream_events_to_warehouse(
     "for keyed rather than range data.",
 )
 def q_stream_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..catalog import load_table
     from ..operators.merge import merge_latest
-    from ..plans.queries import ts_str
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="stream_upsert_")
+    tmp = scoped_dir("stream_upsert_")
     src, tgt, ckpt = f"{tmp}/src", f"{tmp}/target", f"{tmp}/ckpt"
-    try:
-        # three source files -> three micro-batches (maxFilesPerTrigger=1)
-        ev.repartition(3).write.parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    # three source files -> three micro-batches (maxFilesPerTrigger=1)
+    ev.repartition(3).write.parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
 
-        def upsert_batch(df: DataFrame, epoch_id: int) -> None:
-            merge_latest(spark, tgt, df, "user_id", ["ts", "event_id"])
+    def upsert_batch(df: DataFrame, epoch_id: int) -> None:
+        merge_latest(spark, tgt, df, "user_id", ["ts", "event_id"])
 
-        q = (
-            stream.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.read.parquet(tgt)
-            .select("user_id", "event_id", ts_str("ts", "ts", frac=True), "event_type", "value")
-            .orderBy("user_id")
-            .localCheckpoint()  # materialize before the scratch dir dies
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    q = (
+        stream.writeStream.foreachBatch(upsert_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return (
+        spark.read.parquet(tgt)
+        .select("user_id", "event_id", ts_str("ts", "ts", frac=True), "event_type", "value")
+        .orderBy("user_id")
+    )

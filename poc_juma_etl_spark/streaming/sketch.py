@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from .. import storage
 from ..catalog import load_table
 from ..operators.kmv import K, KMV_ORACLE, PRED_A, PRED_B, SPARK_H44, setops_result
-from ..plans.queries import register
+from ..plans.queries import register, scoped_dir
 
 
 def _batch_bottomk(df: DataFrame) -> DataFrame:
@@ -100,32 +100,26 @@ def stream_kmv_state(
 ) -> dict[str, list[int]]:
     """Drain the staged orders stream, maintaining the bottom-k state table
     across micro-batches; returns the final per-segment sketches."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="stream_kmv_")
+    tmp = scoped_dir("stream_kmv_")
     src, state, ckpt = f"{tmp}/src", f"{tmp}/state", f"{tmp}/ckpt"
-    try:
-        ev.repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    ev.repartition(n_batches).write.parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
 
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, epoch_id: merge_sketch_state(spark, state, df)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, epoch_id: merge_sketch_state(spark, state, df)
         )
-        q.awaitTermination()
-        return read_sketch_state(spark, state)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return read_sketch_state(spark, state)
 
 
 @register(

@@ -440,32 +440,6 @@ def test_replace_range_bootstrap_span(spark, tmp_path):
         replace_range(spark, p, new, "ts", "2024-01-01", None)
 
 
-def test_gold_zorder_content_identical(spark, tmp_path):
-    """Z-order is a layout choice: materialized content must be identical to
-    the lexicographic clustering."""
-    from poc_juma_etl_spark.catalog import register_views
-    from poc_juma_etl_spark.plans import gold
-
-    register_views(spark, SF_SMOKE, ["lineitem"])
-    gold.define_gold_view(spark, "vw_lineitem_pricing")
-    lex = gold.materialize(spark, "vw_lineitem_pricing", str(tmp_path / "lex"))
-    zor = gold.materialize(spark, "vw_lineitem_pricing", str(tmp_path / "zor"), zorder=True)
-    a = spark.read.parquet(lex)
-    b = spark.read.parquet(zor)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def test_zorder_key_interleaves(spark):
-    from pyspark.sql import functions as F
-
-    from poc_juma_etl_spark.plans.gold import zorder_key
-
-    df = spark.createDataFrame([("x", "y")], ["a", "b"])
-    key = df.select(zorder_key(["a", "b"], bits=4).alias("k")).first().k
-    assert 0 <= key < (1 << 8)  # 2 cols x 4 bits interleaved -> 8-bit key
-
-
 def test_gold_incremental_refresh(spark, tmp_path):
     """Incremental gold refresh: after a RAW day is corrected, refreshing
     just that date range makes the gold table equal a full rebuild."""
