@@ -5,21 +5,22 @@ The reference implements idempotent incremental loads as two *non-atomic*
 BigQuery jobs: ``DELETE FROM t WHERE DATE(LOWER(f)) BETWEEN a AND b`` then a
 ``WRITE_APPEND`` load of the re-extracted rows (reference utils.py:255-283,
 utils.py:391-398; "Idempotência" README.md:10). A crash between the two loses
-the range. Spark's dynamic partition overwrite commits the new content of
-every partition it writes in one job — same intent, no window in which the
-range is gone.
+the range. Here each write is one Spark job into a staging directory no
+reader sees, followed by a driver-side commit through ``storage`` — same
+intent, no window in which the range is gone.
 
 Tables written by this module are date-partitioned parquet directories
 (partition column ``p_date`` derived from the table's filter field).
-Range replacement plans from partition metadata: the driver lists the
-table's ``p_date=`` directories through ``storage`` (no Spark job),
-keeps those inside the range, and reads retained rows from the at most two
-edge partitions a day range can cut — never from a partition the range
-does not touch. One planning job over the staged rows yields the
-partitions to write (and doubles as the empty-input guard); then the write
-job runs, and the in-range partitions the write did not replace are deleted.
-On a real cluster you'd put Delta/Iceberg underneath for snapshot
-isolation; the operator surface here stays identical.
+Range replacement stages, observes, then commits. The driver lists the
+table's ``p_date=`` directories through ``storage`` (no Spark job); the
+write job stages the new rows together with the retained rows of the at
+most two edge partitions a day range can cut, never reading a partition the
+range does not touch, and an ``Observation`` on that same job reports the
+new rows' day span — the empty-input guard, and a bootstrap's range. The
+commit moves each staged partition over its namesake and deletes the
+in-range partitions the staging did not produce. On a real cluster you'd
+put Delta/Iceberg underneath for snapshot isolation; the operator surface
+here stays identical.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ import datetime as dt
 from urllib.parse import unquote
 
 from pyspark.errors.exceptions.captured import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage
@@ -98,10 +99,16 @@ def overwrite_table(
     df: DataFrame, path: str, filter_field: str | None = None, granularity: str = "day"
 ) -> None:
     """S4 — full-replace load (reference WRITE_TRUNCATE, utils.py:309,
-    config.py:72-90)."""
-    if df.isEmpty():  # S6 guard (reference utils.py:287-292)
-        return
-    _writer(df, filter_field, granularity).mode("overwrite").parquet(path)
+    config.py:72-90). One job stages the table and counts its rows; a
+    non-empty staging is swapped in whole, an empty one is dropped and the
+    table left untouched (S6 guard, reference utils.py:287-292)."""
+    spark = df.sparkSession
+    rows = Observation()
+    with storage.staging(spark, path) as stage:
+        counted = df.observe(rows, F.count(F.lit(1)).alias("n"))
+        _writer(counted, filter_field, granularity).parquet(stage)
+        if rows.get["n"]:
+            storage.swap_in(spark, stage, path, f"{stage}.old")
 
 
 def append_table(
@@ -113,33 +120,29 @@ def append_table(
     _writer(df, filter_field, granularity).mode("append").parquet(path)
 
 
-def _retained_rows(
-    spark: SparkSession,
-    path: str,
-    touched: dict[str, str],
-    schema,
-    day,
-    start: dt.date,
-    end: dt.date,
-    granularity: str,
-) -> DataFrame | None:
-    """Rows of the touched partitions that fall outside ``[start, end]``,
-    as a lazy read. Only the partitions holding ``start`` and ``end`` can
-    hold such rows — every partition between them lies wholly inside the
-    range — so only those (at most two) directories are read. The write
-    that replaces them may read them too: a dynamic overwrite writes to a
-    staging directory and moves partitions in only when the job commits,
-    after every task has read its input. They are read with the staged
-    rows' schema rather than one inferred from a parquet footer, which
-    would cost a Spark job; a column the old files lack reads as null."""
-    if granularity == "day":
-        return None
+def _touched(
+    spark: SparkSession, path: str, schema, day, start: dt.date, end: dt.date, granularity: str
+) -> tuple[dict[str, str], DataFrame | None]:
+    """The table's partitions that ``[start, end]`` touches, listed on the
+    driver, and the rows of them that fall outside the range, as a lazy
+    read (None when there are none to read). Only the partitions holding
+    ``start`` and ``end`` can hold such rows — every partition between them
+    lies wholly inside the range — so only those (at most two) directories
+    are read. The write that replaces them may read them too: it stages
+    outside the table, and the commit moves partitions in only after every
+    task has read its input. They are read with the staged rows' schema
+    rather than one inferred from a parquet footer, which would cost a
+    Spark job; a column the old files lack reads as null."""
+    touched = partitions_in_range(
+        spark, path, PARTITION_COL,
+        _partition_of(start, granularity), _partition_of(end, granularity),
+    )
     edges = {str(_partition_of(d, granularity)) for d in (start, end)}
-    dirs = [d for v, d in touched.items() if v in edges]
+    dirs = [d for v, d in touched.items() if v in edges] if granularity != "day" else []
     if not dirs:
-        return None
+        return touched, None
     old = spark.read.schema(schema).option("basePath", path).parquet(*dirs)
-    return old.filter(~day.between(F.lit(start), F.lit(end)))
+    return touched, old.filter(~day.between(F.lit(start), F.lit(end)))
 
 
 def replace_range(
@@ -159,73 +162,65 @@ def replace_range(
     reversed range (``start > end``) raises ValueError.
 
     Without ``start``/``end`` the range is the day span of ``new_rows``
-    (a bootstrap load), found by the same planning job.
+    (a bootstrap load), read from the same observation.
 
-    Steps: list the in-range partitions on the driver; one planning job
-    collects the partitions of the new rows and of the rows of the range's
-    edge partitions that fall outside it (month granularity only); one
-    dynamic-overwrite job writes both; the in-range partitions the write did
-    not cover are deleted. The write job is the atomic step: each partition
-    it writes is replaced whole at commit, so a crash never leaves a
-    half-written partition (the reference's delete+insert has a
-    window with the range gone, utils.py:391-398). The delete runs after
-    that commit; a crash between the two leaves stale in-range partitions
-    the write did not cover, and re-running the call removes them.
-    Re-running with the same inputs is a no-op change.
+    Steps: list the in-range partitions on the driver; *stage* — one job
+    writes the new rows, and the rows of the range's edge partitions that
+    fall outside it (month granularity only), to a staging directory;
+    *observe* — an ``Observation`` on that job gives the new rows' first
+    and last day; *commit* — each staged partition replaces its namesake,
+    and the in-range partitions the staging did not produce are deleted
+    (``storage.replace_partitions``). No new rows means the staging is
+    dropped and the table never touched. A failed job leaves the table as
+    it was; each partition is replaced whole at commit, so a crash never
+    leaves a half-written partition (the reference's delete+insert has a
+    window with the range gone, utils.py:391-398), and re-running the call
+    after a crash part-way through the commit completes it. Re-running with
+    the same inputs is a no-op change.
 
     With ``granularity="month"`` the day range need not align to partition
     boundaries: rows of the touched months *outside* the range are read
     back and re-staged alongside the new rows (retain ∪ new), so the
-    overwrite of those months is still exact."""
+    overwrite of those months is still exact. A bootstrap learns its range
+    only from the staging job, so when its edge months already exist their
+    retained rows are appended to the staging by a second job."""
     if (start is None) != (end is None):
         raise ValueError("replace_range needs both start and end, or neither")
     day = F.to_date(F.col(filter_field))
-    part = F.col(PARTITION_COL).cast("string").alias("p")
-    staged = _with_partition(new_rows, filter_field, granularity)
-    if start is None:
-        staged = staged.filter(day.isNotNull())
-        plan = staged.groupBy(part).agg(F.min(day).alias("lo"), F.max(day).alias("hi")).collect()
-        if not plan:
-            return None  # S6: empty source
-        # the edge partitions hold the first and last new day, so retained
-        # rows add no partition beyond the new ones
-        start, end = min(r.lo for r in plan), max(r.hi for r in plan)
+    bootstrap = start is None
+    if bootstrap:
+        new_rows = new_rows.filter(day.isNotNull())
     else:
-        plan = None
         start, end = dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
         if start > end:
             raise ValueError(f"replace_range got a reversed range [{start}, {end}]")
-        staged = staged.filter(day.between(F.lit(start), F.lit(end)))
-    touched = partitions_in_range(
-        spark, path, PARTITION_COL,
-        _partition_of(start, granularity), _partition_of(end, granularity),
+        new_rows = new_rows.filter(day.between(F.lit(start), F.lit(end)))
+    span = Observation()
+    staged = _with_partition(new_rows, filter_field, granularity).observe(
+        span, F.min(day).alias("lo"), F.max(day).alias("hi")
     )
-    retained = _retained_rows(spark, path, touched, staged.schema, day, start, end, granularity)
-    if plan is None:
-        parts = staged.select(part, F.lit(True).alias("new"))
-        if retained is not None:
-            parts = parts.unionByName(retained.select(part, F.lit(False).alias("new")))
-        plan = parts.distinct().collect()
-        if not any(r.new for r in plan):
+    with storage.staging(spark, path) as stage:
+        touched, retained = ({}, None) if bootstrap else _touched(
+            spark, path, staged.schema, day, start, end, granularity
+        )
+        rows = staged if retained is None else staged.unionByName(retained)
+        rows.write.partitionBy(PARTITION_COL).parquet(stage)
+        observed = span.get
+        if observed["lo"] is None:
             # The reference skips the delete when extraction returns no rows
             # (extract-before-delete ordering, utils.py:379-398): absence of
             # new data must never destroy existing data.
             return None
-    desired = {r.p for r in plan}
-    if retained is not None:
-        staged = staged.unionByName(retained)
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COL)
-        .parquet(path)
-    )
-    # Dynamic overwrite only rewrites partitions present in the staged data —
-    # a touched partition with no new (or retained) rows would keep stale
-    # in-range rows (caught by tests/test_property_range_replace.py), so
-    # those are deleted explicitly, mirroring the reference's DELETE of the
-    # full range (utils.py:266-269).
-    storage.delete(spark, [d for v, d in touched.items() if v not in desired])
+        if bootstrap:
+            start, end = observed["lo"], observed["hi"]
+            touched, retained = _touched(spark, path, staged.schema, day, start, end, granularity)
+            if retained is not None:
+                retained.write.mode("append").partitionBy(PARTITION_COL).parquet(stage)
+        # a touched partition with no new (or retained) rows must not keep
+        # its stale in-range rows (caught by
+        # tests/test_property_range_replace.py): the commit deletes it,
+        # mirroring the reference's DELETE of the full range (utils.py:266-269)
+        storage.replace_partitions(spark, stage, path, touched.values())
     return start, end
 
 

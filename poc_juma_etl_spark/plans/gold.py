@@ -11,11 +11,11 @@ materialize_gold.py:60). Our engine owns the execution:
                    parquet row-group min/max locality (data skipping); exact
                    BigQuery clustering ≈ Z-order needs Delta/Iceberg OPTIMIZE,
                    out of scope and not required for correctness
-- DROP + CTAS    → ``mode("overwrite")`` under the session's static
-                   partition overwrite: the whole table is replaced, so a
-                   partition the view no longer produces is gone and spec
-                   changes are fine. Like the reference's DROP then CREATE,
-                   it is not atomic: a failed build leaves a table to rebuild
+- DROP + CTAS    → one job writes the whole table to a staging directory,
+                   then ``storage.swap_in`` replaces the old directory with
+                   it: a partition the view no longer produces is gone and
+                   spec changes are fine, and unlike the reference's DROP
+                   then CREATE a failed build leaves the old table in place
 
 At 100 TB the partition column must be low-cardinality-per-day and the sort
 keeps each file's min/max ranges tight so selective queries skip row groups.
@@ -26,7 +26,7 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage
@@ -97,21 +97,18 @@ def define_gold_views(spark: SparkSession) -> None:
 
 def materialize(spark: SparkSession, view: str, warehouse_dir: str) -> str:
     """S7/S8 — materialize one Gold view to a partitioned, clustered parquet
-    table; returns the output path. A static overwrite gives the
-    reference's DROP+CTAS semantics: the table afterwards holds exactly the
-    view's rows and partitions, and spec changes between runs are fine. Not
-    atomic, like the reference: a failed build leaves the table to be rebuilt."""
+    table; returns the output path. The reference's DROP+CTAS semantics:
+    the table afterwards holds exactly the view's rows and partitions, and
+    spec changes between runs are fine. The build stages the whole table
+    and swaps it in, so a failed build leaves the old table as it was."""
     spec = GOLD_SPECS[view]
     df: DataFrame = spark.table(view)
     out = f"{warehouse_dir}/{spec.table}"
-    writer = df
     if spec.cluster_fields:
-        writer = df.sortWithinPartitions(*spec.cluster_fields)
-    (
-        writer.write.mode("overwrite")
-        .partitionBy(spec.partition_field)
-        .parquet(out)
-    )
+        df = df.sortWithinPartitions(*spec.cluster_fields)
+    with storage.staging(spark, out) as stage:
+        df.write.partitionBy(spec.partition_field).parquet(stage)
+        storage.swap_in(spark, stage, out, f"{stage}.old")
     return out
 
 
@@ -133,38 +130,33 @@ def refresh_incremental(
     the reference's full DROP+CTAS rebuild, materialize_gold.py:64-74).
 
     This is what makes the RAW→GOLD trigger affordable at 100 TB: a 7-day
-    refresh rewrites 7 partitions of the gold table, not 7 years. One
-    planning job collects the partitions the recomputation produces; the
-    gold table's old in-range partitions come from a driver-side directory
-    listing, so no job reads the gold table. Requires the spec's
-    partition_field to be a DATE column or a timestamp whose date decides
-    the range (month-grained specs pass month-aligned ranges)."""
+    refresh rewrites 7 partitions of the gold table, not 7 years. One job
+    stages the recomputation and counts its rows through an
+    ``Observation``; the commit moves each staged partition over its
+    namesake and deletes the gold table's other in-range partitions, which
+    come from a driver-side directory listing, so no job reads the gold
+    table. Requires the spec's partition_field to be a DATE column or a
+    timestamp whose date decides the range (month-grained specs pass
+    month-aligned ranges)."""
     spec = GOLD_SPECS[view]
     out = f"{warehouse_dir}/{spec.table}"
     pf = spec.partition_field
     fresh = spark.table(view).filter(
         F.col(pf).cast("date").between(F.lit(start), F.lit(end))
     )
-    # partition values as Spark renders them in directory names
-    desired = {
-        r.p for r in fresh.select(F.col(pf).cast("string").alias("p")).distinct().collect()
-    }
-    if not desired:
-        # same conservative stance as R1's extract-before-delete guard: an
-        # entirely-empty recomputation never deletes existing gold data (a
-        # broken upstream view must not wipe the range); full rebuilds via
-        # materialize() are the path for intentional deletions
-        return out
-    affected = partitions_in_range(
-        spark, out, pf, dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
-    )
     if spec.cluster_fields:
         fresh = fresh.sortWithinPartitions(*[F.col(c) for c in spec.cluster_fields])
-    (
-        fresh.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(pf)
-        .parquet(out)
-    )
-    storage.delete(spark, [d for v, d in affected.items() if v not in desired])
+    rows = Observation()
+    with storage.staging(spark, out) as stage:
+        fresh.observe(rows, F.count(F.lit(1)).alias("n")).write.partitionBy(pf).parquet(stage)
+        if not rows.get["n"]:
+            # same conservative stance as R1's extract-before-delete guard: an
+            # entirely-empty recomputation never deletes existing gold data (a
+            # broken upstream view must not wipe the range); full rebuilds via
+            # materialize() are the path for intentional deletions
+            return out
+        affected = partitions_in_range(
+            spark, out, pf, dt.date.fromisoformat(str(start)), dt.date.fromisoformat(str(end))
+        )
+        storage.replace_partitions(spark, stage, out, affected.values())
     return out

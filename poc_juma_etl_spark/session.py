@@ -6,8 +6,8 @@ engine pins the execution posture instead:
 
 - AQE on (runtime partition coalescing, skew-join splitting, broadcast demotion)
 - static partition overwrite, Spark's own default: a write replaces its
-  whole target; the partial-replace writers (R1, Gold refresh, the stream
-  sink) ask for dynamic overwrite on their own write
+  whole target; only the stream sink asks for dynamic overwrite on its own
+  epoch writes (the warehouse writers stage and commit through ``storage``)
 - UTC session timezone (oracle parity with DuckDB's UTC-naive timestamps)
 - Arrow transfer on (fast pandas/Pandas-UDF boundary)
 
@@ -29,8 +29,8 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # a full-replace write (S4, the merges, Gold's DROP+CTAS) must not keep
-    # partitions its input lacks; partial-replace writers opt into dynamic
+    # a full-replace write (the merges, delete_keys) must not keep
+    # partitions its input lacks; only the stream sink opts into dynamic
     "spark.sql.sources.partitionOverwriteMode": "static",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -1,6 +1,8 @@
-"""Driver-side file operations on table paths: listing, deletes and the
-atomic directory swap with crash recovery. Spark reads and writes the
-data; every list, delete and rename around it goes through this module.
+"""Driver-side file operations on table paths: listing, staging
+directories and the two commits of a staged write — the atomic directory
+swap with crash recovery, and the per-partition replace. Spark reads and
+writes the data; every list, delete and rename around it goes through this
+module.
 
 Listing runs in-process when the path resolves to the driver's own disk:
 the Hadoop remote iterator costs py4j round trips per file
@@ -14,13 +16,17 @@ the same files, lengths and millisecond mtimes: symlinked directories are
 followed, as ``RawLocalFileSystem`` does, and checksum files (``.*.crc``,
 hidden by Hadoop's local FS) are left out.
 
-Deletes and renames always go through Hadoop: a handful of calls per write,
-and ``FileSystem.rename`` is the primitive every store implements.
+Deletes and renames always go through Hadoop: a few calls per partition
+a write replaces, and ``FileSystem.rename`` is the primitive every store
+implements.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import posixpath
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -92,12 +98,46 @@ def list_dirs(spark: SparkSession, path: str) -> dict[str, str]:
     return out
 
 
-def delete(spark: SparkSession, paths) -> None:
-    """Recursively delete each of ``paths``; a missing one is skipped."""
-    conf = spark._jsc.hadoopConfiguration()
-    for d in paths:
-        p = spark._jvm.org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, True)
+@contextlib.contextmanager
+def staging(spark: SparkSession, path: str):
+    """A fresh directory for a write to stage the table at ``path`` in: a
+    hidden sibling of ``path``, so no reader of the table sees it, on the
+    same filesystem, so a commit renames rather than copies. Deleted on
+    exit, whether or not the write committed."""
+    parent, name = posixpath.split(path.rstrip("/"))
+    stage = posixpath.join(parent, f".{name}.staging-{uuid.uuid4().hex}")
+    try:
+        yield stage
+    finally:
+        fs, p = _fs(spark, stage)
+        fs.delete(p, True)
+
+
+def replace_partitions(spark: SparkSession, staging: str, path: str, drop=()) -> None:
+    """Commit a partitioned write staged at ``staging`` into the table at
+    ``path``: move each partition directory of ``staging`` over its
+    namesake (delete, then rename: the per-partition step of Spark's own
+    dynamic-overwrite commit), then delete each directory of ``drop`` that
+    no staged partition replaced. A missing ``path`` is a plain rename of
+    ``staging`` into place.
+
+    Each partition is replaced whole. A crash part-way leaves some
+    partitions new and the rest old; re-running the write completes it."""
+    fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        if not fs.rename(_fs(spark, staging)[1], root):
+            raise IOError(f"commit: could not move {staging} to {path}")
+        return
+    staged = {n: d for n, d in list_dirs(spark, staging).items() if not n.startswith(("_", "."))}
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    for name, d in staged.items():
+        dest = Path(root, name)
+        fs.delete(dest, True)
+        if not fs.rename(Path(d), dest):
+            raise IOError(f"commit: could not move {d} to {dest}")
+    for d in drop:
+        if d.rstrip("/").rsplit("/", 1)[-1] not in staged:
+            fs.delete(Path(d), True)
 
 
 def swap_in(spark: SparkSession, staging: str, path: str, aside: str) -> None:

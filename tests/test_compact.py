@@ -208,7 +208,7 @@ def test_compact_execute_unpartitioned_content_and_plan_agree(spark, tmp_path):
 
 
 def test_recover_table_restores_half_swapped_dir(spark, tmp_path):
-    """Crash-window recovery: a kill between _swap_into's two renames
+    """Crash-window recovery: a kill between storage.swap_in's two renames
     leaves the table missing and the original at __compact_old; recovery
     rolls it back, drops stale staging, and is idempotent. A healthy table
     with stale leftovers keeps the live table and drops the leftovers."""

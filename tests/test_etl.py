@@ -3,6 +3,7 @@
 (S7/S8)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -350,25 +351,145 @@ def test_replace_range_month_granularity_subrange(spark, tmp_path):
     assert {r.id for r in read_table(spark, p).collect()} == {1, 20, 3, 4}
 
 
-def test_replace_range_month_edges_run_no_checkpoint_job(spark, tmp_path):
-    """A 7-day window straddling a month boundary keeps the edge months'
-    out-of-range rows in three Spark jobs at most: the planning job (a map
-    stage and a result stage under AQE) and the write. The write reads the
-    retained rows of the partitions it replaces, with no checkpoint job."""
+def _edges_jobs(spark, tmp_path, granularity):
+    """Replace a 7-day window straddling a month boundary; return the
+    Spark jobs it ran after checking its span and the table's rows."""
     from .test_catalog import _digest, _jobs_launched
 
     p = str(tmp_path / "t")
     base = [(1, TS(2024, 1, 5), 1.0), (2, TS(2024, 1, 29), 2.0), (3, TS(2024, 2, 2), 3.0),
             (4, TS(2024, 2, 20), 4.0), (5, TS(2024, 3, 1), 5.0)]
-    overwrite_table(_mk_events(spark, base), p, "ts", granularity="month")
+    overwrite_table(_mk_events(spark, base), p, "ts", granularity=granularity)
     new = [(10, TS(2024, 1, 28), 10.0), (11, TS(2024, 2, 3), 11.0)]
     span, jobs = _jobs_launched(spark, lambda: replace_range(
-        spark, p, _mk_events(spark, new), "ts", "2024-01-28", "2024-02-03", granularity="month"
+        spark, p, _mk_events(spark, new), "ts", "2024-01-28", "2024-02-03", granularity=granularity
     ))
     assert span == (dt.date(2024, 1, 28), dt.date(2024, 2, 3))
-    assert jobs <= 3
     want = _mk_events(spark, [base[0], base[3], base[4], *new])
     assert _digest(read_table(spark, p).select("id", "ts", "v")) == _digest(want)
+    return jobs
+
+
+def test_replace_range_month_edges_run_no_checkpoint_job(spark, tmp_path):
+    """By month, the window is one Spark job: the write stages the new rows
+    and the edge months' out-of-range rows, read by the same job, while an
+    Observation on it yields the empty guard; no planning or checkpoint job
+    runs."""
+    assert _edges_jobs(spark, tmp_path, "month") == 1
+
+
+def test_replace_range_day_window_runs_one_job(spark, tmp_path):
+    """By day, the same window is one Spark job too: only the new rows are
+    staged, with no planning job."""
+    assert _edges_jobs(spark, tmp_path, "day") == 1
+
+
+def test_overwrite_table_runs_one_job(spark, tmp_path):
+    """S4 stages, counts and swaps in one Spark job; no isEmpty probe."""
+    from .test_catalog import _jobs_launched
+
+    p = str(tmp_path / "t")
+    overwrite_table(_mk_events(spark, [(1, TS(2024, 1, 1), 1.0)]), p, "ts")
+    rows = [(2, TS(2024, 1, 2), 2.0), (3, TS(2024, 2, 3), 3.0)]
+    _, jobs = _jobs_launched(spark, lambda: overwrite_table(_mk_events(spark, rows), p, "ts"))
+    assert jobs == 1
+    assert sorted(r.id for r in read_table(spark, p).collect()) == [2, 3]
+
+
+def _orders_view(spark, rows, fail_key=None):
+    """Register ``orders`` from ``(key, month, day)`` rows and the Gold view
+    over it; with ``fail_key``, reading that order's price raises inside
+    the Spark job that reads it."""
+    from poc_juma_etl_spark.catalog import SCHEMAS
+    from poc_juma_etl_spark.plans import gold
+
+    rows = [(k, 1, "O", 1.0 * k, TS(1995, m, d), "1-URGENT") for k, m, d in rows]
+    df = spark.createDataFrame(rows, SCHEMAS["orders"])
+    if fail_key is not None:
+        # repartition keeps the rows out of a driver-side local relation, so
+        # the error is raised by a task, after other tasks may have written
+        df = df.repartition(2).withColumn("o_totalprice", F.when(
+            F.col("o_orderkey") == fail_key, F.raise_error(F.lit("injected failure"))
+        ).otherwise(F.col("o_totalprice")))
+    df.createOrReplaceTempView("orders")
+    gold.define_gold_view(spark, "vw_order_revenue")
+
+
+def test_gold_refresh_runs_one_job(spark, tmp_path):
+    """A Gold refresh over a view without aggregation is one Spark job: it
+    stages the recomputation and counts it through an Observation."""
+    from poc_juma_etl_spark.plans import gold
+
+    from .test_catalog import _jobs_launched
+
+    wh = str(tmp_path / "g")
+    _orders_view(spark, [(1, 1, 5), (2, 2, 10), (3, 3, 15)])
+    gold.materialize(spark, "vw_order_revenue", wh)
+    _orders_view(spark, [(1, 1, 5), (2, 2, 11), (4, 2, 12), (3, 3, 15)])
+    _, jobs = _jobs_launched(spark, lambda: gold.refresh_incremental(
+        spark, "vw_order_revenue", wh, "1995-02-01", "1995-02-28"
+    ))
+    assert jobs == 1
+    got = spark.read.parquet(f"{wh}/t_order_revenue")
+    assert sorted(r.o_orderkey for r in got.collect()) == [1, 2, 3, 4]
+
+
+def _failing_write(spark, tmp_path, writer):
+    """Set up a table, then return it and a call of ``writer`` on it whose
+    Spark job raises part-way."""
+    from poc_juma_etl_spark.plans import gold
+
+    if writer.startswith("gold"):
+        wh = str(tmp_path / "g")
+        _orders_view(spark, [(1, 1, 5), (2, 2, 10), (3, 3, 15)])
+        gold.materialize(spark, "vw_order_revenue", wh)
+        _orders_view(spark, [(1, 1, 5), (2, 2, 11), (4, 2, 12), (3, 3, 15)], fail_key=4)
+        if writer == "gold.materialize":
+            return f"{wh}/t_order_revenue", lambda: gold.materialize(spark, "vw_order_revenue", wh)
+        return f"{wh}/t_order_revenue", lambda: gold.refresh_incremental(
+            spark, "vw_order_revenue", wh, "1995-02-01", "1995-02-28"
+        )
+    p = str(tmp_path / "t")
+    base = [(1, TS(2024, 1, 5), 1.0), (2, TS(2024, 1, 29), 2.0), (3, TS(2024, 2, 2), 3.0)]
+    overwrite_table(_mk_events(spark, base), p, "ts", granularity="month")
+    new = _mk_events(spark, [(10, TS(2024, 1, 28), 10.0), (11, TS(2024, 2, 3), 11.0)])
+    new = new.repartition(2).withColumn("v", F.when(
+        F.col("id") == 11, F.raise_error(F.lit("injected failure"))
+    ).otherwise(F.col("v")))
+    if writer == "overwrite_table":
+        return p, lambda: overwrite_table(new, p, "ts", granularity="month")
+    return p, lambda: replace_range(
+        spark, p, new, "ts", "2024-01-28", "2024-02-03", granularity="month"
+    )
+
+
+@pytest.mark.parametrize(
+    "writer", ["overwrite_table", "replace_range", "gold.materialize", "gold.refresh_incremental"]
+)
+def test_failed_write_leaves_table_untouched(spark, tmp_path, writer):
+    """Every warehouse writer stages before it commits: a job that fails
+    part-way leaves the table's files exactly as they were, and removes its
+    staging directory."""
+    from poc_juma_etl_spark import storage
+
+    path, write = _failing_write(spark, tmp_path, writer)
+    parent = os.path.dirname(path)
+    before, siblings = storage.list_files(spark, path), sorted(os.listdir(parent))
+    with pytest.raises(Exception, match="injected failure"):
+        write()
+    assert storage.list_files(spark, path) == before
+    assert sorted(os.listdir(parent)) == siblings
+
+
+def test_failed_bootstrap_leaves_no_table(spark, tmp_path):
+    """A failed bootstrap into a missing path creates no table directory."""
+    new = _mk_events(spark, [(1, TS(2024, 1, 1), 1.0), (2, TS(2024, 1, 2), 2.0)])
+    new = new.repartition(2).withColumn("v", F.when(
+        F.col("id") == 2, F.raise_error(F.lit("injected failure"))
+    ).otherwise(F.col("v")))
+    with pytest.raises(Exception, match="injected failure"):
+        replace_range(spark, str(tmp_path / "t"), new, "ts")
+    assert os.listdir(tmp_path) == []
 
 
 def test_replace_range_clears_days_without_new_rows(spark, tmp_path):

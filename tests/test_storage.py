@@ -1,6 +1,7 @@
 """Driver-side file operations: the in-process local listing agrees with
 the Hadoop FileSystem listing, the directory swap works onto a missing and
-an existing target, and no other package module calls Hadoop's FileSystem
+an existing target, the partition commit replaces what it stages and drops
+what it is told to, and no other package module calls Hadoop's FileSystem
 API."""
 
 import datetime as dt
@@ -68,6 +69,28 @@ def test_swap_in_onto_missing_and_existing_target(spark, tmp_path):
     assert ids(path) == [5, 6]
     assert not os.path.exists(staging) and not os.path.exists(aside)
     assert storage.recover(spark, path, aside, staging) == "clean"
+
+
+def test_replace_partitions_commits_staged_partitions(spark, tmp_path):
+    def days(p):
+        return sorted((r.d.day, r.id) for r in spark.read.parquet(p).collect())
+
+    def write(rows, to):
+        spark.createDataFrame(rows, "id long, d date").write.partitionBy("d").parquet(to)
+
+    path = str(tmp_path / "t")
+    with storage.staging(spark, path) as stage:
+        assert os.path.basename(stage).startswith(".t.staging-")
+        write([(1, dt.date(2024, 1, 1)), (2, dt.date(2024, 1, 2))], stage)
+        storage.replace_partitions(spark, stage, path)  # no table yet: a plain rename
+    assert days(path) == [(1, 1), (2, 2)]
+    table = storage.list_dirs(spark, path)
+    with storage.staging(spark, path) as stage:
+        write([(20, dt.date(2024, 1, 2)), (3, dt.date(2024, 1, 3))], stage)
+        # day 1 is dropped; day 2 is in the drop list too, but staged, so replaced
+        storage.replace_partitions(spark, stage, path, table.values())
+    assert days(path) == [(2, 20), (3, 3)]
+    assert os.listdir(tmp_path) == ["t"]  # the staging is gone
 
 
 def test_only_storage_calls_the_hadoop_filesystem_api():
