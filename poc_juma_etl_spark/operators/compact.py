@@ -9,11 +9,12 @@ into ~target-sized outputs without changing content.
 Implementation (one code path, plan-driven): window over ``_metadata`` file
 stats → start-offset output groups (oversized partitions SPLIT into
 ~target-sized groups; tiny neighbours pack) → one shuffle keyed on
-(partition_dir, group) → rewrite to a staging path → atomic directory swap
-with crash recovery (``storage.swap_in``/``storage.recover``). The
-staging+swap avoids the read-overwrite conflict and leaves the table
-readable until the swap. File counts come from ``storage.list_files``, a
-driver-side listing with no Spark job."""
+(partition_dir, group) → rewrite to a ``storage.staging`` directory →
+atomic directory swap (``storage.swap_in``); entering the staging first
+heals a half-swapped prior compaction. The staging+swap avoids the
+read-overwrite conflict and leaves the table readable until the swap. File
+counts come from ``storage.list_files``, a driver-side listing with no
+Spark job."""
 
 from __future__ import annotations
 
@@ -52,15 +53,6 @@ def compact_table(
     so there is exactly one compaction code path now."""
     stats = compact_execute(spark, path, target_bytes=target_bytes)
     return stats["files_before"], stats["files_after"]
-
-
-def recover_table(spark: SparkSession, path: str) -> str:
-    """Heal a table directory after a compaction crash
-    (:func:`storage.recover` with the ``__compact_old`` and
-    ``__compact_staging`` leftovers): returns "clean", "restored" or
-    "cleaned". compact_table/compact_execute call it first so a retried
-    maintenance job never plans against a half-swapped directory."""
-    return storage.recover(spark, path, f"{path}__compact_old", f"{path}__compact_staging")
 
 
 def plan_output_groups(meta, target_bytes: int):
@@ -128,88 +120,83 @@ def compact_execute(
     """
     from pyspark.sql import functions as F
 
-    recover_table(spark, path)  # heal any half-swapped prior compaction
-    before, total = table_file_stats(spark, path)
-    if before == 0:  # nothing on disk: no-op, not a crash (S6 contract)
-        return {"files_before": 0, "files_after": 0, "n_groups": 0, "bytes_total": 0}
-    df = spark.read.parquet(path)
-    data_cols = df.columns
-    if partition_cols is None:
-        # auto-detect the hive layout so an omitted argument can never
-        # silently flatten a partitioned table: partition columns appear in
-        # the DataFrame schema but not in any data file's own footer
-        physical = set(spark.read.parquet(df.inputFiles()[0]).columns)
-        partition_cols = [c for c in data_cols if c not in physical]
-    elif bad := [c for c in partition_cols if c not in data_cols]:
-        raise ValueError(f"partition_cols not in table schema: {bad}")
-    tagged = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__fpath"),
-        F.regexp_replace(F.col("_metadata.file_path"), "/[^/]+$", "").alias("__pdir"),
-    )
-    meta = (
-        tagged.select(
-            "__fpath", "__pdir", F.col("_metadata.file_size").alias("__bytes")
+    # entered first: a half-swapped prior compaction is healed before planning
+    with storage.staging(spark, path) as stage:
+        before, total = table_file_stats(spark, path)
+        if before == 0:  # nothing on disk: no-op, not a crash (S6 contract)
+            return {"files_before": 0, "files_after": 0, "n_groups": 0, "bytes_total": 0}
+        df = spark.read.parquet(path)
+        data_cols = df.columns
+        if partition_cols is None:
+            # auto-detect the hive layout so an omitted argument can never
+            # silently flatten a partitioned table: partition columns appear in
+            # the DataFrame schema but not in any data file's own footer
+            physical = set(spark.read.parquet(df.inputFiles()[0]).columns)
+            partition_cols = [c for c in data_cols if c not in physical]
+        elif bad := [c for c in partition_cols if c not in data_cols]:
+            raise ValueError(f"partition_cols not in table schema: {bad}")
+        tagged = df.select(
+            "*",
+            F.col("_metadata.file_path").alias("__fpath"),
+            F.regexp_replace(F.col("_metadata.file_path"), "/[^/]+$", "").alias("__pdir"),
         )
-        .distinct()
-    )
-    # The plan is file-count-bounded. While the table is manifest-scale
-    # (same 100k bound the broadcast below already uses), COLLECT the
-    # (fpath, pdir, bytes) rows once and run the start-offset rule as
-    # driver-side integer math: the distributed form paid a persist plus
-    # three shuffle stages (distinct → window → distinct-count) over a
-    # few-hundred-row metadata table — ~1 s of pure stage latency at the
-    # bench gate (round-12 profile; guide §1.2: fixed scheduler cost is
-    # per-stage, so stop scheduling stages over driver-sized data).
-    # Python's str sort == Spark's UTF8 binary sort here (UTF-8 byte
-    # order preserves code-point order), and the floor-div grouping is
-    # the identical exact-integer rule plan_output_groups applies — the
-    # distributed path stays, and stays THE path past the bound.
-    plan = None
-    if before <= 100_000:
-        rows = sorted(
-            ((r["__pdir"], r["__fpath"], int(r["__bytes"])) for r in meta.collect())
-        )
-        plan_rows, cum, cur_dir = [], 0, None
-        for pdir, fpath, nbytes in rows:
-            if pdir != cur_dir:
-                cur_dir, cum = pdir, 0
-            plan_rows.append((fpath, pdir, cum // int(target_bytes)))
-            cum += nbytes
-        groups = len({(p_, g) for _f, p_, g in plan_rows})
-        fmap = F.broadcast(
-            spark.createDataFrame(
-                [(f, g) for f, p_, g in plan_rows],
-                "__fpath string, __grp bigint",
+        meta = (
+            tagged.select(
+                "__fpath", "__pdir", F.col("_metadata.file_size").alias("__bytes")
             )
+            .distinct()
         )
-    else:
-        plan = plan_output_groups(meta, target_bytes).persist()
-        groups = plan.select("__pdir", "__grp").distinct().count()
-        fmap = plan.select("__fpath", "__grp")
-    try:
-        routed = tagged.join(fmap, "__fpath")
-        staging = f"{path}__compact_staging"
-        # Range partitioning, not hash: hash(pdir, grp) % n_groups lands
-        # distinct plan groups in shared reduce tasks (~1/e of tasks empty
-        # at scale, collided groups co-write one ~2x-target file, and the
-        # output file count varies with the path string's hash — observed
-        # as a rare test flake). Range sampling over the group keys gives
-        # each key its own contiguous task; a boundary miss can only merge
-        # ADJACENT groups of the same directory, never arbitrary ones. The
-        # partition count stays explicit so AQE cannot coalesce the
-        # exchange back below n_groups.
-        writer = routed.repartitionByRange(
-            max(int(groups), 1), "__pdir", "__grp"
-        ).select(*data_cols)
-        wtr = writer.write.mode("overwrite")
-        if partition_cols:
-            wtr = wtr.partitionBy(*partition_cols)
-        wtr.parquet(staging)
-    finally:
-        if plan is not None:
-            plan.unpersist()
-    storage.swap_in(spark, staging, path, f"{path}__compact_old")
+        # The plan is file-count-bounded: up to the same 100k bound the
+        # broadcast below uses, collect the (fpath, pdir, bytes) rows once and
+        # run the start-offset rule on the driver — the distributed form pays
+        # a persist plus three shuffle stages over a few-hundred-row table,
+        # ~1 s of stage latency. Python's str sort equals Spark's UTF-8 binary
+        # sort, and the floor-div grouping is plan_output_groups' exact-integer
+        # rule, which stays the path past the bound.
+        plan = None
+        if before <= 100_000:
+            rows = sorted(
+                ((r["__pdir"], r["__fpath"], int(r["__bytes"])) for r in meta.collect())
+            )
+            plan_rows, cum, cur_dir = [], 0, None
+            for pdir, fpath, nbytes in rows:
+                if pdir != cur_dir:
+                    cur_dir, cum = pdir, 0
+                plan_rows.append((fpath, pdir, cum // int(target_bytes)))
+                cum += nbytes
+            groups = len({(p_, g) for _f, p_, g in plan_rows})
+            fmap = F.broadcast(
+                spark.createDataFrame(
+                    [(f, g) for f, p_, g in plan_rows],
+                    "__fpath string, __grp bigint",
+                )
+            )
+        else:
+            plan = plan_output_groups(meta, target_bytes).persist()
+            groups = plan.select("__pdir", "__grp").distinct().count()
+            fmap = plan.select("__fpath", "__grp")
+        try:
+            routed = tagged.join(fmap, "__fpath")
+            # Range partitioning, not hash: hash(pdir, grp) % n_groups lands
+            # distinct plan groups in shared reduce tasks (~1/e of tasks empty
+            # at scale, collided groups co-write one ~2x-target file, and the
+            # output file count varies with the path string's hash — observed
+            # as a rare test flake). Range sampling over the group keys gives
+            # each key its own contiguous task; a boundary miss can only merge
+            # ADJACENT groups of the same directory, never arbitrary ones. The
+            # partition count stays explicit so AQE cannot coalesce the
+            # exchange back below n_groups.
+            writer = routed.repartitionByRange(
+                max(int(groups), 1), "__pdir", "__grp"
+            ).select(*data_cols)
+            wtr = writer.write
+            if partition_cols:
+                wtr = wtr.partitionBy(*partition_cols)
+            wtr.parquet(stage)
+        finally:
+            if plan is not None:
+                plan.unpersist()
+        storage.swap_in(spark, stage, path)
     after, _ = table_file_stats(spark, path)
     return {
         "files_before": before,

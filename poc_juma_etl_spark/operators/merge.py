@@ -3,17 +3,18 @@ parquet.
 
 Spark without a table format (Delta/Iceberg/Hudi, none in this image) has no
 MERGE INTO; the standard emulation (pyspark_guide.md "CDC / SCD2") is
-anti-join + union + overwrite:
+anti-join + union + rewrite:
 
 - upsert:  target rows whose key appears in the updates are dropped
-           (anti-join), updates appended, result overwritten atomically.
+           (anti-join), updates appended, the result staged beside the
+           table and swapped in atomically (``storage.staging``/``swap_in``).
 - SCD2:    instead of dropping, superseded rows are *closed*
            (valid_to = change date) and updates open new current rows —
            full history, point-in-time queries via valid_from/valid_to.
 
-Scale note: both rewrite only what they touch when the table is partitioned
-and updates are partition-aligned; with a table format underneath the same
-call sites become real MERGE INTO — the operator surface is what's stable.
+Scale note: each call rewrites the whole table; with a table format
+underneath the same call sites become real MERGE INTO, which rewrites only
+the files a key touches — the operator surface is what's stable.
 The reference's closest behavior is the delete-range+insert idempotent load
 (utils.py:255-283), which is a *range* merge; this module adds the *keyed*
 merge family.
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import storage
 from ..plans.queries import register
 
 
@@ -58,14 +60,16 @@ def merge_upsert(
     silently overwriting the table with just the update batch would be data
     loss."""
     updates = dedupe_updates(updates, key)
-    try:
-        target = spark.read.parquet(path)
-    except AnalysisException:
-        merged = updates  # first load: no target yet
-    else:
-        retained = target.join(updates.select(key).distinct(), key, "left_anti")
-        merged = retained.unionByName(updates).localCheckpoint()
-    merged.write.mode("overwrite").parquet(path)
+    with storage.staging(spark, path) as stage:
+        try:
+            target = spark.read.parquet(path)
+        except AnalysisException:
+            merged = updates  # first load: no target yet
+        else:
+            retained = target.join(updates.select(key).distinct(), key, "left_anti")
+            merged = retained.unionByName(updates)
+        merged.write.parquet(stage)
+        storage.swap_in(spark, stage, path)
 
 
 SCD2_COLS = ("valid_from", "valid_to", "is_current")
@@ -91,21 +95,21 @@ def scd2_apply(
     - unchanged keys: untouched;
     - brand-new keys: inserted as current.
     """
-    target = spark.read.parquet(path)
     changed_keys = changes.select(key).distinct()
-    untouched = target.join(changed_keys, key, "left_anti")
-    closed = (
-        target.join(changed_keys, key, "left_semi")
-        .filter(F.col("is_current"))
-        .withColumn("valid_to", F.lit(as_of).cast("date"))
-        .withColumn("is_current", F.lit(False))
-    )
-    history = target.join(changed_keys, key, "left_semi").filter(~F.col("is_current"))
-    opened = scd2_init(changes, as_of)
-    merged = (
-        untouched.unionByName(closed).unionByName(history).unionByName(opened)
-    ).localCheckpoint()
-    merged.write.mode("overwrite").parquet(path)
+    with storage.staging(spark, path) as stage:
+        target = spark.read.parquet(path)
+        untouched = target.join(changed_keys, key, "left_anti")
+        closed = (
+            target.join(changed_keys, key, "left_semi")
+            .filter(F.col("is_current"))
+            .withColumn("valid_to", F.lit(as_of).cast("date"))
+            .withColumn("is_current", F.lit(False))
+        )
+        history = target.join(changed_keys, key, "left_semi").filter(~F.col("is_current"))
+        opened = scd2_init(changes, as_of)
+        merged = untouched.unionByName(closed).unionByName(history).unionByName(opened)
+        merged.write.parquet(stage)
+        storage.swap_in(spark, stage, path)
 
 
 def merge_latest(
@@ -116,22 +120,19 @@ def merge_latest(
     batch — the upsert rule of a change-data stream where the newest
     version wins. Commutative over batch order: any interleaving of update
     batches converges to the same table, which is what makes it safe under
-    out-of-order micro-batch delivery. One shuffle on the key; with a
-    key-partitioned target only touched partitions rewrite."""
+    out-of-order micro-batch delivery. One shuffle on the key."""
     w = Window.partitionBy(key).orderBy(*[F.col(c).desc_nulls_last() for c in order_cols])
-    try:
-        target = spark.read.parquet(path)
-    except AnalysisException:
-        source = updates  # first load: no target yet
-    else:
-        source = target.unionByName(updates)
-    merged = (
-        source.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint()
-    )
-    merged.write.mode("overwrite").parquet(path)
+    with storage.staging(spark, path) as stage:
+        try:
+            target = spark.read.parquet(path)
+        except AnalysisException:
+            source = updates  # first load: no target yet
+        else:
+            source = target.unionByName(updates)
+        source.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") == 1
+        ).drop("_rn").write.parquet(stage)
+        storage.swap_in(spark, stage, path)
 
 
 # ---------------------------------------------------------------------------

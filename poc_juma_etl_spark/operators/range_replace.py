@@ -108,7 +108,7 @@ def overwrite_table(
         counted = df.observe(rows, F.count(F.lit(1)).alias("n"))
         _writer(counted, filter_field, granularity).parquet(stage)
         if rows.get["n"]:
-            storage.swap_in(spark, stage, path, f"{stage}.old")
+            storage.swap_in(spark, stage, path)
 
 
 def append_table(
@@ -271,7 +271,8 @@ def delete_keys(spark: SparkSession, path: str, key: str, keys: DataFrame) -> No
     whose ``key`` appears in ``keys`` from the table at ``path``.
 
     Anti-join rewrite on plain parquet: read, LEFT ANTI against the
-    (deduplicated) key set, checkpoint, overwrite. Idempotent — re-running
+    (deduplicated) key set, stage in one job — keeping the table's
+    ``p_date`` layout when it has one — and swap in. Idempotent — re-running
     with the same key set is a no-op rewrite. Scale notes: the key set
     ships as a broadcast when small (the common case — an erasure batch);
     unlike the range delete, a keyed delete cannot prune by partition
@@ -279,9 +280,12 @@ def delete_keys(spark: SparkSession, path: str, key: str, keys: DataFrame) -> No
     full rewrite per erasure *batch* — which is why erasure requests are
     batched, exactly as the reference batches its range reloads."""
     keyset = keys.select(key).distinct()
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:
-        return  # never-written table (S6 empty-guard): nothing to delete
-    retained = existing.join(F.broadcast(keyset), key, "left_anti").localCheckpoint()
-    retained.write.mode("overwrite").parquet(path)
+    with storage.staging(spark, path) as stage:
+        try:
+            existing = spark.read.parquet(path)
+        except AnalysisException:
+            return  # never-written table (S6 empty-guard): nothing to delete
+        retained = existing.join(F.broadcast(keyset), key, "left_anti")
+        # a date-partitioned table keeps its p_date directories
+        retained.write.partitionBy(*{PARTITION_COL} & set(existing.columns)).parquet(stage)
+        storage.swap_in(spark, stage, path)

@@ -108,7 +108,7 @@ def materialize(spark: SparkSession, view: str, warehouse_dir: str) -> str:
         df = df.sortWithinPartitions(*spec.cluster_fields)
     with storage.staging(spark, out) as stage:
         df.write.partitionBy(spec.partition_field).parquet(stage)
-        storage.swap_in(spark, stage, out, f"{stage}.old")
+        storage.swap_in(spark, stage, out)
     return out
 
 

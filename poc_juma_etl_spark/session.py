@@ -5,9 +5,9 @@ reference utils.py:313-314, materialize_gold.py:74); this module is where our
 engine pins the execution posture instead:
 
 - AQE on (runtime partition coalescing, skew-join splitting, broadcast demotion)
-- static partition overwrite, Spark's own default: a write replaces its
-  whole target; only the stream sink asks for dynamic overwrite on its own
-  epoch writes (the warehouse writers stage and commit through ``storage``)
+- static partition overwrite, Spark's own default: every warehouse writer
+  stages and commits through ``storage``, so the mode governs only a plain
+  ``mode("overwrite")`` write (query scratch dirs), which replaces its target
 - UTC session timezone (oracle parity with DuckDB's UTC-naive timestamps)
 - Arrow transfer on (fast pandas/Pandas-UDF boundary)
 
@@ -29,8 +29,8 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # a full-replace write (the merges, delete_keys) must not keep
-    # partitions its input lacks; only the stream sink opts into dynamic
+    # no warehouse writer overwrites in place (each stages and commits
+    # through storage); a plain mode("overwrite") replaces its whole target
     "spark.sql.sources.partitionOverwriteMode": "static",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

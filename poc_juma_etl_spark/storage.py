@@ -1,8 +1,9 @@
 """Driver-side file operations on table paths: listing, staging
 directories and the two commits of a staged write — the atomic directory
-swap with crash recovery, and the per-partition replace. Spark reads and
-writes the data; every list, delete and rename around it goes through this
-module.
+swap with crash recovery, and the per-partition replace. Every warehouse
+writer stages and commits through them, one writer per table at a time,
+and only this module names a swap's aside. Spark reads and writes the
+data; every list, delete and rename around it goes through this module.
 
 Listing runs in-process when the path resolves to the driver's own disk:
 the Hadoop remote iterator costs py4j round trips per file
@@ -98,12 +99,22 @@ def list_dirs(spark: SparkSession, path: str) -> dict[str, str]:
     return out
 
 
+def aside(path: str) -> str:
+    """Where :func:`swap_in` parks the live table at ``path`` between its
+    two renames: a fixed hidden sibling, so :func:`recover` finds it again
+    after a crash."""
+    parent, name = posixpath.split(path.rstrip("/"))
+    return posixpath.join(parent, f".{name}.aside")
+
+
 @contextlib.contextmanager
 def staging(spark: SparkSession, path: str):
     """A fresh directory for a write to stage the table at ``path`` in: a
     hidden sibling of ``path``, so no reader of the table sees it, on the
-    same filesystem, so a commit renames rather than copies. Deleted on
-    exit, whether or not the write committed."""
+    same filesystem, so a commit renames rather than copies. Entering it
+    heals ``path`` (:func:`recover`), so a writer enters it before it reads
+    its own table. Deleted on exit, whether or not the write committed."""
+    recover(spark, path)
     parent, name = posixpath.split(path.rstrip("/"))
     stage = posixpath.join(parent, f".{name}.staging-{uuid.uuid4().hex}")
     try:
@@ -128,7 +139,9 @@ def replace_partitions(spark: SparkSession, staging: str, path: str, drop=()) ->
         if not fs.rename(_fs(spark, staging)[1], root):
             raise IOError(f"commit: could not move {staging} to {path}")
         return
-    staged = {n: d for n, d in list_dirs(spark, staging).items() if not n.startswith(("_", "."))}
+    # Spark's hidden-path rule: keep `_epoch=0`, skip `_temporary` and dot-names
+    staged = {n: d for n, d in list_dirs(spark, staging).items()
+              if not n.startswith(".") and ("=" in n or not n.startswith("_"))}
     Path = spark._jvm.org.apache.hadoop.fs.Path
     for name, d in staged.items():
         dest = Path(root, name)
@@ -140,21 +153,21 @@ def replace_partitions(spark: SparkSession, staging: str, path: str, drop=()) ->
             fs.delete(Path(d), True)
 
 
-def swap_in(spark: SparkSession, staging: str, path: str, aside: str) -> None:
+def swap_in(spark: SparkSession, staging: str, path: str) -> None:
     """Replace the directory at ``path`` with ``staging``: move ``path`` to
-    ``aside``, move ``staging`` in, drop ``aside``. A missing ``path`` is a
-    plain rename of ``staging`` into place.
+    its :func:`aside`, move ``staging`` in, drop the aside. A missing
+    ``path`` is a plain rename of ``staging`` into place.
 
     A crash between the two renames leaves ``path`` missing with the
-    original intact at ``aside``; :func:`recover` heals that state, and
-    callers run it before they stage the next swap. Hadoop
-    ``FileSystem.rename`` reports most failures by returning false (the
-    destination exists, the source is missing), not by raising, so every
-    return is checked, and a failed move-in rolls the original back rather
-    than fall through to the delete that would destroy the only copy."""
+    original intact at the aside; :func:`recover`, which :func:`staging`
+    runs on entry, heals that state. Hadoop ``FileSystem.rename`` reports
+    most failures by returning false (the destination exists, the source
+    is missing), not by raising, so every return is checked, and a failed
+    move-in rolls the original back rather than fall through to the delete
+    that would destroy the only copy."""
     fs, p = _fs(spark, path)
     st = spark._jvm.org.apache.hadoop.fs.Path(staging)
-    old = spark._jvm.org.apache.hadoop.fs.Path(aside)
+    old = spark._jvm.org.apache.hadoop.fs.Path(aside(path))
     fs.delete(old, True)
     had_table = fs.exists(p)
     if had_table and not fs.rename(p, old):
@@ -164,36 +177,29 @@ def swap_in(spark: SparkSession, staging: str, path: str, aside: str) -> None:
         restored = not had_table or fs.rename(old, p)
         raise IOError(
             f"swap: could not move {staging} into {path}"
-            + ("" if restored else f" AND rollback failed — original at {aside}")
+            + ("" if restored else f" AND rollback failed — original at {aside(path)}")
         )
     fs.delete(old, True)
 
 
-def recover(spark: SparkSession, path: str, aside: str, staging: str) -> str:
+def recover(spark: SparkSession, path: str) -> str:
     """Heal ``path`` after a crash inside :func:`swap_in`. Three states:
 
-    - ``path`` present, leftovers absent → ``"clean"`` (no-op);
-    - ``path`` missing but ``aside`` present → the crash hit between the
-      two renames: move the original back, drop ``staging`` →
-      ``"restored"``;
-    - ``path`` present with a stale ``aside`` or ``staging`` next to it
-      (a crash before the swap began or before it dropped ``aside``) → the
-      live directory wins; drop the leftovers → ``"cleaned"``.
+    - no aside → ``"clean"`` (no-op; one existence probe);
+    - ``path`` missing but its aside present → the crash hit between the
+      two renames: move the original back → ``"restored"``;
+    - ``path`` present with a stale aside next to it (a crash before the
+      swap dropped it) → the live directory wins; drop the aside →
+      ``"cleaned"``.
 
-    A never-written ``path`` with no ``aside`` is ``"clean"``. Idempotent."""
+    Idempotent."""
     fs, p = _fs(spark, path)
-    old = spark._jvm.org.apache.hadoop.fs.Path(aside)
-    st = spark._jvm.org.apache.hadoop.fs.Path(staging)
-    if not fs.exists(p):
-        if fs.exists(old):
-            if not fs.rename(old, p):  # rename failures return false, not raise
-                raise IOError(f"recover: could not restore {path} from {aside}")
-            fs.delete(st, True)
-            return "restored"
+    old = spark._jvm.org.apache.hadoop.fs.Path(aside(path))
+    if not fs.exists(old):
         return "clean"
-    cleaned = False
-    for leftover in (old, st):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
-            cleaned = True
-    return "cleaned" if cleaned else "clean"
+    if fs.exists(p):
+        fs.delete(old, True)
+        return "cleaned"
+    if not fs.rename(old, p):  # rename failures return false, not raise
+        raise IOError(f"recover: could not restore {path} from {aside(path)}")
+    return "restored"

@@ -5,12 +5,12 @@ The streaming twin of etl.run_table's batch load: a bounded (or unbounded)
 event stream lands in the same parquet warehouse the batch writers maintain.
 ``foreachBatch`` is at-least-once — a crash after a (partial) write but
 before the checkpoint commit re-runs the batch on restart — so the write
-itself must be idempotent. Each micro-batch is written under its own
-``_epoch=<epoch_id>`` partition with dynamic partition overwrite: a
-redelivered epoch *replaces* its own partitions instead of appending
-duplicates, which composes with the checkpoint into effectively-exactly-once
-delivery (the reference achieved the same intent by delete+insert on every
-run, utils.py:391-398).
+itself must be idempotent. Each micro-batch is staged under its own
+``_epoch=<epoch_id>`` partition and committed with
+``storage.replace_partitions``: a redelivered epoch *replaces* its own
+partition instead of appending duplicates, which composes with the
+checkpoint into effectively-exactly-once delivery (the reference achieved
+the same intent by delete+insert on every run, utils.py:391-398).
 
 Within an epoch, rows stay date-partitioned (``p_date``) so downstream
 date-pruned scans work; readers drop both derived columns via
@@ -19,9 +19,10 @@ redelivery contract."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from ..catalog import stream_table
 from ..operators.range_replace import PARTITION_COL
 from ..plans.queries import register, scoped_dir, ts_str
@@ -30,26 +31,28 @@ EPOCH_COL = "_epoch"
 
 
 def write_epoch(df: DataFrame, table_path: str, epoch_id: int) -> bool:
-    """Idempotently land one micro-batch: dynamic partition overwrite of the
-    batch's own ``_epoch`` partitions. Re-running the same (df, epoch_id)
-    pair leaves the table byte-identical — the redelivery path foreachBatch
-    needs to be safe. Returns True when rows were written.
+    """Idempotently land one micro-batch in one Spark job: stage it under
+    its ``_epoch`` partition, count it with an ``Observation``, and replace
+    the table's partition of that epoch. Re-running the same (df, epoch_id)
+    pair leaves the table's content unchanged — the redelivery path
+    foreachBatch needs to be safe. Returns True when rows were written.
 
-    The emptiness check costs one limit-1 job per batch, and it is NOT
-    optional: an empty partitioned parquet write to a never-written path
-    leaves a footerless directory (just _SUCCESS) that every later
-    read.parquet crashes on — the no-data micro-batch Structured Streaming
-    emits at watermark advances would brick a fresh table."""
-    if df.isEmpty():
-        return False
-    (
-        df.withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-        .withColumn(PARTITION_COL, F.to_date("ts"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(EPOCH_COL, PARTITION_COL)
-        .parquet(table_path)
-    )
+    An empty batch (Structured Streaming emits one at watermark advances)
+    never touches the table: its staging holds only ``_SUCCESS``, a
+    footerless table every later read.parquet would crash on."""
+    spark = df.sparkSession
+    rows = Observation()
+    with storage.staging(spark, table_path) as stage:
+        (
+            df.withColumn(EPOCH_COL, F.lit(int(epoch_id)))
+            .withColumn(PARTITION_COL, F.to_date("ts"))
+            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .write.partitionBy(EPOCH_COL, PARTITION_COL)
+            .parquet(stage)
+        )
+        if not rows.get["n"]:
+            return False
+        storage.replace_partitions(spark, stage, table_path)
     return True
 
 

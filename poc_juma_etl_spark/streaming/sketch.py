@@ -10,7 +10,7 @@ streaming/join.py); ``foreachBatch`` shrinks each batch to its per-segment
 bottom-k (two TakeOrderedAndProject plans — per-partition bottom-k heaps
 merged at the driver, the KMV merge itself), unions the tiny k-row state
 table, keeps the k smallest distinct hashes per segment, and swaps the
-state table atomically (write-new + rename, the streaming-sink idiom). At
+state table atomically (staged, then swapped in through ``storage``). At
 100 TB the state table is 2·k rows regardless of input volume — the whole
 point of a sketch.
 
@@ -57,32 +57,31 @@ def _batch_bottomk(df: DataFrame) -> DataFrame:
 def merge_sketch_state(spark: SparkSession, state: str, df: DataFrame) -> None:
     """One KMV merge step: shrink ``df`` to per-segment bottom-k, union the
     state table (if any), keep the k smallest distinct hashes per segment,
-    swap the state ATOMICALLY (write to ``__new``, rename old aside, rename
-    new in — an in-place overwrite would be delete-then-write, and a crash
-    inside that window silently drops every earlier batch's hashes because
-    the checkpoint will not re-deliver them). IDEMPOTENT: merging the same
+    swap the state ATOMICALLY (``storage.staging``, then ``storage.swap_in``
+    — an in-place overwrite would be delete-then-write, and a crash inside
+    that window silently drops every earlier batch's hashes because the
+    checkpoint will not re-deliver them). IDEMPOTENT: merging the same
     batch twice is a no-op (bottom-k of a set union is insensitive to
     re-unioning a subset), which is what makes the stream exact under the
     at-least-once re-delivery a checkpoint restart can produce."""
     from pyspark.sql.window import Window
 
-    old, new = f"{state}__old", f"{state}__new"
-    # a crash inside a previous merge's rename window is rolled back first
-    storage.recover(spark, state, old, new)
     fresh = _batch_bottomk(df)
-    if storage.list_files(spark, state) is not None:  # none before the first batch
-        merged_src = fresh.unionByName(spark.read.parquet(state))
-    else:
-        merged_src = fresh
     w = Window.partitionBy("label").orderBy("h")
-    merged = (
-        merged_src.distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= K)
-        .drop("rk")
-    )
-    merged.write.mode("overwrite").parquet(new)
-    storage.swap_in(spark, new, state, old)
+    # entered first: a crash inside a previous merge's swap is rolled back
+    with storage.staging(spark, state) as stage:
+        if storage.list_files(spark, state) is not None:  # none before the first batch
+            merged_src = fresh.unionByName(spark.read.parquet(state))
+        else:
+            merged_src = fresh
+        merged = (
+            merged_src.distinct()
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= K)
+            .drop("rk")
+        )
+        merged.write.parquet(stage)
+        storage.swap_in(spark, stage, state)
 
 
 def read_sketch_state(spark: SparkSession, state: str) -> dict[str, list[int]]:

@@ -209,31 +209,30 @@ def test_compact_execute_unpartitioned_content_and_plan_agree(spark, tmp_path):
 
 def test_recover_table_restores_half_swapped_dir(spark, tmp_path):
     """Crash-window recovery: a kill between storage.swap_in's two renames
-    leaves the table missing and the original at __compact_old; recovery
-    rolls it back, drops stale staging, and is idempotent. A healthy table
-    with stale leftovers keeps the live table and drops the leftovers."""
-    from poc_juma_etl_spark.operators.compact import compact_execute, recover_table
+    leaves the table missing and the original at its storage.aside;
+    recovery rolls it back and is idempotent. A healthy table with a stale
+    aside keeps the live table and drops the aside."""
+    from poc_juma_etl_spark import storage
+    from poc_juma_etl_spark.operators.compact import compact_execute
 
     p = str(tmp_path / "t")
     spark.range(100).write.parquet(p)
     ids = sorted(r.id for r in spark.read.parquet(p).collect())
 
-    # simulate the mid-swap crash: table renamed away, staging half-written
+    # simulate the mid-swap crash: table renamed away
     import shutil
 
-    shutil.move(p, f"{p}__compact_old")
-    shutil.copytree(f"{p}__compact_old", f"{p}__compact_staging")
-    assert recover_table(spark, p) == "restored"
+    shutil.move(p, storage.aside(p))
+    assert storage.recover(spark, p) == "restored"
     assert sorted(r.id for r in spark.read.parquet(p).collect()) == ids
     import os
 
-    assert not os.path.exists(f"{p}__compact_old")
-    assert not os.path.exists(f"{p}__compact_staging")
-    assert recover_table(spark, p) == "clean"  # idempotent
+    assert not os.path.exists(storage.aside(p))
+    assert storage.recover(spark, p) == "clean"  # idempotent
 
     # healthy table + stale leftovers: live table wins
-    shutil.copytree(p, f"{p}__compact_old")
-    assert recover_table(spark, p) == "cleaned"
+    shutil.copytree(p, storage.aside(p))
+    assert storage.recover(spark, p) == "cleaned"
     assert sorted(r.id for r in spark.read.parquet(p).collect()) == ids
 
     # a compaction after recovery proceeds normally

@@ -22,6 +22,7 @@ from poc_juma_etl_spark.operators.normalize import (
 )
 from poc_juma_etl_spark.operators.range_replace import (
     append_table,
+    delete_keys,
     overwrite_table,
     read_table,
     refresh_recent,
@@ -490,6 +491,87 @@ def test_failed_bootstrap_leaves_no_table(spark, tmp_path):
     with pytest.raises(Exception, match="injected failure"):
         replace_range(spark, str(tmp_path / "t"), new, "ts")
     assert os.listdir(tmp_path) == []
+
+
+@pytest.mark.parametrize("writer", ["overwrite_table", "replace_range", "gold.materialize"])
+def test_write_heals_a_half_swapped_table(spark, tmp_path, writer):
+    """A kill between swap_in's two renames leaves the table at its aside.
+    The next write restores it before it reads the table, applies its own
+    rows, and leaves no aside behind."""
+    from poc_juma_etl_spark import storage
+    from poc_juma_etl_spark.plans import gold
+
+    if writer == "gold.materialize":
+        wh = str(tmp_path / "g")
+        path = f"{wh}/t_order_revenue"
+        _orders_view(spark, [(1, 1, 5), (2, 2, 10)])
+        gold.materialize(spark, "vw_order_revenue", wh)
+        os.rename(path, storage.aside(path))
+        _orders_view(spark, [(2, 2, 11), (3, 3, 15)])
+        gold.materialize(spark, "vw_order_revenue", wh)
+        got, want = {r.o_orderkey for r in spark.read.parquet(path).collect()}, {2, 3}
+    else:
+        path = str(tmp_path / "t")
+        base = [(1, TS(2024, 1, 1), 1.0), (2, TS(2024, 1, 2), 2.0), (3, TS(2024, 1, 3), 3.0)]
+        overwrite_table(_mk_events(spark, base), path, "ts")
+        os.rename(path, storage.aside(path))
+        new = _mk_events(spark, [(20, TS(2024, 1, 2), 20.0)])
+        if writer == "overwrite_table":
+            overwrite_table(new, path, "ts")
+            want = {20}
+        else:
+            replace_range(spark, path, new, "ts", "2024-01-02", "2024-01-02")
+            want = {1, 20, 3}  # the restored days outside the window are kept
+        got = {r.id for r in read_table(spark, path).collect()}
+    assert got == want
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
+
+
+def test_delete_keys_keeps_date_partitions(spark, tmp_path):
+    """Erasure keeps a date-partitioned table's layout: the days it empties
+    lose their directory, the others keep theirs, and a later range replace
+    keeps the rows outside its range. Erasing every key leaves a table that
+    reads as empty."""
+    from poc_juma_etl_spark import storage
+
+    p = str(tmp_path / "t")
+    rows = [(1, TS(2024, 1, 1), 1.0), (2, TS(2024, 1, 2), 2.0), (3, TS(2024, 1, 3), 3.0)]
+    overwrite_table(_mk_events(spark, rows), p, "ts")
+    delete_keys(spark, p, "id", spark.createDataFrame([(2,)], "id long"))
+    assert sorted(storage.list_dirs(spark, p)) == ["p_date=2024-01-01", "p_date=2024-01-03"]
+    new = _mk_events(spark, [(30, TS(2024, 1, 3), 30.0)])
+    replace_range(spark, p, new, "ts", "2024-01-03", "2024-01-03")
+    assert {r.id for r in read_table(spark, p).collect()} == {1, 30}
+
+    delete_keys(spark, p, "id", spark.createDataFrame([(1,), (30,)], "id long"))
+    assert storage.list_dirs(spark, p) == {}
+    assert read_table(spark, p, like=new).count() == 0
+
+
+def test_write_epoch_runs_one_job(spark, tmp_path):
+    """The stream sink stages an epoch and counts it in one Spark job; a
+    redelivered epoch replaces its own partition, and a batch whose rows
+    are all filtered out writes nothing, not even a table directory."""
+    from poc_juma_etl_spark import storage
+    from poc_juma_etl_spark.streaming.sink import write_epoch
+
+    from .test_catalog import _digest, _jobs_launched
+
+    src = str(tmp_path / "src")
+    _mk_events(spark, [(1, TS(2024, 1, 1), 1.0), (2, TS(2024, 1, 2), 2.0)]).write.parquet(src)
+    batch = spark.read.parquet(src)
+    p = str(tmp_path / "wh")
+    written, jobs = _jobs_launched(spark, lambda: write_epoch(batch, p, 0))
+    assert written and jobs == 1
+    first = _digest(read_table(spark, p))
+    assert write_epoch(batch, p, 0)  # redelivery
+    assert _digest(read_table(spark, p)) == first
+    assert write_epoch(batch, p, 1)  # a new epoch is committed beside it
+    assert sorted(storage.list_dirs(spark, p)) == ["_epoch=0", "_epoch=1"]
+
+    fresh = str(tmp_path / "fresh")
+    assert write_epoch(batch.filter(F.col("id") < 0), fresh, 0) is False
+    assert sorted(os.listdir(tmp_path)) == ["src", "wh"]
 
 
 def test_replace_range_clears_days_without_new_rows(spark, tmp_path):

@@ -2,6 +2,7 @@
 rows and keeps full history."""
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -39,6 +40,23 @@ def test_merge_upsert_duplicate_update_keys(spark, tmp_path):
     got = {r.k: (r.name, r.bal) for r in rows}
     # desc ordering over (name, bal): "a-v3" > "a-v2"; (b, 21.0) > (b, 20.0)
     assert got == {1: ("a-v3", 12.0), 2: ("b", 21.0)}
+
+
+def test_merge_upsert_stages_without_checkpoint(spark, tmp_path):
+    """The upsert reads the target inside its staging and swaps the result
+    in: the target's schema inference and the staging write (whose shuffle
+    stages AQE runs as jobs of their own) are its only jobs — six on this
+    batch, where an eager checkpoint before an in-place overwrite ran
+    seven."""
+    from .test_catalog import _jobs_launched
+
+    p = str(tmp_path / "t")
+    _df(spark, [(1, "a", 10.0), (2, "b", 20.0)]).write.parquet(p)
+    updates = _df(spark, [(2, "b2", 99.0), (3, "c", 30.0)])
+    _, jobs = _jobs_launched(spark, lambda: merge_upsert(spark, p, updates, "k"))
+    assert jobs == 6
+    assert os.listdir(tmp_path) == ["t"]
+    assert {r.k: r.bal for r in spark.read.parquet(p).collect()} == {1: 10.0, 2: 99.0, 3: 30.0}
 
 
 def test_merge_upsert_bootstrap(spark, tmp_path):

@@ -60,15 +60,15 @@ def test_swap_in_onto_missing_and_existing_target(spark, tmp_path):
     def ids(p):
         return sorted(r.id for r in spark.read.parquet(p).collect())
 
-    path, staging, aside = (str(tmp_path / n) for n in ("t", "t__new", "t__old"))
+    path, staging = str(tmp_path / "t"), str(tmp_path / "t__new")
     spark.range(3).write.parquet(staging)
-    storage.swap_in(spark, staging, path, aside)  # no table yet: a plain rename
+    storage.swap_in(spark, staging, path)  # no table yet: a plain rename
     assert ids(path) == [0, 1, 2]
     spark.range(5, 7).write.parquet(staging)
-    storage.swap_in(spark, staging, path, aside)
+    storage.swap_in(spark, staging, path)
     assert ids(path) == [5, 6]
-    assert not os.path.exists(staging) and not os.path.exists(aside)
-    assert storage.recover(spark, path, aside, staging) == "clean"
+    assert os.listdir(tmp_path) == ["t"]  # neither the staging nor the aside is left
+    assert storage.recover(spark, path) == "clean"
 
 
 def test_replace_partitions_commits_staged_partitions(spark, tmp_path):

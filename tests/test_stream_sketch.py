@@ -119,11 +119,12 @@ def test_restart_drill_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_state_swap_crash_window_heals(spark, tmp_path):
-    """A crash between the two renames leaves only state__old; the next
-    merge must roll it back instead of rebuilding from one batch (which
+    """A crash between the two renames leaves only the state's aside; the
+    next merge must roll it back instead of rebuilding from one batch (which
     would silently drop every earlier batch's hashes)."""
     import os
 
+    from poc_juma_etl_spark import storage
     from poc_juma_etl_spark.catalog import load_table
     from poc_juma_etl_spark.streaming.sketch import (
         merge_sketch_state,
@@ -134,9 +135,14 @@ def test_state_swap_crash_window_heals(spark, tmp_path):
     orders = load_table(spark, SF_ORACLE, "orders")
     merge_sketch_state(spark, state, orders.where("o_orderkey % 2 = 0"))
     before = read_sketch_state(spark, state)
-    os.rename(state, f"{state}__old")  # simulate the crash window
+    os.rename(state, storage.aside(state))  # simulate the crash window
     merge_sketch_state(spark, state, orders.where("o_orderkey % 2 = 0"))
     assert read_sketch_state(spark, state) == before  # healed + idempotent
+    os.rename(state, storage.aside(state))  # again, before a new batch
+    merge_sketch_state(spark, state, orders.where("o_orderkey % 2 = 1"))
+    whole = str(tmp_path / "whole")
+    merge_sketch_state(spark, whole, orders)
+    assert read_sketch_state(spark, state) == read_sketch_state(spark, whole)
 
 
 def test_stream_kmv_empty_input(spark, tmp_path):
