@@ -11,12 +11,20 @@ LLM-pipeline extension tables ``documents`` / ``embeddings``.
 Reads pin the file's physical schema instead of re-inferring it: Spark's
 parquet inference costs one footer-reading job per ``spark.read.parquet``,
 paid on every query that loads the table. :func:`physical_schema` infers
-once per file version, keyed by the data files' (path, length, mtime)
-listing from :func:`storage.list_files` (no Spark job) plus the two
+once per file version, keyed by the (path, length, mtime) of the one file
+it infers from — the file itself, or a directory's first data file in
+sorted order (:func:`storage.data_files`, no Spark job) — plus the two
 session confs that change parquet inference. A rewritten file or a
 flipped conf is a new key, so a stale schema is never served; the
 name-based drift check in :func:`load_table` still runs on every call,
 cache hit or not.
+
+:func:`read_parquet` is the one pinned read for source and warehouse
+tables alike (``load_table``, ``range_replace.read_table``, the merges,
+keyed erasure and compaction). A warehouse table is a partitioned
+directory: the pinned schema holds the data columns of one file, and
+Spark adds the partition columns from the directory names, which costs no
+job once the session lists on the driver (``session`` on a local master).
 """
 
 from __future__ import annotations
@@ -143,27 +151,38 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 
-# (path, inference conf values) -> (data-file fingerprint, inferred schema).
-# Process-wide: the schema depends only on the files and those confs, never
-# on the session. One entry per path; a rewrite replaces it. No lock:
-# concurrent misses each infer and store a correct entry.
+# (path, inference conf values) -> (inferred file's (path, length, mtime),
+# inferred schema). Process-wide: the schema depends only on the file and
+# those confs, never on the session. One entry per path; a rewrite replaces
+# it. No lock: concurrent misses each infer and store a correct entry.
 _PHYSICAL: dict[tuple, tuple[tuple, T.StructType]] = {}
 
 
 def physical_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Spark's own inferred schema of the parquet at ``path``, inferred once
-    per file version and session inference confs (module docstring). A
-    missing path is not cached: inference raises Spark's usual error."""
-    fp = storage.list_files(spark, path)
-    if fp is None:
+    """Spark's own inferred schema of the parquet file at ``path``, or of a
+    directory's first data file (so a partitioned table's schema holds its
+    data columns only), inferred once per file version and session
+    inference confs (module docstring). A missing path, or a directory with
+    no data file, is not cached: Spark infers over ``path`` as usual, and
+    raises its usual error."""
+    files = storage.data_files(spark, path)
+    if not files:
         return spark.read.parquet(path).schema
+    first = files[0]
     key = (path, *(spark.conf.get(k) for k in _INFERENCE_CONFS))
     hit = _PHYSICAL.get(key)
-    if hit is not None and hit[0] == fp:
+    if hit is not None and hit[0] == first:
         return hit[1]
-    schema = spark.read.parquet(path).schema
-    _PHYSICAL[key] = (fp, schema)
+    schema = spark.read.parquet(first[0]).schema
+    _PHYSICAL[key] = (first, schema)
     return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema :func:`physical_schema`
+    pins: no inference job once cached, and a directory's partition columns
+    still come from its directory names."""
+    return spark.read.schema(physical_schema(spark, path)).parquet(path)
 
 
 def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
@@ -199,10 +218,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     catalog schema by field name so drift fails fast instead of mid-query."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    path = table_path(sf_dir, name)
-    df = normalize_timestamps(
-        spark.read.schema(physical_schema(spark, path)).parquet(path), name
-    )
+    df = normalize_timestamps(read_parquet(spark, table_path(sf_dir, name)), name)
     declared = [f.name for f in SCHEMAS[name].fields]
     if [c.lower() for c in df.columns] != declared:
         raise ValueError(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .. import storage
+from ..catalog import physical_schema
 from ..plans.queries import register, scoped_dir
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
@@ -125,14 +126,14 @@ def compact_execute(
         before, total = table_file_stats(spark, path)
         if before == 0:  # nothing on disk: no-op, not a crash (S6 contract)
             return {"files_before": 0, "files_after": 0, "n_groups": 0, "bytes_total": 0}
-        df = spark.read.parquet(path)
+        physical = physical_schema(spark, path)
+        df = spark.read.schema(physical).parquet(path)
         data_cols = df.columns
         if partition_cols is None:
             # auto-detect the hive layout so an omitted argument can never
             # silently flatten a partitioned table: partition columns appear in
-            # the DataFrame schema but not in any data file's own footer
-            physical = set(spark.read.parquet(df.inputFiles()[0]).columns)
-            partition_cols = [c for c in data_cols if c not in physical]
+            # the DataFrame schema but not in the data file's own footer
+            partition_cols = [c for c in data_cols if c not in physical.fieldNames()]
         elif bad := [c for c in partition_cols if c not in data_cols]:
             raise ValueError(f"partition_cols not in table schema: {bad}")
         tagged = df.select(

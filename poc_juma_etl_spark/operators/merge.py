@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import storage
+from ..catalog import read_parquet
 from ..plans.queries import register
 
 
@@ -62,7 +63,7 @@ def merge_upsert(
     updates = dedupe_updates(updates, key)
     with storage.staging(spark, path) as stage:
         try:
-            target = spark.read.parquet(path)
+            target = read_parquet(spark, path)
         except AnalysisException:
             merged = updates  # first load: no target yet
         else:
@@ -97,7 +98,7 @@ def scd2_apply(
     """
     changed_keys = changes.select(key).distinct()
     with storage.staging(spark, path) as stage:
-        target = spark.read.parquet(path)
+        target = read_parquet(spark, path)
         untouched = target.join(changed_keys, key, "left_anti")
         closed = (
             target.join(changed_keys, key, "left_semi")
@@ -124,7 +125,7 @@ def merge_latest(
     w = Window.partitionBy(key).orderBy(*[F.col(c).desc_nulls_last() for c in order_cols])
     with storage.staging(spark, path) as stage:
         try:
-            target = spark.read.parquet(path)
+            target = read_parquet(spark, path)
         except AnalysisException:
             source = updates  # first load: no target yet
         else:

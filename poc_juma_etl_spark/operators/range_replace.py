@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage
+from ..catalog import read_parquet
 
 PARTITION_COL = "p_date"
 
@@ -250,12 +251,14 @@ def read_table(
 ) -> DataFrame:
     """Read a warehouse table written by this module or the streaming sink
     (drops the derived partition/epoch columns so round-trips are
-    schema-stable). With ``like``, a missing/never-written table (the S6
-    empty-guard skips the write entirely on empty input) reads back as an
-    empty frame with ``like``'s schema instead of PATH_NOT_FOUND — so
-    empty-source pipelines produce empty results, not crashes."""
+    schema-stable). The read pins the table's data schema
+    (:func:`catalog.read_parquet`), so a table whose first data file is
+    unchanged reads with no Spark job. With ``like``, a missing/never-written
+    table (the S6 empty-guard skips the write entirely on empty input) reads
+    back as an empty frame with ``like``'s schema instead of PATH_NOT_FOUND —
+    so empty-source pipelines produce empty results, not crashes."""
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except AnalysisException:
         if like is None:
             raise
@@ -282,7 +285,7 @@ def delete_keys(spark: SparkSession, path: str, key: str, keys: DataFrame) -> No
     keyset = keys.select(key).distinct()
     with storage.staging(spark, path) as stage:
         try:
-            existing = spark.read.parquet(path)
+            existing = read_parquet(spark, path)
         except AnalysisException:
             return  # never-written table (S6 empty-guard): nothing to delete
         retained = existing.join(F.broadcast(keyset), key, "left_anti")

@@ -11,6 +11,17 @@ engine pins the execution posture instead:
 - UTC session timezone (oracle parity with DuckDB's UTC-naive timestamps)
 - Arrow transfer on (fast pandas/Pandas-UDF boundary)
 
+On a local master, :func:`get_spark` also makes local-disk warehouse I/O
+fork-free and job-free. ``file:`` resolves to ``jvm/NioLocalFileSystem``
+(built into ``jvm/nio-local-fs.jar`` by ``tools/build_jvm.py``): Hadoop's
+checksummed local FileSystem, whose chmod is a syscall instead of a forked
+``chmod`` process per file, checksum file and directory a write creates.
+And partition discovery lists on the driver at any directory count: there
+the listing job's tasks would run in the driver's own JVM against the same
+disk. A cluster keeps Spark's defaults (distributed listing on object
+stores, executors without the jar), as does :func:`tune_session`, whose
+session's classpath is fixed before the engine sees it.
+
 On a real cluster only ``master`` and the memory knobs change; everything else
 is scale-neutral.
 """
@@ -58,6 +69,16 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
 }
 
+JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
+
+# Confs get_spark adds on a local master (module docstring), where JVM_JAR
+# also joins spark.driver.extraClassPath ahead of any caller value: a
+# caller's classpath must not drop the class fs.file.impl names.
+LOCAL_CONF: dict[str, str] = {
+    "spark.hadoop.fs.file.impl": "poc_juma_etl_spark.jvm.NioLocalFileSystem",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
+}
+
 
 def get_spark(
     app_name: str = "poc_juma_etl_spark",
@@ -66,10 +87,15 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's execution defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    local = master.startswith("local")
+    conf = {**ENGINE_CONF, **(LOCAL_CONF if local else {}), **(extra_conf or {})}
+    if local:
+        classpath = (JVM_JAR, conf.get("spark.driver.extraClassPath"))
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, classpath))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -77,7 +103,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -43,21 +43,28 @@ def _is_checksum(name: str) -> bool:
     return name.startswith(".") and name.endswith(".crc")
 
 
+def is_hidden(name: str) -> bool:
+    """Spark's hidden-path rule: its file index skips names that start with
+    ``.``, and names that start with ``_`` and hold no ``=`` — so
+    ``_epoch=0`` is a partition, ``_SUCCESS`` and ``_temporary`` are not."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path``."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def list_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...] | None:
-    """Sorted ``(path, length, mtime_ms)`` of every file under ``path``,
-    listed recursively; a file path lists itself. ``None`` when ``path``
-    does not exist. No Spark job runs."""
+def _listing(spark: SparkSession, path: str):
+    """``(root, files)``: :func:`list_files`'s result, and ``path`` as its
+    entries spell it (qualified when listed through Hadoop). ``None`` when
+    ``path`` does not exist."""
     out = []
     if _is_local(spark, path):
         if os.path.isfile(path):
             st = os.stat(path)
-            return ((path, st.st_size, st.st_mtime_ns // 1_000_000),)
+            return path, ((path, st.st_size, st.st_mtime_ns // 1_000_000),)
         if not os.path.isdir(path):
             return None
         for root, _dirs, files in os.walk(path, followlinks=True):
@@ -66,7 +73,7 @@ def list_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ..
                     f = os.path.join(root, name)
                     st = os.stat(f)
                     out.append((f, st.st_size, st.st_mtime_ns // 1_000_000))
-        return tuple(sorted(out))
+        return path, tuple(sorted(out))
     fs, root = _fs(spark, path)
     if not fs.exists(root):
         return None
@@ -76,7 +83,30 @@ def list_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ..
         f = st.getPath().toString()
         if not _is_checksum(f.rsplit("/", 1)[-1]):
             out.append((f, st.getLen(), st.getModificationTime()))
-    return tuple(sorted(out))
+    return fs.makeQualified(root).toString(), tuple(sorted(out))
+
+
+def list_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted ``(path, length, mtime_ms)`` of every file under ``path``,
+    listed recursively; a file path lists itself. ``None`` when ``path``
+    does not exist. No Spark job runs."""
+    listing = _listing(spark, path)
+    return None if listing is None else listing[1]
+
+
+def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """The files of :func:`list_files` that Spark's file index reads: none
+    with a hidden name (:func:`is_hidden`) between ``path`` and itself. A
+    file path lists itself; ``None`` when ``path`` does not exist."""
+    listing = _listing(spark, path)
+    if listing is None:
+        return None
+    root = listing[0].rstrip("/") + "/"
+    return tuple(
+        f for f in listing[1]
+        if not f[0].startswith(root)  # path is the file itself
+        or not any(is_hidden(n) for n in f[0][len(root):].split("/"))
+    )
 
 
 def list_dirs(spark: SparkSession, path: str) -> dict[str, str]:
@@ -139,9 +169,7 @@ def replace_partitions(spark: SparkSession, staging: str, path: str, drop=()) ->
         if not fs.rename(_fs(spark, staging)[1], root):
             raise IOError(f"commit: could not move {staging} to {path}")
         return
-    # Spark's hidden-path rule: keep `_epoch=0`, skip `_temporary` and dot-names
-    staged = {n: d for n, d in list_dirs(spark, staging).items()
-              if not n.startswith(".") and ("=" in n or not n.startswith("_"))}
+    staged = {n: d for n, d in list_dirs(spark, staging).items() if not is_hidden(n)}
     Path = spark._jvm.org.apache.hadoop.fs.Path
     for name, d in staged.items():
         dest = Path(root, name)

@@ -121,11 +121,13 @@ def test_sink_empty_commit_is_readable(spark, tmp_path):
 # ADVICE low: the outer-join sentinel staging dirs must not accumulate.
 
 
-def test_stream_outer_join_cleans_tempdirs(spark):
+def test_stream_outer_join_cleans_tempdirs(spark, tmp_path, monkeypatch):
     import tempfile
 
     from poc_juma_etl_spark.streaming.join import stream_close_event_pairs_outer
 
+    # a private temp dir: other processes also write to the system one
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     tmp = tempfile.gettempdir()
 
     def dirs(prefix):
