@@ -1,7 +1,28 @@
 """Session layer: one table of engine SQL confs, read by both get_spark and
-tune_session."""
+tune_session, and the static confs only get_spark can apply."""
 
-from poc_juma_etl_spark.session import ENGINE_CONF, tune_session
+from pyspark.errors.utils import is_debugging_enabled
+
+from poc_juma_etl_spark import all_queries
+from poc_juma_etl_spark.plans.queries import release_caches
+from poc_juma_etl_spark.session import ENGINE_CONF, SESSION_CONF, tune_session
+
+from .conftest import SF_SMOKE
+
+# registry queries whose plans compile more generated classes at SF_SMOKE
+# than Spark's default 100-entry cache holds; q21 is left out because its
+# second run can plan differently from its first
+WORKING_SET = [
+    "q1_pricing_summary",
+    "q3_top_unshipped_revenue",
+    "q5_region_nation_revenue",
+    "q8_market_share",
+    "q12_return_rate_by_status",
+    "q_broadcast_brand_volume",
+    "q_window_topk_per_brand",
+    "q_sessionize",
+    "q_event_tumbling_hour",
+]
 
 
 def _other(value: str) -> str:
@@ -30,3 +51,29 @@ def test_tune_session_restores_every_engine_conf(spark):
     finally:
         for key, value in saved.items():
             spark.conf.set(key, value)
+
+
+def test_get_spark_applies_session_conf(spark):
+    for key, value in SESSION_CONF.items():
+        assert spark.conf.get(key) == value, key
+    assert int(SESSION_CONF["spark.sql.codegen.cache.maxEntries"]) > 100
+    assert not is_debugging_enabled()
+
+
+def _compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_queries_compile_nothing(spark):
+    specs = all_queries()
+
+    def run_round() -> int:
+        before = _compiles(spark)
+        for name in WORKING_SET:
+            specs[name].fn(spark, SF_SMOKE).count()
+            release_caches()
+        return _compiles(spark) - before
+
+    run_round()
+    assert run_round() == 0
