@@ -23,8 +23,7 @@ stores, executors without the jar), as does :func:`tune_session`, whose
 session's classpath is fixed before the engine sees it.
 
 Every :func:`get_spark` session also compiles each generated class once
-(``SESSION_CONF``; both are static confs, so :func:`tune_session` cannot
-apply them). Figures measured on a 4-core host:
+(two static confs, so :func:`tune_session` cannot apply them). Figures measured on a 4-core host:
 
 - Spark's generated-class cache holds 1000 classes instead of 100. The
   engine's working set is larger than the default: the 15-query
@@ -87,14 +86,6 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
 }
 
-# Static confs every get_spark session gets (module docstring). They stay out
-# of ENGINE_CONF: a static conf is fixed once the session exists, so
-# spark.conf.set (tune_session) rejects it.
-SESSION_CONF: dict[str, str] = {
-    "spark.sql.codegen.cache.maxEntries": "1000",
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
-}
-
 JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
 
 # Confs get_spark adds on a local master (module docstring), where JVM_JAR
@@ -115,12 +106,7 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's execution defaults."""
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     local = master.startswith("local")
-    conf = {
-        **ENGINE_CONF,
-        **SESSION_CONF,
-        **(LOCAL_CONF if local else {}),
-        **(extra_conf or {}),
-    }
+    conf = {**ENGINE_CONF, **(LOCAL_CONF if local else {}), **(extra_conf or {})}
     if local:
         classpath = (JVM_JAR, conf.get("spark.driver.extraClassPath"))
         conf["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, classpath))
@@ -133,6 +119,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # static, so not in ENGINE_CONF: spark.conf.set (tune_session)
+        # rejects them once the session exists (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in conf.items():
         builder = builder.config(k, v)
@@ -145,10 +135,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime SQL confs to an externally-created session
     (a caller of ``__spark_entry__`` passes its own SparkSession).
 
-    ``SESSION_CONF`` is not applied: both its confs are static, so the
-    caller's session keeps its own generated-class cache bound and
-    call-site capture. PySpark also reads the capture flag once per
-    process, at the first functions call made under an active session.
+    The generated-class cache bound and call-site capture that
+    :func:`get_spark` sets are static confs, so the caller's session keeps
+    its own. PySpark reads the capture flag once per process, at the first
+    wrapped ``functions``/``Column`` call; if no session is active then,
+    capture is off for the whole process.
 
     Each call sets every ``ENGINE_CONF`` key, one py4j round trip per key.
     Reading them first does not save any: ``spark.conf.getAll`` walks
