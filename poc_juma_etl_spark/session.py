@@ -23,19 +23,22 @@ stores, executors without the jar), as does :func:`tune_session`, whose
 session's classpath is fixed before the engine sees it.
 
 Every :func:`get_spark` session also compiles each generated class once
-(two static confs, so :func:`tune_session` cannot apply them). Figures measured on a 4-core host:
+(two static confs, so :func:`tune_session` cannot apply them). Figures from
+perfbench, seed 5, on a 4-core host:
 
 - Spark's generated-class cache holds 1000 classes instead of 100. The
-  engine's working set is larger than the default: the 15-query
-  ``analytics_query_mix`` compiles ~380 Janino classes (~285 in its
-  oracle-checked warm-up, ~94 more for its ``count()`` plans). Under the
-  100-entry LRU that set evicts itself, so every warm pass recompiled
-  212–249 classes at ~6–7 ms each; at 1000 entries a warm pass compiles
-  none.
+  ``analytics_query_mix`` workload compiles ~375 Janino classes in one
+  session (285 in its oracle-checked warm-up, 88 more for its ``count()``
+  plans on the first timed pass). Under the 100-entry LRU that set evicts
+  itself, so every warm pass recompiled 189–240 classes; at 1000 entries
+  the passes after the first compile 0–2. ``etl_load_refresh`` compiles
+  84 classes in its warm-up and 14–33 per pass at either bound. 1000
+  holds the mix's set with room to spare; peak memory did not grow on
+  either workload.
 - PySpark's DataFrame call-site capture is off. With it on, every
   ``pyspark.sql.functions`` and ``Column`` call reads the active session,
-  a conf and the Python stack and sets and clears the JVM origin: building
-  the 15 queries took ~9,900 py4j round trips per pass instead of ~3,700.
+  a conf and the Python stack and sets and clears the JVM origin: a mix
+  pass took ~12,100–12,400 py4j round trips instead of ~5,300–5,700.
   What it gives up: an analysis error no longer names the PySpark line in
   its DataFrame query context; it keeps Spark's error class and message.
 
